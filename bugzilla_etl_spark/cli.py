@@ -130,7 +130,6 @@ def main(argv: list[str] | None = None) -> int:
     s.add_argument("--index", required=True)
     s.add_argument("--query", required=True)
     s.add_argument("-k", type=int, default=10)
-    s.add_argument("--wand", action="store_true")
     s.add_argument("--field", default="content", help="field variant to query")
     s.add_argument(
         "--filter", action="append", default=[], metavar="COL=VALUE",
@@ -800,8 +799,8 @@ def main(argv: list[str] | None = None) -> int:
             )
         else:
             hits = search(
-                spark, args.index, args.query, k=args.k, use_wand=args.wand,
-                field=args.field, predicate=predicate,
+                spark, args.index, args.query, k=args.k, field=args.field,
+                predicate=predicate,
                 must_not=args.must_not or None, operator=args.operator,
             )
         for rank, h in enumerate(hits, 1):

@@ -4,7 +4,7 @@ The reference delegates posting-list storage to Lucene via ES
 (/root/reference/configuration/es/bug_version.json); our engine owns the
 format: sorted doc ids are delta-gapped then varint encoded, term
 frequencies and doc lengths varint encoded, in blocks of
-``BLOCK_SIZE`` docs with per-block max-impact metadata (block-max WAND).
+``BLOCK_SIZE`` docs with per-block max-impact metadata (block-max MaxScore).
 
 No per-row Python: encode/decode are O(max_varint_width) numpy passes
 over whole arrays (the per-``j`` loop runs <= 10 iterations regardless

@@ -31,7 +31,7 @@ from .boolquery import (
     match_all_search,
     rescore_search,
 )
-from .build import build_index, incremental_update, prepare_docs, tokenize_postings
+from .build import build_index, incremental_update, prepare_docs
 from .export import matches_df
 from .mlt import mlt_search, mlt_select_terms
 from .percolate import percolate_condition, percolate_df
@@ -152,5 +152,4 @@ __all__ = [
     "wildcard_search_many",
     "stats_agg",
     "terms_agg",
-    "tokenize_postings",
 ]

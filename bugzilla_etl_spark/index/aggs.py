@@ -37,27 +37,36 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
-from ..codec import u64_to_doc_id
 from ..oracle import idf as _idf
 from .boolquery import (
     Bool,
     _analyze_clauses,
     _analyze_mm_clauses,
     _gate_survivors,
+    _mm_want,
     _read_bucket_docs,
-    _read_bucket_pair_terms,
-    _read_bucket_terms,
     _score_survivors,
     _sort_key_type,
     _validate_filter,
 )
 from .manifest import IndexManifest
+from .postings import exclusion, read_bucket, read_field
 from .query import (
     _candidate_dict_dirs,
     _execute_buckets,
     _lookup_terms,
     _resolve_allowed,
 )
+
+
+def _read_mm(index_dir: str, seg_id: str, sb: int, mm_ctx, k1: float, b: float):
+    """One bucket's multi_match (field, term) lists ({} without mm)."""
+    if not mm_ctx:
+        return {}
+    return read_bucket(
+        index_dir, seg_id, sb, mm_ctx["want"], mm_ctx["idfs_pairs"],
+        mm_ctx["avgdls"], k1, b,
+    ) or {}
 
 
 def _key_cast(s: pd.Series, type_name: str) -> pd.Series:
@@ -378,14 +387,7 @@ def _prepare_query(
     mm_ctx = None
     if eff_mm:
         mm_ctx = {
-            "pairs_want": sorted(
-                {
-                    (f, t)
-                    for per_field in eff_mm
-                    for f, ts, _need in per_field
-                    for t in ts
-                }
-            ),
+            "want": _mm_want(eff_mm),
             "idfs_pairs": {
                 p: _idf(m.n_docs, df) for p, df in dfs_pairs.items()
             },
@@ -451,24 +453,13 @@ def _make_agg_bucket(
         )
         if allowed is not None and not len(allowed):
             return empty_pdf()
-        terms = (
-            _read_bucket_terms(
-                index_dir, seg_id, sb, gate_terms, fld, idfs, k1, b, avgdl,
-                pos_terms,
-            )
-            if gate_terms
-            else {}
+        terms = read_field(
+            index_dir, seg_id, sb, fld, gate_terms, idfs, avgdl, k1, b,
+            positions=pos_terms,
         )
         if terms is None:
             return empty_pdf()
-        mm_terms = (
-            _read_bucket_pair_terms(
-                index_dir, seg_id, sb, mm_ctx["pairs_want"],
-                mm_ctx["idfs_pairs"], k1, b, mm_ctx["avgdls"],
-            )
-            if mm_ctx
-            else {}
-        )
+        mm_terms = _read_mm(index_dir, seg_id, sb, mm_ctx, k1, b)
         cols = ["doc_id"] + ([attr] if attr else []) + (
             [sub_attr] if sub_attr else []
         )
@@ -479,13 +470,7 @@ def _make_agg_bucket(
         docs_pdf = docs_pdf.sort_values("doc_id").reset_index(drop=True)
         docs_ids = docs_pdf["doc_id"].to_numpy(dtype=np.int64)
 
-        excl = tomb
-        if neg_terms:
-            neg_parts = [terms[t].all_docs() for t in neg_terms if t in terms]
-            if neg_parts:
-                excl = np.union1d(
-                    tomb, u64_to_doc_id(np.concatenate(neg_parts))
-                )
+        excl = exclusion(terms, neg_terms, tomb)
         surv = _gate_survivors(
             {**spec, "k": 0, "after": None}, terms, allowed, excl, docs_ids,
             mm_terms,
@@ -1350,37 +1335,20 @@ def _make_filters_bucket(
         )
         if allowed is not None and not len(allowed):
             return empty_pdf()
-        terms = (
-            _read_bucket_terms(
-                index_dir, seg_id, sb, gate_terms, fld, idfs, k1, b, avgdl,
-                pos_terms,
-            )
-            if gate_terms
-            else {}
+        terms = read_field(
+            index_dir, seg_id, sb, fld, gate_terms, idfs, avgdl, k1, b,
+            positions=pos_terms,
         )
         if terms is None:
             return empty_pdf()
-        mm_terms = (
-            _read_bucket_pair_terms(
-                index_dir, seg_id, sb, mm_ctx["pairs_want"],
-                mm_ctx["idfs_pairs"], k1, b, mm_ctx["avgdls"],
-            )
-            if mm_ctx
-            else {}
-        )
+        mm_terms = _read_mm(index_dir, seg_id, sb, mm_ctx, k1, b)
         docs_pdf = _read_bucket_docs(
             index_dir, seg_id, sb, list(predicate) if predicate else None,
             n_shards, n_sb, list(dict.fromkeys(["doc_id"] + need_cols)),
         )
         docs_pdf = docs_pdf.sort_values("doc_id").reset_index(drop=True)
         docs_ids = docs_pdf["doc_id"].to_numpy(dtype=np.int64)
-        excl = tomb
-        if neg_terms:
-            neg_parts = [terms[t].all_docs() for t in neg_terms if t in terms]
-            if neg_parts:
-                excl = np.union1d(
-                    tomb, u64_to_doc_id(np.concatenate(neg_parts))
-                )
+        excl = exclusion(terms, neg_terms, tomb)
         surv = _gate_survivors(
             {**spec, "k": 0, "after": None}, terms, allowed, excl, docs_ids,
             mm_terms,
@@ -1634,24 +1602,13 @@ def _make_composite_bucket(
         )
         if allowed is not None and not len(allowed):
             return empty_pdf()
-        terms = (
-            _read_bucket_terms(
-                index_dir, seg_id, sb, gate_terms, fld, idfs, k1, b, avgdl,
-                pos_terms,
-            )
-            if gate_terms
-            else {}
+        terms = read_field(
+            index_dir, seg_id, sb, fld, gate_terms, idfs, avgdl, k1, b,
+            positions=pos_terms,
         )
         if terms is None:
             return empty_pdf()
-        mm_terms = (
-            _read_bucket_pair_terms(
-                index_dir, seg_id, sb, mm_ctx["pairs_want"],
-                mm_ctx["idfs_pairs"], k1, b, mm_ctx["avgdls"],
-            )
-            if mm_ctx
-            else {}
-        )
+        mm_terms = _read_mm(index_dir, seg_id, sb, mm_ctx, k1, b)
         cols = ["doc_id"] + [a for a, _i, _t in srcs]
         docs_pdf = _read_bucket_docs(
             index_dir, seg_id, sb, list(predicate) if predicate else None,
@@ -1659,13 +1616,7 @@ def _make_composite_bucket(
         )
         docs_pdf = docs_pdf.sort_values("doc_id").reset_index(drop=True)
         docs_ids = docs_pdf["doc_id"].to_numpy(dtype=np.int64)
-        excl = tomb
-        if neg_terms:
-            neg_parts = [terms[t].all_docs() for t in neg_terms if t in terms]
-            if neg_parts:
-                excl = np.union1d(
-                    tomb, u64_to_doc_id(np.concatenate(neg_parts))
-                )
+        excl = exclusion(terms, neg_terms, tomb)
         surv = _gate_survivors(
             {**spec, "k": 0, "after": None}, terms, allowed, excl, docs_ids,
             mm_terms,
@@ -1881,37 +1832,20 @@ def _make_multi_agg_bucket(
         )
         if allowed is not None and not len(allowed):
             return empty
-        terms = (
-            _read_bucket_terms(
-                index_dir, seg_id, sb, gate_terms, fld, idfs, k1, b, avgdl,
-                pos_terms,
-            )
-            if gate_terms
-            else {}
+        terms = read_field(
+            index_dir, seg_id, sb, fld, gate_terms, idfs, avgdl, k1, b,
+            positions=pos_terms,
         )
         if terms is None:
             return empty
-        mm_terms = (
-            _read_bucket_pair_terms(
-                index_dir, seg_id, sb, mm_ctx["pairs_want"],
-                mm_ctx["idfs_pairs"], k1, b, mm_ctx["avgdls"],
-            )
-            if mm_ctx
-            else {}
-        )
+        mm_terms = _read_mm(index_dir, seg_id, sb, mm_ctx, k1, b)
         docs_pdf = _read_bucket_docs(
             index_dir, seg_id, sb, list(predicate) if predicate else None,
             n_shards, n_sb, ["doc_id"] + attrs,
         )
         docs_pdf = docs_pdf.sort_values("doc_id").reset_index(drop=True)
         docs_ids = docs_pdf["doc_id"].to_numpy(dtype=np.int64)
-        excl = tomb
-        if neg_terms:
-            neg_parts = [terms[t].all_docs() for t in neg_terms if t in terms]
-            if neg_parts:
-                excl = np.union1d(
-                    tomb, u64_to_doc_id(np.concatenate(neg_parts))
-                )
+        excl = exclusion(terms, neg_terms, tomb)
         surv = _gate_survivors(
             {**spec, "k": 0, "after": None}, terms, allowed, excl, docs_ids,
             mm_terms,

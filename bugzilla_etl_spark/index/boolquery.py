@@ -28,7 +28,7 @@ k-way merges (buckets are doc-disjoint). Selective queries take the
 cost-based driver-local path (query._execute_buckets) unchanged.
 
 Single-clause queries DELEGATE to the tuned specialized executors
-(MaxScore/WAND pruning for plain OR; the conjunctive/msm scorer; the
+(MaxScore pruning for plain OR; the conjunctive/msm scorer; the
 phrase scorer) — the grouped scorer here only runs when composition
 genuinely requires it, so the pruned fast paths never regress.
 """
@@ -47,6 +47,7 @@ from ..codec import doc_id_to_u64, u64_to_doc_id
 from ..oracle import idf as _idf
 from ..tokenize import py_analyze
 from .manifest import IndexManifest
+from .postings import exclusion, read_bucket, read_field
 from .query import (
     RESULT_SCHEMA,
     _allowed_mask,
@@ -54,8 +55,6 @@ from .query import (
     _execute_buckets,
     _lookup_terms,
     _phrase_survivors,
-    _PhraseSubList,
-    _PhraseTerm,
     _resolve_allowed,
     phrase_search_many,
     search_many,
@@ -369,75 +368,13 @@ def _analyze_mm_clauses(
     return out
 
 
-def _read_bucket_pair_terms(
-    index_dir: str,
-    seg_id: str,
-    sb: int,
-    want_pairs: list[tuple[str, str]],
-    idfs_pairs: dict[tuple[str, str], float],
-    k1: float,
-    b: float,
-    avgdls: dict[str, float],
-) -> dict[tuple[str, str], _PhraseTerm]:
-    """Load one bucket's postings for cross-field (field, term) pairs
-    into _PhraseTerm stores (membership + impacts; no positions — mm
-    clauses are term clauses). Each pair's sub-lists carry ITS field's
-    idf/avgdl, so imp_at yields field-correct BM25 impacts. A legacy
-    (pre-multi-field) segment serves only 'content' pairs — other
-    fields simply have no postings there, which the gate treats as
-    term-absent-in-bucket (correct, not an error)."""
-    import pyarrow.dataset as ds
-
-    from collections import defaultdict
-
-    want_by_field: dict[str, set] = defaultdict(set)
-    for f, t in want_pairs:
-        want_by_field[f].add(t)
-    path = os.path.join(index_dir, "segments", seg_id, "postings")
-    data = ds.dataset(path, format="parquet", partitioning="hive")
-    has_field = "field" in data.schema.names
-    if has_field:
-        fexpr = None
-        for f in sorted(want_by_field):
-            e = (ds.field("field") == f) & ds.field("term").isin(
-                sorted(want_by_field[f])
-            )
-            fexpr = e if fexpr is None else fexpr | e
-    elif "content" in want_by_field:
-        fexpr = ds.field("term").isin(sorted(want_by_field["content"]))
-    else:
-        return {}
-    tbl = data.to_table(
-        filter=(ds.field("sb") == sb) & fexpr,
-        columns=(["field"] if has_field else [])
-        + ["term", "salt", "shard", "n", "first_doc", "last_doc",
-           "gaps", "tfs", "dls"],
-    )
-    if tbl.num_rows == 0:
-        return {}
-    pdf = tbl.to_pandas()
-    fld_col = pdf["field"] if has_field else pd.Series(["content"] * len(pdf))
-    out: dict[tuple[str, str], _PhraseTerm] = {}
-    for f, t, sa, sh, n, fd, ld, g, tfb, dlb in zip(
-        fld_col, pdf["term"], pdf["salt"], pdf["shard"], pdf["n"],
-        pdf["first_doc"], pdf["last_doc"], pdf["gaps"], pdf["tfs"], pdf["dls"],
-    ):
-        if t not in want_by_field.get(f, ()):  # over-read guard
-            continue
-        pt = out.setdefault((f, t), _PhraseTerm())
-        key2 = (int(sa), int(sh))
-        sl = pt.subs.get(key2)
-        if sl is None:
-            sl = pt.subs[key2] = _PhraseSubList(
-                idfs_pairs.get((f, t), 0.0), k1, b, avgdls[f]
-            )
-        sl.add_block(
-            np.int64(fd).view(np.uint64), np.int64(ld).view(np.uint64),
-            int(n), bytes(g), bytes(tfb), bytes(dlb), None,
-        )
-    for pt in out.values():
-        pt.seal()
-    return out
+def _mm_want(mm_clauses) -> dict[str, list[str]]:
+    """{field: sorted terms} that lowered multi_match clauses read."""
+    want: dict[str, set] = {}
+    for per_field in mm_clauses:
+        for f, ts, _need in per_field:
+            want.setdefault(f, set()).update(ts)
+    return {f: sorted(ts) for f, ts in want.items()}
 
 
 def _validate_filter(m: IndexManifest, pred: list | None) -> None:
@@ -476,66 +413,6 @@ def _sort_key_type(m: IndexManifest, attr: str) -> T.DataType:
 
 
 # ------------------------------------------------------- grouped executor
-def _read_bucket_terms(
-    index_dir: str,
-    seg_id: str,
-    sb: int,
-    want: list[str],
-    fld: str,
-    idfs: dict[str, float],
-    k1: float,
-    b: float,
-    avgdl: float,
-    pos_terms: frozenset,
-) -> dict[str, _PhraseTerm] | None:
-    """Load one bucket's postings for ``want`` into _PhraseTerm stores;
-    positional payload attached only for ``pos_terms`` (phrase terms).
-    None = legacy segment that cannot serve this field."""
-    import pyarrow.dataset as ds
-
-    path = os.path.join(index_dir, "segments", seg_id, "postings")
-    data = ds.dataset(path, format="parquet", partitioning="hive")
-    flt = (ds.field("sb") == sb) & ds.field("term").isin(want)
-    if "field" in data.schema.names:
-        flt = flt & (ds.field("field") == fld)
-    elif fld != "content":
-        return None
-    cols = ["term", "salt", "shard", "n", "first_doc", "last_doc",
-            "gaps", "tfs", "dls"]
-    has_pos = "poss" in data.schema.names
-    if pos_terms and not has_pos:
-        raise ValueError(
-            f"segment {seg_id} has no positional payload; rebuild with "
-            "build_index(positions=True) to run phrase clauses"
-        )
-    if has_pos and pos_terms:
-        cols.append("poss")
-    tbl = data.to_table(filter=flt, columns=cols)
-    if tbl.num_rows == 0:
-        return {}
-    pdf = tbl.to_pandas()
-    poss = pdf["poss"] if "poss" in pdf.columns else [None] * len(pdf)
-    terms: dict[str, _PhraseTerm] = {}
-    for t, sa, sh, n, fd, ld, g, tfb, dlb, pz in zip(
-        pdf["term"], pdf["salt"], pdf["shard"], pdf["n"],
-        pdf["first_doc"], pdf["last_doc"],
-        pdf["gaps"], pdf["tfs"], pdf["dls"], poss,
-    ):
-        pt = terms.setdefault(t, _PhraseTerm())
-        key2 = (int(sa), int(sh))
-        sl = pt.subs.get(key2)
-        if sl is None:
-            sl = pt.subs[key2] = _PhraseSubList(idfs.get(t, 0.0), k1, b, avgdl)
-        keep_pz = bytes(pz) if (pz is not None and t in pos_terms) else None
-        sl.add_block(
-            np.int64(fd).view(np.uint64), np.int64(ld).view(np.uint64),
-            int(n), bytes(g), bytes(tfb), bytes(dlb), keep_pz,
-        )
-    for pt in terms.values():
-        pt.seal()
-    return terms
-
-
 def _read_bucket_docs(
     index_dir: str,
     seg_id: str,
@@ -999,7 +876,7 @@ def _make_grouped_bucket_scorer(
     sort_attr: str | None,
     sort_desc: bool,
     result_schema: T.StructType,
-    mm_pairs_want: list[tuple[str, str]] | None = None,
+    mm_want: dict[str, list[str]] | None = None,
     idfs_pairs: dict[tuple[str, str], float] | None = None,
     avgdls: dict[str, float] | None = None,
     collapse_attr: str | None = None,
@@ -1065,24 +942,16 @@ def _make_grouped_bucket_scorer(
         )
         if allowed is not None and not len(allowed):
             return empty_pdf()
-        terms = (
-            _read_bucket_terms(
-                index_dir, seg_id, sb, gate_terms, fld, idfs, k1, b, avgdl,
-                pos_terms,
-            )
-            if gate_terms
-            else {}
+        terms = read_field(
+            index_dir, seg_id, sb, fld, gate_terms, idfs, avgdl, k1, b,
+            positions=pos_terms,
         )
         if terms is None:  # legacy segment, foreign field
             return empty_pdf()
-        mm_terms = (
-            _read_bucket_pair_terms(
-                index_dir, seg_id, sb, mm_pairs_want, idfs_pairs or {},
-                k1, b, avgdls or {},
-            )
-            if mm_pairs_want
-            else {}
-        )
+        mm_terms = read_bucket(
+            index_dir, seg_id, sb, mm_want or {}, idfs_pairs or {},
+            avgdls or {}, k1, b,
+        ) or {}
 
         # docs-dimension slice: needed for match_all candidates and/or
         # the sort key; ONE scan serves both
@@ -1113,15 +982,7 @@ def _make_grouped_bucket_scorer(
         def excl_for(neg: tuple) -> np.ndarray:
             got = excl_cache.get(neg)
             if got is None:
-                parts = [terms[t].all_docs() for t in neg if t in terms]
-                got = (
-                    np.union1d(
-                        tombstones, u64_to_doc_id(np.concatenate(parts))
-                    )
-                    if parts
-                    else tombstones
-                )
-                excl_cache[neg] = got
+                got = excl_cache[neg] = exclusion(terms, neg, tombstones)
             return got
 
         # function_score value vectors over the docs slice, cached by
@@ -1766,20 +1627,14 @@ def bool_search_many(
             list(schema.fields)
             + [T.StructField("ckey", _sort_key_type(m, collapse))]
         )
-    mm_pairs_want = sorted(
-        {
-            (f, t)
-            for s in live.values()
-            for per_field in s["mm"]
-            for f, ts, _need in per_field
-            for t in ts
-        }
+    mm_want = _mm_want(
+        per_field for s in live.values() for per_field in s["mm"]
     )
     scorer = _make_grouped_bucket_scorer(
         index_dir, live, idfs, avgdl_eff, m.k1, m.b,
         np.array(sorted(m.tombstones), dtype=np.int64), fld, predicate,
         m.n_shards, m.n_sb, neg_all, boost_all, sort_attr, sort_desc,
-        schema, mm_pairs_want=mm_pairs_want or None, idfs_pairs=idfs_pairs,
+        schema, mm_want=mm_want or None, idfs_pairs=idfs_pairs,
         avgdls=avgdls, collapse_attr=collapse,
     )
     pdf = _execute_buckets(spark, work, scorer, schema, est, execution)

@@ -55,7 +55,6 @@ from ..tokenize import (
     pandas_analyze,
     py_term_bucket,
     spark_analyze,
-    spark_term_bucket,
 )
 from .bloom import SegmentBlooms, write_segment_blooms
 from .manifest import IndexManifest
@@ -230,29 +229,6 @@ def prepare_docs(
     return out
 
 
-def tokenize_postings(
-    prepared: DataFrame, n_tb: int, n_salts: int = 1, analyzer: str = "code_v1"
-) -> DataFrame:
-    """Postings EAV view (shard, tb, salt, term, doc_id, tf, doc_len) via
-    JVM explode + partial-agg groupBy — the unpivot/flatten analog
-    (bugzilla_to_json.ktr:440-648). Kept for inspection/tests and the
-    merge path; the build itself uses the fused SPIMI encoder (no EAV
-    materialization, see _make_spimi_encoder)."""
-    return (
-        prepared.select(
-            "shard",
-            "doc_id",
-            "doc_len",
-            F.explode(spark_analyze(F.col("content"), analyzer)).alias("term"),
-        )
-        .groupBy("shard", "doc_id", "doc_len", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .withColumn("tb", spark_term_bucket(F.col("term"), n_tb))
-        .withColumn("salt", F.pmod(F.col("doc_id"), F.lit(n_salts)).cast("int"))
-        .withColumn("field", F.lit(DEFAULT_FIELD))
-    )
-
-
 def _impact(tf: np.ndarray, dl: np.ndarray, avgdl: float, k1: float, b: float) -> np.ndarray:
     tf = tf.astype(np.float64)
     dl = dl.astype(np.float64)
@@ -385,14 +361,6 @@ def _make_encoder(avgdl_by_field: dict[str, float], k1: float, b: float, block_s
         )
 
     return encode
-
-
-def encode_blocks(
-    postings: DataFrame, avgdl: float, k1: float, b: float, block_size: int
-) -> DataFrame:
-    return postings.groupBy("field", "shard", "tb", "salt").applyInPandas(
-        _make_encoder({DEFAULT_FIELD: avgdl}, k1, b, block_size), schema=BLOCK_SCHEMA
-    )
 
 
 def _make_spimi_encoder(
@@ -1144,8 +1112,8 @@ def delete_docs(
     gone = gone.filter(F.col("doc_id").isin(new_ids))
     # only ids actually present in the index become tombstones: a delete
     # of a nonexistent id must be a full no-op, or the tombstone list
-    # (and every query's tombstone filter + WAND's k+extra over-fetch)
-    # inflates forever and auto-compaction triggers spuriously
+    # (and every query's tombstone filter) inflates forever and
+    # auto-compaction triggers spuriously
     extra = sorted(m.fields)
     rows = gone.select(
         "doc_id", "doc_len", "__seg", *[_extra_len_col(f) for f in extra]

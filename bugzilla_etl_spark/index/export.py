@@ -38,19 +38,18 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ..codec import doc_id_to_u64, u64_to_doc_id
 from ..oracle import idf as _idf
 from .boolquery import (
     Bool,
     _analyze_clauses,
     _gate_survivors,
     _read_bucket_docs,
-    _read_bucket_terms,
     _score_survivors,
     _sort_key_type,
     _validate_filter,
 )
 from .manifest import IndexManifest
+from .postings import exclusion, read_field
 from .query import (
     _candidate_dict_dirs,
     _lookup_terms,
@@ -191,13 +190,9 @@ def matches_df(
         )
         if allowed is not None and not len(allowed):
             return empty
-        terms = (
-            _read_bucket_terms(
-                index_dir, seg_id, sb, gate_terms, fld, idfs, k1, b,
-                avgdl, pos_terms,
-            )
-            if gate_terms
-            else {}
+        terms = read_field(
+            index_dir, seg_id, sb, fld, gate_terms, idfs, avgdl, k1, b,
+            positions=pos_terms,
         )
         if terms is None:  # legacy segment, foreign field
             return empty
@@ -211,12 +206,7 @@ def matches_df(
             )
             docs_pdf = docs_pdf.sort_values("doc_id").reset_index(drop=True)
             docs_ids_i64 = docs_pdf["doc_id"].to_numpy(dtype=np.int64)
-        excl = tombstones
-        neg_parts = [terms[t].all_docs() for t in neg if t in terms]
-        if neg_parts:
-            excl = np.union1d(
-                tombstones, u64_to_doc_id(np.concatenate(neg_parts))
-            )
+        excl = exclusion(terms, neg, tombstones)
         surv = _gate_survivors(
             spec, terms, allowed, excl, docs_ids_i64, None
         )

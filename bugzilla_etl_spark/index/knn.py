@@ -136,12 +136,15 @@ def _make_knn_bucket(
             # O(n) top-k: argpartition for the k-th largest score, keep
             # every candidate >= it (so score TIES at the boundary still
             # resolve by the id tie-break exactly as the full lexsort
-            # did), then lexsort only the survivors (VERDICT r6 #7)
+            # did), then lexsort only the survivors (VERDICT r6 #7).
+            # A NaN score (NaN stored vector) partitions to the top and
+            # would make ``s >= kth`` empty: a non-finite kth falls back
+            # to the full lexsort, which ranks NaNs last
+            cand = np.arange(len(s))
             if 0 < k < len(s):
                 kth = np.partition(s, len(s) - k)[len(s) - k]
-                cand = np.flatnonzero(s >= kth)
-            else:
-                cand = np.arange(len(s))
+                if np.isfinite(kth):
+                    cand = np.flatnonzero(s >= kth)
             order = cand[np.lexsort((ids[cand], -s[cand]))][:k]
             frames.append(
                 pd.DataFrame(

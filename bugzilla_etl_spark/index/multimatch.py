@@ -37,14 +37,13 @@ from ..codec import u64_to_doc_id
 from ..oracle import idf as _idf
 from ..tokenize import py_analyze
 from .manifest import IndexManifest
+from .postings import exclusion, read_bucket
 from .query import (
     RESULT_SCHEMA,
     _allowed_mask,
     _candidate_dict_dirs,
     _execute_buckets,
     _lookup_terms,
-    _PhraseSubList,
-    _PhraseTerm,
     _resolve_allowed,
 )
 
@@ -69,80 +68,29 @@ def _make_multimatch_bucket_scorer(
     """One work item = (segment, sb): one postings read serving EVERY
     queried field, per-field BM25 accumulation over the candidate
     union, per-doc combine (max/sum), bounded top-k per query."""
-    want_by_field: dict[str, set] = defaultdict(set)
+    want: dict[str, set] = defaultdict(set)
     for per_field, _k in queries.values():
         for f, ts in per_field.items():
-            want_by_field[f].update(ts)
+            want[f].update(ts)
     for f, t in neg_pairs:
-        want_by_field[f].add(t)
+        want[f].add(t)
     empty = pd.DataFrame({"query_id": [], "doc_id": [], "score": []}).astype(
         {"query_id": "int32", "doc_id": "int64", "score": "float64"}
     )
 
     def run(key, _pdf):  # (key, pd.DataFrame) -> pd.DataFrame
-        import pyarrow.dataset as ds
-
         seg_id, sb = key[0], int(key[1])
         allowed = _resolve_allowed(
             index_dir, seg_id, sb, predicate, n_shards, n_sb
         )
         if allowed is not None and not len(allowed):
             return empty.copy()
-        path = os.path.join(index_dir, "segments", seg_id, "postings")
-        data = ds.dataset(path, format="parquet", partitioning="hive")
-        has_field = "field" in data.schema.names
-        if has_field:
-            fexpr = None
-            for f in sorted(want_by_field):
-                e = (ds.field("field") == f) & ds.field("term").isin(
-                    sorted(want_by_field[f])
-                )
-                fexpr = e if fexpr is None else fexpr | e
-        elif "content" in want_by_field:
-            # legacy segment: its postings ARE the 'content' field
-            fexpr = ds.field("term").isin(sorted(want_by_field["content"]))
-        else:
-            return empty.copy()
-        tbl = data.to_table(
-            filter=(ds.field("sb") == sb) & fexpr,
-            columns=(["field"] if has_field else [])
-            + ["term", "salt", "shard", "n", "first_doc", "last_doc",
-               "gaps", "tfs", "dls"],
+        lists = read_bucket(
+            index_dir, seg_id, sb, want, idfs, avgdls, k1, b
         )
-        if tbl.num_rows == 0:
+        if not lists:
             return empty.copy()
-        pdf = tbl.to_pandas()
-        fld_col = (
-            pdf["field"] if has_field else pd.Series(["content"] * len(pdf))
-        )
-        lists: dict[tuple[str, str], _PhraseTerm] = {}
-        for f, t, sa, sh, n, fd, ld, g, tfb, dlb in zip(
-            fld_col, pdf["term"], pdf["salt"], pdf["shard"], pdf["n"],
-            pdf["first_doc"], pdf["last_doc"],
-            pdf["gaps"], pdf["tfs"], pdf["dls"],
-        ):
-            if t not in want_by_field.get(f, ()):  # over-read guard
-                continue
-            pt = lists.setdefault((f, t), _PhraseTerm())
-            key2 = (int(sa), int(sh))
-            sl = pt.subs.get(key2)
-            if sl is None:
-                sl = pt.subs[key2] = _PhraseSubList(
-                    idfs.get((f, t), 0.0), k1, b, avgdls[f]
-                )
-            sl.add_block(
-                np.int64(fd).view(np.uint64), np.int64(ld).view(np.uint64),
-                int(n), bytes(g), bytes(tfb), bytes(dlb), None,
-            )
-        for pt in lists.values():
-            pt.seal()
-
-        excl = tombstones
-        neg_lists = [lists[p].all_docs() for p in neg_pairs if p in lists]
-        if neg_lists:
-            excl = np.union1d(
-                tombstones, u64_to_doc_id(np.concatenate(neg_lists))
-            )
+        excl = exclusion(lists, neg_pairs, tombstones)
 
         out_q, out_d, out_s = [], [], []
         for qid, (per_field, k) in queries.items():

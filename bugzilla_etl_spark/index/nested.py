@@ -42,14 +42,13 @@ from ..codec import u64_to_doc_id
 from ..oracle import idf as _idf
 from ..tokenize import py_analyze
 from .manifest import IndexManifest
+from .postings import exclusion, read_field
 from .query import (
     _allowed_mask,
     _candidate_dict_dirs,
     _execute_buckets,
     _lookup_terms,
     _phrase_survivors,
-    _PhraseTerm,
-    _PhraseSubList,
     _resolve_allowed,
 )
 
@@ -82,84 +81,6 @@ _ISIN_MAX = 8192
 NESTED_SPARK_MERGE_MIN = int(
     os.environ.get("SPARK_GRAFT_NESTED_SPARK_MERGE_MIN", "200000")
 )
-
-
-def _read_child_terms(
-    index_dir: str,
-    seg_id: str,
-    sb: int,
-    all_terms: list[str],
-    idfs: dict[str, float],
-    k1: float,
-    b: float,
-    avgdl: float,
-    fld: str,
-    phrase: bool,
-) -> dict | None:
-    """One pushed-down postings scan for a bucket's query terms ->
-    {term: _PhraseTerm} (sealed), or None when the bucket carries no
-    rows for the field/terms (including a legacy single-field segment
-    asked for a non-content field)."""
-    import pyarrow.dataset as ds
-
-    path = os.path.join(index_dir, "segments", seg_id, "postings")
-    data = ds.dataset(path, format="parquet", partitioning="hive")
-    if phrase and "poss" not in data.schema.names:
-        raise ValueError(
-            f"segment {seg_id} has no positional payload; nested "
-            "phrase needs build_index(positions=True)"
-        )
-    flt = (ds.field("sb") == sb) & ds.field("term").isin(all_terms)
-    if "field" in data.schema.names:
-        flt = flt & (ds.field("field") == fld)
-    elif fld != "content":
-        return None
-    cols = ["term", "salt", "shard", "n", "first_doc", "last_doc",
-            "gaps", "tfs", "dls"]
-    if phrase:
-        cols.append("poss")
-    tbl = data.to_table(filter=flt, columns=cols)
-    if tbl.num_rows == 0:
-        return None
-    pdf = tbl.to_pandas()
-
-    terms: dict[str, _PhraseTerm] = {}
-    poss_col = pdf["poss"] if phrase else [None] * len(pdf)
-    for t, sa, sh, n, fd, ld, g, tfb, dlb, pz in zip(
-        pdf["term"], pdf["salt"], pdf["shard"], pdf["n"],
-        pdf["first_doc"], pdf["last_doc"],
-        pdf["gaps"], pdf["tfs"], pdf["dls"], poss_col,
-    ):
-        if phrase and pz is None:
-            raise ValueError(
-                "positional payload missing for term blocks; index "
-                "was not built with positions=True"
-            )
-        pt = terms.setdefault(t, _PhraseTerm())
-        key2 = (int(sa), int(sh))
-        sl = pt.subs.get(key2)
-        if sl is None:
-            sl = pt.subs[key2] = _PhraseSubList(idfs.get(t, 0.0), k1, b, avgdl)
-        sl.add_block(
-            np.int64(fd).view(np.uint64), np.int64(ld).view(np.uint64),
-            int(n), bytes(g), bytes(tfb), bytes(dlb),
-            bytes(pz) if phrase else None,
-        )
-    for pt in terms.values():
-        pt.seal()
-    return terms
-
-
-def _child_excl(terms: dict, neg: list[str], tombstones: np.ndarray) -> np.ndarray:
-    """must_not over CHILD content: children containing a negative term
-    can never match (their parent can still match via another child —
-    the ES must_not-inside-nested semantics)."""
-    if not neg:
-        return tombstones
-    neg_parts = [terms[t].all_docs() for t in neg if t in terms]
-    if not neg_parts:
-        return tombstones
-    return np.union1d(tombstones, u64_to_doc_id(np.concatenate(neg_parts)))
 
 
 def _conjunctive_candidates(
@@ -268,8 +189,8 @@ def _make_nested_bucket_scorer(
     phrase: bool = False,
 ):
     """Per-(segment, sb) conjunctive child scorer + parent partial
-    rollup. Reuses the phrase executor's lazy sub-list machinery with
-    the positional payload absent (membership + impacts only).
+    rollup over the shared lazy block lists (index.postings; positions
+    decoded only in ``phrase`` mode).
     ``neg_terms``: must_not over CHILD content — a child containing any
     of them can never match (its parent can still match via another
     child, the ES nested must_not-inside-nested semantics).
@@ -293,12 +214,13 @@ def _make_nested_bucket_scorer(
         allowed = _resolve_allowed(index_dir, seg_id, sb, predicate, n_shards, n_sb)
         if allowed is not None and not len(allowed):
             return empty
-        terms = _read_child_terms(
-            index_dir, seg_id, sb, all_terms, idfs, k1, b, avgdl, fld, phrase
+        terms = read_field(
+            index_dir, seg_id, sb, fld, all_terms, idfs, avgdl, k1, b,
+            positions=all_terms if phrase else (),
         )
-        if terms is None:
+        if not terms:
             return empty
-        excl = _child_excl(terms, neg, tombstones)
+        excl = exclusion(terms, neg, tombstones)
 
         # bucket docs-column scan shared across the batch's queries
         scan_cache: dict = {}
@@ -609,12 +531,13 @@ def _make_nested_agg_bucket(
         allowed = _resolve_allowed(index_dir, seg_id, sb, predicate, n_shards, n_sb)
         if allowed is not None and not len(allowed):
             return empty_pdf()
-        terms = _read_child_terms(
-            index_dir, seg_id, sb, all_terms, idfs, k1, b, avgdl, fld, phrase
+        terms = read_field(
+            index_dir, seg_id, sb, fld, all_terms, idfs, avgdl, k1, b,
+            positions=all_terms if phrase else (),
         )
-        if terms is None:
+        if not terms:
             return empty_pdf()
-        excl = _child_excl(terms, sorted(neg), tombstones)
+        excl = exclusion(terms, neg, tombstones)
         cand = _conjunctive_candidates(terms, seq, allowed, excl, phrase)
         if not len(cand):
             return empty_pdf()

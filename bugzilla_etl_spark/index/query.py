@@ -7,7 +7,7 @@ Python task per (segment, shard-bucket): each task reads its bucket's
 posting files directly with pyarrow (directory pruning on ``sb``,
 row-group pruning on ``term`` via parquet statistics), decodes each
 query term's lists once, scores every query with a bounded top-k heap
-(exhaustive-vectorized or block-max WAND) -> k-way merge of per-bucket
+(block-max MaxScore, exact) -> k-way merge of per-bucket
 top-ks on the driver -> (doc_id, score) top-k, rank-identical to the
 exhaustive oracle.
 
@@ -23,25 +23,24 @@ pattern (bugzilla_to_json.ktr:1403-1429) applied to scored results:
 buckets are doc-disjoint, so merging never deduplicates.
 
 Scoring determinism: contributions accumulate in sorted term order in
-every path (exhaustive numpy, WAND, pure-Python oracle), so scores are
+every path (MaxScore, exhaustive numpy, pure-Python oracle), so scores are
 bit-identical across paths and across parallelism levels.
 """
 
 from __future__ import annotations
 
 import os
-from collections import defaultdict
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
-from ..codec import delta_decode, u64_to_doc_id, varint_decode
+from ..codec import u64_to_doc_id
 from ..oracle import idf as _idf
 from ..tokenize import py_analyze
 from .manifest import IndexManifest
-from .wand import Block, TermCursor, wand_topk
+from .postings import TermPostings, exclusion, read_field
 
 RESULT_SCHEMA = T.StructType(
     [
@@ -53,13 +52,12 @@ RESULT_SCHEMA = T.StructType(
 
 #: cost-based execution cutover (measured on a 2M-doc/100-segment
 #: index): batches whose estimated posting volume is at or below this
-#: run the bucket scorers in a driver-side thread pool — the pyarrow
-#: reads dominate selective queries and release the GIL, so 8 rare-term
-#: queries answer in 0.21s vs 0.95s through the Spark fan-out (whose
-#: task-scheduling floor dwarfs the work). Above it, scoring is
-#: numpy-orchestration-heavy (GIL-bound across threads: a 4-hot-query
-#: batch measured 60s local vs 2.6s Spark) and the Spark fan-out — the
-#: cluster path — engages. The estimate is exact plan-time data: df per
+#: run the bucket scorers in the driver, serially unless the caller
+#: passes ``local_workers`` (only kNN does; see _execute_buckets) — 8
+#: rare-term queries answer in 0.21s vs 0.95s through the Spark fan-out
+#: (whose task-scheduling floor dwarfs the work). Above it, scoring is
+#: numpy-orchestration-heavy and the Spark fan-out — the cluster path —
+#: engages. The estimate is exact plan-time data: df per
 #: term from the dictionary (BM25: sum over query terms; phrase/nested:
 #: the rarest term per query, which bounds the candidate volume).
 LOCAL_MAX_POSTINGS = int(os.environ.get("SPARK_GRAFT_LOCAL_MAX_POSTINGS", "50000"))
@@ -226,83 +224,6 @@ def _lookup_terms(
 
 
 # ------------------------------------------------------ bucket executor
-class _LazyTermList:
-    """Per-term block store with lazy per-block decode + cache.
-
-    The vectorized MaxScore path decodes a hot term's block ONLY when it
-    contains a candidate doc; decoded blocks are cached so the 64-query
-    batch shares work."""
-
-    __slots__ = ("idf", "firsts", "lasts", "bmaxs", "gaps", "tfs", "dls",
-                 "n_postings", "_cache", "k1", "b", "avgdl")
-
-    def __init__(self, idf, k1, b, avgdl):
-        self.idf, self.k1, self.b, self.avgdl = idf, k1, b, avgdl
-        self.firsts, self.lasts, self.bmaxs = [], [], []
-        self.gaps, self.tfs, self.dls = [], [], []
-        self.n_postings = 0
-        self._cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-
-    def add_block(self, first_u64, last_u64, bmax, gaps, tfs, dls, n):
-        self.firsts.append(first_u64)
-        self.lasts.append(last_u64)
-        self.bmaxs.append(bmax)
-        self.gaps.append(gaps)
-        self.tfs.append(tfs)
-        self.dls.append(dls)
-        self.n_postings += n
-
-    def seal(self):
-        order = np.argsort(np.array(self.firsts, dtype=np.uint64), kind="stable")
-        self.firsts = np.array(self.firsts, dtype=np.uint64)[order]
-        self.lasts = np.array(self.lasts, dtype=np.uint64)[order]
-        self.bmaxs = np.array(self.bmaxs, dtype=np.float64)[order]
-        self.gaps = [self.gaps[i] for i in order]
-        self.tfs = [self.tfs[i] for i in order]
-        self.dls = [self.dls[i] for i in order]
-
-    @property
-    def ub(self) -> float:
-        return float(self.idf * self.bmaxs.max())
-
-    def _decode(self, i: int) -> tuple[np.ndarray, np.ndarray]:
-        hit = self._cache.get(i)
-        if hit is not None:
-            return hit
-        d = delta_decode(varint_decode(self.gaps[i]))
-        tf = varint_decode(self.tfs[i]).astype(np.float64)
-        dl = varint_decode(self.dls[i]).astype(np.float64)
-        imp = self.idf * (
-            tf * (self.k1 + 1.0)
-            / (tf + self.k1 * (1.0 - self.b + self.b * dl / self.avgdl))
-        )
-        self._cache[i] = (d, imp)
-        return d, imp
-
-    def decode_all(self) -> tuple[np.ndarray, np.ndarray]:
-        parts = [self._decode(i) for i in range(len(self.firsts))]
-        return (
-            np.concatenate([p[0] for p in parts]),
-            np.concatenate([p[1] for p in parts]),
-        )
-
-    def contributions_at(self, cand_u64: np.ndarray) -> np.ndarray:
-        """Exact contribution of this term at each candidate (0 when the
-        doc is not in the list); decodes only overlapping blocks."""
-        out = np.zeros(len(cand_u64), dtype=np.float64)
-        # block index potentially containing each candidate
-        bi = np.searchsorted(self.firsts, cand_u64, side="right") - 1
-        ok = (bi >= 0) & (cand_u64 <= self.lasts[np.clip(bi, 0, None)])
-        for i in np.unique(bi[ok]):
-            sel = np.flatnonzero(ok & (bi == i))
-            docs, imps = self._decode(int(i))
-            pos = np.searchsorted(docs, cand_u64[sel])
-            pos = np.clip(pos, 0, len(docs) - 1)
-            hit = docs[pos] == cand_u64[sel]
-            out[sel[hit]] = imps[pos[hit]]
-        return out
-
-
 #: a term is "hot" in a bucket when its list exceeds this many postings;
 #: hot lists are only block-decoded where candidates live (exact MaxScore)
 HOT_POSTINGS = 4096
@@ -355,7 +276,6 @@ def _make_bucket_scorer(
     k1: float,
     b: float,
     tombstones: np.ndarray,
-    use_wand: bool,
     seg_bound_scale: dict[str, float] | None = None,
     fld: str = "content",
     predicate: list | None = None,
@@ -388,110 +308,28 @@ def _make_bucket_scorer(
     filtered search stays exact with zero driver-side work."""
     neg = sorted(set(neg_terms or ()))
     live_terms = sorted(set(idfs) | set(neg))
-    empty = pd.DataFrame({"query_id": [], "doc_id": [], "score": []}).astype(
-        {"query_id": "int32", "doc_id": "int64", "score": "float64"}
-    )
+    # built once: most buckets of a selective query return it
+    empty = _empty_like(RESULT_SCHEMA)
 
     def score(key, _pdf):  # (key, pd.DataFrame) -> pd.DataFrame
-        import pyarrow.dataset as ds
-
         seg_id, sb = key[0], int(key[1])
         allowed = _resolve_allowed(index_dir, seg_id, sb, predicate, n_shards, n_sb)
         if allowed is not None and not len(allowed):
             return empty.copy()
-        bscale = (seg_bound_scale or {}).get(seg_id, 1.0)
-        path = os.path.join(index_dir, "segments", seg_id, "postings")
-        data = ds.dataset(path, format="parquet", partitioning="hive")
-        flt = (ds.field("sb") == sb) & ds.field("term").isin(live_terms)
-        # legacy segment (pre-field-column): its postings ARE the
-        # primary 'content' field — no field clause; other fields
-        # can't match it at all
-        has_field = "field" in data.schema.names
-        if has_field:
-            flt = flt & (ds.field("field") == fld)
-        elif fld != "content":
-            return pd.DataFrame({"query_id": [], "doc_id": [], "score": []}).astype(
-                {"query_id": "int32", "doc_id": "int64", "score": "float64"}
-            )
-        tbl = data.to_table(
-            filter=flt,
-            columns=["term", "salt", "shard", "n", "first_doc", "last_doc",
-                     "max_impact", "gaps", "tfs", "dls"],
+        lists = read_field(
+            index_dir, seg_id, sb, fld, live_terms, idfs, avgdl, k1, b,
+            bound_scale=(seg_bound_scale or {}).get(seg_id, 1.0),
         )
-        if tbl.num_rows == 0:
+        if not lists:
             return empty.copy()
-        pdf = tbl.to_pandas()
-
-        lists: dict[str, dict[tuple[int, int], _LazyTermList]] = {}
-        by_term_sub: dict[tuple[str, int, int], list[Block]] = defaultdict(list)
-        for t, s, sh, n, fd, ld, mi, g, tf, dl in zip(
-            pdf["term"], pdf["salt"], pdf["shard"], pdf["n"], pdf["first_doc"],
-            pdf["last_doc"], pdf["max_impact"], pdf["gaps"], pdf["tfs"], pdf["dls"],
-        ):
-            fu = np.int64(fd).view(np.uint64)
-            lu = np.int64(ld).view(np.uint64)
-            if use_wand:
-                by_term_sub[(t, int(s), int(sh))].append(
-                    Block(first=fu, last=lu, max_impact=float(mi) * bscale,
-                          gaps=bytes(g), tfs=bytes(tf), dls=bytes(dl))
-                )
-            else:
-                # one lazy list per (term, salt, shard): one sb holds
-                # n_shards/n_sb shards, and both salted and sharded
-                # sub-lists have OVERLAPPING doc ranges — the sorted
-                # non-overlap invariant of contributions_at/seek only
-                # holds WITHIN a single (salt, shard) sub-list
-                subs = lists.setdefault(t, {})
-                key2 = (int(s), int(sh))
-                tl = subs.get(key2)
-                if tl is None:
-                    # .get: negative (must_not) terms carry no idf — their
-                    # lists are decoded for doc ids only, never scored
-                    tl = subs[key2] = _LazyTermList(idfs.get(t, 0.0), k1, b, avgdl)
-                tl.add_block(
-                    fu, lu, float(mi) * bscale, bytes(g), bytes(tf), bytes(dl), int(n)
-                )
-        for subs in lists.values():
-            for tl in subs.values():
-                tl.seal()
-
-        # must_not: decode the negative terms' doc lists once per bucket
-        # and fold them into the tombstone exclusion set (identical
-        # semantics: excluded from results, stats untouched)
-        excl = tombstones
-        if neg:
-            neg_parts: list[np.ndarray] = []
-            for t in neg:
-                for tl in (lists.get(t) or {}).values():
-                    neg_parts.append(tl.decode_all()[0])
-                for (bt, _sa, _sh), bl in by_term_sub.items():
-                    if bt == t:
-                        for blk in bl:
-                            neg_parts.append(
-                                delta_decode(varint_decode(blk.gaps))
-                            )
-            if neg_parts:
-                neg_i64 = u64_to_doc_id(np.concatenate(neg_parts))
-                excl = np.union1d(tombstones, neg_i64)
-
+        excl = exclusion(lists, neg, tombstones)
+        pos_lists = {t: tl for t, tl in lists.items() if t not in neg}
         out_q, out_d, out_s = [], [], []
-        pos_lists = {t: s for t, s in lists.items() if t not in neg}
-        pos_subs = {
-            k2: v for k2, v in by_term_sub.items() if k2[0] not in neg
-        }
-        present_terms = set(pos_lists) or {ts[0] for ts in pos_subs}
         for qid, (terms, k) in queries.items():
-            present = sorted(present_terms & set(terms))
+            present = sorted(pos_lists.keys() & set(terms))
             if not present:
                 continue
-            if use_wand:
-                topk = _score_wand(
-                    present, pos_subs, idfs, avgdl, k1, b, excl, k,
-                    allowed,
-                )
-            else:
-                topk = _score_maxscore(present, pos_lists, excl, k, allowed)
-            for d, s in topk:
+            for d, s in _score_maxscore(present, pos_lists, excl, k, allowed):
                 out_q.append(qid)
                 out_d.append(d)
                 out_s.append(s)
@@ -500,33 +338,6 @@ def _make_bucket_scorer(
         )
 
     return score
-
-
-def _term_postings(subs: dict[int, _LazyTermList]) -> int:
-    return sum(tl.n_postings for tl in subs.values())
-
-
-def _term_ub(subs: dict[int, _LazyTermList]) -> float:
-    # a doc lives in exactly one salt sub-list per term, so the term's
-    # per-doc upper bound is the MAX over sub-lists
-    return max(tl.ub for tl in subs.values())
-
-
-def _term_decode_all(subs: dict[int, _LazyTermList]) -> tuple[np.ndarray, np.ndarray]:
-    parts = [subs[s].decode_all() for s in sorted(subs)]
-    return (
-        np.concatenate([p[0] for p in parts]),
-        np.concatenate([p[1] for p in parts]),
-    )
-
-
-def _term_contributions_at(
-    subs: dict[int, _LazyTermList], cand_u64: np.ndarray
-) -> np.ndarray:
-    out = np.zeros(len(cand_u64), dtype=np.float64)
-    for s in sorted(subs):
-        out += subs[s].contributions_at(cand_u64)
-    return out
 
 
 def _allowed_mask(cand_u64: np.ndarray, allowed_u64: np.ndarray) -> np.ndarray:
@@ -540,7 +351,7 @@ def _allowed_mask(cand_u64: np.ndarray, allowed_u64: np.ndarray) -> np.ndarray:
 
 def _score_maxscore(
     terms: list[str],
-    lists: dict[str, dict[int, _LazyTermList]],
+    lists: dict[str, TermPostings],
     tombstones: np.ndarray,
     k: int,
     allowed: np.ndarray | None = None,
@@ -561,8 +372,8 @@ def _score_maxscore(
     Block-skipping stays sound: block upper bounds bound any doc in the
     block, allowed or not, so stopping when bound < theta(allowed
     candidates) can never drop an allowed doc."""
-    sel = [t for t in terms if _term_postings(lists[t]) <= HOT_POSTINGS]
-    hot = [t for t in terms if _term_postings(lists[t]) > HOT_POSTINGS]
+    sel = [t for t in terms if lists[t].n_postings <= HOT_POSTINGS]
+    hot = [t for t in terms if lists[t].n_postings > HOT_POSTINGS]
     if len(terms) == 1 and hot and not tombstones.size and allowed is None:
         return _score_single_hot(lists[terms[0]], k)
     if hot and not sel:
@@ -570,13 +381,13 @@ def _score_maxscore(
         return _score_multi_hot(terms, lists, tombstones, k, allowed)
     if sel and hot:
         cand = np.unique(
-            np.concatenate([_term_decode_all(lists[t])[0] for t in sel])
+            np.concatenate([lists[t].decode_all()[0] for t in sel])
         )
         if allowed is not None:
             cand = cand[_allowed_mask(cand, allowed)]
         acc = np.zeros(len(cand), dtype=np.float64)
         for t in terms:  # sorted order -> deterministic, oracle-identical sums
-            acc += _term_contributions_at(lists[t], cand)
+            acc += lists[t].imp_at(cand)[1]
         theta = (
             float(-np.partition(-acc, k - 1)[k - 1])
             if len(cand) >= k
@@ -584,7 +395,7 @@ def _score_maxscore(
         )
         # clamp at 0: negative-idf terms (df > live N after deletes)
         # bound docs that CONTAIN them; absent docs contribute 0
-        hot_ub = sum(max(0.0, _term_ub(lists[t])) for t in hot)
+        hot_ub = sum(max(0.0, lists[t].ub) for t in hot)
         if hot_ub < theta:
             docs_i64 = u64_to_doc_id(cand)
             if tombstones.size and np.isin(docs_i64, tombstones).any():
@@ -604,7 +415,7 @@ def _score_maxscore(
 
 def _score_multi_hot(
     terms: list[str],
-    lists: dict[str, dict[tuple[int, int], _LazyTermList]],
+    lists: dict[str, TermPostings],
     tombstones: np.ndarray,
     k: int,
     allowed: np.ndarray | None = None,
@@ -632,7 +443,7 @@ def _score_multi_hot(
     entries: list[tuple[float, str, tuple[int, int], int]] = []
     per_term_bounds: dict[str, list[float]] = {}
     for t in terms:
-        subs = lists[t]
+        subs = lists[t].subs
         tb = []
         for skey in sorted(subs):
             tl = subs[skey]
@@ -666,7 +477,7 @@ def _score_multi_hot(
                 break
         new_parts = []
         for bound, t, skey, i in entries[pos : pos + CHUNK]:
-            d, _ = lists[t][skey]._decode(i)
+            d = lists[t].subs[skey].decode(i)[0]
             new_parts.append(d)
             n_proc[t] += 1
         pos += CHUNK
@@ -692,7 +503,7 @@ def _score_multi_hot(
         if nd.size:
             acc = np.zeros(len(nd), dtype=np.float64)
             for t in terms:  # sorted term order -> oracle-identical sums
-                acc += _term_contributions_at(lists[t], nd)
+                acc += lists[t].imp_at(nd)[1]
             cand_docs.append(nd)
             cand_scores.append(acc)
             n_cand += len(nd)
@@ -711,14 +522,13 @@ def _score_multi_hot(
     return list(zip(docs_i64[pick].tolist(), acc[pick].tolist()))
 
 
-def _score_single_hot(
-    subs: dict[int, _LazyTermList], k: int
-) -> list[tuple[int, float]]:
+def _score_single_hot(tp: TermPostings, k: int) -> list[tuple[int, float]]:
     """Exact single-term top-k with impact-ordered early termination:
     blocks (across salt sub-lists) are processed in descending
     block-max-impact order; once the kth best score can no longer be
     beaten by any unprocessed block (strict bound, ties processed),
     the remaining blocks are never decoded."""
+    subs = tp.subs
     entries = [
         (float(subs[s].idf * subs[s].bmaxs[i]), s, i)
         for s in subs
@@ -738,7 +548,7 @@ def _score_single_hot(
         for ub, s, i in entries[pos : pos + CHUNK]:
             if n_seen >= k and ub < theta:
                 break
-            d, imp = subs[s]._decode(i)
+            d, imp, _ = subs[s].decode(i)
             docs_parts.append(d)
             imp_parts.append(imp)
             n_seen += len(d)
@@ -760,12 +570,12 @@ def _score_single_hot(
 
 def _score_full(
     terms: list[str],
-    lists: dict[str, dict[int, _LazyTermList]],
+    lists: dict[str, TermPostings],
     tombstones: np.ndarray,
     k: int,
     allowed: np.ndarray | None = None,
 ) -> list[tuple[int, float]]:
-    decoded = {t: _term_decode_all(lists[t]) for t in terms}
+    decoded = {t: lists[t].decode_all() for t in terms}
     return _score_decoded(terms, decoded, tombstones, k, allowed)
 
 
@@ -809,40 +619,11 @@ def _score_decoded(
     return list(zip(docs_i64[sel].tolist(), acc[sel].tolist()))
 
 
-def _score_wand(
-    terms: list[str],
-    by_term_sub: dict,
-    idfs: dict[str, float],
-    avgdl: float,
-    k1: float,
-    b: float,
-    tombstones: np.ndarray,
-    k: int,
-    allowed: np.ndarray | None = None,
-) -> list[tuple[int, float]]:
-    # one cursor per (term, salt, shard) sub-list: blocks only satisfy
-    # the sorted non-overlap invariant within a single sub-list.
-    # Tombstones and predicate sets are heap-insertion gates inside
-    # wand_topk (exact over the filtered doc space, no over-fetch).
-    cursors = [
-        TermCursor(t, s, idfs[t], blocks, k1, b, avgdl)
-        for (t, s, _sh), blocks in sorted(by_term_sub.items())
-        if t in terms
-    ]
-    banned = (
-        np.sort(tombstones.astype(np.int64).view(np.uint64))
-        if tombstones.size
-        else None
-    )
-    return wand_topk(cursors, k, allowed=allowed, banned=banned)
-
-
 # -------------------------------------------------------------- fan-out
 def search_many(
     spark: SparkSession,
     index_dir: str,
     queries: list[tuple[int, str, int]],
-    use_wand: bool = False,
     field: str = "content",
     predicate: list | None = None,
     execution: str = "auto",
@@ -877,7 +658,7 @@ def search_many(
     One Spark job: a (segment, sb) fan-out scored in Python workers;
     the driver k-way merges the per-bucket bounded heaps per query.
     Selective batches (plan-time df sum under LOCAL_MAX_POSTINGS) skip
-    the fan-out and run the same scorers in a driver thread pool when
+    the fan-out and run the same scorers serially in the driver when
     ``execution="auto"`` (see _execute_buckets).
 
     ``field`` selects a field variant of a multi-field index (the
@@ -890,10 +671,8 @@ def search_many(
     term-filter + fulltext query (ES filter context,
     bug_version.json:57-65,221-224). Applied per bucket BEFORE the
     top-k heap, so the k results are exact over the filtered doc space;
-    BM25 statistics stay index-global, matching ES semantics. Both
-    scorer families support it: the MaxScore family filters candidate
-    streams, WAND gates heap insertion (wand.py) — no over-fetch in
-    either path.
+    BM25 statistics stay index-global, matching ES semantics. The
+    MaxScore scorer filters its candidate streams — no over-fetch.
     """
     if operator not in ("or", "and"):
         raise ValueError(f"operator must be 'or' or 'and': {operator!r}")
@@ -1034,7 +813,6 @@ def search_many(
             m.k1,
             m.b,
             tomb,
-            use_wand,
             seg_bound_scale,
             field,
             predicate,
@@ -1645,8 +1423,8 @@ def explain_search(
     engine WOULD run this query — analyzed terms and their dictionary
     dfs, the bloom-pruned candidate segment set, the (segment, sb)
     work-item count, the plan-time posting-volume estimate, and the
-    execution harness the cost model would pick (driver-local thread
-    pool vs Spark fan-out). The observability face of the cost-based
+    execution harness the cost model would pick (driver-local vs Spark
+    fan-out). The observability face of the cost-based
     executor — ES _validate/explain analog."""
     index_dir = os.path.abspath(index_dir)
     m = IndexManifest.load(index_dir)
@@ -1746,7 +1524,6 @@ def search(
     index_dir: str,
     query: str,
     k: int = 10,
-    use_wand: bool = False,
     field: str = "content",
     predicate: list | None = None,
     must_not: list[str] | None = None,
@@ -1758,7 +1535,6 @@ def search(
         spark,
         index_dir,
         [(0, query, k)],
-        use_wand=use_wand,
         field=field,
         predicate=predicate,
         must_not=must_not,
@@ -1769,189 +1545,6 @@ def search(
 
 
 # ------------------------------------------------------- phrase queries
-class _PhraseSubList:
-    """One (salt, shard) sub-list of a phrase term: sorted non-overlapping
-    blocks with LAZY per-block decode (docs, imp, positions) — the
-    _LazyTermList discipline extended with the positional payload, so a
-    phrase containing a hot term ("the merge") decodes only the blocks
-    that contain candidate docs instead of the whole list."""
-
-    __slots__ = ("idf", "k1", "b", "avgdl", "firsts", "lasts", "bufs",
-                 "n_postings", "_dec")
-
-    def __init__(self, idf, k1, b, avgdl):
-        self.idf, self.k1, self.b, self.avgdl = idf, k1, b, avgdl
-        self.firsts, self.lasts, self.bufs = [], [], []
-        self.n_postings = 0
-        self._dec: dict[int, tuple] = {}
-
-    def add_block(self, first_u64, last_u64, n, g, tfb, dlb, pz):
-        self.firsts.append(first_u64)
-        self.lasts.append(last_u64)
-        self.bufs.append((g, tfb, dlb, pz))
-        self.n_postings += n
-
-    def seal(self):
-        order = np.argsort(np.array(self.firsts, dtype=np.uint64), kind="stable")
-        self.firsts = np.array(self.firsts, dtype=np.uint64)[order]
-        self.lasts = np.array(self.lasts, dtype=np.uint64)[order]
-        self.bufs = [self.bufs[i] for i in order]
-
-    def _decode(self, i: int):
-        hit = self._dec.get(i)
-        if hit is not None:
-            return hit
-        g, tfb, dlb, pz = self.bufs[i]
-        docs = delta_decode(varint_decode(bytes(g)))
-        tf = varint_decode(bytes(tfb)).astype(np.int64)
-        dl = varint_decode(bytes(dlb)).astype(np.float64)
-        imp = self.idf * (
-            tf * (self.k1 + 1.0)
-            / (tf + self.k1 * (1.0 - self.b + self.b * dl / self.avgdl))
-        )
-        if pz is None:
-            # conjunctive (nested) usage: no positional payload; only
-            # membership/impacts/dl are served — positions_* must not
-            # be called on such a sub-list
-            off = np.concatenate(([0], np.cumsum(tf)))
-            out = (docs, imp, None, off, dl)
-            self._dec[i] = out
-            return out
-        # per-posting absolute positions: cumsum restarting at each
-        # posting (first value absolute): pos[j] = cp[j] - cp[start-1]
-        pp = varint_decode(bytes(pz)).astype(np.int64)
-        starts = np.concatenate(([0], np.cumsum(tf)))[:-1]
-        cp = np.cumsum(pp)
-        base = np.zeros(len(pp), dtype=np.int64)
-        if len(starts):
-            adj = cp[starts - 1]
-            adj[starts == 0] = 0
-            base = np.repeat(adj, tf)
-        pos_flat = cp - base
-        off = np.concatenate(([0], np.cumsum(tf)))
-        out = (docs, imp, pos_flat, off, dl)
-        self._dec[i] = out
-        return out
-
-    def all_docs(self) -> np.ndarray:
-        if not len(self.firsts):
-            return np.empty(0, dtype=np.uint64)
-        return np.concatenate([self._decode(i)[0] for i in range(len(self.firsts))])
-
-    def block_of(self, cand: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """(block index, found) per candidate — blocks are sorted and
-        non-overlapping within a sub-list, so searchsorted suffices."""
-        bi = np.searchsorted(self.firsts, cand, side="right") - 1
-        ok = (bi >= 0) & (cand <= self.lasts[np.clip(bi, 0, None)])
-        return bi, ok
-
-
-class _PhraseTerm:
-    """All (salt, shard) sub-lists of one term in one bucket."""
-
-    __slots__ = ("subs", "n_postings")
-
-    def __init__(self):
-        self.subs: dict[tuple[int, int], _PhraseSubList] = {}
-        self.n_postings = 0
-
-    def seal(self):
-        for sl in self.subs.values():
-            sl.seal()
-            self.n_postings += sl.n_postings
-
-    def all_docs(self) -> np.ndarray:
-        parts = [sl.all_docs() for sl in self.subs.values()]
-        return np.sort(np.concatenate(parts)) if parts else np.empty(0, dtype=np.uint64)
-
-    def imp_at(self, cand: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """(membership mask, imp) per candidate; decodes ONLY blocks that
-        contain candidates (a doc lives in exactly one sub-list)."""
-        found = np.zeros(len(cand), dtype=bool)
-        imp = np.zeros(len(cand), dtype=np.float64)
-        for sl in self.subs.values():
-            bi, ok = sl.block_of(cand)
-            for i in np.unique(bi[ok]):
-                sel = np.flatnonzero(ok & (bi == i))
-                docs, imps, _, _, _ = sl._decode(int(i))
-                pos = np.clip(np.searchsorted(docs, cand[sel]), 0, len(docs) - 1)
-                hit = docs[pos] == cand[sel]
-                found[sel[hit]] = True
-                imp[sel[hit]] = imps[pos[hit]]
-        return found, imp
-
-    def positions_at(self, du) -> np.ndarray | None:
-        for sl in self.subs.values():
-            bi, ok = sl.block_of(np.array([du], dtype=np.uint64))
-            if ok[0]:
-                docs, _, pos_flat, off, _ = sl._decode(int(bi[0]))
-                j = int(np.searchsorted(docs, du))
-                if j < len(docs) and docs[j] == du:
-                    return pos_flat[off[j] : off[j + 1]]
-        return None
-
-    def dl_at(self, du) -> float | None:
-        for sl in self.subs.values():
-            bi, ok = sl.block_of(np.array([du], dtype=np.uint64))
-            if ok[0]:
-                docs, _, _, _, dl = sl._decode(int(bi[0]))
-                j = int(np.searchsorted(docs, du))
-                if j < len(docs) and docs[j] == du:
-                    return float(dl[j])
-        return None
-
-    def positions_bulk(
-        self, cand: np.ndarray
-    ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """Ragged gather of every candidate's position list in ONE pass:
-        returns (ci, pos, dl) flat arrays where ``ci`` is the index into
-        ``cand`` owning each position, sorted by (ci, pos) ascending.
-        Python iterates distinct (sub-list, block) pairs — never docs
-        (VERDICT r4 #2: the per-doc positions_at loop was 10^5 Python
-        iterations per bucket for a two-common-term phrase)."""
-        ci_chunks: list[np.ndarray] = []
-        pos_chunks: list[np.ndarray] = []
-        dl_chunks: list[np.ndarray] = []
-        for sl in self.subs.values():
-            bi, ok = sl.block_of(cand)
-            for i in np.unique(bi[ok]):
-                sel = np.flatnonzero(ok & (bi == i))
-                docs, _, pos_flat, off, dl = sl._decode(int(i))
-                if pos_flat is None:
-                    raise ValueError(
-                        "positions requested from a sub-list loaded without "
-                        "the positional payload"
-                    )
-                j = np.searchsorted(docs, cand[sel])
-                inb = j < len(docs)
-                hit = inb & (docs[np.clip(j, 0, len(docs) - 1)] == cand[sel])
-                sel, j = sel[hit], j[hit]
-                if not len(sel):
-                    continue
-                lens = (off[j + 1] - off[j]).astype(np.int64)
-                total = int(lens.sum())
-                # flat[base+local] walks each posting's [off[j], off[j+1])
-                # slice — the standard ragged-gather index trick, no loop
-                base = np.repeat(off[j], lens)
-                local = np.arange(total, dtype=np.int64) - np.repeat(
-                    np.cumsum(lens) - lens, lens
-                )
-                pos_chunks.append(pos_flat[base + local])
-                ci_chunks.append(np.repeat(sel, lens))
-                dl_chunks.append(np.repeat(dl[j], lens))
-        if not ci_chunks:
-            e = np.empty(0, dtype=np.int64)
-            return e, e, np.empty(0, dtype=np.float64)
-        ci = np.concatenate(ci_chunks)
-        pos = np.concatenate(pos_chunks)
-        dls = np.concatenate(dl_chunks)
-        # stable by ci keeps each doc's positions ascending (they are
-        # ascending within every chunk; a doc never spans chunks)
-        order = np.argsort(ci, kind="stable")
-        return ci[order], pos[order].astype(np.int64), dls[order]
-
-
-
 def _min_range_leq(shifted: list[np.ndarray], slop: int) -> bool:
     """Smallest range covering one element from each sorted list —
     match iff min over alignments of (max(s_i) - min(s_i)) <= slop.
@@ -2176,69 +1769,21 @@ def _make_phrase_bucket_scorer(
     the BM25 scorer's."""
     neg = sorted(set(neg_terms or ()))
     all_terms = sorted({t for seq, _ in queries.values() for t in seq} | set(neg))
+    empty = _empty_like(RESULT_SCHEMA)
 
     def run(key, _pdf):  # (key, pd.DataFrame) -> pd.DataFrame
-        import pyarrow.dataset as ds
-
         seg_id, sb = key[0], int(key[1])
-        empty = pd.DataFrame({"query_id": [], "doc_id": [], "score": []}).astype(
-            {"query_id": "int32", "doc_id": "int64", "score": "float64"}
-        )
         allowed = _resolve_allowed(index_dir, seg_id, sb, predicate, n_shards, n_sb)
         if allowed is not None and not len(allowed):
-            return empty
-        path = os.path.join(index_dir, "segments", seg_id, "postings")
-        data = ds.dataset(path, format="parquet", partitioning="hive")
-        if "poss" not in data.schema.names:
-            raise ValueError(
-                f"segment {seg_id} has no positional payload; rebuild with "
-                "build_index(positions=True)"
-            )
-        flt = (ds.field("sb") == sb) & ds.field("term").isin(all_terms)
-        if "field" in data.schema.names:
-            flt = flt & (ds.field("field") == fld)
-        tbl = data.to_table(
-            filter=flt,
-            columns=["term", "salt", "shard", "n", "first_doc", "last_doc",
-                     "gaps", "tfs", "dls", "poss"],
+            return empty.copy()
+        terms = read_field(
+            index_dir, seg_id, sb, fld, all_terms, idfs, avgdl, k1, b,
+            positions=all_terms,
         )
-        if tbl.num_rows == 0:
-            return empty
-        pdf = tbl.to_pandas()
-
-        terms: dict[str, _PhraseTerm] = {}
-        for t, sa, sh, n, fd, ld, g, tfb, dlb, pz in zip(
-            pdf["term"], pdf["salt"], pdf["shard"], pdf["n"],
-            pdf["first_doc"], pdf["last_doc"],
-            pdf["gaps"], pdf["tfs"], pdf["dls"], pdf["poss"],
-        ):
-            if pz is None:
-                raise ValueError(
-                    "positional payload missing for term blocks; "
-                    "index was not built with positions=True"
-                )
-            pt = terms.setdefault(t, _PhraseTerm())
-            key2 = (int(sa), int(sh))
-            sl = pt.subs.get(key2)
-            if sl is None:
-                sl = pt.subs[key2] = _PhraseSubList(idfs.get(t, 0.0), k1, b, avgdl)
-            sl.add_block(
-                np.int64(fd).view(np.uint64), np.int64(ld).view(np.uint64),
-                int(n), bytes(g), bytes(tfb), bytes(dlb), bytes(pz),
-            )
-        for pt in terms.values():
-            pt.seal()
-
+        if not terms:
+            return empty.copy()
         # must_not: negative terms' doc lists fold into the exclusion set
-        excl = tombstones
-        if neg:
-            neg_parts = [
-                terms[t].all_docs() for t in neg if t in terms
-            ]
-            if neg_parts:
-                excl = np.union1d(
-                    tombstones, u64_to_doc_id(np.concatenate(neg_parts))
-                )
+        excl = exclusion(terms, neg, tombstones)
 
         out_q, out_d, out_s = [], [], []
         for qid, (seq, k) in queries.items():
@@ -2349,57 +1894,19 @@ def _make_conjunctive_bucket_scorer(
     all_terms = sorted(
         {t for seq, _ in queries.values() for t in seq} | set(neg) | set(boost)
     )
+    empty = _empty_like(RESULT_SCHEMA)
 
     def run(key, _pdf):  # (key, pd.DataFrame) -> pd.DataFrame
-        import pyarrow.dataset as ds
-
         seg_id, sb = key[0], int(key[1])
-        empty = pd.DataFrame({"query_id": [], "doc_id": [], "score": []}).astype(
-            {"query_id": "int32", "doc_id": "int64", "score": "float64"}
-        )
         allowed = _resolve_allowed(index_dir, seg_id, sb, predicate, n_shards, n_sb)
         if allowed is not None and not len(allowed):
-            return empty
-        path = os.path.join(index_dir, "segments", seg_id, "postings")
-        data = ds.dataset(path, format="parquet", partitioning="hive")
-        flt = (ds.field("sb") == sb) & ds.field("term").isin(all_terms)
-        if "field" in data.schema.names:
-            flt = flt & (ds.field("field") == fld)
-        elif fld != "content":
-            return empty
-        tbl = data.to_table(
-            filter=flt,
-            columns=["term", "salt", "shard", "n", "first_doc", "last_doc",
-                     "gaps", "tfs", "dls"],
+            return empty.copy()
+        terms = read_field(
+            index_dir, seg_id, sb, fld, all_terms, idfs, avgdl, k1, b
         )
-        if tbl.num_rows == 0:
-            return empty
-        pdf = tbl.to_pandas()
-        terms: dict[str, _PhraseTerm] = {}
-        for t, sa, sh, n, fd, ld, g, tfb, dlb in zip(
-            pdf["term"], pdf["salt"], pdf["shard"], pdf["n"],
-            pdf["first_doc"], pdf["last_doc"],
-            pdf["gaps"], pdf["tfs"], pdf["dls"],
-        ):
-            pt = terms.setdefault(t, _PhraseTerm())
-            key2 = (int(sa), int(sh))
-            sl = pt.subs.get(key2)
-            if sl is None:
-                sl = pt.subs[key2] = _PhraseSubList(idfs.get(t, 0.0), k1, b, avgdl)
-            sl.add_block(
-                np.int64(fd).view(np.uint64), np.int64(ld).view(np.uint64),
-                int(n), bytes(g), bytes(tfb), bytes(dlb), None,
-            )
-        for pt in terms.values():
-            pt.seal()
-
-        excl = tombstones
-        if neg:
-            neg_parts = [terms[t].all_docs() for t in neg if t in terms]
-            if neg_parts:
-                excl = np.union1d(
-                    tombstones, u64_to_doc_id(np.concatenate(neg_parts))
-                )
+        if not terms:
+            return empty.copy()
+        excl = exclusion(terms, neg, tombstones)
 
         out_q, out_d, out_s = [], [], []
         for qid, (seq, k) in queries.items():

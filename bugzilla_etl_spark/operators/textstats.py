@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from ..tokenize import duckdb_tokens_sql, spark_tokens
+from ..tokenize import TOKEN_PATTERN, duckdb_tokens_sql, spark_tokens
 from .dedup import EXACT_PREFIX
 
 STOPWORDS = ["the", "a", "of", "to", "and", "in", "is", "on", "for", "with"]
@@ -111,10 +111,10 @@ def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", balance=True)
     # counting maximal runs directly (regexp_count) instead of split +
     # filter + size skips materializing the token-string arrays — same
-    # counts (a match of [^\s]+ / [a-z0-9_]+ is exactly one surviving
+    # counts (a match of [^\s]+ / TOKEN_PATTERN is exactly one surviving
     # split element), ~zero allocation per row (guide §1.2 per-task work)
     ws = F.regexp_count(F.col("text"), F.lit(r"\S+"))
-    rx = F.regexp_count(F.lower(F.col("text")), F.lit("[a-z0-9_]+"))
+    rx = F.regexp_count(F.lower(F.col("text")), F.lit(TOKEN_PATTERN))
     return docs.groupBy("lang").agg(
         F.sum(ws).alias("ws_tokens"),
         F.sum(rx).alias("rx_tokens"),

@@ -44,12 +44,11 @@ def _assert_matches(res, oracle):
             assert math.isclose(gs, ws, abs_tol=1e-6)
 
 
-@pytest.mark.parametrize("use_wand", [False, True], ids=["maxscore", "wand"])
-def test_multiple_shards_per_bucket(spark, small_corpus, tmp_path, use_wand):
+def test_multiple_shards_per_bucket(spark, small_corpus, tmp_path):
     """n_sb < n_shards: one shard-bucket holds 4 shards, whose posting
-    blocks interleave in doc range. Round-1 bug: lazy lists / WAND
-    cursors pooled blocks by (term, salt) only, violating the sorted
-    non-overlap invariant and silently zeroing contributions."""
+    blocks interleave in doc range. Round-1 bug: lazy lists pooled
+    blocks by (term, salt) only, violating the sorted non-overlap
+    invariant and silently zeroing contributions."""
     d = str(tmp_path / "idx")
     build_index(
         spark, small_corpus, d,
@@ -57,8 +56,7 @@ def test_multiple_shards_per_bucket(spark, small_corpus, tmp_path, use_wand):
         tokenizer="builtin",
     )
     oracle = _oracle_for(spark, small_corpus)
-    res = search_many(spark, d, QUERIES, use_wand=use_wand)
-    _assert_matches(res, oracle)
+    _assert_matches(search_many(spark, d, QUERIES), oracle)
 
 
 def test_merge_incremental_merge_ids_never_collide(spark, small_corpus, tmp_path):
@@ -83,7 +81,7 @@ def test_merge_incremental_merge_ids_never_collide(spark, small_corpus, tmp_path
 def test_avgdl_drift_keeps_pruning_sound(spark, small_corpus, tmp_path):
     """Incremental docs much longer than the initial segment raise the
     global avgdl; stored block-max bounds (baked with build avgdl)
-    underestimate true impacts. Round-1 bug: MaxScore/WAND pruning could
+    underestimate true impacts. Round-1 bug: MaxScore pruning could
     silently drop true top-k docs. The per-segment bound rescale must
     keep every path exact."""
     d = str(tmp_path / "idx")
@@ -100,8 +98,7 @@ def test_avgdl_drift_keeps_pruning_sound(spark, small_corpus, tmp_path):
     assert m.avgdl > m.segments[0]["avgdl"] * 1.5, "fixture must raise avgdl"
     combined = spark.createDataFrame(pd.concat([short_pdf, long_pdf]))
     oracle = _oracle_for(spark, combined)
-    for use_wand in (False, True):
-        _assert_matches(search_many(spark, d, QUERIES, use_wand=use_wand), oracle)
+    _assert_matches(search_many(spark, d, QUERIES), oracle)
 
 
 def test_delete_docs_idempotent(spark, small_corpus, tmp_path):
@@ -122,8 +119,8 @@ def test_delete_docs_idempotent(spark, small_corpus, tmp_path):
 def test_delete_nonexistent_ids_never_tombstoned(spark, small_corpus, tmp_path):
     """Round-2 ADVICE: deleting ids that are NOT in the index must be a
     complete no-op — previously they were appended to m.tombstones
-    forever, inflating every query's tombstone filter and WAND's k+extra
-    over-fetch, and prematurely triggering auto-compaction."""
+    forever, inflating every query's tombstone filter and prematurely
+    triggering auto-compaction."""
     d = str(tmp_path / "idx")
     build_index(spark, small_corpus.limit(40), d, n_shards=2, n_tb=2, tokenizer="builtin")
     m0 = IndexManifest.load(d)
@@ -159,8 +156,7 @@ def test_legacy_segment_without_avgdl_stays_exact(spark, tmp_path):
     incremental_update(spark, spark.createDataFrame(long_pdf), d)
     combined = spark.createDataFrame(pd.concat([short_pdf, long_pdf]))
     oracle = _oracle_for(spark, combined)
-    for use_wand in (False, True):
-        _assert_matches(search_many(spark, d, QUERIES, use_wand=use_wand), oracle)
+    _assert_matches(search_many(spark, d, QUERIES), oracle)
 
 
 def test_delete_auto_compacts_past_threshold(spark, small_corpus, tmp_path):
@@ -233,16 +229,29 @@ def test_terms_cache_evicts_stale_mtimes(tmp_path):
 def test_legacy_segment_without_field_column(spark, small_corpus, tmp_path):
     """Round-3 ADVICE: segments written before multi-field indexing have
     no `field` column in postings/dict (and no field-qualified bloom).
-    They must stay queryable (their rows ARE the 'content' field) and
+    They must stay queryable (their rows ARE the 'content' field) by
+    every scorer family — all read through one postings reader — and
     mergeable with current-format segments."""
     import glob
     import os
 
     import pyarrow.parquet as pq
 
+    from bugzilla_etl_spark.index import (
+        Bool,
+        bool_search,
+        multi_match_search,
+        phrase_search,
+        search,
+    )
+    from bugzilla_etl_spark.tokenize import py_tokens
+
     d = str(tmp_path / "idx")
     part1 = small_corpus.limit(120)
-    build_index(spark, part1, d, n_shards=4, n_tb=4, block_size=16, tokenizer="builtin")
+    build_index(
+        spark, part1, d, n_shards=4, n_tb=4, block_size=16,
+        tokenizer="builtin", positions=True,
+    )
     m = IndexManifest.load(d)
     seg_dir = os.path.join(d, "segments", m.segments[0]["id"])
     # strip the post-upgrade artifacts: field column, field_avgdl, sidecar
@@ -261,8 +270,52 @@ def test_legacy_segment_without_field_column(spark, small_corpus, tmp_path):
     m.commit(d)
 
     oracle = _oracle_for(spark, part1)
-    for use_wand in (False, True):
-        _assert_matches(search_many(spark, d, QUERIES, use_wand=use_wand), oracle)
+    _assert_matches(search_many(spark, d, QUERIES), oracle)
+
+    toks = {
+        r["doc_id"]: py_tokens(r["content"])
+        for r in prepare_docs(part1, 4).select("doc_id", "content").collect()
+    }
+
+    def oracle_where(text, keep, k=10):
+        # the oracle's ranking restricted to the docs the gate admits
+        # (gates never change a surviving doc's score)
+        return oracle.search(
+            text, k, allowed={x for x, ts in toks.items() if keep(ts)}
+        )
+
+    seq = next(ts for ts in toks.values() if len(ts) >= 3)[:2]
+    phrase = " ".join(seq)
+    for got, want in [
+        (
+            phrase_search(spark, d, phrase, k=10),
+            oracle_where(phrase, lambda ts: any(
+                ts[i:i + 2] == seq for i in range(len(ts) - 1)
+            )),
+        ),
+        (
+            search(spark, d, "return int fn", k=10, operator="and"),
+            oracle_where("return int fn", lambda ts: {"return", "int", "fn"} <= set(ts)),
+        ),
+        (
+            multi_match_search(spark, d, "return int", ["content"], k=10),
+            oracle.search("return int", 10),
+        ),
+        (
+            bool_search(
+                spark, d,
+                Bool(must=["return", "for"], must_not=["fn"],
+                     multi_match=["int"], mm_fields=["content"]),
+                k=10,
+            ),
+            oracle_where("return for int", lambda ts: {"return", "for", "int"} <= set(ts)
+                         and "fn" not in ts),
+        ),
+    ]:
+        assert want, "fixture must make every legacy query non-vacuous"
+        assert [x for x, _ in got] == [x for x, _ in want]
+        for (_, gs), (_, ws) in zip(got, want):
+            assert math.isclose(gs, ws, abs_tol=1e-6)
     # legacy + current segments merge cleanly and stay exact
     inc = small_corpus.limit(160).subtract(part1)
     incremental_update(spark, inc, d)

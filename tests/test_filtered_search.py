@@ -16,7 +16,8 @@ from bugzilla_etl_spark.corpus import generate_corpus
 from bugzilla_etl_spark.index import build_index, incremental_update, merge_segments, search_many
 from bugzilla_etl_spark.index.build import delete_docs, prepare_docs
 from bugzilla_etl_spark.index.predicate import _prefix_upper, to_arrow, to_spark, to_sql, validate
-from bugzilla_etl_spark.index.query import _LazyTermList, _score_maxscore
+from bugzilla_etl_spark.index.postings import BlockList, TermPostings
+from bugzilla_etl_spark.index.query import _score_maxscore
 from bugzilla_etl_spark.oracle import build_oracle
 
 QUERIES = [
@@ -145,7 +146,7 @@ def _mk_hot_list(idf: float, n_blocks: int, docs_per_block: int, avgdl: float):
     so block bounds strictly descend with j."""
     from bugzilla_etl_spark.index.build import _impact
 
-    tl = _LazyTermList(idf, 1.2, 0.75, avgdl)
+    tl = BlockList(idf, 1.2, 0.75, avgdl)
     doc = 1000
     for j in range(n_blocks):
         ids = np.arange(doc, doc + docs_per_block, dtype=np.uint64)
@@ -157,12 +158,14 @@ def _mk_hot_list(idf: float, n_blocks: int, docs_per_block: int, avgdl: float):
         gaps[0] = ids[0]
         gaps[1:] = np.diff(ids)
         tl.add_block(
-            ids[0], ids[-1], float(imp.max()),
+            ids[0], ids[-1], float(imp.max()), docs_per_block,
             varint_encode(gaps), varint_encode(tf.astype(np.uint64)),
-            varint_encode(dl.astype(np.uint64)), docs_per_block,
+            varint_encode(dl.astype(np.uint64)),
         )
-    tl.seal()
-    return tl
+    tp = TermPostings()
+    tp.subs[(0, 0)] = tl
+    tp.seal()
+    return tp
 
 
 def test_filtered_multi_hot_still_skips_blocks():
@@ -171,19 +174,20 @@ def test_filtered_multi_hot_still_skips_blocks():
     are never decoded (VERDICT r3 #1 'pruning still skips blocks')."""
     n_blocks = 64
     # >4096 postings so the list classifies as HOT (multi-hot scorer)
-    tl = _mk_hot_list(idf=1.0, n_blocks=n_blocks, docs_per_block=80, avgdl=10.0)
-    lists = {"t": {(0, 0): tl}}
+    tp = _mk_hot_list(idf=1.0, n_blocks=n_blocks, docs_per_block=80, avgdl=10.0)
+    tl = tp.subs[(0, 0)]
+    lists = {"t": tp}
     # allow only docs from the top-impact block (plus absent ids)
     allowed = np.sort(
-        np.concatenate([tl._decode(0)[0][:2], np.array([5, 7], dtype=np.uint64)])
+        np.concatenate([tl.decode(0)[0][:2], np.array([5, 7], dtype=np.uint64)])
     )
-    tl._cache.clear()
+    tl._dec.clear()
     got = _score_maxscore(["t"], lists, np.array([], dtype=np.int64), 2, allowed)
     assert len(got) == 2
-    decoded = len(tl._cache)
+    decoded = len(tl._dec)
     assert decoded < n_blocks // 2, f"decoded {decoded}/{n_blocks} blocks"
     # scores are the exact impacts of the allowed docs
-    d0, imp0 = tl._decode(0)
+    d0, imp0, _ = tl.decode(0)
     assert math.isclose(got[0][1], imp0[0], abs_tol=1e-12)
 
 
@@ -228,30 +232,12 @@ def test_prefix_upper_edge_cases():
         validate([("col", "like", "x")])
 
 
-@pytest.mark.parametrize("pred", PREDICATES[:3], ids=["0", "1", "2"])
-def test_filtered_matches_oracle_wand(spark, filtered_index, pred):
-    """WAND path + predicate: heap-insertion gating (wand.py) must be
-    rank- and score-identical to the MaxScore path and the oracle."""
-    d, prepared, oracle = filtered_index
-    allowed = {
-        r["doc_id"] for r in prepared.filter(to_spark(pred)).select("doc_id").collect()
-    }
-    res = search_many(spark, d, QUERIES, predicate=pred, use_wand=True)
-    for qid, text, k in QUERIES:
-        want = oracle.search(text, k, allowed=allowed)
-        got = res[qid]
-        assert [x for x, _ in got] == [x for x, _ in want], (pred, text)
-        for (_, gs), (_, ws) in zip(got, want):
-            assert math.isclose(gs, ws, abs_tol=1e-9)
-
-
-def test_wand_tombstones_negative_idf_exact(spark, filtered_index, tmp_path):
+def test_tombstones_negative_idf_exact(spark, filtered_index, tmp_path):
     """Heavy deletion pushes a hot term's df past the live N, so its idf
-    goes NEGATIVE (Lucene deleted-doc docFreq until compaction). Both
-    scorer families must stay exact: pruning bounds are clamped at 0
-    (a doc absent from a negative-idf term scores 0, above that term's
-    bound), and tombstones gate the WAND heap directly (the old
-    k+|tombstones| over-fetch was only exact for small sets)."""
+    goes NEGATIVE (Lucene deleted-doc docFreq until compaction). The
+    scorer must stay exact: pruning bounds are clamped at 0 (a doc
+    absent from a negative-idf term scores 0, above that term's bound),
+    and tombstoned docs never surface."""
     import shutil
     from collections import Counter
 
@@ -297,12 +283,10 @@ def test_wand_tombstones_negative_idf_exact(spark, filtered_index, tmp_path):
     for q in ["return int", "for", "uniq_13 return", "r5_sym1 fn impl"]:
         want = exhaustive(q)
         mx = search_many(spark, d, [(0, q, 10)])[0]
-        wd = search_many(spark, d, [(0, q, 10)], use_wand=True)[0]
-        assert [x for x, _ in mx] == [x for x, _ in want], ("maxscore", q)
-        assert [x for x, _ in wd] == [x for x, _ in want], ("wand", q)
+        assert [x for x, _ in mx] == [x for x, _ in want], q
         for (_, gs), (_, ws) in zip(mx, want):
             assert math.isclose(gs, ws, abs_tol=1e-9)
-        assert all(x not in dead for x, _ in wd)
+        assert all(x not in dead for x, _ in mx)
 
 
 def test_typed_doc_attrs_mapping(spark, tmp_path):
@@ -361,10 +345,10 @@ def test_typed_doc_attrs_mapping(spark, tmp_path):
 
 def test_local_execution_parity(spark, filtered_index):
     """Cost-based execution (round 5): selective batches run the SAME
-    bucket scorers in a driver thread pool instead of a Spark job.
-    Forced local and forced spark must be bit-identical on every query
-    shape — incl. predicates and WAND — because the scorer callables
-    are shared; auto must match both."""
+    bucket scorers in the driver instead of a Spark job. Forced local
+    and forced spark must be bit-identical on every query shape — incl.
+    predicates — because the scorer callables are shared; auto must
+    match both."""
     d, prepared, oracle = filtered_index
     batches = [
         [(0, "return int", 10), (1, "uniq_13", 5)],
@@ -373,13 +357,10 @@ def test_local_execution_parity(spark, filtered_index):
     preds = [None, [("lang", "==", "python")]]
     for qs in batches:
         for pred in preds:
-            for wand in (False, True):
-                a = search_many(spark, d, qs, use_wand=wand, predicate=pred,
-                                execution="spark")
-                b = search_many(spark, d, qs, use_wand=wand, predicate=pred,
-                                execution="local")
-                c = search_many(spark, d, qs, use_wand=wand, predicate=pred)
-                assert a == b == c, (qs, pred, wand)
+            a = search_many(spark, d, qs, predicate=pred, execution="spark")
+            b = search_many(spark, d, qs, predicate=pred, execution="local")
+            c = search_many(spark, d, qs, predicate=pred)
+            assert a == b == c, (qs, pred)
     with pytest.raises(ValueError, match="execution"):
         search_many(spark, d, batches[0], execution="driver")
 
@@ -425,8 +406,7 @@ def test_local_execution_parity_phrase_and_nested(spark, small_corpus, tmp_path)
 def test_must_not_matches_oracle(spark, filtered_index):
     """Round 5: ES bool.must_not text terms — docs containing ANY
     negative term are excluded from results with positive-term scores
-    UNCHANGED (filter context), in both scorer families and through the
-    local execution path."""
+    UNCHANGED (filter context), through both execution paths."""
     from bugzilla_etl_spark.tokenize import py_tokens
 
     d, prepared, oracle = filtered_index
@@ -446,15 +426,14 @@ def test_must_not_matches_oracle(spark, filtered_index):
             for doc, s in sorted(full.items(), key=lambda x: (-x[1], x[0]))
             if not (toks[doc] & set(neg))
         ][:10]
-        for wand in (False, True):
-            for execution in ("spark", "local"):
-                got = search_many(
-                    spark, d, [(0, " ".join(q), 10)], use_wand=wand,
-                    must_not=neg, execution=execution,
-                )[0]
-                assert [x for x, _ in got] == [x for x, _ in want], (q, neg, wand)
-                for (_, gs), (_, ws) in zip(got, want):
-                    assert math.isclose(gs, ws, abs_tol=1e-9)
+        for execution in ("spark", "local"):
+            got = search_many(
+                spark, d, [(0, " ".join(q), 10)], must_not=neg,
+                execution=execution,
+            )[0]
+            assert [x for x, _ in got] == [x for x, _ in want], (q, neg)
+            for (_, gs), (_, ws) in zip(got, want):
+                assert math.isclose(gs, ws, abs_tol=1e-9)
     # absent negative term: complete no-op
     base = search_many(spark, d, [(0, "return int", 10)])[0]
     assert search_many(

@@ -56,9 +56,8 @@ def test_sha256_invariant(spark, small_corpus, index_dir):
     assert verify_sha256(spark, small_corpus, index_dir) == small_corpus.count()
 
 
-@pytest.mark.parametrize("use_wand", [False, True], ids=["exhaustive", "wand"])
-def test_rank_identical_vs_oracle(spark, index_dir, oracle, use_wand):
-    res = search_many(spark, index_dir, QUERIES, use_wand=use_wand)
+def test_rank_identical_vs_oracle(spark, index_dir, oracle):
+    res = search_many(spark, index_dir, QUERIES)
     for qid, text, k in QUERIES:
         want = oracle.search(text, k)
         _assert_rank_identical(res[qid], want)
@@ -87,10 +86,9 @@ def test_shingled_analyzer_end_to_end(spark, small_corpus, tmp_path):
         (2, "the for", 10),          # 'the' is stopworded out
         (3, "fn impl struct", 10),
     ]
-    for use_wand in (False, True):
-        res = search_many(spark, d, shingle_queries, use_wand=use_wand)
-        for qid, text, k in shingle_queries:
-            _assert_rank_identical(res[qid], oracle.search(text, k))
+    res = search_many(spark, d, shingle_queries)
+    for qid, text, k in shingle_queries:
+        _assert_rank_identical(res[qid], oracle.search(text, k))
     # sanity: the analyzed query really contains a bigram term
     from bugzilla_etl_spark.tokenize import py_analyze
 

@@ -109,6 +109,44 @@ def test_knn_validation(spark, knn_idx, small_corpus, tmp_path):
         knn_search(spark, d, [1.0, 2.0])
 
 
+def test_knn_nan_vector_keeps_top_k(spark, small_corpus, tmp_path):
+    """A stored NaN vector scores NaN under every metric. The
+    argpartition cut then landed on the NaN and returned nothing for
+    k=1; the full sort ranks NaN last and keeps the best finite doc."""
+    d = str(tmp_path / "nan")
+    corpus = small_corpus.limit(20)
+    vec_pdf = pd.DataFrame(
+        {"path": [r["path"] for r in corpus.select("path").collect()]}
+    )
+    vec_pdf["embedding"] = [_vec(i) for i in range(len(vec_pdf))]
+    # planted in Spark: a pandas NaN would arrive as a null element
+    nan_vec = F.array(*[F.lit(float("nan"))] * DIM)
+    corpus = corpus.join(
+        spark.createDataFrame(vec_pdf), on="path", how="inner"
+    ).withColumn(
+        "embedding",
+        F.when(F.col("path") == vec_pdf["path"][0], nan_vec).otherwise(
+            F.col("embedding")
+        ),
+    )
+    build_index(
+        spark, corpus, d, n_shards=1, n_tb=1, n_sb=1, tokenizer="builtin",
+        doc_attrs=["embedding"],
+    )
+    rows = prepare_docs(corpus, 1).select("doc_id", "embedding").collect()
+    finite = {
+        r["doc_id"]: (np.array(r["embedding"], dtype=np.float64), None)
+        for r in rows
+        if not np.isnan(r["embedding"]).any()
+    }
+    assert len(finite) == len(rows) - 1
+    q = _vec(9999)
+    for metric in ("cosine", "dot", "l2"):
+        got = knn_search(spark, d, q, k=1, metric=metric)
+        want = _brute(finite, q, 1, metric)
+        assert [x for x, _ in got] == [x for x, _ in want], metric
+
+
 def test_knn_cli(spark, knn_idx, capsys):
     import json
 

@@ -1,14 +1,16 @@
 """Vectorized exact-MaxScore scorer: property-tested equal to the
-exhaustive oracle, and proven to skip hot-list block decodes."""
+exhaustive oracle (FIXTURES.md invariant 3), and proven to skip
+hot-list block decodes."""
 
 from __future__ import annotations
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 import bugzilla_etl_spark.index.query as q
 from bugzilla_etl_spark.codec import doc_id_to_u64, varint_encode
+from bugzilla_etl_spark.index.postings import BlockList, TermPostings
 from bugzilla_etl_spark.oracle import BM25Oracle
 from bugzilla_etl_spark.oracle import impact as _impact
 
@@ -19,13 +21,13 @@ def _lists_from_oracle(oracle: BM25Oracle, terms, block_size=8, n_salts=2):
     from bugzilla_etl_spark.oracle import idf as idf_fn
 
     avgdl = oracle.avgdl
-    lists: dict[str, dict[int, q._LazyTermList]] = {}
+    lists: dict[str, TermPostings] = {}
     for t in sorted(set(terms)):
         plist = oracle.postings.get(t)
         if not plist:
             continue
         w = idf_fn(oracle.n_docs, len(plist))
-        subs = lists.setdefault(t, {})
+        tp = lists[t] = TermPostings()
         for salt in range(n_salts):
             docs = sorted(
                 (d for d in plist if d % n_salts == salt),
@@ -33,7 +35,7 @@ def _lists_from_oracle(oracle: BM25Oracle, terms, block_size=8, n_salts=2):
             )
             if not docs:
                 continue
-            tl = subs[salt] = q._LazyTermList(w, K1, B, avgdl)
+            tl = tp.subs[(salt, 0)] = BlockList(w, K1, B, avgdl)
             du = doc_id_to_u64(np.array(docs, dtype=np.int64))
             tf = np.array([plist[d] for d in docs], dtype=np.uint64)
             dl = np.array([oracle.doc_len[d] for d in docs], dtype=np.uint64)
@@ -45,14 +47,18 @@ def _lists_from_oracle(oracle: BM25Oracle, terms, block_size=8, n_salts=2):
                 np.subtract(d[1:], d[:-1], out=gaps[1:])
                 imps = [_impact(int(tf[j]), int(dl[j]), avgdl) for j in range(off, hi)]
                 tl.add_block(
-                    d[0], d[-1], max(imps),
+                    d[0], d[-1], max(imps), hi - off,
                     varint_encode(gaps), varint_encode(tf[off:hi]),
-                    varint_encode(dl[off:hi]), hi - off,
+                    varint_encode(dl[off:hi]),
                 )
-            tl.seal()
-        if not subs:
-            del lists[t]
+        tp.seal()
     return lists
+
+
+def _decoded(lists, terms) -> tuple[int, int]:
+    """(decoded blocks, total blocks) across the terms' sub-lists."""
+    subs = [sl for t in terms for sl in lists[t].subs.values()]
+    return sum(len(sl._dec) for sl in subs), sum(len(sl.firsts) for sl in subs)
 
 
 def _mk_oracle(doc_tokens):
@@ -74,11 +80,16 @@ NO_TOMB = np.array([], dtype=np.int64)
     ),
     st.lists(st.sampled_from("abcdefgz"), min_size=1, max_size=4),
     st.integers(min_value=1, max_value=12),
+    st.integers(min_value=1, max_value=3),
+    st.sampled_from([1, 2, 4, 8]),
 )
-def test_maxscore_equals_oracle(doc_tokens, query_terms, k):
+# a query matching nothing, and k larger than the match count
+@example([["a", "b"], ["b", "c"]], ["z"], 5, 1, 4)
+@example([["a", "b"], ["b", "c"]], ["a"], 10, 1, 4)
+def test_maxscore_equals_oracle(doc_tokens, query_terms, k, n_salts, block_size):
     oracle = _mk_oracle(doc_tokens)
     want = oracle.search(" ".join(query_terms), k)
-    lists = _lists_from_oracle(oracle, query_terms)
+    lists = _lists_from_oracle(oracle, query_terms, block_size, n_salts)
     present = sorted(lists)
     if not present:
         assert want == []
@@ -112,8 +123,7 @@ def test_maxscore_skips_hot_blocks():
         q.HOT_POSTINGS = old
     want = oracle.search("hot rare", 5)
     assert [d for d, _ in got] == [d for d, _ in want]
-    hot_blocks = sum(len(tl.firsts) for tl in lists["hot"].values())
-    hot_decoded = sum(len(tl._cache) for tl in lists["hot"].values())
+    hot_decoded, hot_blocks = _decoded(lists, ["hot"])
     assert hot_decoded < hot_blocks * 0.5, (
         f"decoded {hot_decoded}/{hot_blocks} hot blocks — pruning ineffective"
     )
@@ -160,8 +170,7 @@ def test_multi_hot_skips_blocks():
     assert [d for d, _ in got] == [d for d, _ in want]
     for (_, gs), (_, ws) in zip(got, want):
         assert abs(gs - ws) < 1e-9
-    total = sum(len(tl.firsts) for t in lists for tl in lists[t].values())
-    decoded = sum(len(tl._cache) for t in lists for tl in lists[t].values())
+    decoded, total = _decoded(lists, lists)
     assert decoded < total * 0.5, f"decoded {decoded}/{total} — multi-hot not pruning"
 
 
@@ -229,6 +238,5 @@ def test_single_hot_term_skips_blocks():
         q.HOT_POSTINGS = old
     want = oracle.search("hot", 10)
     assert [d for d, _ in got] == [d for d, _ in want]
-    total = sum(len(tl.firsts) for tl in lists["hot"].values())
-    decoded = sum(len(tl._cache) for tl in lists["hot"].values())
+    decoded, total = _decoded(lists, ["hot"])
     assert decoded < total * 0.6, f"decoded {decoded}/{total}"

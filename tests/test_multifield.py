@@ -32,7 +32,7 @@ QUERIES = [
 ]
 
 
-def _assert_field_matches(spark, d, corpus_pdf, fld, chain, use_wand=False):
+def _assert_field_matches(spark, d, corpus_pdf, fld, chain):
     corpus = (
         corpus_pdf
         if hasattr(corpus_pdf, "sparkSession")
@@ -40,7 +40,7 @@ def _assert_field_matches(spark, d, corpus_pdf, fld, chain, use_wand=False):
     )
     rows = list(zip(corpus_pdf["__doc_id"], corpus_pdf["content"]))
     oracle = build_oracle(rows, chain=chain)
-    res = search_many(spark, d, QUERIES, use_wand=use_wand, field=fld)
+    res = search_many(spark, d, QUERIES, field=fld)
     for qid, text, k in QUERIES:
         want = oracle.search(text, k)
         got = res[qid]
@@ -72,18 +72,17 @@ def multifield(spark, tmp_path_factory):
     return d, pdf
 
 
-@pytest.mark.parametrize("use_wand", [False, True], ids=["maxscore", "wand"])
 @pytest.mark.parametrize(
     "fld,chain",
     [("content", "code_v1"), ("content_shingle", "code_v1_shingle"),
      ("content_stop", "code_v1_stop")],
 )
-def test_each_field_rank_identical(spark, multifield, fld, chain, use_wand):
+def test_each_field_rank_identical(spark, multifield, fld, chain):
     """Every field variant of ONE index is rank+score identical to an
     oracle built with that variant's chain — the dual-view capability
     the reference's field model requires."""
     d, pdf = multifield
-    _assert_field_matches(spark, d, pdf, fld, chain, use_wand)
+    _assert_field_matches(spark, d, pdf, fld, chain)
 
 
 def test_unknown_field_raises(spark, multifield):

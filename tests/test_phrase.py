@@ -154,10 +154,10 @@ def test_phrase_hot_term_lazy_decode():
     import numpy as np
 
     from bugzilla_etl_spark.codec import varint_encode
-    from bugzilla_etl_spark.index.query import _PhraseSubList, _PhraseTerm
+    from bugzilla_etl_spark.index.postings import BlockList, TermPostings
 
-    pt = _PhraseTerm()
-    sl = pt.subs[(0, 0)] = _PhraseSubList(1.0, 1.2, 0.75, 10.0)
+    pt = TermPostings()
+    sl = pt.subs[(0, 0)] = BlockList(1.0, 1.2, 0.75, 10.0)
     doc = 1000
     n_blocks, per = 64, 8
     for _ in range(n_blocks):
@@ -170,7 +170,7 @@ def test_phrase_hot_term_lazy_decode():
         gaps[1:] = np.diff(ids)
         # two positions per posting: absolute 5, delta 3
         pos = np.tile(np.array([5, 3], dtype=np.uint64), per)
-        sl.add_block(ids[0], ids[-1], per, varint_encode(gaps),
+        sl.add_block(ids[0], ids[-1], 0.0, per, varint_encode(gaps),
                      varint_encode(tf), varint_encode(dl), varint_encode(pos))
     pt.seal()
     assert pt.n_postings == n_blocks * per
@@ -179,9 +179,11 @@ def test_phrase_hot_term_lazy_decode():
     mask, imp = pt.imp_at(cand)
     assert mask.all() and (imp > 0).all()
     assert len(sl._dec) == 1, f"decoded {len(sl._dec)}/{n_blocks} blocks"
+    assert not sl._pos, "membership probes must not decode positions"
     # positions reconstruct through the per-posting delta reset
-    assert pt.positions_at(np.uint64(1003)).tolist() == [5, 8]
-    assert len(sl._dec) == 1
+    ci, pos, _dl = pt.positions_bulk(np.array([1003], dtype=np.uint64))
+    assert ci.tolist() == [0, 0] and pos.tolist() == [5, 8]
+    assert len(sl._dec) == 1 and len(sl._pos) == 1
 
 
 def test_phrase_on_variant_field(spark, small_corpus, tmp_path):
