@@ -118,7 +118,6 @@ def run() -> dict:
         t0 = time.monotonic()
         m = build_index(
             spark, corpus, idx_t, n_shards=max(8, int(cpus)), n_tb=16, n_salts=1,
-            tokenizer="arrow",
         )
         build_trials.append(round(time.monotonic() - t0, 3))
         if trial == 0:
@@ -204,7 +203,7 @@ def run() -> dict:
         shutil.rmtree(docs_idx, ignore_errors=True)
         t0 = time.monotonic()
         md = build_index(
-            spark, doc_corpus, docs_idx, n_shards=16, n_tb=8, tokenizer="arrow"
+            spark, doc_corpus, docs_idx, n_shards=16, n_tb=8
         )
         dt.append(round(time.monotonic() - t0, 3))
     timings["index_build_docs_table"] = min(dt)
@@ -305,7 +304,7 @@ def run() -> dict:
     shutil.rmtree(knn_idx, ignore_errors=True)
     build_index(
         spark, vec_corpus, knn_idx, n_shards=16, n_tb=8,
-        tokenizer="arrow", doc_attrs=["embedding", "lang"],
+        doc_attrs=["embedding", "lang"],
     )
     qvecs = [
         (i, r["embedding"], 10)
@@ -337,7 +336,7 @@ def run() -> dict:
         shutil.rmtree(pos_idx, ignore_errors=True)
         t0 = time.monotonic()
         build_index(
-            spark, doc_corpus, pos_idx, n_shards=16, n_tb=8, tokenizer="arrow",
+            spark, doc_corpus, pos_idx, n_shards=16, n_tb=8,
             positions=True,
         )
         pt.append(round(time.monotonic() - t0, 3))

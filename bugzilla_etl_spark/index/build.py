@@ -54,7 +54,6 @@ from ..codec import (
 from ..tokenize import (
     pandas_analyze,
     py_term_bucket,
-    spark_analyze,
 )
 from .bloom import SegmentBlooms, write_segment_blooms
 from .manifest import IndexManifest
@@ -142,18 +141,8 @@ def read_segment_union(spark: SparkSession, seg_dirs: list[str], sub: str) -> Da
 def _make_count_tokens(chain: str):
     @F.pandas_udf(T.IntegerType())
     def _count(texts: pd.Series) -> pd.Series:
-        """Vectorized analyzed-token COUNT — cheap doc_len for the docs
-        dimension. The plain chain counts regex matches without
-        materializing token lists; filtered/shingled chains run the
-        shared pandas analyzer."""
-        if chain == "code_v1":
-            from ..tokenize import TOKEN_RE
-
-            return texts.str.lower().str.count(TOKEN_RE).astype("int32")
-        if chain == "path_v1":
-            from ..tokenize import PATH_TOKEN_RE
-
-            return texts.str.lower().str.count(PATH_TOKEN_RE).astype("int32")
+        """Vectorized analyzed-token COUNT for filtered/shingled chains:
+        the same shared pandas analyzer the postings pass runs."""
         from ..tokenize import pandas_analyze as _pa
 
         return _pa(texts, chain).map(len).astype("int32")
@@ -177,7 +166,6 @@ def _bad_row_col():
 def prepare_docs(
     df: DataFrame,
     n_shards: int,
-    tokenizer: str = "arrow",
     analyzer: str = "code_v1",
     extra_fields: dict[str, str] | None = None,
 ) -> DataFrame:
@@ -189,34 +177,23 @@ def prepare_docs(
     ``bug_id + "." + modified_ts``, parse_bug_history.js:168).
     ``sha256`` is the per-row invariant column (BASELINE.json input_hint).
 
-    tokenizer='arrow': vectorized regex-count Arrow UDF for doc_len.
-    tokenizer='builtin': JVM split path (identical token semantics,
-    proven in tests/test_tokenize.py).
+    ``doc_len`` (and one length column per extra field) is the analyzed
+    token count under the field's chain. For the plain ``code_v1`` and
+    ``path_v1`` chains that count is exactly the token-regex match count,
+    computed JVM-side with ``regexp_count`` — no Python stage in the docs
+    pass. Filtered and shingled chains count through the shared pandas
+    analyzer the postings pass uses, so ``doc_len`` always equals the
+    number of postings-pass tokens.
     """
     def _len_for(chain: str):
-        if tokenizer == "arrow":
-            # plain chains: the analyzed-token COUNT is exactly the
-            # regex match count, computable JVM-side with regexp_count —
-            # no ArrowEvalPython node in the docs pass at all (guide §4:
-            # built-ins over UDFs; the values are identical to the
-            # pandas str.count the Arrow UDF computed). Filtered/shingled
-            # chains still need the shared pandas analyzer.
-            if chain == "code_v1":
-                from ..tokenize import TOKEN_PATTERN
+        if chain in ("code_v1", "path_v1"):
+            from ..tokenize import PATH_TOKEN_PATTERN, TOKEN_PATTERN
 
-                return F.regexp_count(
-                    F.lower(F.col("content")), F.lit(TOKEN_PATTERN)
-                ).cast("int")
-            if chain == "path_v1":
-                from ..tokenize import PATH_TOKEN_PATTERN
-
-                return F.regexp_count(
-                    F.lower(F.col("content")), F.lit(PATH_TOKEN_PATTERN)
-                ).cast("int")
-            return _make_count_tokens(chain)(F.col("content"))
-        if tokenizer == "builtin":
-            return F.size(spark_analyze(F.col("content"), chain))
-        raise ValueError(f"unknown tokenizer {tokenizer!r}")
+            pattern = TOKEN_PATTERN if chain == "code_v1" else PATH_TOKEN_PATTERN
+            return F.regexp_count(
+                F.lower(F.col("content")), F.lit(pattern)
+            ).cast("int")
+        return _make_count_tokens(chain)(F.col("content"))
 
     out = (
         df.withColumn("doc_len", _len_for(analyzer))
@@ -502,7 +479,6 @@ def build_index(
     n_tb: int = 8,
     n_salts: int = 1,
     n_sb: int | None = None,
-    tokenizer: str = "arrow",
     analyzer: str = "code_v1",
     block_size: int = 128,
     shard_batches: int = 1,
@@ -531,6 +507,12 @@ def build_index(
     tokenizers x plain/shingled, queryable per sub-field). Each variant
     has its own postings, df, dl and avgdl (its own BM25 space);
     ``search_many(..., field=...)`` selects the variant at query time.
+
+    ``analyzer`` is the primary ``content`` field's chain, recorded in
+    the manifest. Every field's ``doc_len`` is its analyzed token count
+    (``prepare_docs``: JVM ``regexp_count`` for plain chains, the shared
+    pandas analyzer otherwise), so it always equals the number of tokens
+    the postings pass emits.
     """
     m = IndexManifest.load_or_new(
         index_dir,
@@ -541,7 +523,7 @@ def build_index(
         n_salts=n_salts,
         n_sb=min(n_shards, 16) if n_sb is None else n_sb,
         block_size=block_size,
-        tokenizer=f"{analyzer}:{tokenizer}",
+        tokenizer=analyzer,
         fields=dict(extra_fields or {}),
         doc_attrs=list(doc_attrs or []),
         positions=(
@@ -557,9 +539,9 @@ def build_index(
     # shingles is ill-defined, and the payload roughly doubles the
     # field's block bytes — warn loudly, don't forbid (the analyzer
     # chain is the user's contract)
+    chains = {DEFAULT_FIELD: m.field_chain(), **m.fields}
     shingled_pos = [
-        f for f in m.positions_fields()
-        if "shingle" in (m.fields.get(f) or (m.tokenizer.split(":", 1)[0] if f == "content" else ""))
+        f for f in m.positions_fields() if "shingle" in chains.get(f, "")
     ]
     if shingled_pos:
         import warnings
@@ -578,8 +560,7 @@ def build_index(
     # stats then come from the written parquet (cheap scan); pass 2
     # encodes postings using the global avgdl.
     prepared = prepare_docs(
-        corpus, n_shards, tokenizer=tokenizer, analyzer=analyzer,
-        extra_fields=m.fields,
+        corpus, n_shards, analyzer=analyzer, extra_fields=m.fields
     )
     # record each doc_attr's Spark type (the dynamic-template typing
     # discipline, bug_version.json:40-66): query-time predicates are
@@ -763,8 +744,7 @@ def _build_batch(
     # mirror the docs pass's rejection filter: a row the docs dimension
     # refused (null keys / null content) must not emit postings either
     prepared_batch = prepared_batch.filter(~_bad_row_col())
-    analyzer = m.tokenizer.split(":", 1)[0]
-    field_chains = {DEFAULT_FIELD: analyzer, **m.fields}
+    field_chains = {DEFAULT_FIELD: m.field_chain(), **m.fields}
     # positions are recorded per manifest-selected field (default: the
     # primary field only — phrase queries run against plain chains;
     # shingled fields stay lean unless explicitly requested)
@@ -968,11 +948,9 @@ def incremental_update(
     SURVEY.md §3.2). df/N stay additive because segments are doc-disjoint.
     """
     m = IndexManifest.load(index_dir)
-    analyzer, tokenizer = m.tokenizer.split(":", 1)
     extra = sorted(m.fields)
     prepared = prepare_docs(
-        new_docs, m.n_shards, tokenizer=tokenizer, analyzer=analyzer,
-        extra_fields=m.fields,
+        new_docs, m.n_shards, analyzer=m.field_chain(), extra_fields=m.fields
     )
     if m.doc_attr_types:
         # schema-drift guard (dynamic:strict discipline): an appended

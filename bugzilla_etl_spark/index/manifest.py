@@ -80,6 +80,8 @@ class IndexManifest:
     # analyzer/scoring config — fixed at creation, shared by build & query
     k1: float = 1.2
     b: float = 0.75
+    # primary-field analyzer chain; older manifests carry a legacy
+    # ":arrow"/":builtin" suffix — read it through field_chain()
     tokenizer: str = "code_v1"
     n_shards: int = 8
     n_tb: int = 8

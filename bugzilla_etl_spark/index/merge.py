@@ -463,13 +463,19 @@ def merge_indexes(index_dirs: list[str], out_dir: str) -> "IndexManifest":
     if os.path.exists(IndexManifest.path(out_dir)):
         raise ValueError(f"out_dir already holds an index: {out_dir}")
     ms = [IndexManifest.load(d) for d in dirs]
-    fixed = ("k1", "b", "tokenizer", "n_shards", "n_tb", "n_sb",
+    fixed = ("k1", "b", "n_shards", "n_tb", "n_sb",
              "n_salts", "block_size", "positions", "store_source")
-    cfg0 = {f: getattr(ms[0], f) for f in fixed}
+
+    def _cfg(m: IndexManifest) -> dict:
+        # the analyzer compares as its chain: a legacy ":arrow"/":builtin"
+        # suffix only named how doc_len was counted, never what it is
+        return {"tokenizer": m.field_chain(), **{f: getattr(m, f) for f in fixed}}
+
+    cfg0 = _cfg(ms[0])
     for m, d in zip(ms[1:], dirs[1:]):
-        cfg = {f: getattr(m, f) for f in fixed}
+        cfg = _cfg(m)
         if cfg != cfg0:
-            diff = {k: (cfg0[k], cfg[k]) for k in fixed if cfg[k] != cfg0[k]}
+            diff = {k: (cfg0[k], cfg[k]) for k in cfg0 if cfg[k] != cfg0[k]}
             raise ValueError(
                 f"member {d} differs in fixed config: {diff}"
             )

@@ -5,10 +5,12 @@ by a synthesized change-event stream.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
+from .fulltext import _gate_index
 from .replay import replay_history, versions_asof
 
 EXCLUDED_COLUMNS = ["l_comment"]  # the BUGS_TABLE_COLUMNS exclusion-list analog
@@ -351,6 +353,32 @@ WHERE user_id < 200 AND user_id % 3 = 0
 """
 
 
+def _attachments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Child-document corpus of the nested entries (see
+    engine_nested_flag_search): two attachment rows per distinct events
+    user_id, plus ``parent`` (the bug id), ``grp`` = bug % 7 and ``ord``
+    (the attachment ordinal)."""
+    users = load_table(spark, sf_dir, "events").select("user_id").distinct()
+    uid = F.col("user_id")
+
+    def attach(ord_: int, kind: str, shift: int) -> DataFrame:
+        u = (uid + shift) % 50
+        return users.select(
+            F.lit("bugs").alias("repo"),
+            F.concat(uid.cast("string"), F.lit(f"/{ord_}")).alias("path"),
+            F.lit("c0").alias("commit"),
+            F.lit("en").alias("lang"),
+            F.concat(
+                F.lit(f"{kind}(u"), u.cast("string"), F.lit("@x.com)")
+            ).alias("content"),
+            uid.cast("long").alias("parent"),
+            (uid % 7).cast("long").alias("grp"),
+            F.lit(ord_).cast("long").alias("ord"),
+        )
+
+    return attach(0, "review?", 0).unionByName(attach(1, "feedback+", 3))
+
+
 def engine_nested_flag_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The nested-object query at the ENGINE level (VERDICT r4 #3):
     attachments indexed as CHILD documents (one corpus row per
@@ -367,55 +395,23 @@ def engine_nested_flag_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle pins exactly that set, so a cross-matching engine fails the
     row/hash check. Second query 'feedback u7' pins the complementary
     cohort within attach 1."""
-    import os
-    import shutil
-    import tempfile
+    from ..index import nested_search_many
 
-    import pandas as pd
-
-    from ..index import build_index, nested_search_many
-
-    users = load_table(spark, sf_dir, "events").select("user_id").distinct()
-    uid = F.col("user_id")
-
-    def attach(ord_: int, kind: str, shift: int) -> DataFrame:
-        u = (uid + shift) % 50
-        return users.select(
-            F.lit("bugs").alias("repo"),
-            F.concat(uid.cast("string"), F.lit(f"/{ord_}")).alias("path"),
-            F.lit("c0").alias("commit"),
-            F.lit("en").alias("lang"),
-            F.concat(
-                F.lit(f"{kind}(u"), u.cast("string"), F.lit("@x.com)")
-            ).alias("content"),
-            uid.cast("long").alias("parent"),
-        )
-
-    corpus = attach(0, "review?", 0).unionByName(attach(1, "feedback+", 3))
-    idx = os.path.join(tempfile.gettempdir(), f"gate_nested_idx_{os.getpid()}")
-    shutil.rmtree(idx, ignore_errors=True)
-    try:
-        build_index(
-            spark, corpus, idx, n_shards=4, n_tb=4, tokenizer="arrow",
-            doc_attrs=["parent"],
-        )
+    with _gate_index(
+        spark, _attachments(spark, sf_dir), doc_attrs=["parent"]
+    ) as idx:
         res = nested_search_many(
             spark, idx,
             [(0, "review u7", 10**6), (1, "feedback u7", 10**6)],
             "parent", score_mode="none",
         )
-    finally:
-        shutil.rmtree(idx, ignore_errors=True)
     rows = [
-        (q, int(p))
-        for q, name in [(0, "review"), (1, "feedback")]
+        (kind, int(p))
+        for q, kind in [(0, "review"), (1, "feedback")]
         for p, _ in res[q]
     ]
     return spark.createDataFrame(
-        pd.DataFrame(
-            [(("review" if q == 0 else "feedback"), p) for q, p in rows],
-            columns=["flag_kind", "user_id"],
-        )
+        pd.DataFrame(rows, columns=["flag_kind", "user_id"])
     )
 
 
@@ -441,48 +437,17 @@ def engine_nested_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-match cohort must not count. child level (nested terms over
     ord, query 'u3'): matching CHILDREN per ordinal — u3 lives in
     attach 0 of bugs b%50==3 and attach 1 of bugs (b+3)%50==3."""
-    import os
-    import shutil
-    import tempfile
+    from ..index import nested_terms_agg
 
-    import pandas as pd
-
-    from ..index import build_index, nested_terms_agg
-
-    users = load_table(spark, sf_dir, "events").select("user_id").distinct()
-    uid = F.col("user_id")
-
-    def attach(ord_: int, kind: str, shift: int) -> DataFrame:
-        u = (uid + shift) % 50
-        return users.select(
-            F.lit("bugs").alias("repo"),
-            F.concat(uid.cast("string"), F.lit(f"/{ord_}")).alias("path"),
-            F.lit("c0").alias("commit"),
-            F.lit("en").alias("lang"),
-            F.concat(
-                F.lit(f"{kind}(u"), u.cast("string"), F.lit("@x.com)")
-            ).alias("content"),
-            uid.cast("long").alias("parent"),
-            (uid % 7).cast("long").alias("grp"),
-            F.lit(ord_).cast("long").alias("ord"),
-        )
-
-    corpus = attach(0, "review?", 0).unionByName(attach(1, "feedback+", 3))
-    idx = os.path.join(tempfile.gettempdir(), f"gate_nagg_idx_{os.getpid()}")
-    shutil.rmtree(idx, ignore_errors=True)
-    try:
-        build_index(
-            spark, corpus, idx, n_shards=4, n_tb=4, tokenizer="arrow",
-            doc_attrs=["parent", "grp", "ord"],
-        )
+    with _gate_index(
+        spark, _attachments(spark, sf_dir), doc_attrs=["parent", "grp", "ord"]
+    ) as idx:
         by_grp = nested_terms_agg(
             spark, idx, "grp", "review u3", parent_attr="parent",
             level="parent", size=10,
         )
         by_ord = nested_terms_agg(spark, idx, "ord", "u3", level="child",
                                   size=10)
-    finally:
-        shutil.rmtree(idx, ignore_errors=True)
     rows = [("parent_grp", int(v), int(n)) for v, n in by_grp]
     rows += [("child_ord", int(v), int(n)) for v, n in by_ord]
     return spark.createDataFrame(
@@ -555,20 +520,11 @@ def replay_index_asof_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     (state = latest value per field at each version ts; content token-
     multiset equals the tokenized state JSON) and recomputes BM25 with
     global stats over ALL versions, ranking only the as-of slice."""
-    import os
-    import shutil
-    import tempfile
-
-    import pandas as pd
-
     from ..index import search_many
-    from ..plans.replay_index import build_version_index
+    from ..plans.replay_index import VERSION_ATTRS, versions_to_corpus
 
-    versions = replay_history(_events_eav_cents(spark, sf_dir))
-    idx = os.path.join(tempfile.gettempdir(), f"gate_ridx_{os.getpid()}")
-    shutil.rmtree(idx, ignore_errors=True)
-    try:
-        build_version_index(spark, versions, idx, n_shards=4, n_tb=4)
+    corpus = versions_to_corpus(replay_history(_events_eav_cents(spark, sf_dir)))
+    with _gate_index(spark, corpus, doc_attrs=list(VERSION_ATTRS)) as idx:
         res = search_many(
             spark,
             idx,
@@ -578,25 +534,20 @@ def replay_index_asof_search(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ("expires_on", ">", ASOF_TS),
             ],
         )[0]
-        # id map back to the oracle's (user_id, modified_ts) key space —
-        # ONLY for the result ids (scale-clean: never collect the full
-        # version dimension)
-        from ..plans.replay_index import versions_to_corpus
-
-        rids = [int(d) for d, _ in res]
-        idmap = {
-            r["doc_id"]: (int(r["path"]), int(r["commit"]))
-            for r in versions_to_corpus(versions)
-            .select(
-                F.xxhash64("repo", "path", "commit").alias("doc_id"),
-                "path",
-                "commit",
-            )
-            .filter(F.col("doc_id").isin(rids))
-            .collect()
-        }
-    finally:
-        shutil.rmtree(idx, ignore_errors=True)
+    # id map back to the oracle's (user_id, modified_ts) key space —
+    # ONLY for the result ids (scale-clean: never collect the full
+    # version dimension)
+    rids = [int(d) for d, _ in res]
+    idmap = {
+        r["doc_id"]: (int(r["path"]), int(r["commit"]))
+        for r in corpus.select(
+            F.xxhash64("repo", "path", "commit").alias("doc_id"),
+            "path",
+            "commit",
+        )
+        .filter(F.col("doc_id").isin(rids))
+        .collect()
+    }
     # over-fetch then re-cut in the ORACLE's tie space (round-6 score,
     # then user_id, modified_ts) — the engine tie-breaks by internal
     # xxhash id, the oracle cannot

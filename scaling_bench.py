@@ -117,8 +117,7 @@ def build_shared_index(index_dir: str, docs: int, cpus: int = 32) -> None:
     corpus.count()
     shutil.rmtree(index_dir, ignore_errors=True)
     t0 = time.monotonic()
-    build_index(spark, corpus, index_dir, n_shards=64, n_tb=16, n_sb=32,
-                tokenizer="arrow")
+    build_index(spark, corpus, index_dir, n_shards=64, n_tb=16, n_sb=32)
     print(f"shared index built: {docs} docs in {time.monotonic() - t0:.1f}s")
     spark.stop()
 
@@ -176,8 +175,7 @@ def child(cpus: int, docs: int) -> None:
     for _ in range(TRIALS):
         shutil.rmtree(idx, ignore_errors=True)
         t0 = time.monotonic()
-        m = build_index(spark, corpus, idx, n_shards=64, n_tb=16, n_salts=1,
-                        tokenizer="arrow")
+        m = build_index(spark, corpus, idx, n_shards=64, n_tb=16, n_salts=1)
         build_trials.append(time.monotonic() - t0)
     build_s = min(build_trials)
     postings = m.segments[0]["postings"]
@@ -404,7 +402,7 @@ def segment_growth(
         )
         if s == 0:
             build_index(spark, corpus, index_dir, n_shards=16, n_tb=8,
-                        n_sb=8, tokenizer="arrow")
+                        n_sb=8)
         else:
             incremental_update(spark, corpus, index_dir)
         k = s + 1

@@ -53,7 +53,6 @@ def test_multiple_shards_per_bucket(spark, small_corpus, tmp_path):
     build_index(
         spark, small_corpus, d,
         n_shards=8, n_tb=4, n_salts=2, n_sb=2, block_size=16,
-        tokenizer="builtin",
     )
     oracle = _oracle_for(spark, small_corpus)
     _assert_matches(search_many(spark, d, QUERIES), oracle)
@@ -65,7 +64,7 @@ def test_merge_incremental_merge_ids_never_collide(spark, small_corpus, tmp_path
     live merged segment, corrupting the index)."""
     d = str(tmp_path / "idx")
     part1 = small_corpus.limit(120)
-    build_index(spark, part1, d, n_shards=2, n_tb=2, block_size=32, tokenizer="builtin")
+    build_index(spark, part1, d, n_shards=2, n_tb=2, block_size=32)
     incremental_update(spark, small_corpus.limit(160), d)
     m = merge_segments(spark, d)
     first_merged = m.segments[0]["id"]
@@ -89,7 +88,7 @@ def test_avgdl_drift_keeps_pruning_sound(spark, small_corpus, tmp_path):
     short_pdf = generate_corpus_pdf(150)
     short_pdf["content"] = short_pdf["content"].str.split().str[:60].str.join(" ")
     short = spark.createDataFrame(short_pdf)
-    build_index(spark, short, d, n_shards=4, n_tb=4, block_size=16, tokenizer="builtin")
+    build_index(spark, short, d, n_shards=4, n_tb=4, block_size=16)
     # incremental: long docs (distinct identity via different commit)
     long_pdf = generate_corpus_pdf(150, start=150)
     long_pdf["content"] = (long_pdf["content"] + " ") * 3
@@ -103,7 +102,7 @@ def test_avgdl_drift_keeps_pruning_sound(spark, small_corpus, tmp_path):
 
 def test_delete_docs_idempotent(spark, small_corpus, tmp_path):
     d = str(tmp_path / "idx")
-    build_index(spark, small_corpus.limit(60), d, n_shards=2, n_tb=2, tokenizer="builtin")
+    build_index(spark, small_corpus.limit(60), d, n_shards=2, n_tb=2)
     some = [
         r["doc_id"]
         for r in prepare_docs(small_corpus.limit(60), 2).select("doc_id").head(5)
@@ -122,7 +121,7 @@ def test_delete_nonexistent_ids_never_tombstoned(spark, small_corpus, tmp_path):
     forever, inflating every query's tombstone filter and prematurely
     triggering auto-compaction."""
     d = str(tmp_path / "idx")
-    build_index(spark, small_corpus.limit(40), d, n_shards=2, n_tb=2, tokenizer="builtin")
+    build_index(spark, small_corpus.limit(40), d, n_shards=2, n_tb=2)
     m0 = IndexManifest.load(d)
     m = delete_docs(spark, d, [111, 222, 333])  # none exist
     assert m.tombstones == []
@@ -146,7 +145,7 @@ def test_legacy_segment_without_avgdl_stays_exact(spark, tmp_path):
     short_pdf["content"] = short_pdf["content"].str.split().str[:60].str.join(" ")
     build_index(
         spark, spark.createDataFrame(short_pdf), d,
-        n_shards=4, n_tb=4, block_size=16, tokenizer="builtin",
+        n_shards=4, n_tb=4, block_size=16,
     )
     m = IndexManifest.load(d)
     del m.segments[0]["avgdl"]  # simulate a pre-upgrade manifest
@@ -166,7 +165,7 @@ def test_delete_auto_compacts_past_threshold(spark, small_corpus, tmp_path):
     from bugzilla_etl_spark.index import search
 
     d = str(tmp_path / "idx")
-    build_index(spark, small_corpus.limit(80), d, n_shards=2, n_tb=2, tokenizer="builtin")
+    build_index(spark, small_corpus.limit(80), d, n_shards=2, n_tb=2)
     ids = [
         r["doc_id"]
         for r in prepare_docs(small_corpus.limit(80), 2).select("doc_id").collect()
@@ -186,7 +185,7 @@ def test_delete_decrements_owning_segment_live_count(spark, small_corpus, tmp_pa
     compact_tiered ranks tiers by pre-delete size and delete-heavy
     segments never look small enough to compact."""
     d = str(tmp_path / "idx")
-    build_index(spark, small_corpus.limit(60), d, n_shards=2, n_tb=2, tokenizer="builtin")
+    build_index(spark, small_corpus.limit(60), d, n_shards=2, n_tb=2)
     inc = small_corpus.limit(100).subtract(small_corpus.limit(60))
     incremental_update(spark, inc, d)
     m = IndexManifest.load(d)
@@ -250,7 +249,7 @@ def test_legacy_segment_without_field_column(spark, small_corpus, tmp_path):
     part1 = small_corpus.limit(120)
     build_index(
         spark, part1, d, n_shards=4, n_tb=4, block_size=16,
-        tokenizer="builtin", positions=True,
+        positions=True,
     )
     m = IndexManifest.load(d)
     seg_dir = os.path.join(d, "segments", m.segments[0]["id"])
@@ -331,7 +330,7 @@ def test_delete_against_empty_index_is_noop(spark, small_corpus, tmp_path):
     between delete_docs and incremental_update — must be a no-op, not an
     IndexError, or the at-least-once upsert contract breaks."""
     d = str(tmp_path / "idx")
-    build_index(spark, small_corpus.limit(20), d, n_shards=2, n_tb=2, tokenizer="builtin")
+    build_index(spark, small_corpus.limit(20), d, n_shards=2, n_tb=2)
     ids = [
         r["doc_id"]
         for r in prepare_docs(small_corpus.limit(20), 2).select("doc_id").collect()
@@ -407,7 +406,7 @@ def test_msm1_with_should_boosts_instead_of_raising(spark, small_corpus, tmp_pat
     terms must boost scores rather than trip the should-needs-gate
     validation."""
     d = str(tmp_path / "idx")
-    build_index(spark, small_corpus, d, n_shards=2, n_tb=2, tokenizer="builtin")
+    build_index(spark, small_corpus, d, n_shards=2, n_tb=2)
     base_all = dict(
         search_many(spark, d, [(0, "uniq_13 return", 300)],
                     min_should_match=1)[0]

@@ -29,7 +29,7 @@ def agg_idx(spark, small_corpus, tmp_path_factory):
     corpus = small_corpus.withColumn("n_chars", F.length("content"))
     build_index(
         spark, corpus, d, n_shards=4, n_tb=4, n_sb=2, block_size=32,
-        tokenizer="builtin", doc_attrs=["n_chars"], positions=True,
+        doc_attrs=["n_chars"], positions=True,
     )
     return d
 
@@ -189,7 +189,7 @@ def agg_mm_idx(spark, small_corpus, tmp_path_factory):
     corpus = small_corpus.withColumn("n_chars", F.length("content"))
     build_index(
         spark, corpus, d, n_shards=4, n_tb=4, n_sb=2, block_size=32,
-        tokenizer="builtin", doc_attrs=["n_chars"],
+        doc_attrs=["n_chars"],
         extra_fields={"sh": MM_CHAINS["sh"]},
     )
     return d
@@ -414,7 +414,7 @@ def test_aggs_with_nullable_long_attr(spark, tmp_path):
                "content string, grp long",
     )
     build_index(spark, corpus, d, n_shards=2, n_tb=2, n_sb=2,
-                tokenizer="builtin", doc_attrs=["grp"])
+                doc_attrs=["grp"])
     non_null = [int(g) for g in pdf["grp"].dropna()]
     got = terms_agg(spark, d, "grp", query=Bool(must="alpha"), size=100)
     want = sorted(Counter(non_null).items(), key=lambda kv: (-kv[1], kv[0]))
@@ -451,7 +451,7 @@ def test_terms_agg_nullable_keys_are_ints_local_and_spark(spark, tmp_path):
                "content string, grp long",
     )
     build_index(spark, corpus, d, n_shards=2, n_tb=2, n_sb=2,
-                tokenizer="builtin", doc_attrs=["grp"])
+                doc_attrs=["grp"])
     for execution in ("local", "spark"):
         got = terms_agg(spark, d, "grp", query=Bool(must="alpha"),
                         size=100, execution=execution)
@@ -746,7 +746,7 @@ def test_date_histogram_calendar(spark, tmp_path):
     d = str(tmp_path / "idx")
     corpus = spark.createDataFrame(pdf)
     build_index(spark, corpus, d, n_shards=2, n_tb=2, n_sb=2,
-                tokenizer="builtin", doc_attrs=["ts_ms"])
+                doc_attrs=["ts_ms"])
     for cal, alias in [("month", "M"), ("week", "W-SUN"), ("year", "Y"),
                        ("quarter", "Q"), ("day", "D")]:
         got = date_histogram_agg(spark, d, "ts_ms", cal,
@@ -899,7 +899,7 @@ def test_missing_agg(spark, small_corpus, tmp_path, ref):
     d = str(tmp_path / "idx")
     build_index(
         spark, df, d, n_shards=4, n_tb=4, n_sb=2, block_size=32,
-        tokenizer="builtin", doc_attrs=["opt"],
+        doc_attrs=["opt"],
     )
     got = missing_agg(spark, d, "opt", query=Bool(must="return"))
     want = sum(
@@ -968,7 +968,7 @@ def src_idx(spark, small_corpus, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("sigtext") / "idx")
     build_index(
         spark, small_corpus, d, n_shards=4, n_tb=4, n_sb=2, block_size=32,
-        tokenizer="builtin", store_source=True,
+        store_source=True,
     )
     return d
 

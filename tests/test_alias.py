@@ -33,7 +33,7 @@ def two_members(spark, small_corpus, tmp_path_factory):
     for name, half in (("a", half_a), ("b", half_b)):
         d = str(root / name)
         build_index(
-            spark, half, d, n_shards=2, n_tb=2, tokenizer="builtin"
+            spark, half, d, n_shards=2, n_tb=2
         )
         dirs.append(d)
     toks = {}
@@ -137,7 +137,6 @@ def test_global_stats_equals_merged_index(
     merged_dir = str(tmp_path / "merged")
     build_index(
         spark, small_corpus, merged_dir, n_shards=2, n_tb=2,
-        tokenizer="builtin",
     )
     q = Bool(must="struct merge", should=["vec"], must_not=["impl"])
     want = bool_search(spark, merged_dir, q, k=25)
@@ -211,7 +210,7 @@ def test_rollover_lifecycle(spark, small_corpus, tmp_path):
     first = str(tmp_path / "gens" / "gen_00000")
     build_index(
         spark, small_corpus.limit(120), first, n_shards=2, n_tb=2,
-        tokenizer="builtin", doc_attrs=["lang"],
+        doc_attrs=["lang"],
     )
     alias = str(tmp_path / "bugs.json")
     publish_alias([first], alias)
@@ -251,7 +250,6 @@ def test_rollover_cli(spark, small_corpus, tmp_path, capsys):
     first = str(tmp_path / "g" / "gen_00000")
     build_index(
         spark, small_corpus.limit(30), first, n_shards=2, n_tb=2,
-        tokenizer="builtin",
     )
     alias = str(tmp_path / "a.json")
     publish_alias([first], alias)
@@ -266,27 +264,50 @@ def test_merge_indexes_equals_global_alias_and_single_build(
 ):
     """Segment adoption: hardlinking the halves' segments under one
     root answers identically to (a) the dfs-global alias over the
-    members and (b) a from-scratch single build of the same corpus."""
-    from bugzilla_etl_spark.index import merge_indexes
+    members and (b) a from-scratch single build of the same corpus.
+    The second input gives one member a legacy manifest whose analyzer
+    carries the ``:builtin`` doc_len suffix: same chain, so it merges
+    and still takes an incremental update."""
+    import json
+    import shutil
+
+    from bugzilla_etl_spark.index import incremental_update, merge_indexes
+    from bugzilla_etl_spark.index.manifest import IndexManifest
 
     dirs, _ = two_members
-    out = str(tmp_path / "adopted")
-    m = merge_indexes(dirs, out)
-    assert m.n_docs == 200 and len(m.segments) == 2
+    legacy = str(tmp_path / "legacy_b")
+    shutil.copytree(dirs[1], legacy)
+    with open(IndexManifest.path(legacy)) as f:
+        raw = json.load(f)
+    raw["tokenizer"] = "code_v1:builtin"
+    with open(IndexManifest.path(legacy), "w") as f:
+        json.dump(raw, f)
 
-    q = Bool(must="struct merge", should=["vec"], must_not=["impl"])
-    merged_hits = bool_search(spark, out, q, k=25)
-    ali = multi_index_search(spark, dirs, q, k=25, stats="global")
-    assert [(d, round(s, 9)) for _m, d, s in ali] == [
-        (d, round(s, 9)) for d, s in merged_hits
-    ]
     scratch = str(tmp_path / "scratch")
     build_index(
         spark, small_corpus, scratch, n_shards=2, n_tb=2,
-        tokenizer="builtin",
     )
+    q = Bool(must="struct merge", should=["vec"], must_not=["impl"])
     want = bool_search(spark, scratch, q, k=25)
-    assert [(d, round(s, 9)) for d, s in merged_hits] == [
+    for name, members in (("adopted", dirs), ("mixed", [dirs[0], legacy])):
+        out = str(tmp_path / name)
+        m = merge_indexes(members, out)
+        assert m.n_docs == 200 and len(m.segments) == 2
+        assert m.field_chain() == "code_v1"
+
+        merged_hits = bool_search(spark, out, q, k=25)
+        ali = multi_index_search(spark, members, q, k=25, stats="global")
+        assert [(d, round(s, 9)) for _m, d, s in ali] == [
+            (d, round(s, 9)) for d, s in merged_hits
+        ]
+        assert [(d, round(s, 9)) for d, s in merged_hits] == [
+            (d, round(s, 9)) for d, s in want
+        ]
+    # the legacy member takes an append of the whole corpus: its own
+    # rows are skipped, the other half lands in a new segment, and it
+    # then answers like the single build
+    assert incremental_update(spark, small_corpus, legacy).n_docs == 200
+    assert [(d, round(s, 9)) for d, s in bool_search(spark, legacy, q, k=25)] == [
         (d, round(s, 9)) for d, s in want
     ]
 
@@ -298,7 +319,6 @@ def test_merge_indexes_validation(spark, small_corpus, two_members, tmp_path):
     other = str(tmp_path / "othercfg")
     build_index(
         spark, small_corpus.limit(20), other, n_shards=4, n_tb=2,
-        tokenizer="builtin",
     )
     with pytest.raises(ValueError, match="fixed config"):
         merge_indexes([dirs[0], other], str(tmp_path / "x"))
@@ -323,7 +343,6 @@ def test_concurrent_rollover_adds_exactly_one_member(
     first = str(tmp_path / "g" / "gen_00000")
     build_index(
         spark, small_corpus.limit(40), first, n_shards=2, n_tb=2,
-        tokenizer="builtin",
     )
     alias = str(tmp_path / "a.json")
     publish_alias([first], alias)

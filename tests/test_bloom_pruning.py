@@ -46,7 +46,7 @@ def many_segment_index(spark, tmp_path_factory):
         pdfs.append(pdf)
     build_index(
         spark, spark.createDataFrame(pdfs[0]), d,
-        n_shards=2, n_tb=2, tokenizer="builtin",
+        n_shards=2, n_tb=2,
     )
     for pdf in pdfs[1:]:
         incremental_update(spark, spark.createDataFrame(pdf), d)
@@ -93,7 +93,7 @@ def test_incremental_novel_batch_skips_docs_scan(spark, many_segment_index, tmp_
 
     m = IndexManifest.load(d)
     novel = spark.createDataFrame(generate_corpus_pdf(20, start=99_000))
-    prepared = prepare_docs(novel, m.n_shards, tokenizer="builtin")
+    prepared = prepare_docs(novel, m.n_shards)
     out = _without_indexed_docs(spark, m, d, prepared, novel)
     assert out is prepared  # fast path: no join, no segment scan
 
@@ -104,7 +104,7 @@ def test_incremental_replay_still_noop(spark, tmp_path):
     d = str(tmp_path / "idx")
     pdf = generate_corpus_pdf(80)
     corpus = spark.createDataFrame(pdf)
-    build_index(spark, corpus, d, n_shards=2, n_tb=2, tokenizer="builtin")
+    build_index(spark, corpus, d, n_shards=2, n_tb=2)
     m0 = IndexManifest.load(d)
     m1 = incremental_update(spark, corpus, d)  # full replay
     assert len(m1.segments) == len(m0.segments)

@@ -39,7 +39,7 @@ def bmm_idx(spark, small_corpus, tmp_path_factory):
         spark,
         small_corpus.withColumn("n_chars", F.length("content")),
         d, n_shards=4, n_tb=4, n_sb=2, block_size=32,
-        tokenizer="builtin", extra_fields={"sh": CHAINS["sh"]},
+        extra_fields={"sh": CHAINS["sh"]},
         doc_attrs=["n_chars"], positions=True,
     )
     return d

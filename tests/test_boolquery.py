@@ -37,7 +37,7 @@ def bool_idx(spark, attr_corpus, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("boolq") / "idx")
     build_index(
         spark, attr_corpus, d, n_shards=4, n_tb=4, n_sb=2, block_size=32,
-        tokenizer="builtin", doc_attrs=["n_chars"], positions=True,
+        doc_attrs=["n_chars"], positions=True,
     )
     return d
 
@@ -726,7 +726,7 @@ def test_collapse_null_keys_form_one_group(spark, attr_corpus, tmp_path, ref):
     d = str(tmp_path / "idx")
     build_index(
         spark, df, d, n_shards=4, n_tb=4, n_sb=2, block_size=32,
-        tokenizer="builtin", doc_attrs=["grp"],
+        doc_attrs=["grp"],
     )
     got = bool_search(spark, d, Bool(must="return"), k=50, collapse="grp")
     cands = [
@@ -895,7 +895,7 @@ def test_function_score_missing_value(spark, attr_corpus, tmp_path, ref):
     d = str(tmp_path / "idx")
     build_index(
         spark, df, d, n_shards=4, n_tb=4, n_sb=2, block_size=32,
-        tokenizer="builtin", doc_attrs=["boost_attr"],
+        doc_attrs=["boost_attr"],
     )
     q = Bool(
         must="return",
@@ -990,7 +990,7 @@ def test_collapse_inner_hits_null_group(spark, attr_corpus, tmp_path, ref):
     d = str(tmp_path / "idx")
     build_index(
         spark, df, d, n_shards=4, n_tb=4, n_sb=2, block_size=32,
-        tokenizer="builtin", doc_attrs=["grp"],
+        doc_attrs=["grp"],
     )
     got = bool_search(
         spark, d, Bool(must="return"), k=50, collapse="grp",

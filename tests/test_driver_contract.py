@@ -62,3 +62,22 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) >= 0
     assert df.columns == ["doc_id", "score"]
+
+
+def test_gate_index_removes_its_dir(spark, small_corpus):
+    """The engine entries' index lifecycle: the temp dir exists (with a
+    committed manifest) inside the block and is gone after it, both when
+    the body returns and when it raises."""
+    from bugzilla_etl_spark.index.manifest import IndexManifest
+    from bugzilla_etl_spark.operators.fulltext import _gate_index
+
+    corpus = small_corpus.limit(20)
+    with _gate_index(spark, corpus) as idx:
+        assert os.path.exists(IndexManifest.path(idx))
+    assert not os.path.exists(idx)
+
+    with pytest.raises(RuntimeError, match="body failed"):
+        with _gate_index(spark, corpus) as idx:
+            assert os.path.exists(IndexManifest.path(idx))
+            raise RuntimeError("body failed")
+    assert not os.path.exists(idx)

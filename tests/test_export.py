@@ -27,7 +27,7 @@ def exp_idx(spark, attr_corpus, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("export") / "idx")
     build_index(
         spark, attr_corpus, d, n_shards=4, n_tb=4, n_sb=2, block_size=32,
-        tokenizer="builtin", doc_attrs=["n_chars"], positions=True,
+        doc_attrs=["n_chars"], positions=True,
     )
     return d
 

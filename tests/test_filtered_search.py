@@ -42,7 +42,6 @@ def filtered_index(spark, small_corpus, tmp_path_factory):
     build_index(
         spark, small_corpus, d,
         n_shards=4, n_tb=4, n_salts=2, n_sb=2, block_size=16,
-        tokenizer="builtin",
     )
     prepared = prepare_docs(small_corpus, 4)
     prepared.persist().count()
@@ -114,7 +113,7 @@ def test_doc_attrs_roundtrip(spark, tmp_path):
         "stars", (F.xxhash64("path") % 100 + 100) % 100
     )
     build_index(
-        spark, corpus, d, n_shards=2, n_tb=2, tokenizer="builtin",
+        spark, corpus, d, n_shards=2, n_tb=2,
         doc_attrs=["stars"],
     )
     inc = generate_corpus(spark, 60, start=120, partitions=4).withColumn(
@@ -306,7 +305,7 @@ def test_typed_doc_attrs_mapping(spark, tmp_path):
         "stars", (F.xxhash64("path") % 100 + 100) % 100
     ).withColumn("owner", F.concat(F.lit("team"), (F.xxhash64("repo") % 3).cast("string")))
     build_index(
-        spark, corpus, d, n_shards=2, n_tb=2, tokenizer="builtin",
+        spark, corpus, d, n_shards=2, n_tb=2,
         doc_attrs=["stars", "owner"],
     )
     m = IndexManifest.load(d)
@@ -375,7 +374,7 @@ def test_local_execution_parity_phrase_and_nested(spark, small_corpus, tmp_path)
     d = str(tmp_path / "idx")
     corpus = small_corpus.limit(120)
     build_index(
-        spark, corpus, d, n_shards=4, n_tb=4, tokenizer="builtin",
+        spark, corpus, d, n_shards=4, n_tb=4,
         positions=True, doc_attrs=["lang"],
     )
     qs = [(0, "return int", 10), (1, "fn impl", 10)]
@@ -392,7 +391,7 @@ def test_local_execution_parity_phrase_and_nested(spark, small_corpus, tmp_path)
         "parent", (F.xxhash64("repo") % 100 + 100) % 100
     )
     build_index(
-        spark, child, d2, n_shards=4, n_tb=4, tokenizer="builtin",
+        spark, child, d2, n_shards=4, n_tb=4,
         doc_attrs=["parent"],
     )
     for mode in ("avg", "sum"):
@@ -460,7 +459,7 @@ def test_must_not_phrase_and_nested(spark, small_corpus, tmp_path):
         "parent", (F.xxhash64("repo") % 50 + 50) % 50
     )
     build_index(
-        spark, corpus, d, n_shards=2, n_tb=2, tokenizer="builtin",
+        spark, corpus, d, n_shards=2, n_tb=2,
         positions=True, doc_attrs=["parent"],
     )
     rows = prepare_docs(corpus, 2).select("doc_id", "content", "parent").collect()
@@ -874,7 +873,7 @@ def test_exists_predicate(spark, tmp_path):
                "content string, grp long",
     )
     build_index(spark, corpus, d, n_shards=2, n_tb=2, n_sb=2,
-                tokenizer="builtin", doc_attrs=["grp"])
+                doc_attrs=["grp"])
     grp_of = {
         r["doc_id"]: r["grp"]
         for r in prepare_docs(corpus, 2).select("doc_id", "grp").collect()

@@ -86,7 +86,7 @@ def src_idx(spark, tmp_path_factory):
     corpus = spark.createDataFrame(rows, schema=CORPUS_SCHEMA)
     d = str(tmp_path_factory.mktemp("hl") / "idx")
     build_index(
-        spark, corpus, d, n_shards=2, n_tb=2, tokenizer="builtin",
+        spark, corpus, d, n_shards=2, n_tb=2,
         store_source=True,
     )
     ids = {
@@ -123,7 +123,7 @@ def test_highlight_requires_store_source(spark, tmp_path):
         [("r", "0", "c0", "en", "return int")], schema=CORPUS_SCHEMA
     )
     d = str(tmp_path / "idx")
-    build_index(spark, corpus, d, n_shards=2, n_tb=2, tokenizer="builtin")
+    build_index(spark, corpus, d, n_shards=2, n_tb=2)
     with pytest.raises(ValueError, match="store_source"):
         highlight_docs(d, [1], "return")
 
@@ -138,7 +138,7 @@ def test_highlight_survives_incremental_and_merge(spark, tmp_path):
         [("r", "1", "c0", "en", "gamma return delta")], schema=CORPUS_SCHEMA
     )
     d = str(tmp_path / "idx")
-    build_index(spark, corpus1, d, n_shards=2, n_tb=2, tokenizer="builtin",
+    build_index(spark, corpus1, d, n_shards=2, n_tb=2,
                 store_source=True)
     incremental_update(spark, corpus2, d)
     ids = {

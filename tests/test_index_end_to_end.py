@@ -35,7 +35,6 @@ def index_dir(tmp_path_factory, spark, small_corpus):
     d = str(tmp_path_factory.mktemp("idx"))
     build_index(
         spark, small_corpus, d, n_shards=4, n_tb=4, n_salts=2, block_size=16,
-        tokenizer="arrow",
     )
     return d
 
@@ -75,7 +74,7 @@ def test_shingled_analyzer_end_to_end(spark, small_corpus, tmp_path):
     d = str(tmp_path / "idx_sh")
     build_index(
         spark, small_corpus, d, n_shards=4, n_tb=4, n_salts=2, block_size=16,
-        tokenizer="arrow", analyzer="code_v1_shingle",
+        analyzer="code_v1_shingle",
     )
     rows = prepare_docs(small_corpus, 4).select("doc_id", "content").collect()
     oracle = build_oracle(
@@ -96,12 +95,11 @@ def test_shingled_analyzer_end_to_end(spark, small_corpus, tmp_path):
 
 
 def test_deterministic_across_config(spark, small_corpus, tmp_path, oracle):
-    """Different shard/salt/block configs and the builtin JVM tokenizer
-    must produce identical query results (FIXTURES.md invariant 5)."""
+    """Different shard/salt/block configs must produce identical query
+    results (FIXTURES.md invariant 5)."""
     d2 = str(tmp_path / "idx2")
     build_index(
         spark, small_corpus, d2, n_shards=2, n_tb=8, n_salts=1, block_size=128,
-        tokenizer="builtin",
     )
     res = search_many(spark, d2, QUERIES)
     for qid, text, k in QUERIES:
@@ -126,7 +124,7 @@ def test_fetch_docs_source_lookup(spark, small_corpus, tmp_path):
     corpus = small_corpus.limit(80).withColumn(
         "stars", (F.xxhash64("path") % 100 + 100) % 100
     )
-    build_index(spark, corpus, d, n_shards=2, n_tb=2, tokenizer="builtin",
+    build_index(spark, corpus, d, n_shards=2, n_tb=2,
                 doc_attrs=["stars"])
     inc = small_corpus.limit(120).subtract(small_corpus.limit(80)).withColumn(
         "stars", F.lit(7)

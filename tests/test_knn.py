@@ -36,7 +36,7 @@ def knn_idx(spark, small_corpus, tmp_path_factory):
     )
     build_index(
         spark, corpus, d, n_shards=4, n_tb=4, n_sb=2, block_size=32,
-        tokenizer="builtin", doc_attrs=["embedding", "lang"],
+        doc_attrs=["embedding", "lang"],
     )
     rows = (
         prepare_docs(corpus, 4)
@@ -101,7 +101,6 @@ def test_knn_validation(spark, knn_idx, small_corpus, tmp_path):
     plain = str(tmp_path / "novec")
     build_index(
         spark, small_corpus.limit(10), plain, n_shards=2, n_tb=2,
-        tokenizer="builtin",
     )
     with pytest.raises(ValueError, match="no stored vector attr"):
         knn_search(spark, plain, _vec(1))
@@ -130,7 +129,7 @@ def test_knn_nan_vector_keeps_top_k(spark, small_corpus, tmp_path):
         ),
     )
     build_index(
-        spark, corpus, d, n_shards=1, n_tb=1, n_sb=1, tokenizer="builtin",
+        spark, corpus, d, n_shards=1, n_tb=1, n_sb=1,
         doc_attrs=["embedding"],
     )
     rows = prepare_docs(corpus, 1).select("doc_id", "embedding").collect()

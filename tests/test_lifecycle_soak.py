@@ -62,7 +62,7 @@ def test_lifecycle_soak(spark, tmp_path):
         source.filter(F.col("updated_ts") <= 1).drop("updated_ts"),
         d,
         n_shards=2, n_tb=2, n_salts=2, n_sb=2, block_size=16,
-        tokenizer="builtin", positions=True,
+        positions=True,
     )
     from bugzilla_etl_spark.plans.jobs import commit_watermark
 
@@ -230,7 +230,7 @@ def test_lifecycle_soak(spark, tmp_path):
         ),
         d2,
         n_shards=2, n_tb=2, n_salts=2, n_sb=2, block_size=16,
-        tokenizer="builtin", positions=True,
+        positions=True,
     )
     assert index_checksum(spark, d) == index_checksum(spark, d2)
     source.unpersist()

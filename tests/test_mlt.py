@@ -25,7 +25,7 @@ def mlt_idx(spark, small_corpus, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("mlt") / "idx")
     build_index(
         spark, small_corpus, d, n_shards=4, n_tb=4, n_sb=2, block_size=32,
-        tokenizer="builtin", store_source=True,
+        store_source=True,
     )
     return d
 
@@ -129,8 +129,7 @@ def test_mlt_validation(spark, mlt_idx):
 
 def test_mlt_like_id_needs_source(spark, small_corpus, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("mltnosrc") / "idx")
-    build_index(spark, small_corpus, d, n_shards=2, n_tb=2,
-                tokenizer="builtin")
+    build_index(spark, small_corpus, d, n_shards=2, n_tb=2)
     with pytest.raises(ValueError, match="store_source"):
         mlt_search(spark, d, like_id=1)
 

@@ -22,7 +22,7 @@ def ms_idx(spark, small_corpus, tmp_path_factory):
     corpus = small_corpus.withColumn("n_chars", F.length("content"))
     build_index(
         spark, corpus, d, n_shards=4, n_tb=4, n_sb=2, block_size=32,
-        tokenizer="builtin", doc_attrs=["n_chars"], positions=True,
+        doc_attrs=["n_chars"], positions=True,
     )
     return d
 

@@ -57,7 +57,7 @@ def multifield(spark, tmp_path_factory):
     build_index(
         spark, corpus, d,
         n_shards=4, n_tb=4, n_salts=2, block_size=16,
-        tokenizer="builtin", extra_fields=EXTRA,
+        extra_fields=EXTRA,
     )
     ids = {
         (r["repo"], r["path"], r["commit"]): r["doc_id"]
@@ -182,7 +182,6 @@ def test_positions_on_shingled_chain_warns(spark, small_corpus, tmp_path):
         warnings.simplefilter("always")
         build_index(
             spark, small_corpus.limit(30), d, n_shards=2, n_tb=2,
-            tokenizer="builtin",
             extra_fields={"sh": "code_v1_shingle"},
             positions=["sh"],
         )

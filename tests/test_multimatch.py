@@ -28,7 +28,7 @@ def mm_idx(spark, small_corpus, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("mm") / "idx")
     build_index(
         spark, small_corpus, d, n_shards=4, n_tb=4, n_sb=2, block_size=32,
-        tokenizer="builtin", extra_fields={"sh": CHAINS["sh"]},
+        extra_fields={"sh": CHAINS["sh"]},
     )
     return d
 

@@ -53,7 +53,7 @@ def nested_idx(spark, tmp_path_factory):
     corpus = spark.createDataFrame(_children_pdf(), schema=CORPUS_SCHEMA)
     build_index(
         spark, corpus, d, n_shards=4, n_tb=4, n_salts=2, n_sb=2,
-        block_size=16, tokenizer="builtin",
+        block_size=16,
         doc_attrs=["parent", "flag_ord"],
     )
     toks = {
@@ -156,7 +156,7 @@ def test_nested_rollup_spans_segments_and_deletes(spark, tmp_path):
     corpus1 = spark.createDataFrame(first, schema=CORPUS_SCHEMA)
     corpus2 = spark.createDataFrame(second, schema=CORPUS_SCHEMA)
     build_index(
-        spark, corpus1, d, n_shards=2, n_tb=2, tokenizer="builtin",
+        spark, corpus1, d, n_shards=2, n_tb=2,
         doc_attrs=["parent", "flag_ord"],
     )
     incremental_update(spark, corpus2, d)
@@ -189,7 +189,7 @@ def test_nested_rollup_spans_segments_and_deletes(spark, tmp_path):
 def test_nested_requires_parent_attr(spark, tmp_path):
     d = str(tmp_path / "idx")
     corpus = spark.createDataFrame(_children_pdf(10), schema=CORPUS_SCHEMA)
-    build_index(spark, corpus, d, n_shards=2, n_tb=2, tokenizer="builtin")
+    build_index(spark, corpus, d, n_shards=2, n_tb=2)
     with pytest.raises(Exception, match="doc_attrs|parent"):
         nested_search(spark, d, "review u1", "parent", k=5)
 
@@ -216,7 +216,7 @@ def test_nested_phrase_within_one_child(spark, tmp_path):
     d = str(tmp_path / "idx")
     corpus = spark.createDataFrame(pdf, schema=CORPUS_SCHEMA)
     build_index(
-        spark, corpus, d, n_shards=2, n_tb=2, tokenizer="builtin",
+        spark, corpus, d, n_shards=2, n_tb=2,
         positions=True, doc_attrs=["parent", "flag_ord"],
     )
     got = nested_search(spark, d, "alpha beta", "parent", k=10,
@@ -232,7 +232,7 @@ def test_nested_phrase_within_one_child(spark, tmp_path):
     assert sorted(p for p, _ in got) == [0]
     # non-positional index: clear error
     d2 = str(tmp_path / "idx2")
-    build_index(spark, corpus, d2, n_shards=2, n_tb=2, tokenizer="builtin",
+    build_index(spark, corpus, d2, n_shards=2, n_tb=2,
                 doc_attrs=["parent"])
     with pytest.raises(ValueError, match="positions"):
         nested_search(spark, d2, "alpha beta", "parent", phrase=True)
@@ -287,7 +287,7 @@ def nested_agg_idx(spark, tmp_path_factory):
     corpus = spark.createDataFrame(pdf, schema=AGG_SCHEMA)
     build_index(
         spark, corpus, d, n_shards=4, n_tb=4, n_salts=2, n_sb=2,
-        block_size=16, tokenizer="builtin",
+        block_size=16,
         doc_attrs=["parent", "flag_ord", "grp"],
     )
     return d, pdf
@@ -370,7 +370,7 @@ def test_nested_agg_parent_spans_segments(spark, tmp_path):
     second = pdf[pdf["flag_ord"] == 1]
     build_index(
         spark, spark.createDataFrame(first, schema=AGG_SCHEMA), d,
-        n_shards=2, n_tb=2, tokenizer="builtin",
+        n_shards=2, n_tb=2,
         doc_attrs=["parent", "flag_ord", "grp"],
     )
     incremental_update(spark, spark.createDataFrame(second, schema=AGG_SCHEMA), d)

@@ -55,7 +55,7 @@ def pos_index(spark, small_corpus, tmp_path_factory):
     build_index(
         spark, small_corpus, d,
         n_shards=4, n_tb=4, n_salts=2, n_sb=2, block_size=16,
-        tokenizer="builtin", positions=True,
+        positions=True,
     )
     toks = {
         r["doc_id"]: py_tokens(r["content"])
@@ -106,7 +106,7 @@ def test_phrase_survives_incremental_and_merge(spark, small_corpus, tmp_path):
     part1 = small_corpus.limit(120)
     build_index(
         spark, part1, d, n_shards=2, n_tb=2, block_size=16,
-        tokenizer="builtin", positions=True,
+        positions=True,
     )
     inc = generate_corpus(spark, 80, start=200, partitions=4)
     incremental_update(spark, inc, d)
@@ -143,7 +143,7 @@ def test_phrase_survives_incremental_and_merge(spark, small_corpus, tmp_path):
 
 def test_phrase_requires_positional_index(spark, small_corpus, tmp_path):
     d = str(tmp_path / "idx")
-    build_index(spark, small_corpus.limit(40), d, n_shards=2, n_tb=2, tokenizer="builtin")
+    build_index(spark, small_corpus.limit(40), d, n_shards=2, n_tb=2)
     with pytest.raises(ValueError, match="positions=True"):
         phrase_search(spark, d, "return int", k=5)
 
@@ -195,7 +195,7 @@ def test_phrase_on_variant_field(spark, small_corpus, tmp_path):
     d = str(tmp_path / "idx")
     build_index(
         spark, small_corpus.limit(150), d,
-        n_shards=2, n_tb=2, block_size=16, tokenizer="builtin",
+        n_shards=2, n_tb=2, block_size=16,
         extra_fields={"tokens": "path_v1"},
         positions=["content", "tokens"],
     )
@@ -406,7 +406,7 @@ class TestUnorderedSlop:
         d = str(tmp_path_factory.mktemp("uslop") / "idx")
         build_index(
             spark, spark.createDataFrame(pdf), d, n_shards=4, n_tb=4,
-            n_sb=2, block_size=16, tokenizer="builtin", positions=True,
+            n_sb=2, block_size=16, positions=True,
         )
         toks_by_id = {}
         for r in (
@@ -571,7 +571,7 @@ class TestSloppyFreqScoring:
         d = str(tmp_path_factory.mktemp("uw") / "idx")
         build_index(
             spark, spark.createDataFrame(pdf), d, n_shards=2, n_tb=2,
-            tokenizer="builtin", positions=True,
+            positions=True,
         )
         ids = {
             r["path"]: int(r["doc_id"])
@@ -654,7 +654,7 @@ class TestMatchPhrasePrefix:
         d = str(tmp_path / "shidx")
         build_index(
             spark, small_corpus.limit(20), d, n_shards=2, n_tb=2,
-            tokenizer="builtin", analyzer="code_v1_shingle",
+            analyzer="code_v1_shingle",
         )
         with pytest.raises(ValueError, match="shingle"):
             match_phrase_prefix_search(spark, d, "return in")

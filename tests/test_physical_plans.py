@@ -5,6 +5,8 @@ joins for dimension lookups, bounded top-k (TakeOrderedAndProject)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -38,8 +40,7 @@ def test_sb_partition_pruning_and_term_rowgroups(spark, small_corpus, tmp_path):
     """JVM path: sb directory pruning; term predicates push to parquet.
     (The Python query executor does the same pruning via pyarrow.)"""
     idx = str(tmp_path / "idx")
-    build_index(spark, small_corpus, idx, n_shards=4, n_tb=8, n_sb=4,
-                tokenizer="builtin")
+    build_index(spark, small_corpus, idx, n_shards=4, n_tb=8, n_sb=4)
     blocks = spark.read.parquet(f"{idx}/segments/seg00000/postings").filter(
         (F.col("sb") == 1) & (F.col("term") == "return")
     )
@@ -52,8 +53,11 @@ def test_sb_partition_pruning_and_term_rowgroups(spark, small_corpus, tmp_path):
 
 
 def test_star_join_broadcasts(spark):
+    """Dimensions broadcast; the lineitem-orders fact join takes the
+    ``shuffle_hash`` hint (no sort-merge join on the fact side)."""
     plan = _plan(s1_star_join_scan(spark, SF))
     assert "BroadcastHashJoin" in plan
+    assert "ShuffledHashJoin" in plan, plan
 
 
 def test_topk_is_bounded_heap(spark):
@@ -62,10 +66,16 @@ def test_topk_is_bounded_heap(spark):
 
 
 def test_semi_join_strategy(spark):
+    """Join-stage shapes: j3 is a semi join, and the minhash candidate
+    pair stage crosses the network on (band, bucket) exactly once."""
+    from bugzilla_etl_spark.operators.dedup import _minhash_pairs
     from bugzilla_etl_spark.operators.relational import j3_changed_semi_join
 
     plan = _plan(j3_changed_semi_join(spark, SF))
     assert "LeftSemi" in plan
+    plan = _plan(_minhash_pairs(spark, SF))
+    wide = re.findall(r"Exchange hashpartitioning\(band#\d+, bucket#\d+", plan)
+    assert len(wide) == 1, plan
 
 
 def test_ivf_assignment_no_shuffle(spark):
@@ -88,6 +98,9 @@ def test_bm25_plan_shape(spark, name):
 
     df = fulltext.QUERIES[name](spark, SF)
     plan = _plan(df)
-    # stats and df joins are broadcast (tiny), final top-k is bounded
+    # stats and df joins are broadcast (tiny), final top-k is bounded;
+    # per-doc array expressions leave no Window and at most 2 exchanges
     assert "TakeOrderedAndProject" in plan
     assert "CartesianProduct" not in plan
+    assert "Window" not in plan, plan
+    assert plan.count("Exchange") <= 2, plan

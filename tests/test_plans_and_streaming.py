@@ -30,7 +30,7 @@ def test_watermark_full_then_incremental(spark, sourced, tmp_path):
     batch1 = sourced.filter(F.col("updated_ts") <= 1000)
     run_full_update(
         spark, batch1, idx, ts_col="updated_ts",
-        n_shards=2, n_tb=4, tokenizer="builtin",
+        n_shards=2, n_tb=4,
     )
     assert read_watermark(idx) == 1000
     m = IndexManifest.load(idx)
@@ -87,7 +87,7 @@ def test_streaming_incremental_index(spark, tmp_path):
 
     idx = str(tmp_path / "sidx")
     base = spark.createDataFrame(generate_corpus_pdf(50))
-    build_index(spark, base, idx, n_shards=2, n_tb=4, tokenizer="builtin")
+    build_index(spark, base, idx, n_shards=2, n_tb=4)
 
     src = str(tmp_path / "docs_src")
     spark.createDataFrame(generate_corpus_pdf(30, start=50)).write.parquet(src)
@@ -350,7 +350,7 @@ def test_incremental_loop_with_tiered_maintenance(spark, tmp_path):
         pdfs.append(pdf)
     src0 = spark.createDataFrame(pdfs[0])
     run_full_update(spark, src0, idx, ts_col="updated_ts",
-                    n_shards=2, n_tb=4, tokenizer="builtin")
+                    n_shards=2, n_tb=4)
     for i in range(1, 4):
         src = spark.createDataFrame(pd.concat(pdfs[: i + 1], ignore_index=True))
         m = run_incremental_update(spark, src, idx, compact_max_segments=2)

@@ -126,7 +126,7 @@ def qs_idx(spark, small_corpus, tmp_path_factory):
     corpus = small_corpus.withColumn("n_chars", F.length("content"))
     build_index(
         spark, corpus, d, n_shards=4, n_tb=4, n_sb=2, block_size=32,
-        tokenizer="builtin", doc_attrs=["n_chars"], positions=True,
+        doc_attrs=["n_chars"], positions=True,
         extra_fields={"ident": "path_v1", "ws": "code_v1_stop"},
     )
     return d

@@ -9,7 +9,7 @@ from bugzilla_etl_spark.index import build_index, incremental_update, search_man
 from bugzilla_etl_spark.index.checksum import index_checksum
 from bugzilla_etl_spark.index.manifest import IndexManifest
 
-CFG = dict(n_shards=4, n_tb=4, n_salts=1, block_size=32, tokenizer="builtin")
+CFG = dict(n_shards=4, n_tb=4, n_salts=1, block_size=32)
 
 
 def test_kill_resume_identical(spark, small_corpus, tmp_path):
@@ -93,8 +93,7 @@ def test_publish_pointer_swap_zero_downtime(spark, small_corpus, tmp_path):
     ptr = str(tmp_path / "current.json")
     d1 = next_build_dir(root, ptr)
     assert d1.endswith("gen_00001")
-    build_index(spark, small_corpus.limit(80), d1, n_shards=2, n_tb=2,
-                tokenizer="builtin")
+    build_index(spark, small_corpus.limit(80), d1, n_shards=2, n_tb=2)
     assert publish_index(d1, ptr) is None
     assert resolve_index(ptr) == d1
     r1 = search(spark, resolve_index(ptr), "return int", k=5)
@@ -104,8 +103,7 @@ def test_publish_pointer_swap_zero_downtime(spark, small_corpus, tmp_path):
     reader_a_dir = resolve_index(ptr)
     d2 = next_build_dir(root, ptr)
     assert d2.endswith("gen_00002")
-    build_index(spark, small_corpus.limit(160), d2, n_shards=2, n_tb=2,
-                tokenizer="builtin")
+    build_index(spark, small_corpus.limit(160), d2, n_shards=2, n_tb=2)
     prev = publish_index(d2, ptr)
     assert prev == d1
     # reader A: old generation still answers identically
@@ -150,7 +148,7 @@ def test_row_errors_surface_in_manifest_lineage(spark, small_corpus, tmp_path):
     )
     build_index(
         spark, clean.unionByName(bad).unionByName(bad2), d,
-        n_shards=2, n_tb=2, tokenizer="builtin",
+        n_shards=2, n_tb=2,
     )
     m = IndexManifest.load(d)
     assert m.n_docs == 60

@@ -23,7 +23,6 @@ def sug_idx(spark, small_corpus, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("suggest") / "idx")
     build_index(
         spark, small_corpus, d, n_shards=4, n_tb=4, n_sb=2, block_size=32,
-        tokenizer="builtin",
     )
     return d
 

@@ -47,8 +47,7 @@ def _oracle_and_check(spark, d, pdfs, deleted=()):
 def five_segment_index(spark, tmp_path):
     d = str(tmp_path / "idx")
     pdfs = [generate_corpus_pdf(60, start=100 * i) for i in range(5)]
-    build_index(spark, spark.createDataFrame(pdfs[0]), d, n_shards=2, n_tb=2,
-                tokenizer="builtin")
+    build_index(spark, spark.createDataFrame(pdfs[0]), d, n_shards=2, n_tb=2)
     for pdf in pdfs[1:]:
         incremental_update(spark, spark.createDataFrame(pdf), d)
     return d, pdfs
@@ -175,8 +174,7 @@ def test_merge_retires_segments_with_grace(spark, small_corpus, tmp_path):
     from bugzilla_etl_spark.index.manifest import IndexManifest
 
     d = str(tmp_path / "idx")
-    build_index(spark, small_corpus.limit(60), d, n_shards=2, n_tb=2,
-                tokenizer="builtin")
+    build_index(spark, small_corpus.limit(60), d, n_shards=2, n_tb=2)
     incremental_update(
         spark, small_corpus.limit(120).subtract(small_corpus.limit(60)), d
     )
