@@ -44,18 +44,17 @@ from .boolquery import (
     _analyze_mm_clauses,
     _gate_survivors,
     _mm_want,
-    _read_bucket_docs,
     _score_survivors,
     _sort_key_type,
-    _validate_filter,
 )
 from .manifest import IndexManifest
-from .postings import exclusion, read_bucket, read_field
+from .postings import exclusion, read_bucket, read_docs, read_field
+from .predicate import validate_filter
 from .query import (
     _candidate_dict_dirs,
+    _empty_like,
     _execute_buckets,
     _lookup_terms,
-    _resolve_allowed,
 )
 
 
@@ -437,37 +436,24 @@ def _make_agg_bucket(
         else _sort_key_type(m, attr).typeName() if attr else None
     )
 
-    def empty_pdf() -> pd.DataFrame:
-        cols = {}
-        for f in schema.fields:
-            dt = {"integer": "int32", "long": "int64",
-                  "double": "float64", "string": "object"}[f.dataType.typeName()]
-            cols[f.name] = pd.Series(dtype=dt)
-        return pd.DataFrame(cols)
+    empty = _empty_like(schema)
+    docs_cols = ([attr] if attr else []) + ([sub_attr] if sub_attr else [])
 
     def run(key, _pdf):  # (key, pd.DataFrame) -> pd.DataFrame
         seg_id, sb = key[0], int(key[1])
-        allowed = _resolve_allowed(
-            index_dir, seg_id, sb, list(predicate) if predicate else None,
-            n_shards, n_sb,
+        docs, allowed = read_docs(
+            index_dir, seg_id, docs_cols, predicate, (sb, n_shards, n_sb)
         )
         if allowed is not None and not len(allowed):
-            return empty_pdf()
+            return empty.copy()
         terms = read_field(
             index_dir, seg_id, sb, fld, gate_terms, idfs, avgdl, k1, b,
             positions=pos_terms,
         )
         if terms is None:
-            return empty_pdf()
+            return empty.copy()
         mm_terms = _read_mm(index_dir, seg_id, sb, mm_ctx, k1, b)
-        cols = ["doc_id"] + ([attr] if attr else []) + (
-            [sub_attr] if sub_attr else []
-        )
-        docs_pdf = _read_bucket_docs(
-            index_dir, seg_id, sb, list(predicate) if predicate else None,
-            n_shards, n_sb, list(dict.fromkeys(cols)),
-        )
-        docs_pdf = docs_pdf.sort_values("doc_id").reset_index(drop=True)
+        docs_pdf = docs.to_pandas()
         docs_ids = docs_pdf["doc_id"].to_numpy(dtype=np.int64)
 
         excl = exclusion(terms, neg_terms, tomb)
@@ -477,7 +463,7 @@ def _make_agg_bucket(
         )
         if surv is None:
             if kind != "sig_terms":
-                return empty_pdf()
+                return empty.copy()
             # significant_terms: a zero-foreground bucket still owns
             # BACKGROUND counts (bg is index-wide by definition)
             cand, docs_i64, ptfs = None, np.empty(0, dtype=np.int64), []
@@ -518,7 +504,7 @@ def _make_agg_bucket(
             bg_vals=docs_pdf[attr] if kind == "sig_terms" else None,
             chain=chain, sample_n=sample_n,
         )
-        return out if out is not None else empty_pdf()
+        return out if out is not None else empty.copy()
 
     return run
 
@@ -734,7 +720,7 @@ def _run_agg(
     q = query if query is not None else Bool()
     fld = q.field
     predicate = [list(c) for c in q.filter] or None
-    _validate_filter(m, predicate)
+    validate_filter(m, predicate)
     if attr is not None and kind != "sig_text":
         _sort_key_type(m, attr)  # validates the attr exists + is typed
     if sub_attr is not None:
@@ -1321,32 +1307,23 @@ def _make_filters_bucket(
     n_shards, n_sb = m.n_shards, m.n_sb
     need_cols = sorted({c for _n, pred in named for c, _op, _v in pred})
 
-    def empty_pdf() -> pd.DataFrame:
-        return pd.DataFrame(
-            {"name": pd.Series(dtype="object"),
-             "n_docs": pd.Series(dtype="int64")}
-        )
+    empty = _empty_like(schema)
 
     def run(key, _pdf):
         seg_id, sb = key[0], int(key[1])
-        allowed = _resolve_allowed(
-            index_dir, seg_id, sb, list(predicate) if predicate else None,
-            n_shards, n_sb,
+        docs, allowed = read_docs(
+            index_dir, seg_id, need_cols, predicate, (sb, n_shards, n_sb)
         )
         if allowed is not None and not len(allowed):
-            return empty_pdf()
+            return empty.copy()
         terms = read_field(
             index_dir, seg_id, sb, fld, gate_terms, idfs, avgdl, k1, b,
             positions=pos_terms,
         )
         if terms is None:
-            return empty_pdf()
+            return empty.copy()
         mm_terms = _read_mm(index_dir, seg_id, sb, mm_ctx, k1, b)
-        docs_pdf = _read_bucket_docs(
-            index_dir, seg_id, sb, list(predicate) if predicate else None,
-            n_shards, n_sb, list(dict.fromkeys(["doc_id"] + need_cols)),
-        )
-        docs_pdf = docs_pdf.sort_values("doc_id").reset_index(drop=True)
+        docs_pdf = docs.to_pandas()
         docs_ids = docs_pdf["doc_id"].to_numpy(dtype=np.int64)
         excl = exclusion(terms, neg_terms, tomb)
         surv = _gate_survivors(
@@ -1354,7 +1331,7 @@ def _make_filters_bucket(
             mm_terms,
         )
         if surv is None:
-            return empty_pdf()
+            return empty.copy()
         _cand, docs_i64, _ptfs = surv
         pos = np.searchsorted(docs_ids, docs_i64)
         pos = np.clip(pos, 0, max(0, len(docs_ids) - 1))
@@ -1409,7 +1386,7 @@ def _run_named_filters(
                     f"{pairs_sep!r}"
                 )
     for _n, p in named:
-        _validate_filter(m, p)
+        validate_filter(m, p)
     out_names = [n for n, _p in named]
     if pairs_sep is not None:
         for i in range(len(named)):
@@ -1418,7 +1395,7 @@ def _run_named_filters(
     q = query if query is not None else Bool()
     fld = q.field
     predicate = [list(c) for c in q.filter] or None
-    _validate_filter(m, predicate)
+    validate_filter(m, predicate)
     schema = T.StructType(
         [
             T.StructField("name", T.StringType()),
@@ -1586,35 +1563,24 @@ def _make_composite_bucket(
     n_shards, n_sb = m.n_shards, m.n_sb
     kcols = [f"k{i}" for i in range(len(srcs))]
 
-    def empty_pdf() -> pd.DataFrame:
-        cols = {}
-        for f in schema.fields:
-            dt = {"integer": "int32", "long": "int64",
-                  "double": "float64", "string": "object"}[f.dataType.typeName()]
-            cols[f.name] = pd.Series(dtype=dt)
-        return pd.DataFrame(cols)
+    empty = _empty_like(schema)
+    docs_cols = [a for a, _i, _t in srcs]
 
     def run(key, _pdf):
         seg_id, sb = key[0], int(key[1])
-        allowed = _resolve_allowed(
-            index_dir, seg_id, sb, list(predicate) if predicate else None,
-            n_shards, n_sb,
+        docs, allowed = read_docs(
+            index_dir, seg_id, docs_cols, predicate, (sb, n_shards, n_sb)
         )
         if allowed is not None and not len(allowed):
-            return empty_pdf()
+            return empty.copy()
         terms = read_field(
             index_dir, seg_id, sb, fld, gate_terms, idfs, avgdl, k1, b,
             positions=pos_terms,
         )
         if terms is None:
-            return empty_pdf()
+            return empty.copy()
         mm_terms = _read_mm(index_dir, seg_id, sb, mm_ctx, k1, b)
-        cols = ["doc_id"] + [a for a, _i, _t in srcs]
-        docs_pdf = _read_bucket_docs(
-            index_dir, seg_id, sb, list(predicate) if predicate else None,
-            n_shards, n_sb, list(dict.fromkeys(cols)),
-        )
-        docs_pdf = docs_pdf.sort_values("doc_id").reset_index(drop=True)
+        docs_pdf = docs.to_pandas()
         docs_ids = docs_pdf["doc_id"].to_numpy(dtype=np.int64)
         excl = exclusion(terms, neg_terms, tomb)
         surv = _gate_survivors(
@@ -1622,7 +1588,7 @@ def _make_composite_bucket(
             mm_terms,
         )
         if surv is None:
-            return empty_pdf()
+            return empty.copy()
         _cand, docs_i64, _ptfs = surv
         pos = np.searchsorted(docs_ids, docs_i64)
         pos = np.clip(pos, 0, max(0, len(docs_ids) - 1))
@@ -1643,7 +1609,7 @@ def _make_composite_bucket(
         # source value (no missing_bucket)
         kdf = kdf.dropna()
         if not len(kdf):
-            return empty_pdf()
+            return empty.copy()
         for c, (_attr, interval, tname) in zip(kcols, srcs):
             if interval is None:
                 kdf[c] = _key_cast(kdf[c], tname)
@@ -1697,7 +1663,7 @@ def composite_agg(
     q = query if query is not None else Bool()
     fld = q.field
     predicate = [list(c) for c in q.filter] or None
-    _validate_filter(m, predicate)
+    validate_filter(m, predicate)
     srcs = _composite_sources(m, list(sources))
     if int(size) < 1:
         raise ValueError(f"size must be >= 1: {size}")
@@ -1820,30 +1786,23 @@ def _make_multi_agg_bucket(
         )
         for a in attrs
     }
-    empty = pd.DataFrame(
-        {"agg": pd.Series(dtype="object"), "payload": pd.Series(dtype="object")}
-    )
+    empty = _empty_like(MULTI_AGG_SCHEMA)
 
     def run(key, _pdf):  # (key, pd.DataFrame) -> pd.DataFrame
         seg_id, sb = key[0], int(key[1])
-        allowed = _resolve_allowed(
-            index_dir, seg_id, sb, list(predicate) if predicate else None,
-            n_shards, n_sb,
+        docs, allowed = read_docs(
+            index_dir, seg_id, attrs, predicate, (sb, n_shards, n_sb)
         )
         if allowed is not None and not len(allowed):
-            return empty
+            return empty.copy()
         terms = read_field(
             index_dir, seg_id, sb, fld, gate_terms, idfs, avgdl, k1, b,
             positions=pos_terms,
         )
         if terms is None:
-            return empty
+            return empty.copy()
         mm_terms = _read_mm(index_dir, seg_id, sb, mm_ctx, k1, b)
-        docs_pdf = _read_bucket_docs(
-            index_dir, seg_id, sb, list(predicate) if predicate else None,
-            n_shards, n_sb, ["doc_id"] + attrs,
-        )
-        docs_pdf = docs_pdf.sort_values("doc_id").reset_index(drop=True)
+        docs_pdf = docs.to_pandas()
         docs_ids = docs_pdf["doc_id"].to_numpy(dtype=np.int64)
         excl = exclusion(terms, neg_terms, tomb)
         surv = _gate_survivors(
@@ -1851,7 +1810,7 @@ def _make_multi_agg_bucket(
             mm_terms,
         )
         if surv is None:
-            return empty
+            return empty.copy()
         cand, docs_i64, ptfs = surv
         pos = np.searchsorted(docs_ids, docs_i64)
         pos = np.clip(pos, 0, max(0, len(docs_ids) - 1))
@@ -1890,7 +1849,7 @@ def _make_multi_agg_bucket(
             if part is not None and len(part):
                 rows.append((name, _ipc_bytes(part)))
         if not rows:
-            return empty
+            return empty.copy()
         return pd.DataFrame(rows, columns=["agg", "payload"])
 
     return run
@@ -1928,7 +1887,7 @@ def multi_agg(
     q = query if query is not None else Bool()
     fld = q.field
     predicate = [list(c) for c in q.filter] or None
-    _validate_filter(m, predicate)
+    validate_filter(m, predicate)
     if not aggs:
         raise ValueError("multi_agg needs at least one aggregation spec")
     norm: dict[str, dict] = {}

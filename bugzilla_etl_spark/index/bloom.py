@@ -10,8 +10,9 @@ Two index structures use these (both VERDICT-r2 scale items):
   dim (at 10^9 indexed docs that scan ran every 10 minutes, the
   reference's own cadence — configuration/crontab.txt:2).
 - **term bloom** (one per segment): the driver-side dictionary lookup
-  (`query._lookup_terms`) skips segments none of whose terms match the
-  query, keeping lookup cost flat as segment count grows.
+  (`postings.scan_dict` with a term list) skips segments none of whose
+  terms match the query, keeping lookup cost flat as segment count
+  grows.
 
 Format: ``<seg_dir>/bloom.npz`` with arrays ``docs_s<shard>`` (uint8
 bitsets, power-of-two bits) and ``terms``. Sidecar, not manifest: the

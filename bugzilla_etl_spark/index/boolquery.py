@@ -47,15 +47,16 @@ from ..codec import doc_id_to_u64, u64_to_doc_id
 from ..oracle import idf as _idf
 from ..tokenize import py_analyze
 from .manifest import IndexManifest
-from .postings import exclusion, read_bucket, read_field
+from .postings import exclusion, read_allowed, read_bucket, read_docs, read_field
+from .predicate import validate_filter
 from .query import (
     RESULT_SCHEMA,
     _allowed_mask,
     _candidate_dict_dirs,
+    _empty_like,
     _execute_buckets,
     _lookup_terms,
     _phrase_survivors,
-    _resolve_allowed,
     phrase_search_many,
     search_many,
 )
@@ -377,18 +378,6 @@ def _mm_want(mm_clauses) -> dict[str, list[str]]:
     return {f: sorted(ts) for f, ts in want.items()}
 
 
-def _validate_filter(m: IndexManifest, pred: list | None) -> None:
-    if not pred:
-        return
-    from .predicate import validate, validate_types
-
-    validate(pred)
-    validate_types(
-        pred, m.doc_attr_types,
-        legacy_attrs=m.doc_attrs if not m.doc_attr_types else None,
-    )
-
-
 def _sort_key_type(m: IndexManifest, attr: str) -> T.DataType:
     """Spark type of the per-row sort key column for ``attr``."""
     from .predicate import _type_class
@@ -413,34 +402,6 @@ def _sort_key_type(m: IndexManifest, attr: str) -> T.DataType:
 
 
 # ------------------------------------------------------- grouped executor
-def _read_bucket_docs(
-    index_dir: str,
-    seg_id: str,
-    sb: int,
-    predicate: list | None,
-    n_shards: int,
-    n_sb: int,
-    columns: list[str],
-) -> pd.DataFrame:
-    """One pyarrow scan of this bucket's docs-dimension slice: predicate
-    + shard membership pushed to parquet row-group statistics."""
-    import pyarrow.dataset as ds
-
-    from .predicate import to_arrow
-
-    docs_ds = ds.dataset(
-        os.path.join(index_dir, "segments", seg_id, "docs"),
-        format="parquet",
-        partitioning="hive",
-    )
-    bucket_shards = [s for s in range(n_shards) if s % n_sb == sb]
-    flt = ds.field("shard").isin(bucket_shards)
-    if predicate:
-        flt = to_arrow(list(predicate)) & flt
-    cols = [c for c in columns if c in docs_ds.schema.names]
-    return docs_ds.to_table(filter=flt, columns=cols).to_pandas()
-
-
 def _gate_survivors(
     spec: dict,
     terms: dict,
@@ -926,52 +887,39 @@ def _make_grouped_bucket_scorer(
         )
     )
 
-    def empty_pdf() -> pd.DataFrame:
-        cols = {}
-        for f in result_schema.fields:
-            dt = {"integer": "int32", "long": "int64",
-                  "double": "float64", "string": "object"}[f.dataType.typeName()]
-            cols[f.name] = pd.Series(dtype=dt)
-        return pd.DataFrame(cols)
+    # docs-dimension slice: needed for match_all candidates and/or the
+    # sort key; ONE scan serves both and the predicate's allowed set
+    docs_cols = (
+        ([sort_attr] if sort_attr else [])
+        + ([collapse_attr] if collapse_attr else [])
+        + fn_cols
+    )
+    empty = _empty_like(result_schema)
 
     def run(key, _pdf):  # (key, pd.DataFrame) -> pd.DataFrame
         seg_id, sb = key[0], int(key[1])
-        allowed = _resolve_allowed(
-            index_dir, seg_id, sb, list(predicate) if predicate else None,
-            n_shards, n_sb,
-        )
+        bucket = (sb, n_shards, n_sb)
+        docs_pdf = docs_ids_i64 = None
+        if need_docs_dim:
+            docs, allowed = read_docs(
+                index_dir, seg_id, docs_cols, predicate, bucket
+            )
+            docs_pdf = docs.to_pandas()
+            docs_ids_i64 = docs_pdf["doc_id"].to_numpy(dtype=np.int64)
+        else:
+            allowed = read_allowed(index_dir, seg_id, predicate, bucket)
         if allowed is not None and not len(allowed):
-            return empty_pdf()
+            return empty.copy()
         terms = read_field(
             index_dir, seg_id, sb, fld, gate_terms, idfs, avgdl, k1, b,
             positions=pos_terms,
         )
         if terms is None:  # legacy segment, foreign field
-            return empty_pdf()
+            return empty.copy()
         mm_terms = read_bucket(
             index_dir, seg_id, sb, mm_want or {}, idfs_pairs or {},
             avgdls or {}, k1, b,
         ) or {}
-
-        # docs-dimension slice: needed for match_all candidates and/or
-        # the sort key; ONE scan serves both
-        docs_pdf = None
-        docs_ids_i64 = None
-        if need_docs_dim:
-            cols = list(
-                dict.fromkeys(
-                    ["doc_id"]
-                    + ([sort_attr] if sort_attr else [])
-                    + ([collapse_attr] if collapse_attr else [])
-                    + fn_cols
-                )
-            )
-            docs_pdf = _read_bucket_docs(
-                index_dir, seg_id, sb, list(predicate) if predicate else None,
-                n_shards, n_sb, cols,
-            )
-            docs_pdf = docs_pdf.sort_values("doc_id").reset_index(drop=True)
-            docs_ids_i64 = docs_pdf["doc_id"].to_numpy(dtype=np.int64)
 
         # must_not exclusion sets are PER QUERY (each query's `neg` is
         # its own filter context — batching must never leak one query's
@@ -1113,7 +1061,7 @@ def _make_grouped_bucket_scorer(
                 kdf.insert(0, "query_id", np.int32(qid))
                 out_frames.append(kdf)
         if not out_frames:
-            return empty_pdf()
+            return empty.copy()
         out = pd.concat(out_frames, ignore_index=True)
         # normalize dtypes to the schema (ckey may carry nulls — the ES
         # single null collapse group — so it gets nullable dtypes)
@@ -1281,7 +1229,7 @@ def bool_search_many(
         for fn in q.functions:
             if fn[0] == "weight":
                 if fn[1]:
-                    _validate_filter(m, [list(c) for c in fn[1]])
+                    validate_filter(m, [list(c) for c in fn[1]])
                 continue
             field = fn[1] if fn[0] == "fvf" else fn[2]
             if field not in attr_types:
@@ -1306,7 +1254,7 @@ def bool_search_many(
     if len(preds) != 1:
         raise ValueError("one bool_search_many batch shares one filter")
     predicate = [list(c) for c in preds.pop()] or None
-    _validate_filter(m, predicate)
+    validate_filter(m, predicate)
 
     sort_attr, sort_desc = None, False
     if sort_by is not None:
@@ -1720,7 +1668,7 @@ def explain_bool(
         query, chain
     )
     predicate = [list(c) for c in query.filter] or None
-    _validate_filter(m, predicate)
+    validate_filter(m, predicate)
     if sort_by is not None:
         _sort_key_type(m, sort_by[0])
     gate_terms = sorted(

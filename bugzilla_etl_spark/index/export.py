@@ -43,19 +43,13 @@ from .boolquery import (
     Bool,
     _analyze_clauses,
     _gate_survivors,
-    _read_bucket_docs,
     _score_survivors,
     _sort_key_type,
-    _validate_filter,
 )
 from .manifest import IndexManifest
-from .postings import exclusion, read_field
-from .query import (
-    _candidate_dict_dirs,
-    _lookup_terms,
-    _resolve_allowed,
-    bucket_tasks_df,
-)
+from .postings import exclusion, read_allowed, read_docs, read_field
+from .predicate import validate_filter
+from .query import _candidate_dict_dirs, _lookup_terms, bucket_tasks_df
 
 _PD_FOR_SPARK = {"long": "Int64", "double": "float64", "string": "object"}
 
@@ -100,7 +94,7 @@ def matches_df(
     fld = query.field
     chain = m.field_chain(fld)
     predicate = [list(c) for c in query.filter] or None
-    _validate_filter(m, predicate)
+    validate_filter(m, predicate)
     cols = list(dict.fromkeys(columns or []))
     col_types = {c: _sort_key_type(m, c) for c in cols if c != "doc_id"}
     schema = T.StructType(
@@ -173,45 +167,41 @@ def matches_df(
     n_shards, n_sb = m.n_shards, m.n_sb
     need_docs_dim = is_match_all or bool(col_types)
     attr_cols = [c for c in cols if c != "doc_id"]
+    empty = pd.DataFrame(
+        {
+            f.name: pd.Series(dtype=_PD_FOR_SPARK[f.dataType.typeName()])
+            for f in schema.fields
+        }
+    )
 
     def run(key, _pdf) -> pd.DataFrame:
         seg_id, sb = key[0], int(key[1])
-        empty = pd.DataFrame(
-            {
-                f.name: pd.Series(
-                    dtype=_PD_FOR_SPARK[f.dataType.typeName()]
-                )
-                for f in schema.fields
-            }
-        )
-        allowed = _resolve_allowed(
-            index_dir, seg_id, sb,
-            list(predicate) if predicate else None, n_shards, n_sb,
-        )
+        bucket = (sb, n_shards, n_sb)
+        # docs-dimension slice (match_all candidates, carried columns)
+        # and the predicate's allowed set come from ONE scan
+        docs_pdf = docs_ids_i64 = None
+        if need_docs_dim:
+            docs, allowed = read_docs(
+                index_dir, seg_id, attr_cols, predicate, bucket
+            )
+            docs_pdf = docs.to_pandas()
+            docs_ids_i64 = docs_pdf["doc_id"].to_numpy(dtype=np.int64)
+        else:
+            allowed = read_allowed(index_dir, seg_id, predicate, bucket)
         if allowed is not None and not len(allowed):
-            return empty
+            return empty.copy()
         terms = read_field(
             index_dir, seg_id, sb, fld, gate_terms, idfs, avgdl, k1, b,
             positions=pos_terms,
         )
         if terms is None:  # legacy segment, foreign field
-            return empty
-        docs_pdf = None
-        docs_ids_i64 = None
-        if need_docs_dim:
-            docs_pdf = _read_bucket_docs(
-                index_dir, seg_id, sb,
-                list(predicate) if predicate else None, n_shards, n_sb,
-                list(dict.fromkeys(["doc_id"] + attr_cols)),
-            )
-            docs_pdf = docs_pdf.sort_values("doc_id").reset_index(drop=True)
-            docs_ids_i64 = docs_pdf["doc_id"].to_numpy(dtype=np.int64)
+            return empty.copy()
         excl = exclusion(terms, neg, tombstones)
         surv = _gate_survivors(
             spec, terms, allowed, excl, docs_ids_i64, None
         )
         if surv is None:
-            return empty
+            return empty.copy()
         cand, docs_i64, ptfs = surv
         if cand is None:  # match_all: the docs slice is the result
             total = np.zeros(len(docs_i64), dtype=np.float64)

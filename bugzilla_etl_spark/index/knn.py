@@ -34,9 +34,10 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
-from .boolquery import _validate_filter
 from .manifest import IndexManifest
-from .query import RESULT_SCHEMA, _execute_buckets
+from .postings import read_docs
+from .predicate import validate_filter
+from .query import RESULT_SCHEMA, _empty_like, _execute_buckets, _merge_topk
 
 __all__ = ["knn_search", "knn_search_many"]
 
@@ -60,40 +61,24 @@ def _make_knn_bucket(
         qnorm = np.linalg.norm(qmat, axis=1)
         qnorm[qnorm == 0] = 1.0
 
-    def empty_pdf() -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "query_id": pd.Series(dtype="int32"),
-                "doc_id": pd.Series(dtype="int64"),
-                "score": pd.Series(dtype="float64"),
-            }
-        )
+    empty = _empty_like(RESULT_SCHEMA)
 
     def run(key, _pdf):
-        import pyarrow.dataset as ds
-
-        from .predicate import to_arrow
+        import pyarrow.compute as pc
 
         seg_id, sb = key[0], int(key[1])
         # arrow-native vector extraction: the list column's FLAT value
         # buffer reshapes to (n, dim) in one step — no per-row Python
         # list materialization (the pandas path would build n Python
         # lists just to stack them again)
-        docs_ds = ds.dataset(
-            os.path.join(index_dir, "segments", seg_id, "docs"),
-            format="parquet",
-            partitioning="hive",
+        tbl, _ = read_docs(
+            index_dir, seg_id, [vector_attr], predicate, (sb, n_shards, n_sb)
         )
-        if vector_attr not in docs_ds.schema.names:
-            return empty_pdf()
-        bucket_shards = [s for s in range(n_shards) if s % n_sb == sb]
-        flt = ds.field("shard").isin(bucket_shards)
-        flt = flt & ds.field(vector_attr).is_valid()
-        if predicate:
-            flt = to_arrow(list(predicate)) & flt
-        tbl = docs_ds.to_table(filter=flt, columns=["doc_id", vector_attr])
+        if vector_attr not in tbl.column_names:
+            return empty.copy()
+        tbl = tbl.filter(pc.is_valid(tbl[vector_attr]))
         if not tbl.num_rows:
-            return empty_pdf()
+            return empty.copy()
         ids = tbl.column("doc_id").to_numpy()
         vcol = tbl.column(vector_attr).combine_chunks()
         lens = np.diff(vcol.offsets.to_numpy())
@@ -109,7 +94,7 @@ def _make_knn_bucket(
             keep = ~np.isin(ids, tombstones)
             ids, emb = ids[keep], emb[keep]
         if not len(ids):
-            return empty_pdf()
+            return empty.copy()
         if metric == "l2":
             # -||d - q|| via the expanded form: one matmul for the batch
             d2 = np.einsum("ij,ij->i", emb, emb)
@@ -155,7 +140,7 @@ def _make_knn_bucket(
                     }
                 )
             )
-        return pd.concat(frames, ignore_index=True) if frames else empty_pdf()
+        return pd.concat(frames, ignore_index=True) if frames else empty.copy()
 
     return run
 
@@ -182,7 +167,7 @@ def knn_search_many(
             f"index has no stored vector attr {vector_attr!r}; build "
             f"with doc_attrs=[{vector_attr!r}] (doc_attrs: {m.doc_attrs})"
         )
-    _validate_filter(m, [list(c) for c in predicate] if predicate else None)
+    validate_filter(m, predicate)
     results: dict[int, list[tuple[int, float]]] = {}
     qmap: dict[int, tuple[np.ndarray, int]] = {}
     dims = set()
@@ -205,8 +190,7 @@ def knn_search_many(
     if not work:
         return results
     scorer = _make_knn_bucket(
-        index_dir, qmap, vector_attr,
-        [list(c) for c in predicate] if predicate else None, metric,
+        index_dir, qmap, vector_attr, predicate, metric,
         np.array(sorted(m.tombstones), dtype=np.int64), m.n_shards, m.n_sb,
     )
     # local_workers=8: the kNN bucket scorer is one pyarrow scan + one
@@ -217,17 +201,7 @@ def knn_search_many(
         spark, work, scorer, RESULT_SCHEMA, m.n_docs, execution,
         local_workers=8,
     )
-    if not len(pdf):
-        return results
-    pdf = pdf.sort_values(
-        ["query_id", "score", "doc_id"], ascending=[True, False, True]
-    )
-    for qid, grp in pdf.groupby("query_id", sort=False):
-        k = qmap[int(qid)][1]
-        results[int(qid)] = list(
-            zip(grp["doc_id"].tolist()[:k], grp["score"].tolist()[:k])
-        )
-    return results
+    return _merge_topk(pdf, {q: k for q, (_, k) in qmap.items()}, results)
 
 
 def knn_search(

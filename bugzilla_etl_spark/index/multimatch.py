@@ -37,14 +37,16 @@ from ..codec import u64_to_doc_id
 from ..oracle import idf as _idf
 from ..tokenize import py_analyze
 from .manifest import IndexManifest
-from .postings import exclusion, read_bucket
+from .postings import exclusion, read_allowed, read_bucket
+from .predicate import validate_filter
 from .query import (
     RESULT_SCHEMA,
     _allowed_mask,
     _candidate_dict_dirs,
+    _empty_like,
     _execute_buckets,
     _lookup_terms,
-    _resolve_allowed,
+    _merge_topk,
 )
 
 COMBINES = ("best_fields", "most_fields")
@@ -74,15 +76,11 @@ def _make_multimatch_bucket_scorer(
             want[f].update(ts)
     for f, t in neg_pairs:
         want[f].add(t)
-    empty = pd.DataFrame({"query_id": [], "doc_id": [], "score": []}).astype(
-        {"query_id": "int32", "doc_id": "int64", "score": "float64"}
-    )
+    empty = _empty_like(RESULT_SCHEMA)
 
     def run(key, _pdf):  # (key, pd.DataFrame) -> pd.DataFrame
         seg_id, sb = key[0], int(key[1])
-        allowed = _resolve_allowed(
-            index_dir, seg_id, sb, predicate, n_shards, n_sb
-        )
+        allowed = read_allowed(index_dir, seg_id, predicate, (sb, n_shards, n_sb))
         if allowed is not None and not len(allowed):
             return empty.copy()
         lists = read_bucket(
@@ -178,14 +176,7 @@ def multi_match_search_many(
         raise ValueError(f"duplicate fields: {fields}")
     index_dir = os.path.abspath(index_dir)
     m = IndexManifest.load(index_dir)
-    if predicate is not None:
-        from .predicate import validate, validate_types
-
-        validate(predicate)
-        validate_types(
-            predicate, m.doc_attr_types,
-            legacy_attrs=m.doc_attrs if not m.doc_attr_types else None,
-        )
+    validate_filter(m, predicate)
     chains = {f: m.field_chain(f) for f in fields}  # validates the fields
     results: dict[int, list[tuple[int, float]]] = {int(q[0]): [] for q in queries}
 
@@ -269,16 +260,7 @@ def multi_match_search_many(
         + neg_est
     )
     pdf = _execute_buckets(spark, work, scorer, RESULT_SCHEMA, est, execution)
-    if len(pdf):
-        pdf = pdf.sort_values(
-            ["query_id", "score", "doc_id"], ascending=[True, False, True]
-        )
-        for qid, grp in pdf.groupby("query_id", sort=False):
-            k = live[int(qid)][1]
-            results[int(qid)] = list(
-                zip(grp["doc_id"].tolist()[:k], grp["score"].tolist()[:k])
-            )
-    return results
+    return _merge_topk(pdf, {q: k for q, (_, k) in live.items()}, results)
 
 
 def multi_match_search(

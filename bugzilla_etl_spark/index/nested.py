@@ -42,14 +42,15 @@ from ..codec import u64_to_doc_id
 from ..oracle import idf as _idf
 from ..tokenize import py_analyze
 from .manifest import IndexManifest
-from .postings import exclusion, read_field
+from .postings import exclusion, read_allowed, read_docs, read_field
+from .predicate import validate_filter
 from .query import (
     _allowed_mask,
     _candidate_dict_dirs,
+    _empty_like,
     _execute_buckets,
     _lookup_terms,
     _phrase_survivors,
-    _resolve_allowed,
 )
 
 #: ES nested-query score modes (bug_version.json's queries run avg, the
@@ -127,47 +128,28 @@ def _docs_cols_for(
     ``cand_i64`` order: isin pushdown for small candidate sets, one
     bucket-bounded column scan (optionally cached across queries via
     ``scan_cache``) otherwise -> {attr: np.ndarray}."""
-    import pyarrow.dataset as ds
-
-    docs_ds = ds.dataset(
-        os.path.join(index_dir, "segments", seg_id, "docs"),
-        format="parquet",
-        partitioning="hive",
-    )
-    for a in attrs:
-        if a not in docs_ds.schema.names:
-            raise ValueError(
-                f"segment {seg_id} docs carry no {a!r} column; "
-                "build the child index with doc_attrs=[...]"
-            )
-    want = ["doc_id"] + list(attrs)
-    if len(cand_i64) <= _ISIN_MAX:
-        t2 = docs_ds.to_table(
-            filter=ds.field("doc_id").isin(cand_i64.tolist()), columns=want
+    small = len(cand_i64) <= _ISIN_MAX
+    entry = None if small or scan_cache is None else scan_cache.get(0)
+    if entry is None:
+        tbl, _ = read_docs(
+            index_dir, seg_id, attrs, bucket=(sb, n_shards, n_sb),
+            doc_ids=cand_i64 if small else None,
         )
-        d = t2["doc_id"].to_numpy()
-        o = np.argsort(d, kind="stable")
-        d = d[o]
-        j = np.clip(np.searchsorted(d, cand_i64), 0, max(len(d) - 1, 0))
-        if len(d) == 0 or not np.array_equal(d[j], cand_i64):
-            raise ValueError("child doc missing from docs dimension")
-        return {
-            a: t2[a].to_numpy(zero_copy_only=False)[o][j] for a in attrs
-        }
-    if scan_cache is None or 0 not in scan_cache:
-        bucket_shards = [s for s in range(n_shards) if s % n_sb == sb]
-        t3 = docs_ds.to_table(
-            filter=ds.field("shard").isin(bucket_shards), columns=want
+        for a in attrs:
+            if a not in tbl.column_names:
+                raise ValueError(
+                    f"segment {seg_id} docs carry no {a!r} column; "
+                    "build the child index with doc_attrs=[...]"
+                )
+        entry = (
+            tbl["doc_id"].to_numpy(),
+            {a: tbl[a].to_numpy(zero_copy_only=False) for a in attrs},
         )
-        d = t3["doc_id"].to_numpy()
-        o = np.argsort(d, kind="stable")
-        entry = (d[o], {a: t3[a].to_numpy(zero_copy_only=False)[o] for a in attrs})
-        if scan_cache is None:
-            scan_cache = {}
-        scan_cache[0] = entry
-    d_sorted, cols_sorted = scan_cache[0]
-    j = np.clip(np.searchsorted(d_sorted, cand_i64), 0, len(d_sorted) - 1)
-    if not np.array_equal(d_sorted[j], cand_i64):
+        if not small and scan_cache is not None:
+            scan_cache[0] = entry
+    d_sorted, cols_sorted = entry
+    j = np.clip(np.searchsorted(d_sorted, cand_i64), 0, max(len(d_sorted) - 1, 0))
+    if not len(d_sorted) or not np.array_equal(d_sorted[j], cand_i64):
         raise ValueError("child doc missing from docs dimension")
     return {a: cols_sorted[a][j] for a in attrs}
 
@@ -200,26 +182,19 @@ def _make_nested_bucket_scorer(
     neg = sorted(set(neg_terms or ()))
     all_terms = sorted({t for seq, _ in queries.values() for t in seq} | set(neg))
 
+    empty = _empty_like(PARTIAL_SCHEMA)
+
     def run(key, _pdf):  # (key, pd.DataFrame) -> pd.DataFrame
         seg_id, sb = key[0], int(key[1])
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series(dtype="int32"),
-                "parent": pd.Series(dtype="int64"),
-                "s_sum": pd.Series(dtype="float64"),
-                "s_max": pd.Series(dtype="float64"),
-                "n_children": pd.Series(dtype="int64"),
-            }
-        )
-        allowed = _resolve_allowed(index_dir, seg_id, sb, predicate, n_shards, n_sb)
+        allowed = read_allowed(index_dir, seg_id, predicate, (sb, n_shards, n_sb))
         if allowed is not None and not len(allowed):
-            return empty
+            return empty.copy()
         terms = read_field(
             index_dir, seg_id, sb, fld, all_terms, idfs, avgdl, k1, b,
             positions=all_terms if phrase else (),
         )
         if not terms:
-            return empty
+            return empty.copy()
         excl = exclusion(terms, neg, tombstones)
 
         # bucket docs-column scan shared across the batch's queries
@@ -254,7 +229,7 @@ def _make_nested_bucket_scorer(
                 )
             )
         if not frames:
-            return empty
+            return empty.copy()
         return pd.concat(frames, ignore_index=True)
 
     return run
@@ -300,17 +275,7 @@ def nested_search_many(
             f"field {field!r} was not built with positions=True; nested "
             "phrase queries need the positional payload"
         )
-    if predicate is not None:
-        from .predicate import validate, validate_types
-
-        validate(predicate)
-        # typed doc_attrs mapping (VERDICT r4 #6): literal/column type
-        # coherence checked up front; legacy indexes (no recorded
-        # types) skip the attr checks but still reject unknown columns
-        validate_types(
-            predicate, m.doc_attr_types,
-            legacy_attrs=m.doc_attrs if not m.doc_attr_types else None,
-        )
+    validate_filter(m, predicate)
     chain = m.field_chain(field)
     qseq = {int(qid): (py_analyze(text, chain), int(k)) for qid, text, k in queries}
     qseq = {qid: v for qid, v in qseq.items() if v[0]}
@@ -513,13 +478,7 @@ def _make_nested_agg_bucket(
     per-value distinct-parent count."""
     all_terms = sorted(set(seq) | set(neg))
 
-    def empty_pdf() -> pd.DataFrame:
-        cols = {}
-        for f in schema.fields:
-            dt = {"integer": "int32", "long": "int64",
-                  "double": "float64", "string": "object"}[f.dataType.typeName()]
-            cols[f.name] = pd.Series(dtype=dt)
-        return pd.DataFrame(cols)
+    empty = _empty_like(schema)
 
     key_dtype = {
         "integer": "int64", "long": "int64",
@@ -528,19 +487,19 @@ def _make_nested_agg_bucket(
 
     def run(key, _pdf):  # (key, pd.DataFrame) -> pd.DataFrame
         seg_id, sb = key[0], int(key[1])
-        allowed = _resolve_allowed(index_dir, seg_id, sb, predicate, n_shards, n_sb)
+        allowed = read_allowed(index_dir, seg_id, predicate, (sb, n_shards, n_sb))
         if allowed is not None and not len(allowed):
-            return empty_pdf()
+            return empty.copy()
         terms = read_field(
             index_dir, seg_id, sb, fld, all_terms, idfs, avgdl, k1, b,
             positions=all_terms if phrase else (),
         )
         if not terms:
-            return empty_pdf()
+            return empty.copy()
         excl = exclusion(terms, neg, tombstones)
         cand = _conjunctive_candidates(terms, seq, allowed, excl, phrase)
         if not len(cand):
-            return empty_pdf()
+            return empty.copy()
         want = [attr] if level == "child" else sorted({attr, parent_attr})
         cols = _docs_cols_for(
             index_dir, seg_id, sb, u64_to_doc_id(cand), want, n_shards, n_sb
@@ -619,14 +578,7 @@ def nested_terms_agg(
             f"field {field!r} was not built with positions=True; nested "
             "phrase queries need the positional payload"
         )
-    if predicate is not None:
-        from .predicate import validate, validate_types
-
-        validate(predicate)
-        validate_types(
-            predicate, m.doc_attr_types,
-            legacy_attrs=m.doc_attrs if not m.doc_attr_types else None,
-        )
+    validate_filter(m, predicate)
     for a in [attr] + ([parent_attr] if level == "parent" else []):
         if m.doc_attrs and a not in m.doc_attrs:
             raise ValueError(f"unknown doc_attr {a!r}")

@@ -1,16 +1,29 @@
-"""Query-time access to a segment's postings: one reader, one lazy list.
+"""Query-time access to a segment: one reader for each of its three
+parts — postings, the term dictionary and the docs dimension.
+
+- ``read_bucket``: postings, below.
+- ``scan_dict`` + ``top_terms``: every driver-side dictionary read
+  (term lookup, prefix/wildcard/regexp/fuzzy expansion, suggesters)
+  and the Lucene top-terms ranking (df desc, term asc).
+- ``read_docs`` / ``read_allowed``: every docs-dimension read
+  (predicate allowed sets, attribute columns for aggregations, sorting,
+  nested rollups, kNN vectors, ``fetch_docs``). They own the shard ->
+  bucket rule and the "empty predicate = no filter" rule.
+
+A legacy (pre-multi-field) segment has no ``field`` column in its
+postings or dictionary: its rows ARE the primary ``content`` field, and
+other fields have nothing there. ``read_bucket`` and ``scan_dict`` are
+the only places that know this.
 
 Every bucket scorer (BM25 MaxScore, phrase, conjunctive/msm, bool,
-multi_match, nested, aggregations, export) reads the same thing: the
+multi_match, nested, aggregations, export) reads the same postings: the
 block rows of a few (field, term) pairs in one (segment, sb) bucket,
 decoded lazily block by block. ``read_bucket`` is the one place that
 knows the on-disk shape:
 
 - the hive ``sb`` partition filter and the term/field row-group
   pushdown;
-- the legacy (pre-multi-field) segment rule: no ``field`` column means
-  the rows ARE the primary ``content`` field, and other fields have no
-  postings there;
+- the legacy segment rule above;
 - the block columns (doc range, ``max_impact`` bound, varint buffers);
 - the positional payload check: a request for positions on a segment
   or block built without them raises;
@@ -340,3 +353,165 @@ def exclusion(lists: dict, neg, tombstones: np.ndarray) -> np.ndarray:
     if not parts:
         return tombstones
     return np.union1d(tombstones, u64_to_doc_id(np.concatenate(parts)))
+
+
+# ----------------------------------------------------------- dictionary
+def _candidate_dict_dirs(m, index_dir: str, terms: list[str], fld: str = "content") -> list[str]:
+    """Segments whose dict could contain ANY query term (in the queried
+    field), via the per-segment term bloom sidecar (VERDICT r2 #8): the
+    driver-side lookup cost stays flat as segment count grows because
+    segments containing none of the terms are skipped without touching
+    their dict files. Segments without a sidecar (pre-upgrade) are
+    always candidates — pruning is pure optimization, never
+    correctness. Only the term bitset is read (lazy npz member access,
+    mtime-cached) — the docs bitsets in the same sidecar are never
+    touched on the query path."""
+    from .bloom import hash_field_terms, load_terms_bloom, maybe_contains
+
+    keys = hash_field_terms(fld, terms)
+    out = []
+    for d in m.segment_dirs(index_dir):
+        if not os.path.isdir(os.path.join(d, "dict")):
+            continue
+        bits = load_terms_bloom(d)
+        if bits is None or maybe_contains(bits, keys).any():
+            out.append(d)
+    return out
+
+
+def scan_dict(
+    m, index_dir: str, fld: str, terms: list[str] | None = None, prefix: str = ""
+) -> tuple[np.ndarray, np.ndarray]:
+    """The one dictionary read -> (terms, dfs): every matching term of
+    field ``fld`` with its df summed across segments (doc-disjoint),
+    term-sorted. Matching means in ``terms`` when a list is given
+    (segments pre-pruned by the term blooms), else starting with
+    ``prefix`` (empty = the field's whole dictionary).
+
+    One driver-side pyarrow read per segment, no Spark job: dict files
+    are term-sorted, so the term predicate prunes row groups via parquet
+    statistics. Per-segment reads, not one union dataset: a legacy
+    segment has no ``field`` column, so it joins a ``content`` scan with
+    the field clause dropped and is skipped for every other field —
+    mixed legacy/current indexes stay queryable."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    from .predicate import _prefix_upper
+
+    empty = np.empty(0, dtype=object), np.empty(0, dtype=np.int64)
+    if terms is not None:
+        if not terms:
+            return empty
+        dirs = _candidate_dict_dirs(m, index_dir, terms, fld)
+        flt = ds.field("term").isin(terms)
+    else:
+        dirs = [
+            d for d in m.segment_dirs(index_dir)
+            if os.path.isdir(os.path.join(d, "dict"))
+        ]
+        flt = None
+        if prefix:
+            flt = ds.field("term") >= prefix
+            up = _prefix_upper(prefix)
+            if up is not None:
+                flt = flt & (ds.field("term") < up)
+    parts = []
+    for d in dirs:
+        data = ds.dataset(os.path.join(d, "dict"), format="parquet")
+        f = flt
+        if "field" in data.schema.names:
+            fc = ds.field("field") == fld
+            f = fc if f is None else f & fc
+        elif fld != "content":
+            continue
+        t = data.to_table(filter=f, columns=["term", "df"])
+        if t.num_rows:
+            parts.append(t)
+    if not parts:
+        return empty
+    agg = (
+        pa.concat_tables(parts)
+        .group_by("term")
+        .aggregate([("df", "sum")])
+        .sort_by("term")
+    )
+    return agg["term"].to_numpy(zero_copy_only=False), agg["df_sum"].to_numpy()
+
+
+def top_terms(terms: np.ndarray, dfs: np.ndarray, n: int) -> list[tuple[str, int]]:
+    """Lucene's top-terms multi-term rewrite: the ``n`` highest-df
+    (term, df) pairs, ties by term asc."""
+    order = np.lexsort((terms, -dfs))[:n]
+    return [(str(terms[i]), int(dfs[i])) for i in order]
+
+
+# ------------------------------------------------------- docs dimension
+def read_docs(
+    index_dir: str,
+    seg_id: str,
+    columns=None,
+    predicate=None,
+    bucket: tuple[int, int, int] | None = None,
+    doc_ids=None,
+):
+    """The one docs-dimension read of a segment -> (table, allowed).
+
+    ``bucket`` = (sb, n_shards, n_sb) restricts the read to one
+    shard-bucket: the docs dimension is not laid out by sb, but its
+    shard column is and sb = shard % n_sb, so an isin on the bucket's
+    shards prunes row groups via parquet statistics. ``predicate`` (a
+    docs-dimension conjunction, see index.predicate; empty = no filter)
+    and ``doc_ids`` push down the same way. ``columns``: the wanted
+    columns; ones the segment lacks are left out, ``doc_id`` is always
+    read, None = all. Rows come sorted by doc_id.
+
+    ``allowed``: the sorted u64 doc ids of the rows when a predicate
+    filtered them, else None — the set the bucket scorers apply before
+    every top-k (exact, never post-filtered)."""
+    import pyarrow.dataset as ds
+
+    from ..codec import doc_id_to_u64
+    from .predicate import to_arrow
+
+    filtered = bool(predicate)
+    data = ds.dataset(
+        os.path.join(index_dir, "segments", seg_id, "docs"),
+        format="parquet",
+        partitioning="hive",
+    )
+    parts = []
+    if filtered:
+        parts.append(to_arrow(list(predicate)))
+    if bucket is not None:
+        sb, n_shards, n_sb = bucket
+        parts.append(
+            ds.field("shard").isin([s for s in range(n_shards) if s % n_sb == sb])
+        )
+    if doc_ids is not None:
+        parts.append(
+            ds.field("doc_id").isin(np.asarray(doc_ids, dtype=np.int64).tolist())
+        )
+    flt = None
+    for e in parts:
+        flt = e if flt is None else flt & e
+    cols = columns
+    if cols is not None:
+        names = data.schema.names
+        cols = [c for c in dict.fromkeys(["doc_id", *cols]) if c in names]
+    tbl = data.to_table(filter=flt, columns=cols)
+    if tbl.num_rows > 1:
+        tbl = tbl.sort_by("doc_id")
+    if not filtered:
+        return tbl, None
+    return tbl, np.sort(doc_id_to_u64(tbl["doc_id"].to_numpy()))
+
+
+def read_allowed(
+    index_dir: str, seg_id: str, predicate, bucket: tuple[int, int, int]
+) -> np.ndarray | None:
+    """``read_docs``' allowed set alone, for scorers that need no docs
+    columns: an unfiltered bucket reads nothing and returns None."""
+    if not predicate:
+        return None
+    return read_docs(index_dir, seg_id, (), predicate, bucket)[1]

@@ -143,6 +143,21 @@ def validate_types(pred: Predicate, attr_types: dict[str, str],
                 )
 
 
+def validate_filter(m, pred: Predicate | None) -> None:
+    """The query-time check of a ``predicate`` against index manifest
+    ``m``, called by every entry point. None or empty passes (no
+    filter). Typed doc_attrs mapping (VERDICT r4 #6): literal/column
+    type coherence is checked up front; legacy indexes (no recorded
+    types) skip the attr checks but still reject unknown columns."""
+    if not pred:
+        return
+    validate(pred)
+    validate_types(
+        pred, m.doc_attr_types,
+        legacy_attrs=m.doc_attrs if not m.doc_attr_types else None,
+    )
+
+
 def _prefix_upper(v: str) -> str | None:
     """Smallest string greater than every string with prefix ``v``:
     increment the last non-maximal char, dropping maximal tails. None

@@ -3,19 +3,19 @@
 - ``term_suggest``: the ES *term suggester* (spell correction). For
   each analyzed input token, candidate corrections come from the same
   banded dictionary range scan as fuzzy queries (query._fuzzy_scan:
-  prefix_length range pushdown + length band + banded DP), ranked by
-  (edit distance asc, doc freq desc, term asc) — the deterministic
-  analog of ES's similarity-then-frequency sort. ``suggest_mode``
-  mirrors ES: "missing" suggests only for tokens absent from the
-  dictionary (default), "popular" only suggests more-frequent terms,
-  "always" always suggests.
+  the postings.scan_dict prefix_length range read + length band +
+  banded DP), ranked by (edit distance asc, doc freq desc, term asc) —
+  the deterministic analog of ES's similarity-then-frequency sort.
+  ``suggest_mode`` mirrors ES: "missing" suggests only for tokens
+  absent from the dictionary (default), "popular" only suggests
+  more-frequent terms, "always" always suggests.
 
 - ``complete_suggest``: the ES *completion suggester* shape
   (type-ahead). ES builds a dedicated FST with per-entry weights; here
   the index dictionary IS the completion source and doc frequency is
-  the weight — one term-sorted range scan per segment (parquet-stat
-  pushdown), df summed across segments, top-``size`` by (df desc,
-  term asc).
+  the weight — the postings.scan_dict range read (one term-sorted
+  scan per segment, parquet-stat pushdown, df summed across segments)
+  and its top-terms ranking: top-``size`` by (df desc, term asc).
 
 Both run driver-side without a Spark job: the dictionary is plan-time
 data (the same discipline as explain_search / the fuzzy-prefix
@@ -33,6 +33,7 @@ import numpy as np
 
 from ..tokenize import py_analyze
 from .manifest import IndexManifest
+from .postings import scan_dict, top_terms
 from .query import _fuzzy_scan, _lookup_terms
 
 _SUGGEST_MODES = ("missing", "popular", "always")
@@ -105,36 +106,7 @@ def complete_suggest(
     completion."""
     if not prefix:
         raise ValueError("completion needs a non-empty prefix")
-    import pyarrow as pa
-    import pyarrow.dataset as ds
-
-    from .predicate import _prefix_upper
-
     index_dir = os.path.abspath(index_dir)
     m = IndexManifest.load(index_dir)
     m.field_chain(field)  # validates the field exists
-    up = _prefix_upper(prefix)
-    parts = []
-    for d in m.segment_dirs(index_dir):
-        dict_dir = os.path.join(d, "dict")
-        if not os.path.isdir(dict_dir):
-            continue
-        data = ds.dataset(dict_dir, format="parquet")
-        flt = ds.field("term") >= prefix
-        if up is not None:
-            flt = flt & (ds.field("term") < up)
-        if "field" in data.schema.names:
-            flt = flt & (ds.field("field") == field)
-        elif field != "content":
-            continue
-        t = data.to_table(filter=flt, columns=["term", "df"])
-        if t.num_rows:
-            parts.append(t)
-    if not parts:
-        return []
-    pdf = pa.concat_tables(parts).to_pandas()
-    agg = pdf.groupby("term", sort=False)["df"].sum()
-    terms = agg.index.to_numpy()
-    dfs = agg.to_numpy().astype(np.int64)
-    order = np.lexsort((terms, -dfs))[: int(size)]
-    return [(str(terms[i]), int(dfs[i])) for i in order]
+    return top_terms(*scan_dict(m, index_dir, field, prefix=prefix), int(size))

@@ -233,15 +233,21 @@ def test_legacy_segment_without_field_column(spark, small_corpus, tmp_path):
     mergeable with current-format segments."""
     import glob
     import os
+    import shutil
 
     import pyarrow.parquet as pq
 
     from bugzilla_etl_spark.index import (
         Bool,
         bool_search,
+        complete_suggest,
+        fuzzy_search,
         multi_match_search,
         phrase_search,
+        prefix_search,
         search,
+        term_suggest,
+        wildcard_search,
     )
     from bugzilla_etl_spark.tokenize import py_tokens
 
@@ -251,6 +257,10 @@ def test_legacy_segment_without_field_column(spark, small_corpus, tmp_path):
         spark, part1, d, n_shards=4, n_tb=4, block_size=16,
         positions=True,
     )
+    # the same segment in the current format: the reference result for
+    # every dictionary read below
+    d_cur = str(tmp_path / "idx_current")
+    shutil.copytree(d, d_cur)
     m = IndexManifest.load(d)
     seg_dir = os.path.join(d, "segments", m.segments[0]["id"])
     # strip the post-upgrade artifacts: field column, field_avgdl, sidecar
@@ -315,6 +325,37 @@ def test_legacy_segment_without_field_column(spark, small_corpus, tmp_path):
         assert [x for x, _ in got] == [x for x, _ in want]
         for (_, gs), (_, ws) in zip(got, want):
             assert math.isclose(gs, ws, abs_tol=1e-6)
+    # a predicate-filtered search: the oracle restricted to the allowed docs
+    langs = dict(
+        prepare_docs(part1, 4).select("doc_id", "lang").rdd.map(tuple).collect()
+    )
+    got = search(spark, d, "return int fn", k=10,
+                 predicate=[("lang", "==", "python")])
+    want = oracle.search(
+        "return int fn", 10,
+        allowed={x for x, lang in langs.items() if lang == "python"},
+    )
+    assert want and [x for x, _ in got] == [x for x, _ in want]
+    for (_, gs), (_, ws) in zip(got, want):
+        assert math.isclose(gs, ws, abs_tol=1e-6)
+    # every dictionary read (multi-term expansion, suggesters) sees the
+    # legacy segment's rows as the content field: same as the current format
+    for run in (
+        lambda x: prefix_search(spark, x, "re", k=10),
+        lambda x: wildcard_search(spark, x, "r*t?rn", k=10),
+        lambda x: wildcard_search(spark, x, "*nt", k=10),
+        lambda x: fuzzy_search(spark, x, "retun", k=10),
+    ):
+        got, want = run(d), run(d_cur)
+        assert want, "fixture must make every legacy query non-vacuous"
+        assert [x for x, _ in got] == [x for x, _ in want]
+        for (_, gs), (_, ws) in zip(got, want):
+            assert math.isclose(gs, ws, abs_tol=1e-6)
+    want = term_suggest(d_cur, "retrun sett", suggest_mode="always")
+    assert all(sug for _tok, sug in want)
+    assert term_suggest(d, "retrun sett", suggest_mode="always") == want
+    want = complete_suggest(d_cur, "re")
+    assert want and complete_suggest(d, "re") == want
     # legacy + current segments merge cleanly and stay exact
     inc = small_corpus.limit(160).subtract(part1)
     incremental_update(spark, inc, d)

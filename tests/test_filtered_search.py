@@ -402,6 +402,61 @@ def test_local_execution_parity_phrase_and_nested(spark, small_corpus, tmp_path)
         assert a == b == nested_search_many(spark, d2, qs, "parent", score_mode=mode)
 
 
+@pytest.fixture(scope="module")
+def nested_pos_index(spark, small_corpus, tmp_path_factory):
+    """Positional index with a planted int64 parent attr: serves every
+    entry that resolves a predicate into a bucket's allowed set."""
+    from pyspark.sql import functions as F
+
+    d = str(tmp_path_factory.mktemp("npidx") / "idx")
+    child = small_corpus.limit(120).withColumn(
+        "parent", (F.xxhash64("repo") % 100 + 100) % 100
+    )
+    build_index(
+        spark, child, d, n_shards=4, n_tb=4, n_sb=2,
+        positions=True, doc_attrs=["parent"],
+    )
+    return d
+
+
+def _run_entry(spark, d, entry, predicate, execution):
+    from bugzilla_etl_spark.index import (
+        multi_match_search_many,
+        nested_search_many,
+        phrase_search_many,
+    )
+
+    qs = [(0, "return int", 10), (1, "fn impl", 10)]
+    if entry == "search_many":
+        return search_many(spark, d, qs, predicate=predicate, execution=execution)
+    if entry == "phrase_search_many":
+        return phrase_search_many(
+            spark, d, qs, predicate=predicate, execution=execution
+        )
+    if entry == "multi_match_search_many":
+        return multi_match_search_many(
+            spark, d, qs, ["content"], predicate=predicate, execution=execution
+        )
+    return nested_search_many(
+        spark, d, qs, "parent", predicate=predicate, execution=execution
+    )
+
+
+@pytest.mark.parametrize("execution", ["local", "spark"])
+@pytest.mark.parametrize(
+    "entry",
+    ["search_many", "phrase_search_many", "multi_match_search_many",
+     "nested_search_many"],
+)
+def test_empty_predicate_is_no_filter(spark, nested_pos_index, entry, execution):
+    """``predicate=[]`` is an empty conjunction: it filters nothing, on
+    every entry and on both execution harnesses (it used to compile to
+    a None arrow expression and crash the bucket scorer)."""
+    want = _run_entry(spark, nested_pos_index, entry, None, execution)
+    assert any(want.values()), "fixture queries must match"
+    assert _run_entry(spark, nested_pos_index, entry, [], execution) == want
+
+
 def test_must_not_matches_oracle(spark, filtered_index):
     """Round 5: ES bool.must_not text terms — docs containing ANY
     negative term are excluded from results with positive-term scores
@@ -661,8 +716,8 @@ def test_prefix_search_expansion_and_scoring(spark, filtered_index):
     from collections import Counter
 
     from bugzilla_etl_spark.index import prefix_search
-    from bugzilla_etl_spark.index.query import _expand_prefix
     from bugzilla_etl_spark.index.manifest import IndexManifest
+    from bugzilla_etl_spark.index.postings import scan_dict, top_terms
     from bugzilla_etl_spark.tokenize import py_tokens
 
     d, prepared, oracle = filtered_index
@@ -682,7 +737,9 @@ def test_prefix_search_expansion_and_scoring(spark, filtered_index):
                 key=lambda x: (-x[1], x[0]),
             )[:cap]
         ]
-        got_terms = _expand_prefix(m, d, prefix, "content", cap)
+        got_terms = [
+            t for t, _ in top_terms(*scan_dict(m, d, "content", prefix=prefix), cap)
+        ]
         assert got_terms == want_terms, prefix
         # scoring == should-semantics over exactly the expanded terms
         got = prefix_search(spark, d, prefix, k=10, max_expansions=cap)
