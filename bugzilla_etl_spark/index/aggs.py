@@ -51,6 +51,8 @@ from .manifest import IndexManifest
 from .postings import exclusion, read_bucket, read_docs, read_field
 from .predicate import validate_filter
 from .query import (
+    C_CAND_MS,
+    C_POST_MS,
     _candidate_dict_dirs,
     _empty_like,
     _execute_buckets,
@@ -393,6 +395,13 @@ def _prepare_query(
             "avgdls": {f: m.field_avgdl(f) for f in mm_by_field},
         }
     return spec, idfs, neg_eff, est, seg_dirs, frozenset(all_pos), mm_ctx, boost_eff
+
+
+def _post_ms(spec: dict, mm_ctx) -> float:
+    """The route model's cost per unit of a prepared query's estimate: a
+    clause query estimates its cheapest generator, whose candidates the
+    scorer verifies (C_CAND_MS); match_all counts the docs it scans."""
+    return C_CAND_MS if spec["match"] or spec["phrase"] or mm_ctx else C_POST_MS
 
 
 def _make_agg_bucket(
@@ -751,7 +760,10 @@ def _run_agg(
         boost_eff if kind == "terms_hits" else [], hits_k,
         chain=chain, sample_n=sample_n,
     )
-    return _execute_buckets(spark, work, scorer, schema, est, execution)
+    return _execute_buckets(
+        spark, work, scorer, schema, est, execution,
+        c_post_ms=_post_ms(spec, mm_ctx),
+    )
 
 
 def _merge_kind(
@@ -1415,7 +1427,10 @@ def _run_named_filters(
         index_dir, spec, idfs, m, fld, predicate, neg_eff, pos_terms,
         named, schema, mm_ctx, pairs_sep=pairs_sep,
     )
-    pdf = _execute_buckets(spark, work, scorer, schema, est, execution)
+    pdf = _execute_buckets(
+        spark, work, scorer, schema, est, execution,
+        c_post_ms=_post_ms(spec, mm_ctx),
+    )
     sums = (
         pdf.groupby("name")["n_docs"].sum().to_dict() if len(pdf) else {}
     )
@@ -1696,7 +1711,10 @@ def composite_agg(
         index_dir, spec, idfs, m, fld, predicate, neg_eff, pos_terms,
         srcs, int(size), after, schema, mm_ctx,
     )
-    pdf = _execute_buckets(spark, work, scorer, schema, est, execution)
+    pdf = _execute_buckets(
+        spark, work, scorer, schema, est, execution,
+        c_post_ms=_post_ms(spec, mm_ctx),
+    )
     if not len(pdf):
         return []
     merged = pdf.groupby(kcols, sort=True)["n_docs"].sum().reset_index()
@@ -2006,7 +2024,10 @@ def multi_agg(
         index_dir, spec, idfs, m, fld, predicate, neg_eff, pos_terms, norm,
         mm_ctx, boost_eff,
     )
-    pdf = _execute_buckets(spark, work, scorer, MULTI_AGG_SCHEMA, est, execution)
+    pdf = _execute_buckets(
+        spark, work, scorer, MULTI_AGG_SCHEMA, est, execution,
+        c_post_ms=_post_ms(spec, mm_ctx),
+    )
     out: dict[str, object] = {}
     for name, e in norm.items():
         blobs = (

@@ -24,8 +24,9 @@ docs-dimension slice (parquet-stat pushdown), generates candidates from
 the most selective clause (rarest-first), verifies the remaining
 clauses by membership probes on lazily-decoded blocks, position-checks
 phrase clauses, and returns a bounded per-bucket top-k; the driver
-k-way merges (buckets are doc-disjoint). Selective queries take the
-cost-based driver-local path (query._execute_buckets) unchanged.
+k-way merges (buckets are doc-disjoint). Requests the route cost model
+predicts cheaper in the driver take the driver-local path
+(query._execute_buckets) unchanged.
 
 Single-clause queries DELEGATE to the tuned specialized executors
 (MaxScore pruning for plain OR; the conjunctive/msm scorer; the
@@ -50,14 +51,17 @@ from .manifest import IndexManifest
 from .postings import exclusion, read_allowed, read_bucket, read_docs, read_field
 from .predicate import validate_filter
 from .query import (
+    C_CAND_MS,
     RESULT_SCHEMA,
     _allowed_mask,
     _candidate_dict_dirs,
+    _cores,
     _empty_like,
     _execute_buckets,
     _lookup_terms,
     _phrase_survivors,
     phrase_search_many,
+    route,
     search_many,
 )
 
@@ -1585,7 +1589,9 @@ def bool_search_many(
         schema, mm_want=mm_want or None, idfs_pairs=idfs_pairs,
         avgdls=avgdls, collapse_attr=collapse,
     )
-    pdf = _execute_buckets(spark, work, scorer, schema, est, execution)
+    pdf = _execute_buckets(
+        spark, work, scorer, schema, est, execution, c_post_ms=C_CAND_MS
+    )
     if not len(pdf):
         return results
     if sort_attr is None:
@@ -1657,9 +1663,8 @@ def explain_bool(
     execution — the ES _validate/explain analog for the DSL): analyzed
     clauses with per-term dfs, the chosen candidate GENERATOR clause
     and its plan-time volume estimate, the bloom-pruned segment set,
-    ranking mode, and the execution harness the cost model would pick."""
-    from .query import LOCAL_MAX_BUCKETS, LOCAL_MAX_POSTINGS
-
+    ranking mode, the execution harness the cost model would pick and
+    its predicted cost of each route (``local_ms``, ``spark_ms``)."""
     index_dir = os.path.abspath(index_dir)
     m = IndexManifest.load(index_dir)
     fld = query.field
@@ -1769,7 +1774,7 @@ def explain_bool(
             )
         n_segs = len(seg_names)
     n_work = n_segs * m.n_sb
-    local = matchable and est <= LOCAL_MAX_POSTINGS and n_work <= LOCAL_MAX_BUCKETS
+    execution, local_ms, spark_ms = route(n_work, est, _cores(), c_post_ms=C_CAND_MS)
     return {
         "field": fld,
         "clauses": clauses,
@@ -1786,7 +1791,9 @@ def explain_bool(
         "pruned_segments": len(m.segments) - n_segs,
         "work_items": n_work,
         "estimated_postings": int(est),
-        "execution": "local" if local else "spark",
+        "execution": execution if matchable else "spark",
+        "local_ms": round(local_ms, 1),
+        "spark_ms": round(spark_ms, 1),
         "n_docs": m.n_docs,
     }
 

@@ -196,7 +196,9 @@ def knn_search_many(
     # local_workers=8: the kNN bucket scorer is one pyarrow scan + one
     # matmul per bucket — both release the GIL, so the in-driver path
     # scales with threads (8 measured optimal: 0.12 s vs 0.40 s serial
-    # for an 8-query batch at 50k docs; 16/32 workers plateau higher)
+    # for an 8-query batch at 50k docs; 16/32 workers plateau higher).
+    # The route model prices the scan at C_POST_MS per doc, above what
+    # the threaded scan costs, so it errs toward the fan-out
     pdf = _execute_buckets(
         spark, work, scorer, RESULT_SCHEMA, m.n_docs, execution,
         local_workers=8,

@@ -45,6 +45,7 @@ from .manifest import IndexManifest
 from .postings import exclusion, read_allowed, read_docs, read_field
 from .predicate import validate_filter
 from .query import (
+    C_CAND_MS,
     _allowed_mask,
     _candidate_dict_dirs,
     _empty_like,
@@ -355,7 +356,9 @@ def nested_search_many(
                 zip(grp["parent"].tolist()[:k], grp["score"].tolist()[:k])
             )
         return results
-    pdf = _execute_buckets(spark, work, scorer, PARTIAL_SCHEMA, est, execution)
+    pdf = _execute_buckets(
+        spark, work, scorer, PARTIAL_SCHEMA, est, execution, c_post_ms=C_CAND_MS
+    )
     if not len(pdf):
         return results
     # associative merge of per-bucket partials (a parent's children can
@@ -636,7 +639,9 @@ def nested_terms_agg(
             .toPandas()
         )
         return list(zip(pdf["key"].tolist(), pdf["n_docs"].tolist()))
-    pdf = _execute_buckets(spark, work, scorer, schema, est, execution)
+    pdf = _execute_buckets(
+        spark, work, scorer, schema, est, execution, c_post_ms=C_CAND_MS
+    )
     if not len(pdf):
         return []
     if level == "child":

@@ -33,6 +33,7 @@ import os
 
 import numpy as np
 import pandas as pd
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
@@ -60,18 +61,48 @@ RESULT_SCHEMA = T.StructType(
     ]
 )
 
-#: cost-based execution cutover (measured on a 2M-doc/100-segment
-#: index): batches whose estimated posting volume is at or below this
-#: run the bucket scorers in the driver, serially unless the caller
-#: passes ``local_workers`` (only kNN does; see _execute_buckets) — 8
-#: rare-term queries answer in 0.21s vs 0.95s through the Spark fan-out
-#: (whose task-scheduling floor dwarfs the work). Above it, scoring is
-#: numpy-orchestration-heavy and the Spark fan-out — the cluster path —
-#: engages. The estimate is exact plan-time data: df per
-#: term from the dictionary (BM25: sum over query terms; phrase/nested:
-#: the rarest term per query, which bounds the candidate volume).
-LOCAL_MAX_POSTINGS = int(os.environ.get("SPARK_GRAFT_LOCAL_MAX_POSTINGS", "50000"))
-LOCAL_MAX_BUCKETS = int(os.environ.get("SPARK_GRAFT_LOCAL_MAX_BUCKETS", "1024"))
+#: Route cost model (see ``route``): every ``_execute_buckets`` request
+#: runs where it is predicted cheaper. The driver-local route runs the
+#: bucket scorers in the driver; it costs a floor per (segment, sb)
+#: work item plus a cost per unit of the plan-time estimate. The Spark
+#: fan-out runs one Python task per work item; it costs a floor per
+#: wave of ``cores`` tasks plus the same scorer work spread over the
+#: cores. The estimate is exact dictionary data, and what it counts
+#: sets its unit cost:
+#:
+#: - ``C_POST_MS``: the postings the request scores or the docs it
+#:   scans (should-BM25 and multi_match sum their terms' dfs; match_all
+#:   aggs and kNN count every document);
+#: - ``C_CAND_MS``: a candidate generator bound, the rarest term or
+#:   cheapest clause, whose candidates the scorer then verifies against
+#:   the other terms' postings, positions or parents (BM25 AND/msm,
+#:   phrase, nested, the grouped bool executor, aggs with a query).
+#:
+#: ``tools/fit_gate.py`` fits C_ITEM_MS, C_POST_MS and WAVE_MS from
+#: traced perfbench ``search`` runs; these are the median of four
+#: (local[4], 4-vCPU VM): a ``rare`` request (est ~66) pays ~10 ms per
+#: item, a single ``hot`` query (est ~8k) ~3 us per posting beyond
+#: that, and 8 empty tasks take ~750 ms (2 waves). ``tools/route_probe.py``
+#: times every request kind both ways on synthetic 100k-300k-doc
+#: indexes (same box): candidate-bound requests cost 3-14 us per
+#: candidate in the driver (phrase highest), and C_CAND_MS is the
+#: smallest cost (9.2 us, rounded up) under which none of them runs in
+#: the driver while the fan-out serves it faster. The scored/scanned
+#: kinds measure 0.3-2.4 us per unit: a batch shares term reads across
+#: its queries, match_all aggs and threaded kNN scan docs cheaply, so
+#: C_POST_MS overprices them, which errs toward the fan-out. At 4 cores
+#: the 8-item cutover is ~330k postings (~97k candidates); at 32 cores
+#: the 16-item one is ~80k (~23k), around the fixed 50k gate the model
+#: replaces.
+C_ITEM_MS = 10.4
+C_POST_MS = 0.0028
+C_CAND_MS = 0.0095
+WAVE_MS = 376.0
+#: The fixed gate of earlier releases (local iff the estimate and the
+#: work-item count are both at or below these). It no longer routes;
+#: perfbench's probes still report how often it would have fanned out.
+LOCAL_MAX_POSTINGS = 50000
+LOCAL_MAX_BUCKETS = 1024
 
 _PD_DTYPE = {"integer": "int32", "long": "int64", "double": "float64",
              "string": "object", "binary": "object"}
@@ -106,6 +137,38 @@ def _merge_topk(
     return results
 
 
+def route(
+    n_work: int,
+    est_postings: int,
+    cores: int,
+    c_post_ms: float | None = None,
+    c_item_ms: float | None = None,
+    wave_ms: float | None = None,
+) -> tuple[str, float, float]:
+    """The route of one request: ("local" | "spark", predicted local ms,
+    predicted Spark ms) for ``n_work`` (segment, sb) work items and a
+    plan-time estimate of ``est_postings`` costing ``c_post_ms`` each
+    (C_POST_MS or C_CAND_MS, by what the estimate counts). Local iff its
+    predicted cost is at most the fan-out's. ``cores`` is the session's
+    default parallelism. Unset constants are the module's fitted values,
+    read at call time; ``tools/fit_gate.py`` passes its own fit."""
+    c_post_ms = C_POST_MS if c_post_ms is None else c_post_ms
+    c_item_ms = C_ITEM_MS if c_item_ms is None else c_item_ms
+    wave_ms = WAVE_MS if wave_ms is None else wave_ms
+    local_ms = n_work * c_item_ms + est_postings * c_post_ms
+    spark_ms = -(-n_work // cores) * wave_ms + local_ms / cores
+    return ("local" if local_ms <= spark_ms else "spark"), local_ms, spark_ms
+
+
+def _cores(spark: SparkSession | None = None) -> int:
+    """The route model's one machine input: the default parallelism of
+    ``spark``, else of the process's running SparkContext (the explain
+    functions take no session; the context, unlike the active session,
+    is not per thread), else the CPU count a default session would get."""
+    sc = spark.sparkContext if spark is not None else SparkContext._active_spark_context  # noqa: SLF001
+    return sc.defaultParallelism if sc is not None else (os.cpu_count() or 1)
+
+
 def _execute_buckets(
     spark: SparkSession,
     work: list[tuple[str, int]],
@@ -114,13 +177,18 @@ def _execute_buckets(
     est_postings: int,
     execution: str = "auto",
     local_workers: int = 1,
+    c_post_ms: float | None = None,
 ) -> pd.DataFrame:
     """Run one bucket scorer over every (segment, sb) work item.
 
     ``execution``: "spark" = mapInPandas fan-out (the cluster path),
     "local" = in-driver execution of the SAME scorer callables
     (bit-identical results — the scorer neither knows nor cares which
-    harness calls it), "auto" = cost-based pick (see LOCAL_MAX_POSTINGS).
+    harness calls it), "auto" = the route the cost model predicts
+    cheaper for ``len(work)`` items and ``est_postings`` at
+    ``c_post_ms`` each (unset: C_POST_MS; C_CAND_MS when the estimate
+    is a candidate generator bound) at the session's default
+    parallelism (see ``route``).
 
     ``local_workers``: in-driver parallelism, chosen BY THE CALLER from
     what its scorer does. Default 1 = serial: the postings scorers the
@@ -130,14 +198,13 @@ def _execute_buckets(
     4-32). GIL-releasing scorers (the kNN matmul path) pass >1
     (measured: 0.12 s at 8 workers vs 0.40 s serial for an 8-query
     batch — numpy/pyarrow drop the GIL, so threads do scale there).
+    The route model prices the local side serially either way.
     """
     if execution not in ("auto", "spark", "local"):
         raise ValueError(f"execution must be auto|spark|local: {execution!r}")
-    if execution == "local" or (
-        execution == "auto"
-        and est_postings <= LOCAL_MAX_POSTINGS
-        and len(work) <= LOCAL_MAX_BUCKETS
-    ):
+    if execution == "auto":
+        execution = route(len(work), est_postings, _cores(spark), c_post_ms=c_post_ms)[0]
+    if execution == "local":
         if local_workers > 1 and len(work) > 1:
             from concurrent.futures import ThreadPoolExecutor
 
@@ -596,9 +663,10 @@ def search_many(
 
     One Spark job: a (segment, sb) fan-out scored in Python workers;
     the driver k-way merges the per-bucket bounded heaps per query.
-    Selective batches (plan-time df sum under LOCAL_MAX_POSTINGS) skip
-    the fan-out and run the same scorers serially in the driver when
-    ``execution="auto"`` (see _execute_buckets).
+    With ``execution="auto"``, a batch whose predicted driver-local
+    cost (work items and the plan-time df sum, see ``route``) is at most
+    the fan-out's skips the fan-out and runs the same scorers serially
+    in the driver (see _execute_buckets).
 
     ``field`` selects a field variant of a multi-field index (the
     reference's per-sub-field querying, bug_version.json:294-303): the
@@ -718,7 +786,9 @@ def search_many(
 
     seg_bound_scale = {s["id"]: _scale(s) for s in m.segments}
     tomb = np.array(sorted(m.tombstones), dtype=np.int64)
+    c_post = C_POST_MS
     if operator == "and" or min_should_match is not None:
+        c_post = C_CAND_MS
         msm_val = None if operator == "and" else int(min_should_match)
         scorer = _make_conjunctive_bucket_scorer(
             index_dir, q_eff, idfs, cur_avgdl, m.k1, m.b, tomb, field,
@@ -753,7 +823,9 @@ def search_many(
         # the batch's work is the per-query df sum
         est = sum(dfs[t] for terms, _ in q_eff.values() for t in terms)
     est += sum(neg_dfs[t] for t in neg_eff)
-    pdf = _execute_buckets(spark, work, scorer, RESULT_SCHEMA, est, execution)
+    pdf = _execute_buckets(
+        spark, work, scorer, RESULT_SCHEMA, est, execution, c_post_ms=c_post
+    )
     return _merge_topk(pdf, {q: k for q, (_, k) in qterms.items()}, results)
 
 
@@ -1210,10 +1282,11 @@ def explain_search(
     """Query-plan introspection (no Spark job, no execution): how the
     engine WOULD run this query — analyzed terms and their dictionary
     dfs, the bloom-pruned candidate segment set, the (segment, sb)
-    work-item count, the plan-time posting-volume estimate, and the
+    work-item count, the plan-time posting-volume estimate, the
     execution harness the cost model would pick (driver-local vs Spark
-    fan-out). The observability face of the cost-based
-    executor — ES _validate/explain analog."""
+    fan-out) and its predicted cost of each (``local_ms``,
+    ``spark_ms``; see ``route``). The observability face of the
+    cost-based executor — ES _validate/explain and profile analog."""
     index_dir = os.path.abspath(index_dir)
     m = IndexManifest.load(index_dir)
     chain = m.field_chain(field)
@@ -1243,7 +1316,10 @@ def explain_search(
         est = sum(dfs[t] for t in eff)
         path = "should"
     est += sum(neg_dfs.values())
-    local = est <= LOCAL_MAX_POSTINGS and n_work <= LOCAL_MAX_BUCKETS
+    # the executor's unit cost: any AND/msm request takes the
+    # conjunctive scorer, whose estimate bounds its candidates
+    c_post = C_CAND_MS if operator == "and" or min_should_match is not None else C_POST_MS
+    execution, local_ms, spark_ms = route(n_work, est, _cores(), c_post_ms=c_post)
     return {
         "field": field,
         "analyzed_terms": terms,
@@ -1254,7 +1330,9 @@ def explain_search(
         "pruned_segments": len(m.segments) - len(cand_dirs),
         "work_items": n_work,
         "estimated_postings": int(est),
-        "execution": "local" if local else "spark",
+        "execution": execution,
+        "local_ms": round(local_ms, 1),
+        "spark_ms": round(spark_ms, 1),
         "n_docs": m.n_docs,
         "tombstones": len(m.tombstones),
     }
@@ -1837,7 +1915,9 @@ def phrase_search_many(
     # query's candidate volume (+ negative lists, decoded once)
     est = sum(min(dfs[t] for t in seq) for seq, _ in qeff.values())
     est += sum(neg_dfs[t] for t in neg_eff)
-    pdf = _execute_buckets(spark, work, scorer, RESULT_SCHEMA, est, execution)
+    pdf = _execute_buckets(
+        spark, work, scorer, RESULT_SCHEMA, est, execution, c_post_ms=C_CAND_MS
+    )
     return _merge_topk(pdf, {q: k for q, (_, k) in qseq.items()}, results)
 
 

@@ -396,6 +396,41 @@ def test_explain_bool_is_sparkless(bool_idx):
     assert out3["estimated_postings"] >= out3["n_docs"]
 
 
+def test_explain_bool_matches_executor(spark, bool_idx, monkeypatch):
+    """explain_bool's work items, estimate and route are the ones the
+    grouped executor takes on the same request (a spy on the route
+    model and the fan-out), for either route."""
+    from bugzilla_etl_spark.index import query as Q
+    from bugzilla_etl_spark.index.boolquery import explain_bool
+
+    q = Bool(must="return int", phrase="return int",
+             must_not=["fn"], filter=[("lang", "==", "python")])
+    real_route, real_tasks = Q.route, Q.bucket_tasks_df
+    seen = []
+
+    def spy_route(n_work, est, *a, **kw):
+        seen.append({"work_items": n_work, "estimated_postings": est,
+                     "execution": "local"})
+        return real_route(n_work, est, *a, **kw)
+
+    def spy_tasks(*a, **kw):
+        seen[-1]["execution"] = "spark"
+        return real_tasks(*a, **kw)
+
+    monkeypatch.setattr(Q, "route", spy_route)
+    monkeypatch.setattr(Q, "bucket_tasks_df", spy_tasks)
+    routes = set()
+    for wave_ms in (Q.WAVE_MS, 0.0):
+        monkeypatch.setattr(Q, "WAVE_MS", wave_ms)
+        out = explain_bool(bool_idx, q)
+        seen.clear()
+        assert bool_search(spark, bool_idx, q, k=10)
+        assert len(seen) == 1, seen
+        assert {k: out[k] for k in seen[0]} == seen[0]
+        routes.add(out["execution"])
+    assert routes == {"local", "spark"}
+
+
 def test_should_only_with_sort_still_gates(spark, bool_idx, ref):
     """ES bool-with-only-should gates matching (msm=1) even when results
     rank by an attribute — it must NOT degrade to match_all."""

@@ -7,6 +7,7 @@ not_analyzed-term-filter + fulltext query, bug_version.json:57-65,
 from __future__ import annotations
 
 import math
+import threading
 
 import numpy as np
 import pytest
@@ -362,6 +363,87 @@ def test_local_execution_parity(spark, filtered_index):
             assert a == b == c, (qs, pred)
     with pytest.raises(ValueError, match="execution"):
         search_many(spark, d, batches[0], execution="driver")
+
+
+@pytest.fixture(scope="module")
+def wide_index(spark, tmp_path_factory):
+    """52k three-token docs with a 4-d embedding: the hot term ``alpha``
+    alone, and kNN's every-doc scan, are past the fixed gate's 50k
+    postings; one segment of eight work items (two waves at local[4])."""
+    from pyspark.sql import functions as F
+
+    d = str(tmp_path_factory.mktemp("widx") / "idx")
+    i = F.col("id")
+    corpus = spark.range(52_000).select(
+        F.concat(F.lit("org/r"), (i % 7).cast("string")).alias("repo"),
+        F.concat(F.lit("src/f"), i.cast("string"), F.lit(".py")).alias("path"),
+        F.lit("c0").alias("commit"),
+        F.when(i % 3 == 0, "python").otherwise("go").alias("lang"),
+        F.concat_ws(
+            " ", F.lit("alpha"),
+            F.when(i % 2 == 0, "beta").otherwise("gamma"),
+            F.concat(F.lit("t"), (i % 97).cast("string")),
+        ).alias("content"),
+        F.array(*[F.sin(i * (j + 1) * 0.37 + j) for j in range(4)]).alias("embedding"),
+    )
+    build_index(spark, corpus, d, n_shards=8, n_tb=4, n_sb=8, doc_attrs=["embedding"])
+    return d
+
+
+def test_local_execution_parity_at_moved_boundary(spark, wide_index, monkeypatch):
+    """Requests the fixed 50k gate sent to Spark and the route model runs
+    in the driver: auto takes the local route and equals forced local
+    and forced spark exactly — a search_many batch, a Bool batch (priced
+    per candidate, C_CAND_MS), a terms aggregation and a kNN batch."""
+    from bugzilla_etl_spark.index import Bool, bool_search_many, terms_agg
+    from bugzilla_etl_spark.index import query as Q
+    from bugzilla_etl_spark.index.knn import knn_search_many
+
+    d = wide_index
+    routed, fanouts = [], []
+    real_route, real_tasks = Q.route, Q.bucket_tasks_df
+
+    def spy_route(n_work, est, *a, **kw):
+        r = real_route(n_work, est, *a, **kw)
+        routed.append((n_work, est, kw["c_post_ms"], r[0]))
+        return r
+
+    def spy_tasks(*a, **kw):
+        fanouts.append(1)
+        return real_tasks(*a, **kw)
+
+    monkeypatch.setattr(Q, "route", spy_route)
+    monkeypatch.setattr(Q, "bucket_tasks_df", spy_tasks)
+    requests = {
+        "search_many": lambda ex: search_many(
+            spark, d, [(0, "alpha", 10), (1, "beta t5", 10)], execution=ex
+        ),
+        "bool": lambda ex: bool_search_many(
+            spark, d,
+            [(0, Bool(must=("alpha", "beta gamma"), must_not="t7"), 10),
+             (1, Bool(must=("t5", "beta"), must_not="t7"), 10)],
+            execution=ex,
+        ),
+        "terms_agg": lambda ex: terms_agg(spark, d, "lang", execution=ex),
+        "knn": lambda ex: knn_search_many(
+            spark, d, [(0, [1.0, 0.0, -1.0, 0.5], 5), (1, [0.0, 1.0, 1.0, -1.0], 5)],
+            execution=ex,
+        ),
+    }
+    for name, run in requests.items():
+        routed.clear()
+        fanouts.clear()
+        auto = run("auto")
+        assert routed and not fanouts, (name, routed)
+        for n_work, est, c_post, r in routed:
+            assert not (est <= Q.LOCAL_MAX_POSTINGS and n_work <= Q.LOCAL_MAX_BUCKETS)
+            assert (c_post == Q.C_CAND_MS) == (name == "bool"), name
+            assert r == "local", (name, n_work, est)
+        local = run("local")
+        spark_ = run("spark")
+        assert fanouts, name
+        assert auto, name
+        assert auto == local == spark_, name
 
 
 def test_local_execution_parity_phrase_and_nested(spark, small_corpus, tmp_path):
@@ -816,22 +898,66 @@ def test_wildcard_search_expansion_and_scoring(spark, filtered_index):
     assert got and all(langs[x] == "go" for x, _ in got)
 
 
-def test_explain_search_matches_cost_model(spark, filtered_index):
-    """explain reports exactly what the executor would do: analyzed
-    terms + dfs, bloom-pruned segments, work items, estimate, and the
-    local-vs-spark choice at the documented thresholds."""
+def test_explain_search_matches_cost_model(spark, filtered_index, monkeypatch):
+    """explain reports exactly what the executor does: analyzed terms +
+    dfs, bloom-pruned segments, work items, estimate, and the
+    local-vs-spark route — the one a spy on ``_execute_buckets`` sees
+    the same request take, under the model's coefficients and with the
+    fan-out made cheap enough to win."""
     from bugzilla_etl_spark.index import explain_search
-    from bugzilla_etl_spark.index.query import LOCAL_MAX_POSTINGS
+    from bugzilla_etl_spark.index import query as Q
 
     d, prepared, oracle = filtered_index
+    taken = []
+    real_execute, real_tasks = Q._execute_buckets, Q.bucket_tasks_df
+
+    def spy_execute(spark_, work, scorer, schema, est, *a, **kw):
+        taken.append({"work_items": len(work), "estimated_postings": est,
+                      "execution": "local"})
+        return real_execute(spark_, work, scorer, schema, est, *a, **kw)
+
+    def spy_tasks(*a, **kw):
+        taken[-1]["execution"] = "spark"
+        return real_tasks(*a, **kw)
+
+    monkeypatch.setattr(Q, "_execute_buckets", spy_execute)
+    monkeypatch.setattr(Q, "bucket_tasks_df", spy_tasks)
+    # the host's CPU count must not stand in for the session's parallelism
+    monkeypatch.setattr(Q.os, "cpu_count", lambda: spark.sparkContext.defaultParallelism + 7)
+
+    def check(query, **kw):
+        ex = explain_search(d, query, **kw)
+        # a thread with no active session routes by the same cores
+        on_thread = []
+        t = threading.Thread(target=lambda: on_thread.append(explain_search(d, query, **kw)))
+        t.start()
+        t.join()
+        assert on_thread == [ex], (query, kw)
+        taken.clear()
+        Q.search_many(spark, d, [(0, query, 10)], **kw)
+        assert len(taken) == 1, taken
+        assert {k: ex[k] for k in taken[0]} == taken[0], (query, kw)
+        assert (ex["execution"] == "local") == (ex["local_ms"] <= ex["spark_ms"])
+        return ex
+
+    routes = set()
+    for wave_ms in (Q.WAVE_MS, 0.0):
+        monkeypatch.setattr(Q, "WAVE_MS", wave_ms)
+        for query, kw in (
+            ("uniq_13 return", {}),
+            ("uniq_13 return", {"operator": "and"}),
+            ("uniq_13 return for", {"min_should_match": 2}),
+            ("return int", {"must_not": ["fn"]}),
+        ):
+            routes.add(check(query, **kw)["execution"])
+    assert routes == {"local", "spark"}
+    monkeypatch.undo()
+
     ex = explain_search(d, "uniq_13 return")
     assert ex["analyzed_terms"] == ["return", "uniq_13"]
     assert ex["term_dfs"]["uniq_13"] == 1
     assert ex["scorer_path"] == "should"
     assert ex["estimated_postings"] == sum(ex["term_dfs"].values())
-    assert ex["execution"] == (
-        "local" if ex["estimated_postings"] <= LOCAL_MAX_POSTINGS else "spark"
-    )
     assert ex["work_items"] == len(ex["candidate_segments"]) * 2  # n_sb=2
     # conjunctive path: estimate is the rarest term
     ex2 = explain_search(d, "uniq_13 return", operator="and")
