@@ -10,7 +10,7 @@ Reference parity (see SURVEY.md §7.0):
   partition pruning and doc-salting (``n_salts``) to bound encoder group
   memory under hot-term skew;
 - the per-group stateful replay (parse_bug_history.js) becomes the
-  per-partition SPIMI encoder: ``groupBy(shard, tb, salt).applyInPandas``
+  per-partition SPIMI encoder: ``groupBy(shard, salt).applyInPandas``
   emitting delta-gap + varint blocks with per-block max-impact metadata;
 - the ES bulk sink + alias swap (bugzilla_to_json.ktr:1094-1277,
   bin/import_bugs.sh:21-23) becomes immutable parquet segment shards +
@@ -18,19 +18,18 @@ Reference parity (see SURVEY.md §7.0):
 - the watermark/retry machinery (§3.2) becomes per-batch checkpoints in
   the manifest: a killed build resumes, skipping completed batches.
 
-Layout per segment::
+Layout per segment (build, append and merge write the same one)::
 
     <index_dir>/segments/<seg_id>/
-        postings/shard=K/tb=J/*.parquet   # block rows (see BLOCK_SCHEMA)
-        docs/shard=K/*.parquet            # doc dimension incl. sha256
-        dict/*.parquet                    # (term, df, tb)
+        postings/batch=B/sb=S/*.parquet   # block rows (see BLOCK_SCHEMA),
+                                          # sb = shard % n_sb
+        docs/batch=B/*.parquet            # doc dimension incl. sha256
+        dict/*.parquet                    # (field, term, df, tb)
 
-Scale notes (100 TB / 1000 executors): the only wide shuffles are the
-(term, doc) partial-agg groupBy (map-side combine — each doc's tokens
-live in one partition, so the combiner collapses almost everything
-before the exchange) and the applyInPandas group shuffle keyed on
-(shard, tb, salt) — cardinality n_shards*n_tb*n_salts, chosen >> executor
-count; no driver-side collect of data anywhere in the build.
+Scale notes (100 TB / 1000 executors): the only wide shuffle is the
+applyInPandas group shuffle keyed on (shard, salt), which moves raw
+corpus rows (cardinality n_shards*n_salts, chosen >> executor count);
+no driver-side collect of data anywhere in the build.
 """
 
 from __future__ import annotations
@@ -293,51 +292,13 @@ def _blocks_frame(
     )
 
 
-def _make_encoder(avgdl_by_field: dict[str, float], k1: float, b: float, block_size: int):
-    """SPIMI block encoder for one (field, shard, tb, salt) group.
-
-    Deterministic output (the stabilize() discipline,
-    parse_bug_history.js:671-678): postings sorted by (term, doc_u64),
-    blocks emitted in (term, block_id) order. Impacts use the group's
-    FIELD avgdl — each field variant is its own BM25 space.
-
-    An optional ``positions`` column (object array of per-posting sorted
-    position arrays — the merge path of positional segments) re-encodes
-    into the block poss payload.
-    """
-
-    def encode(key, pdf):  # (key, pd.DataFrame) -> pd.DataFrame; unannotated: future-annotations strings defeat pyspark hint inference
-        fld, shard, tb, salt = str(key[0]), int(key[1]), int(key[2]), int(key[3])
-        du = doc_id_to_u64(pdf["doc_id"].to_numpy())
-        codes, uniq_terms = pd.factorize(pdf["term"].to_numpy(), sort=True)
-        order = np.lexsort((du, codes))
-        cg = codes[order]
-        du = du[order]
-        tf = pdf["tf"].to_numpy()[order].astype(np.int64)
-        dl = pdf["doc_len"].to_numpy()[order].astype(np.int64)
-        imp = _impact(tf, dl, avgdl_by_field[fld], k1, b)
-        uniq_terms = np.asarray(uniq_terms, dtype=object)
-        tb_per_term = np.full(len(uniq_terms), tb, dtype=np.int64)
-        pos_gaps = None
-        if "positions" in pdf.columns:
-            plists = pdf["positions"].to_numpy()[order]
-            flat = (
-                np.concatenate(plists).astype(np.int64)
-                if len(plists)
-                else np.empty(0, dtype=np.int64)
-            )
-            starts = np.concatenate(([0], np.cumsum(tf)))[:-1]
-            pos_gaps = np.empty(len(flat), dtype=np.int64)
-            if len(flat):
-                pos_gaps[0] = flat[0]
-                np.subtract(flat[1:], flat[:-1], out=pos_gaps[1:])
-                pos_gaps[starts] = flat[starts]
-        return _blocks_frame(
-            shard, salt, fld, cg, uniq_terms, tb_per_term, du, tf, dl, imp,
-            block_size, pos_gaps,
-        )
-
-    return encode
+def _concat_blocks(outs: list) -> pd.DataFrame:
+    """One encoder group's output: its per-field block frames (None for
+    a field without postings), or an empty BLOCK_SCHEMA frame."""
+    outs = [o for o in outs if o is not None]
+    if not outs:
+        return pd.DataFrame({f.name: pd.Series(dtype="object") for f in BLOCK_SCHEMA.fields})
+    return outs[0] if len(outs) == 1 else pd.concat(outs, ignore_index=True)
 
 
 def _make_spimi_encoder(
@@ -429,16 +390,10 @@ def _make_spimi_encoder(
     def run(key, pdf):  # (key, pd.DataFrame) -> pd.DataFrame
         shard, salt = int(key[0]), int(key[1])
         du_all = doc_id_to_u64(pdf["doc_id"].to_numpy())
-        outs = [
+        return _concat_blocks([
             _one_field(shard, salt, fld, pdf["content"], du_all)
             for fld in sorted(field_chains)
-        ]
-        outs = [o for o in outs if o is not None]
-        if not outs:
-            return pd.DataFrame(
-                {f.name: pd.Series(dtype="object") for f in BLOCK_SCHEMA.fields}
-            ).iloc[:0]
-        return outs[0] if len(outs) == 1 else pd.concat(outs, ignore_index=True)
+        ])
 
     return run
 
@@ -729,18 +684,7 @@ def _build_batch(
     avgdl_by_field: dict[str, float],
     batch_id: int = 0,
 ) -> dict:
-    """One shard-batch: write postings blocks + docs dim + dict shard.
-
-    Physical layout: postings directory-partitioned by shard-bucket
-    ``sb = shard % n_sb`` — the query executor's task granularity (one
-    pyarrow-reading Python task per (segment, sb)); within files, rows
-    sorted by (tb, term) so query-term predicates prune row groups via
-    parquet min/max statistics. Directory count stays small (n_sb per
-    batch — 512 dirs measured a 10x write-commit penalty).
-    """
-    from ..session import python_stage_tuning
-
-    spark = prepared_batch.sparkSession
+    """One shard-batch: SPIMI-encode its postings and write them."""
     # mirror the docs pass's rejection filter: a row the docs dimension
     # refused (null keys / null content) must not emit postings either
     prepared_batch = prepared_batch.filter(~_bad_row_col())
@@ -752,20 +696,36 @@ def _build_batch(
     blocks = spimi_encode(
         prepared_batch, avgdl_by_field, field_chains,
         m.k1, m.b, m.block_size, m.n_tb, m.n_salts, pos_fields,
-    ).withColumn("sb", F.pmod(F.col("shard"), F.lit(m.n_sb)).cast("int"))
-    # posting-count lineage piggybacks on the write via observe() — no
-    # read-back pass over the written block metadata
+    )
+    return {"postings": _write_postings(blocks, seg_dir, m.n_sb, batch_id)}
+
+
+def _write_postings(blocks: DataFrame, seg_dir: str, n_sb: int, batch_id: int = 0) -> int:
+    """The one postings writer (build, append and merge): encoded block
+    rows from a ``(shard, salt)``-grouped stage -> ``postings/batch=<id>/
+    sb=<shard % n_sb>``. Returns the posting count (observed on the
+    write — no read-back pass).
+
+    ``sb`` is the query executor's task granularity (one pyarrow-reading
+    Python task per (segment, sb)); within files, rows are sorted by
+    (tb, term) so query-term predicates prune row groups via parquet
+    min/max statistics. Directory count stays small (n_sb per batch —
+    512 dirs measured a 10x write-commit penalty), and every encoder
+    group lands in one task, so an ``sb`` dir holds at most one file per
+    (shard, salt) group it stores."""
+    from ..session import python_stage_tuning
+
     obs = Observation(f"postings_{batch_id}")
-    with python_stage_tuning(spark):
+    with python_stage_tuning(blocks.sparkSession):
         _atomic_write(
-            blocks.observe(obs, F.sum("n").alias("p")).sortWithinPartitions(
-                "sb", "tb", "term", "field", "salt", "block_id"
-            ),
+            blocks.withColumn("sb", F.pmod(F.col("shard"), F.lit(n_sb)).cast("int"))
+            .observe(obs, F.sum("n").alias("p"))
+            .sortWithinPartitions("sb", "tb", "term", "field", "salt", "block_id"),
             os.path.join(seg_dir, "postings"),
             batch_id,
             partition_by=["sb"],
         )
-    return {"postings": int(obs.get["p"] or 0)}
+    return int(obs.get["p"] or 0)
 
 
 def _atomic_write(

@@ -1,17 +1,19 @@
 """Log-structured multi-way segment merge.
 
 The reference's Sorted Merge (bugzilla_to_json.ktr:1403-1429) applied to
-index segments instead of row streams: all committed segments' blocks for
-a (shard, tb, salt) group are decoded, concatenated per term, tombstoned
-docs dropped, doc-duplicates collapsed (content-addressed doc ids — the
-same (repo,path,commit) re-indexed is byte-identical, keep-one), then
+index segments instead of row streams: all merged segments' blocks for
+a (shard, salt) group are decoded, tombstoned docs dropped,
+doc-duplicates collapsed (content-addressed doc ids — the same
+(repo,path,commit) re-indexed is byte-identical, keep-one), then
 re-encoded into fresh blocks with block-max impacts recomputed against
 the post-merge avgdl. The manifest swap that publishes the merged
 segment is the alias-swap analog (bin/import_bugs.sh:21-23).
 
 Distributed end-to-end: the heavy work is one applyInPandas over
-(shard, tb, salt) groups — the same shuffle shape as the build — so the
-merge scales with the index, not with the driver.
+(shard, salt) groups — the build's SPIMI grouping — so the merge scales
+with the index, not with the driver, and writes through the build's own
+postings, dict and bloom writers: a fully merged segment's blocks equal
+those of a fresh build of its live docs, in the same file layout.
 """
 
 from __future__ import annotations
@@ -22,11 +24,22 @@ import time
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..codec import delta_decode, varint_decode
-from .build import BLOCK_SCHEMA, _make_encoder, read_segment_union
+from ..codec import doc_id_to_u64, varint_decode
+from .bloom import write_segment_blooms
+from .build import (
+    BLOCK_SCHEMA,
+    _atomic_write,
+    _blocks_frame,
+    _concat_blocks,
+    _extra_len_col,
+    _impact,
+    _write_dict,
+    _write_postings,
+    read_segment_union,
+)
 from .manifest import IndexManifest, writer_lock
 
 #: above this many tombstones, plan-side filters switch from an inlined
@@ -101,93 +114,72 @@ def _keep_tombstoned(docs: DataFrame, tombstones: list[int]) -> DataFrame:
     return docs.join(F.broadcast(tomb), "doc_id", "left_semi")
 
 
-_EMPTY_BLOCKS = pd.DataFrame(
-    {
-        "shard": pd.Series(dtype="int32"),
-        "tb": pd.Series(dtype="int32"),
-        "salt": pd.Series(dtype="int32"),
-        "field": pd.Series(dtype="object"),
-        "term": pd.Series(dtype="object"),
-        "block_id": pd.Series(dtype="int32"),
-        "n": pd.Series(dtype="int32"),
-        "first_doc": pd.Series(dtype="int64"),
-        "last_doc": pd.Series(dtype="int64"),
-        "max_impact": pd.Series(dtype="float64"),
-        "gaps": pd.Series(dtype="object"),
-        "tfs": pd.Series(dtype="object"),
-        "dls": pd.Series(dtype="object"),
-        "poss": pd.Series(dtype="object"),
-    }
-)
-
-
 def _make_block_merger(
     avgdl_by_field: dict[str, float],
     k1: float,
     b: float,
     block_size: int,
     tombstones: list[int],
-    positional: "frozenset[str] | bool" = False,
+    pos_fields: frozenset[str],
 ):
-    encoder = _make_encoder(avgdl_by_field, k1, b, block_size)
-    tomb = np.array(sorted(tombstones), dtype=np.int64)
-    pos_fields = (
-        frozenset({"content"}) if positional is True
-        else (positional or frozenset())
-    )
+    """Block merger for one (shard, salt) group, the build's SPIMI run.
+
+    Per field, each payload column decodes with ONE ``varint_decode``
+    over the group's joined block buffers (LEB128 is self-delimiting, so
+    this equals decoding block by block) — the per-call cost is paid
+    once per group, not once per block row. Doc ids come back by a
+    segmented cumsum (each block's first gap is absolute); tombstoned
+    and duplicate (term, doc) postings drop; the survivors, sorted by
+    (term, doc), re-encode through the build's block assembly with
+    impacts against ``avgdl_by_field``. The stored positions are already
+    the encoder's within-doc gap form, so each posting's slice is only
+    gathered into the new order."""
+    tomb = doc_id_to_u64(np.array(sorted(tombstones), dtype=np.int64))
+
+    def _one_field(shard, salt, fld, g):
+        n = g["n"].to_numpy().astype(np.int64)
+        cs = np.cumsum(varint_decode(b"".join(g["gaps"])), dtype=np.uint64)
+        before = np.zeros(len(n), dtype=np.uint64)  # cumsum ahead of each block
+        before[1:] = cs[np.cumsum(n)[:-1] - 1]
+        du = cs - np.repeat(before, n)  # uint64 wraps, so this is exact
+        tf = varint_decode(b"".join(g["tfs"])).astype(np.int64)
+        dl = varint_decode(b"".join(g["dls"])).astype(np.int64)
+        codes, uniq_terms = pd.factorize(g["term"].to_numpy(), sort=True)
+        tb_per_term = np.empty(len(uniq_terms), dtype=np.int64)
+        tb_per_term[codes] = g["tb"].to_numpy()
+        c = np.repeat(codes, n)
+        order = np.lexsort((du, c))  # stable: the first copy of a doc wins
+        if tomb.size:
+            order = order[~np.isin(du[order], tomb)]
+        if not len(order):
+            return None
+        cg, dg = c[order], du[order]
+        # a doc re-indexed into two segments (merge_indexes members):
+        # content-addressed ids make the copies identical — keep one
+        first = np.ones(len(order), dtype=bool)
+        first[1:] = (cg[1:] != cg[:-1]) | (dg[1:] != dg[:-1])
+        order, cg, dg = order[first], cg[first], dg[first]
+        tf_o, dl_o = tf[order], dl[order]
+        pos_gaps = None
+        if fld in pos_fields:
+            pz = varint_decode(b"".join(g["poss"]))
+            # posting p owns tf[p] slots from cumsum(tf)[p-1]: gather
+            # each kept posting's slice to its place in the new order
+            src = (np.cumsum(tf) - tf)[order]
+            dst = np.cumsum(tf_o) - tf_o
+            pos_gaps = pz[np.repeat(src - dst, tf_o) + np.arange(int(tf_o.sum()))]
+        return _blocks_frame(
+            shard, salt, fld, cg, np.asarray(uniq_terms, dtype=object),
+            tb_per_term, dg, tf_o, dl_o,
+            _impact(tf_o, dl_o, avgdl_by_field[fld], k1, b), block_size, pos_gaps,
+        )
 
     def merge(key, pdf):  # (key, pd.DataFrame) -> pd.DataFrame
-        keep_pos = str(key[0]) in pos_fields
-        terms, docs, tfs, dls, poss = [], [], [], [], []
-        pos_col = (
-            pdf["poss"].to_numpy()
-            if keep_pos and "poss" in pdf.columns
-            else [None] * len(pdf)
-        )
-        for t, g, tf, dl, pz in zip(
-            pdf["term"].to_numpy(),
-            pdf["gaps"].to_numpy(),
-            pdf["tfs"].to_numpy(),
-            pdf["dls"].to_numpy(),
-            pos_col,
-        ):
-            d = delta_decode(varint_decode(bytes(g))).view(np.int64)
-            tf_a = varint_decode(bytes(tf))
-            dl_a = varint_decode(bytes(dl))
-            plists = None
-            if keep_pos:
-                # per-posting position arrays (within-doc cumsum of the
-                # block's delta stream, split by tf)
-                flat = varint_decode(bytes(pz)).astype(np.int64)
-                bounds = np.cumsum(tf_a.astype(np.int64))[:-1]
-                plists = np.empty(len(tf_a), dtype=object)
-                for j, seg in enumerate(np.split(flat, bounds)):
-                    plists[j] = np.cumsum(seg)
-            if tomb.size:
-                keep = ~np.isin(d, tomb)
-                if not keep.any():
-                    continue
-                d, tf_a, dl_a = d[keep], tf_a[keep], dl_a[keep]
-                if plists is not None:
-                    plists = plists[keep]
-            terms.append(np.full(len(d), t, dtype=object))
-            docs.append(d)
-            tfs.append(tf_a)
-            dls.append(dl_a)
-            if plists is not None:
-                poss.append(plists)
-        if not docs:
-            return _EMPTY_BLOCKS
-        cols = {
-            "term": np.concatenate(terms),
-            "doc_id": np.concatenate(docs),
-            "tf": np.concatenate(tfs).astype(np.int64),
-            "doc_len": np.concatenate(dls).astype(np.int64),
-        }
-        if keep_pos:
-            cols["positions"] = np.concatenate(poss)
-        flat = pd.DataFrame(cols).drop_duplicates(["term", "doc_id"], keep="first")
-        return encoder(key, flat)
+        shard, salt = int(key[0]), int(key[1])
+        return _concat_blocks([
+            _one_field(shard, salt, str(fld), g)
+            for fld, g in pdf.groupby("field", sort=True)
+        ])
 
     return merge
 
@@ -206,125 +198,22 @@ def merge_segments(
     ids leave the tombstone list; tombstones pointing into untouched
     segments remain until their tier is compacted (log-structured
     semantics). See ``compact_tiered`` for the policy loop.
+
+    A full merge recomputes the global stats from the merged docs and
+    bakes block bounds with them; a partial merge keeps the global
+    stats (deletes already adjusted them) and bakes with those. The new
+    segment is written by the build's own writers, in its layout.
     """
     m = IndexManifest.load(index_dir)
     if not m.segments:
         return m
+    chosen = m.segments
     if segment_ids is not None:
         chosen = [s for s in m.segments if s["id"] in set(segment_ids)]
         if len(chosen) != len(set(segment_ids)):
             missing = set(segment_ids) - {s["id"] for s in chosen}
             raise ValueError(f"unknown segment ids: {sorted(missing)}")
-        if len(chosen) == len(m.segments):
-            segment_ids = None  # subset == all: take the full-merge path
-    if segment_ids is not None:
-        return _merge_subset(spark, index_dir, m, chosen)
-    seg_dirs = m.segment_dirs(index_dir)
-    new_id = m.next_segment_id()
-    new_dir = os.path.join(index_dir, "segments", new_id)
-
-    from .build import _extra_len_col
-
-    extra = sorted(m.fields)
-    docs = _drop_tombstoned(
-        read_segment_union(spark, seg_dirs, "docs").dropDuplicates(["doc_id"]),
-        m.tombstones,
-    )
-    docs.persist()
-    try:
-        stats = docs.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("doc_len").alias("s"),
-            *[F.sum(_extra_len_col(f)).alias(f"s__{f}") for f in extra],
-        ).collect()[0]
-        n_docs, sum_dl = int(stats["n"]), int(stats["s"] or 0)
-        if n_docs == 0:
-            # every doc tombstoned: the merged index is EMPTY — no new
-            # segment at all (a zero-row partitioned write leaves no
-            # readable schema); queries on an empty manifest return []
-            m.segments = []
-            m.tombstones = []
-            m.n_docs = 0
-            m.sum_doc_len = 0
-            m.field_sum_doc_len = {f: 0 for f in extra}
-            _retire_dirs(m, seg_dirs)
-            m.commit(index_dir)
-            gc_retired(index_dir)
-            return m
-        avgdl = sum_dl / n_docs if n_docs else 1.0
-        field_sums = {f: int(stats[f"s__{f}"] or 0) for f in extra}
-        avgdl_by_field = {"content": avgdl}
-        for f in extra:
-            avgdl_by_field[f] = field_sums[f] / n_docs if n_docs else 1.0
-
-        from ..session import python_stage_tuning
-
-        t0 = time.monotonic()
-        blocks_in = read_segment_union(spark, seg_dirs, "postings")
-        merger = _make_block_merger(
-            avgdl_by_field, m.k1, m.b, m.block_size, m.tombstones,
-            positional=m.positions_fields(),
-        )
-        merged = blocks_in.groupBy("field", "shard", "tb", "salt").applyInPandas(
-            merger, schema=BLOCK_SCHEMA
-        )
-        with python_stage_tuning(spark):
-            merged.withColumn(
-                "sb", F.pmod(F.col("shard"), F.lit(m.n_sb)).cast("int")
-            ).sortWithinPartitions(
-                "sb", "tb", "term", "field", "salt", "block_id"
-            ).write.partitionBy("sb").mode("overwrite").parquet(
-                os.path.join(new_dir, "postings")
-            )
-        docs.sortWithinPartitions("shard").write.mode("overwrite").parquet(
-            os.path.join(new_dir, "docs")
-        )
-        # dict rebuilt from the merged blocks so df reflects dedupe+tombstones
-        _dict_from_blocks(spark, os.path.join(new_dir, "postings")).sort(
-            "term"
-        ).write.mode("overwrite").parquet(os.path.join(new_dir, "dict"))
-        from .bloom import write_segment_blooms
-
-        write_segment_blooms(spark, new_dir, m.n_shards)
-        elapsed = round(time.monotonic() - t0, 3)
-
-        old_dirs = list(seg_dirs)
-        m.segments = [
-            {
-                "id": new_id,
-                "n_docs": n_docs,
-                "postings": None,
-                "avgdl": avgdl,
-                "field_avgdl": avgdl_by_field,
-                "lineage": {
-                    "merged_from": [os.path.basename(d) for d in old_dirs],
-                    "elapsed_s": elapsed,
-                },
-            }
-        ]
-        m.tombstones = []
-        m.n_docs = n_docs
-        m.sum_doc_len = sum_dl
-        m.field_sum_doc_len = field_sums
-        _retire_dirs(m, old_dirs)
-        m.commit(index_dir)  # alias swap: queries now see only the merged segment
-        gc_retired(index_dir)
-    finally:
-        docs.unpersist()
-    return m
-
-
-def _merge_subset(
-    spark: SparkSession, index_dir: str, m: IndexManifest, chosen: list[dict]
-) -> IndexManifest:
-    """Partial merge: rewrite only ``chosen`` segments into one new
-    segment; untouched segments and global stats stay as-is (deletes
-    already adjusted stats when tombstoning)."""
-    from pyspark.sql import Observation
-
-    from ..session import python_stage_tuning
-    from .bloom import write_segment_blooms
-
+    full = len(chosen) == len(m.segments)
     sub_dirs = [os.path.join(index_dir, "segments", s["id"]) for s in chosen]
     chosen_ids = {s["id"] for s in chosen}
     new_id = m.next_segment_id()
@@ -333,9 +222,9 @@ def _merge_subset(
 
     # tombstones physically removed by this merge = those living in the
     # merged subset (collect is bounded by the tombstone list, which
-    # auto-compaction already bounds)
-    dropped: set[int] = set()
-    if m.tombstones:
+    # auto-compaction already bounds); a full merge removes them all
+    dropped: set[int] = set(m.tombstones)
+    if m.tombstones and not full:
         dropped = {
             int(r["doc_id"])
             for r in _keep_tombstoned(
@@ -344,67 +233,65 @@ def _merge_subset(
             ).collect()
         }
 
-    live = _drop_tombstoned(
-        read_segment_union(spark, sub_dirs, "docs").dropDuplicates(["doc_id"]),
-        m.tombstones,
+    # docs first: their stats piggyback on the write via observe()
+    extra = sorted(m.fields)
+    obs = Observation(f"merge_docs_{new_id}")
+    _atomic_write(
+        _drop_tombstoned(
+            read_segment_union(spark, sub_dirs, "docs").dropDuplicates(["doc_id"]),
+            m.tombstones,
+        ).observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.sum("doc_len").alias("s"),
+            *[F.sum(_extra_len_col(f)).alias(f"s__{f}") for f in extra],
+        ).sortWithinPartitions("shard"),
+        os.path.join(new_dir, "docs"),
+        0,
     )
-    obs = Observation(f"subset_docs_{new_id}")
-    live.sortWithinPartitions("shard").observe(
-        obs, F.count(F.lit(1)).alias("n")
-    ).write.mode("overwrite").parquet(os.path.join(new_dir, "docs"))
-    n_live = int(obs.get["n"] or 0)
+    row = obs.get
+    n_live = int(row["n"] or 0)
+    if full:
+        m.n_docs = n_live
+        m.sum_doc_len = int(row["s"] or 0)
+        m.field_sum_doc_len = {f: int(row[f"s__{f}"] or 0) for f in extra}
+    rest = [s for s in m.segments if s["id"] not in chosen_ids]
     if n_live == 0:
-        # every doc in the subset was tombstoned: no new segment at all
+        # every doc in the merged segments was tombstoned: no new segment
+        # at all (a zero-row partitioned write leaves no readable
+        # schema); a query on an empty manifest returns []
         shutil.rmtree(new_dir, ignore_errors=True)
-        m.segments = [s for s in m.segments if s["id"] not in chosen_ids]
-        m.tombstones = sorted(set(m.tombstones) - dropped)
-        _retire_dirs(m, sub_dirs)
-        m.commit(index_dir)
-        gc_retired(index_dir)
-        return m
-
-    # bounds for the re-encoded blocks are baked with the CURRENT global
-    # per-field avgdl (the same values queries rescale against)
-    avgdl_by_field = {"content": m.avgdl}
-    for f in sorted(m.fields):
-        avgdl_by_field[f] = m.field_avgdl(f)
-    blocks_in = read_segment_union(spark, sub_dirs, "postings")
-    merger = _make_block_merger(
-        avgdl_by_field, m.k1, m.b, m.block_size, sorted(dropped),
-        positional=m.positions_fields(),
-    )
-    merged = blocks_in.groupBy("field", "shard", "tb", "salt").applyInPandas(
-        merger, schema=BLOCK_SCHEMA
-    )
-    with python_stage_tuning(spark):
-        merged.withColumn(
-            "sb", F.pmod(F.col("shard"), F.lit(m.n_sb)).cast("int")
-        ).sortWithinPartitions(
-            "sb", "tb", "term", "field", "salt", "block_id"
-        ).write.partitionBy("sb").mode("overwrite").parquet(
-            os.path.join(new_dir, "postings")
+        m.segments = rest
+    else:
+        avgdl_by_field = {"content": m.avgdl, **{f: m.field_avgdl(f) for f in extra}}
+        merger = _make_block_merger(
+            avgdl_by_field, m.k1, m.b, m.block_size, sorted(dropped),
+            m.positions_fields(),
         )
-    _dict_from_blocks(spark, os.path.join(new_dir, "postings")).sort(
-        "term"
-    ).write.mode("overwrite").parquet(os.path.join(new_dir, "dict"))
-    write_segment_blooms(spark, new_dir, m.n_shards, n_docs_hint=n_live)
-
-    m.segments = [s for s in m.segments if s["id"] not in chosen_ids] + [
-        {
-            "id": new_id,
-            "n_docs": n_live,
-            "postings": None,
-            "avgdl": avgdl_by_field["content"],
-            "field_avgdl": avgdl_by_field,
-            "lineage": {
-                "merged_from": sorted(chosen_ids),
-                "elapsed_s": round(time.monotonic() - t0, 3),
-            },
-        }
-    ]
+        blocks = read_segment_union(spark, sub_dirs, "postings").select(
+            "shard", "salt", "field", "term", "tb", "n", "gaps", "tfs", "dls", "poss"
+        ).groupBy("shard", "salt").applyInPandas(merger, schema=BLOCK_SCHEMA)
+        n_postings = _write_postings(blocks, new_dir, m.n_sb)
+        n_terms = _write_dict(spark, new_dir, small=n_live <= 2_000_000)
+        write_segment_blooms(
+            spark, new_dir, m.n_shards, n_docs_hint=n_live, n_terms_hint=n_terms
+        )
+        m.segments = rest + [
+            {
+                "id": new_id,
+                "n_docs": n_live,
+                "postings": n_postings,
+                "avgdl": avgdl_by_field["content"],
+                "field_avgdl": avgdl_by_field,
+                "lineage": {
+                    "merged_from": sorted(chosen_ids),
+                    "elapsed_s": round(time.monotonic() - t0, 3),
+                },
+            }
+        ]
     m.tombstones = sorted(set(m.tombstones) - dropped)
     _retire_dirs(m, sub_dirs)
-    m.commit(index_dir)  # alias swap: queries now see the new tier
+    m.commit(index_dir)  # alias swap: queries now see the merged segment
     gc_retired(index_dir)
     return m
 
@@ -429,13 +316,6 @@ def compact_tiered(
         ]
         m = merge_segments(spark, index_dir, [s["id"] for s in smallest])
     return m
-
-
-def _dict_from_blocks(spark: SparkSession, postings_path: str) -> DataFrame:
-    blocks = spark.read.parquet(postings_path)
-    return blocks.groupBy("field", "term").agg(
-        F.sum("n").alias("df"), F.first("tb").alias("tb")
-    )
 
 
 def merge_indexes(index_dirs: list[str], out_dir: str) -> "IndexManifest":
