@@ -1103,3 +1103,62 @@ def test_sig_text_multi_agg_validation(spark, src_idx, agg_idx):
                   query=Bool(must="return"))
     with pytest.raises(ValueError, match="gated query"):
         multi_agg(spark, src_idx, {"s": {"kind": "sig_text"}})
+
+
+# ------------------------------------------------- shared spec validation
+def test_size_below_one_rejected(spark, agg_idx, src_idx):
+    """size < 1 raises for every sized agg — a negative size used to
+    reach pandas head(-1) / list[:-1] and drop the LAST buckets."""
+    from bugzilla_etl_spark.index import (
+        composite_agg,
+        significant_terms_agg,
+        significant_text_agg,
+    )
+
+    q = Bool(must="return")
+    for size in (0, -1):
+        with pytest.raises(ValueError, match="size must be >= 1"):
+            terms_agg(spark, agg_idx, "lang", size=size)
+        with pytest.raises(ValueError, match="size must be >= 1"):
+            terms_agg(spark, agg_idx, "lang", size=size, sub_stats="n_chars")
+        with pytest.raises(ValueError, match="size must be >= 1"):
+            significant_terms_agg(spark, agg_idx, "lang", q, size=size)
+        with pytest.raises(ValueError, match="size must be >= 1"):
+            significant_text_agg(spark, src_idx, q, size=size)
+        with pytest.raises(ValueError, match="size must be >= 1"):
+            composite_agg(spark, agg_idx, ["lang"], size=size)
+        with pytest.raises(ValueError, match="'by_lang': size must be >= 1"):
+            multi_agg(spark, agg_idx, {"by_lang": {
+                "kind": "terms", "attr": "lang", "size": size}})
+        with pytest.raises(ValueError, match="'sig': size must be >= 1"):
+            multi_agg(spark, src_idx, {"sig": {"kind": "sig_text",
+                                               "size": size}}, query=q)
+    # size=1 still cuts to the single top bucket
+    assert terms_agg(spark, agg_idx, "lang", size=1) == terms_agg(
+        spark, agg_idx, "lang", size=100
+    )[:1]
+
+
+def test_range_needs_ranges(spark, agg_idx):
+    with pytest.raises(ValueError, match="'r': range needs at least one"):
+        multi_agg(spark, agg_idx, {"r": {"kind": "range", "attr": "n_chars"}})
+    with pytest.raises(ValueError, match="range needs at least one"):
+        range_agg(spark, agg_idx, "n_chars", [])
+
+
+def test_numeric_kinds_reject_string_attr(spark, agg_idx):
+    """stats / range / histogram over a string attr raise (they used to
+    coerce every value to NaN and report zero counts)."""
+    with pytest.raises(ValueError, match="'lang' is a string"):
+        stats_agg(spark, agg_idx, "lang")
+    with pytest.raises(ValueError, match="'lang' is a string"):
+        range_agg(spark, agg_idx, "lang", [(None, 10)])
+    with pytest.raises(ValueError, match="'lang' is a string"):
+        histogram_agg(spark, agg_idx, "lang", 10.0)
+    for spec in (
+        {"kind": "stats", "attr": "lang"},
+        {"kind": "range", "attr": "lang", "ranges": [(0, 1)]},
+        {"kind": "histogram", "attr": "lang", "interval": 5},
+    ):
+        with pytest.raises(ValueError, match="'x': .* is a string"):
+            multi_agg(spark, agg_idx, {"x": spec})
