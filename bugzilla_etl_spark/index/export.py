@@ -13,15 +13,15 @@ result set is an export, not a query"): the reference's consumers page
 ES for dashboards, but a 100 TB training-data pipeline wants the match
 set AS A TABLE.
 
-Scale shape: one ``mapInPandas`` stage pinned one-bucket-per-partition
-(query.bucket_tasks_df — no exchange, AQE can't coalesce it); each task
-resolves the filter against its docs-dimension slice (parquet row-group
-pushdown), generates candidates from the most selective clause and
-verifies the rest by lazily-decoded membership probes
-(boolquery._gate_survivors — the exact executor searches use), scores
-survivors with the shared BM25 clause-sum, and streams its rows out as
-Arrow batches. Nothing is ever collected; row volume per task is
-bounded by the bucket's match count, not the corpus.
+Scale shape: one ``mapInPandas`` stage, its buckets packed into at most
+``cores`` partitions (query.bucket_tasks_df — no exchange, AQE can't
+coalesce it); per bucket, a task resolves the filter against its
+docs-dimension slice (parquet row-group pushdown), generates candidates
+from the most selective clause and verifies the rest by lazily-decoded
+membership probes (boolquery._gate_survivors — the exact executor
+searches use), scores survivors with the shared BM25 clause-sum, and
+streams its rows out as Arrow batches. Nothing is ever collected; row
+volume per bucket is bounded by its match count, not the corpus.
 
 Reference parity: the reference's ES delegation serves bulk readers via
 scan+scroll (configuration/es/bug_version.json is built precisely so

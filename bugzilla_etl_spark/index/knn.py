@@ -95,21 +95,26 @@ def _make_knn_bucket(
             ids, emb = ids[keep], emb[keep]
         if not len(ids):
             return empty.copy()
+        # q . d for every pair through einsum's own loop, not BLAS
+        # (``qmat @ emb.T``): a multi-threaded BLAS (the driver's) sums
+        # in another order than a single-threaded one (a Python worker's),
+        # so scores and tie order would depend on the route
+        dots = np.einsum("qd,nd->qn", qmat, emb)  # (nq, ndocs)
         if metric == "l2":
-            # -||d - q|| via the expanded form: one matmul for the batch
+            # -||d - q|| via the expanded form: one product for the batch
             d2 = np.einsum("ij,ij->i", emb, emb)
             sims = -(
                 np.sqrt(
                     np.maximum(
                         d2[None, :]
-                        - 2.0 * (qmat @ emb.T)
+                        - 2.0 * dots
                         + np.einsum("ij,ij->i", qmat, qmat)[:, None],
                         0.0,
                     )
                 )
             )
         else:
-            sims = qmat @ emb.T  # (nq, ndocs)
+            sims = dots
             if metric == "cosine":
                 dnorm = np.linalg.norm(emb, axis=1)
                 dnorm[dnorm == 0] = 1.0
@@ -193,9 +198,9 @@ def knn_search_many(
         index_dir, qmap, vector_attr, predicate, metric,
         np.array(sorted(m.tombstones), dtype=np.int64), m.n_shards, m.n_sb,
     )
-    # local_workers=8: the kNN bucket scorer is one pyarrow scan + one
-    # matmul per bucket — both release the GIL, so the in-driver path
-    # scales with threads (8 measured optimal: 0.12 s vs 0.40 s serial
+    # local_workers=8: the kNN bucket scorer is one pyarrow scan (which
+    # releases the GIL) + one einsum product per bucket, so the in-driver
+    # path scales with threads (8 measured optimal: 0.12 s vs 0.40 s serial
     # for an 8-query batch at 50k docs; 16/32 workers plateau higher).
     # The route model prices the scan at C_POST_MS per doc, above what
     # the threaded scan costs, so it errs toward the fan-out

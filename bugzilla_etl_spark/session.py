@@ -69,11 +69,17 @@ class python_stage_tuning:
     encode/score shuffles carry few bytes but heavy per-row Python work,
     so coalescing collapses them to a handful of partitions and caps
     parallelism (measured: encode stage pinned at ~5 threads whatever
-    the core count). Inside this scope coalescing is off; group counts
-    (n_shards*n_tb*n_salts) are chosen explicitly instead.
+    the core count). Inside this scope coalescing is off and the shuffle
+    has exactly ``cores`` (default parallelism) partitions: one Python
+    task per core.
 
-    Also over-partitions the shuffle (4x cores) so skewed groups (Zipf
-    term buckets) interleave across tasks instead of creating stragglers.
+    Why not more: a reused Python worker costs 250-330 ms per task
+    before the UDF's first line runs (local[4], 4 vCPU), more than
+    encoding a whole 1k-doc append. The groups this scope feeds (the
+    SPIMI encoder's and the block merger's ``(shard, salt)``) are runs
+    of doc-hash-keyed rows, so they are uniform in size and need no
+    over-partitioning to spread skew; a partition that gets no group
+    skips Python entirely (~40 ms).
     """
 
     KEY = "spark.sql.adaptive.coalescePartitions.enabled"
@@ -87,7 +93,7 @@ class python_stage_tuning:
         self.prev_shuf = self.spark.conf.get(self.SHUF)
         cores = self.spark.sparkContext.defaultParallelism
         self.spark.conf.set(self.KEY, "false")
-        self.spark.conf.set(self.SHUF, str(max(int(self.prev_shuf), cores * 4)))
+        self.spark.conf.set(self.SHUF, str(cores))
         return self
 
     def __exit__(self, *exc):

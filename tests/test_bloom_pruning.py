@@ -84,18 +84,31 @@ def test_pruned_search_stays_exact(spark, many_segment_index):
         assert [x for x, _ in got] == [x for x, _ in want], (qid, got, want)
 
 
-def test_incremental_novel_batch_skips_docs_scan(spark, many_segment_index, tmp_path):
+def test_incremental_novel_batch_skips_docs_scan(
+    spark, many_segment_index, tmp_path, monkeypatch
+):
     """A batch of genuinely new docs must not read any docs dimension:
     _without_indexed_docs returns the prepared frame unchanged (object
-    identity — the zero-scan fast path)."""
+    identity — the zero-scan fast path). The bloom probe runs on the
+    driver over the collected ids: it starts no Python stage."""
     d, _ = many_segment_index
     from bugzilla_etl_spark.index.build import _without_indexed_docs, prepare_docs
 
     m = IndexManifest.load(d)
     novel = spark.createDataFrame(generate_corpus_pdf(20, start=99_000))
     prepared = prepare_docs(novel, m.n_shards)
+    frame_cls = type(prepared)
+    real = frame_cls.mapInPandas
+    calls = []
+
+    def spy(self, *a, **k):
+        calls.append(a)
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(frame_cls, "mapInPandas", spy)
     out = _without_indexed_docs(spark, m, d, prepared, novel)
     assert out is prepared  # fast path: no join, no segment scan
+    assert calls == []  # no Python probe stage
 
 
 def test_incremental_replay_still_noop(spark, tmp_path):

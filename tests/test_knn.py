@@ -195,3 +195,35 @@ def test_rrf_validation(spark, knn_idx):
         rrf_search(spark, d, Bool(must="x"), _vec(1), k=20, rank_window=5)
     with pytest.raises(ValueError, match="rank_constant"):
         rrf_search(spark, d, Bool(must="x"), _vec(1), rank_constant=0)
+
+
+def test_knn_local_and_spark_bit_identical(spark, tmp_path):
+    """Forced local and forced Spark answers are equal to the last bit,
+    for every metric. Both routes run the same bucket scorer, but in the
+    driver (thread pool, multi-threaded BLAS) and in a Python worker
+    (one BLAS thread) respectively: similarities summed through BLAS
+    differ in their last bits between the two at this size (64-dim,
+    ~1k docs per bucket)."""
+    d = str(tmp_path / "idx")
+    dim = 64
+    i = F.col("id")
+    corpus = spark.range(2000).select(
+        F.lit("org/r").alias("repo"),
+        F.concat(F.lit("src/f"), i.cast("string")).alias("path"),
+        F.lit("c0").alias("commit"),
+        F.lit("python").alias("lang"),
+        F.lit("alpha beta").alias("content"),
+        F.array(
+            *[F.sin(i * (j + 1) * 0.37 + j) for j in range(dim)]
+        ).alias("embedding"),
+    )
+    build_index(
+        spark, corpus, d, n_shards=2, n_tb=2, n_sb=2, doc_attrs=["embedding"]
+    )
+    rng = np.random.default_rng(5)
+    qs = [(q, rng.normal(size=dim).tolist(), 10) for q in range(8)]
+    for metric in ("cosine", "dot", "l2"):
+        local = knn_search_many(spark, d, qs, metric=metric, execution="local")
+        fanout = knn_search_many(spark, d, qs, metric=metric, execution="spark")
+        assert all(local[q] for q, _, _ in qs)
+        assert local == fanout, metric

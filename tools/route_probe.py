@@ -9,18 +9,20 @@ the route model's cost per candidate-generator posting (``C_CAND_MS``).
 Per index size it builds one synthetic single-segment index (``n_sb``
 work items; positions, a shingle field, ``parent``/``tag``/``embedding``
 doc attrs) in a temporary directory and runs each request below forced
-``local`` and forced ``spark``, ``--reps`` times alternately (both must
-return the same answer). A spy on ``query.route`` records the request's
-work items, estimate and the unit cost its executor prices the estimate
-at (``C_POST_MS`` or ``C_CAND_MS``). Prints one JSON line per request,
-then for each unit-cost class the measured cost per estimated posting
-and the total regret (ms lost to the slower route over all requests in
-the class) of the fixed 50k gate, of the module constant, of the
-constants that minimise it, and of the smallest constant that runs no
-request in the driver that the fan-out serves faster. ``--fit`` redoes
-that summary over saved outputs (several runs, ``--n-sb`` values or
-machines). Content is ``alpha {beta|gamma} t<i%97> d<i%5>``, so the
-dfs are 1, 1/2, 1/97 and 1/5 of the docs.
+``local`` and forced ``spark``, ``--reps`` times alternately. A spy on
+``query.route`` records the request's work items, estimate and the unit
+cost its executor prices the estimate at (``C_POST_MS`` or
+``C_CAND_MS``). Prints (and flushes) one JSON line per request as soon
+as it is measured; a request whose local and Spark answers differ gets
+an ``error`` row instead, the probe goes on, the fit skips it and the
+exit status is 1. Then for each unit-cost class the measured cost per
+estimated posting and the total regret (ms lost to the slower route
+over all requests in the class) of the fixed 50k gate, of the module
+constant, of the constants that minimise it, and of the smallest
+constant that runs no request in the driver that the fan-out serves
+faster. ``--fit`` redoes that summary over saved outputs (several runs,
+``--n-sb`` values or machines). Content is ``alpha {beta|gamma} t<i%97>
+d<i%5>``, so the dfs are 1, 1/2, 1/97 and 1/5 of the docs.
 """
 
 from __future__ import annotations
@@ -90,7 +92,8 @@ def build(spark, d: str, n_docs: int, n_sb: int) -> None:
                 doc_attrs=["parent", "embedding", "tag"], extra_fields={"sh": "code_v1_shingle"})
 
 
-def probe(spark, d: str, reps: int) -> list[dict]:
+def probe(spark, d: str, reps: int):
+    """Yield one row per request as soon as it is measured."""
     seen = []
     real_route = Q.route
 
@@ -99,7 +102,6 @@ def probe(spark, d: str, reps: int) -> list[dict]:
         return real_route(n_work, est, cores, **kw)
 
     Q.route = spy
-    rows = []
     try:
         for name, run in REQUESTS.items():
             seen.clear()
@@ -112,17 +114,16 @@ def probe(spark, d: str, reps: int) -> list[dict]:
                     t0 = time.perf_counter()
                     out[ex] = run(spark, d, ex)
                     ts[ex].append((time.perf_counter() - t0) * 1e3)
+            row = {"request": name, "unit": "cand" if c_post == Q.C_CAND_MS else "post",
+                   "work_items": n_work, "est": est}
             if out["local"] != out["spark"]:
-                raise SystemExit(f"{name}: local and spark answers differ")
-            rows.append({
-                "request": name, "unit": "cand" if c_post == Q.C_CAND_MS else "post",
-                "work_items": n_work, "est": est,
-                "local_ms": round(statistics.median(ts["local"])),
-                "spark_ms": round(statistics.median(ts["spark"])),
-            })
+                row["error"] = "local and spark answers differ"
+            else:
+                row.update(local_ms=round(statistics.median(ts["local"])),
+                           spark_ms=round(statistics.median(ts["spark"])))
+            yield row
     finally:
         Q.route = real_route
-    return rows
 
 
 def regret(rows: list[dict], c_post_ms: float | None) -> tuple[float, int]:
@@ -140,6 +141,7 @@ def regret(rows: list[dict], c_post_ms: float | None) -> tuple[float, int]:
 
 
 def fit(rows: list[dict]) -> None:
+    rows = [r for r in rows if "error" not in r]
     grid = [x / 10000 for x in range(10, 201)]  # 1-20 us per posting
     for unit, const in (("post", Q.C_POST_MS), ("cand", Q.C_CAND_MS)):
         sub = [r for r in rows if r["unit"] == unit]
@@ -188,7 +190,7 @@ def main() -> int:
             shutil.rmtree(d, ignore_errors=True)
     spark.stop()
     fit(rows)
-    return 0
+    return int(any("error" in r for r in rows))
 
 
 if __name__ == "__main__":
