@@ -14,12 +14,14 @@ date_histogram, stats, percentiles, significant_terms/_text, filters,
 adjacency_matrix, count, missing, composite) builds agg specs and runs
 them through ``_run_aggs``, the ``multi_agg`` path: ``_normalize``
 validates each spec, the query is lowered once, and
-``_make_multi_agg_bucket`` runs per (segment, shard-bucket) task. Each
-task computes the query's FULL surviving doc set with the shared gate
-evaluator (boolquery._gate_survivors — facets aggregate exactly the set
-a search would rank), aligns it to its docs-dimension slice (one
-pushed-down pyarrow scan for every column the specs read) and emits one
-BOUNDED partial per spec (``_kind_partial``) as an Arrow IPC payload:
+``_make_multi_agg_bucket`` runs per (segment, shard-bucket) work item
+(the harness packs them into at most ``cores`` tasks, each segment read
+once per request or task). Each item computes the query's FULL
+surviving doc set with the shared gate evaluator
+(boolquery._gate_survivors — facets aggregate exactly the set a search
+would rank), aligns it to its docs-dimension slice (one pushed-down
+pyarrow scan for every column the specs read) and emits one BOUNDED
+partial per spec (``_kind_partial``) as an Arrow IPC payload:
 
 - terms / cardinality / percentiles / significant_terms: one row per
   DISTINCT value in the bucket — bounded by the attribute's

@@ -21,6 +21,12 @@ block rows of a few (field, term) pairs in one (segment, sb) bucket,
 decoded lazily block by block. ``read_bucket`` is the one place that
 knows the on-disk shape:
 
+- the per-request segment scan: the harnesses run a request's work
+  items (or a Spark task's) under one ``ReadScope``, so each segment is
+  opened once and scanned once, with ``sb`` in the scope's sbs of it,
+  and its rows are split by sb; bucket reads of the docs dimension are
+  shared the same way (split by ``shard % n_sb``). Nothing is kept
+  across requests;
 - the hive ``sb`` partition filter and the term/field row-group
   pushdown;
 - the legacy segment rule above;
@@ -39,6 +45,7 @@ from results, statistics untouched — ES filter context).
 from __future__ import annotations
 
 import os
+from contextvars import ContextVar
 from itertools import repeat
 
 import numpy as np
@@ -234,6 +241,78 @@ class TermPostings:
         return ci[order], pos[order].astype(np.int64), dls[order]
 
 
+# ------------------------------------------------------ request scope
+#: the ReadScope of the request a harness is running, None outside one
+_SCOPE: ContextVar[ReadScope | None] = ContextVar("segment_read_scope", default=None)
+
+
+class ReadScope:
+    """The segment reads of one request: the (segment, sb) work items a
+    harness runs, and for each (segment, read) pair the rows of one
+    segment-wide scan, split by sb.
+
+    Every bucket read goes through ``take``: the first call of a read
+    for a segment scans that segment once for all of the scope's sbs of
+    it and keeps the other sbs' rows; each item's call pops its own
+    rows, so they are freed as they are served. A call outside any
+    scope runs in a scope of its one item. A scope lives for one
+    request (``run``): nothing is kept across requests, so an index
+    rebuilt at the same path is always read afresh."""
+
+    __slots__ = ("sbs", "datasets", "parts")
+
+    def __init__(self, items):
+        self.sbs: dict[str, list[int]] = {}
+        for seg_id, sb in items:
+            self.sbs.setdefault(seg_id, []).append(int(sb))
+        self.datasets: dict[tuple[str, str, str], object] = {}
+        self.parts: dict[tuple, dict] = {}
+
+    def run(self, fn, *args):
+        """``fn(*args)`` with this scope serving its segment reads."""
+        token = _SCOPE.set(self)
+        try:
+            return fn(*args)
+        finally:
+            _SCOPE.reset(token)
+
+    def dataset(self, index_dir: str, seg_id: str, part: str):
+        """The segment's ``part`` (postings | docs) dataset, opened once."""
+        import pyarrow.dataset as ds
+
+        key = (index_dir, seg_id, part)
+        data = self.datasets.get(key)
+        if data is None:
+            data = self.datasets[key] = ds.dataset(
+                os.path.join(index_dir, "segments", seg_id, part),
+                format="parquet",
+                partitioning="hive",
+            )
+        return data
+
+    def take(self, key, seg_id: str, sb: int, read):
+        """The rows of bucket ``sb`` for read ``key`` (None = not
+        shared). ``read(sbs)`` scans the segment for those sbs and
+        returns {sb: table}."""
+        parts = self.parts.get(key)
+        if parts is None:
+            if key is None or sb not in self.sbs.get(seg_id, ()):
+                return read([sb])[sb]
+            parts = self.parts[key] = read(self.sbs[seg_id])
+        got = parts.pop(sb, None)
+        return read([sb])[sb] if got is None else got
+
+
+def _scope(seg_id: str, sb: int) -> ReadScope:
+    scope = _SCOPE.get()
+    return scope if scope is not None else ReadScope([(seg_id, sb)])
+
+
+def _split(tbl, keys: np.ndarray, sbs) -> dict:
+    """{sb: the rows of ``tbl`` whose ``keys`` equal sb}, row order kept."""
+    return {s: tbl.take(np.flatnonzero(keys == s)) for s in sbs}
+
+
 def read_bucket(
     index_dir: str,
     seg_id: str,
@@ -246,8 +325,16 @@ def read_bucket(
     positions: frozenset = frozenset(),
     bound_scale: float = 1.0,
 ) -> dict[tuple[str, str], TermPostings] | None:
-    """One pushed-down postings scan of bucket (``seg_id``, ``sb``) for
-    ``want`` = {field: terms} -> sealed {(field, term): TermPostings}.
+    """The postings of bucket (``seg_id``, ``sb``) for ``want`` =
+    {field: terms} -> sealed {(field, term): TermPostings}.
+
+    The rows come from the request scope (``ReadScope``): the first
+    call for a segment opens its dataset once and runs one pushed-down
+    scan with ``sb`` in the scope's sbs of that segment and the
+    field/term filter, split by sb; later calls of the same read for
+    the segment's other items pop their rows from it. Outside a scope
+    the scan covers this one sb. The legacy, positional and sub-list
+    rules below apply to every call.
 
     Each list scores with ITS field's idf (``idfs``, 0 when absent —
     must_not lists are read for doc ids only) and avgdl. ``positions``:
@@ -260,11 +347,8 @@ def read_bucket(
 
     if not any(want.values()):
         return {}
-    data = ds.dataset(
-        os.path.join(index_dir, "segments", seg_id, "postings"),
-        format="parquet",
-        partitioning="hive",
-    )
+    scope = _scope(seg_id, sb)
+    data = scope.dataset(index_dir, seg_id, "postings")
     names = data.schema.names
     has_field = "field" in names
     if not has_field:
@@ -276,9 +360,10 @@ def read_bucket(
             f"segment {seg_id} has no positional payload; rebuild with "
             "build_index(positions=True)"
         )
+    want = {f: sorted(set(want[f])) for f in sorted(want)}
     fexpr = None
-    for f in sorted(want):
-        e = ds.field("term").isin(sorted(set(want[f])))
+    for f, terms in want.items():
+        e = ds.field("term").isin(terms)
         if has_field:
             e = (ds.field("field") == f) & e
         fexpr = e if fexpr is None else fexpr | e
@@ -287,23 +372,35 @@ def read_bucket(
     cols = (["field"] if multi else []) + _COLUMNS
     if positions:
         cols.append("poss")
-    tbl = data.to_table(filter=(ds.field("sb") == sb) & fexpr, columns=cols)
+
+    def scan(sbs):
+        tbl = data.to_table(
+            filter=ds.field("sb").isin(sbs) & fexpr, columns=[*cols, "sb"]
+        )
+        return _split(tbl, tbl.column("sb").to_numpy(), sbs)
+
+    key = (index_dir, seg_id, "postings",
+           tuple((f, tuple(t)) for f, t in want.items()), bool(positions))
+    tbl = scope.take(key, seg_id, sb, scan)
     out: dict[tuple[str, str], TermPostings] = {}
     if tbl.num_rows == 0:
         return out
-    pdf = tbl.to_pandas()
+    col = tbl.column
     for f, t, sa, sh, n, fd, ld, mi, g, tfb, dlb, pz in zip(
-        pdf["field"] if multi else repeat(next(iter(want))),
-        pdf["term"], pdf["salt"], pdf["shard"], pdf["n"],
-        pdf["first_doc"], pdf["last_doc"], pdf["max_impact"],
-        pdf["gaps"], pdf["tfs"], pdf["dls"],
-        pdf["poss"] if positions else repeat(None),
+        col("field").to_pylist() if multi else repeat(next(iter(want))),
+        col("term").to_pylist(), col("salt").to_pylist(),
+        col("shard").to_pylist(), col("n").to_pylist(),
+        col("first_doc").to_numpy().view(np.uint64),
+        col("last_doc").to_numpy().view(np.uint64),
+        col("max_impact").to_numpy().tolist(),
+        col("gaps").to_pylist(), col("tfs").to_pylist(), col("dls").to_pylist(),
+        col("poss").to_pylist() if positions else repeat(None),
     ):
         key = (f, t)
         tp = out.get(key)
         if tp is None:
             tp = out[key] = TermPostings()
-        skey = (int(sa), int(sh))
+        skey = (sa, sh)
         sl = tp.subs.get(skey)
         if sl is None:
             sl = tp.subs[skey] = BlockList(idfs.get(key, 0.0), k1, b, avgdls[f])
@@ -314,10 +411,7 @@ def read_bucket(
                 "positional payload missing for term blocks; index was "
                 "not built with positions=True"
             )
-        sl.add_block(
-            np.int64(fd).view(np.uint64), np.int64(ld).view(np.uint64),
-            float(mi) * bound_scale, int(n), g, tfb, dlb, pz,
-        )
+        sl.add_block(fd, ld, mi * bound_scale, n, g, tfb, dlb, pz)
     for tp in out.values():
         tp.seal()
     return out
@@ -460,11 +554,14 @@ def read_docs(
     ``bucket`` = (sb, n_shards, n_sb) restricts the read to one
     shard-bucket: the docs dimension is not laid out by sb, but its
     shard column is and sb = shard % n_sb, so an isin on the bucket's
-    shards prunes row groups via parquet statistics. ``predicate`` (a
-    docs-dimension conjunction, see index.predicate; empty = no filter)
-    and ``doc_ids`` push down the same way. ``columns``: the wanted
-    columns; ones the segment lacks are left out, ``doc_id`` is always
-    read, None = all. Rows come sorted by doc_id.
+    shards prunes row groups via parquet statistics. A bucket read is
+    served by the request scope (see ``ReadScope``): one read of the
+    segment for the scope's sbs of it, split by ``shard % n_sb``;
+    ``doc_ids`` reads are not shared. ``predicate`` (a docs-dimension
+    conjunction, see index.predicate; empty = no filter) and ``doc_ids``
+    push down the same way. ``columns``: the wanted columns; ones the
+    segment lacks are left out, ``doc_id`` is always read, None = all.
+    Rows come sorted by doc_id.
 
     ``allowed``: the sorted u64 doc ids of the rows when a predicate
     filtered them, else None — the set the bucket scorers apply before
@@ -475,19 +572,12 @@ def read_docs(
     from .predicate import to_arrow
 
     filtered = bool(predicate)
-    data = ds.dataset(
-        os.path.join(index_dir, "segments", seg_id, "docs"),
-        format="parquet",
-        partitioning="hive",
-    )
+    sb = 0 if bucket is None else bucket[0]
+    scope = _scope(seg_id, sb)
+    data = scope.dataset(index_dir, seg_id, "docs")
     parts = []
     if filtered:
         parts.append(to_arrow(list(predicate)))
-    if bucket is not None:
-        sb, n_shards, n_sb = bucket
-        parts.append(
-            ds.field("shard").isin([s for s in range(n_shards) if s % n_sb == sb])
-        )
     if doc_ids is not None:
         parts.append(
             ds.field("doc_id").isin(np.asarray(doc_ids, dtype=np.int64).tolist())
@@ -499,9 +589,32 @@ def read_docs(
     if cols is not None:
         names = data.schema.names
         cols = [c for c in dict.fromkeys(["doc_id", *cols]) if c in names]
-    tbl = data.to_table(filter=flt, columns=cols)
-    if tbl.num_rows > 1:
-        tbl = tbl.sort_by("doc_id")
+
+    def scan(sbs):
+        f, read_cols = flt, cols
+        if bucket is not None:
+            _, n_shards, n_sb = bucket
+            e = ds.field("shard").isin(
+                [s for s in range(n_shards) for sb in sbs if s % n_sb == sb]
+            )
+            f = e if f is None else f & e
+            if read_cols is not None and "shard" not in read_cols:
+                read_cols = [*read_cols, "shard"]
+        tbl = data.to_table(filter=f, columns=read_cols)
+        if tbl.num_rows > 1:
+            tbl = tbl.sort_by("doc_id")
+        if bucket is None:
+            return {sb: tbl}
+        got = _split(tbl, tbl.column("shard").to_numpy() % n_sb, sbs)
+        if read_cols is not cols:
+            got = {s: t.select(cols) for s, t in got.items()}
+        return got
+
+    key = None
+    if bucket is not None and doc_ids is None:
+        key = (index_dir, seg_id, "docs", bucket[1:],
+               None if cols is None else tuple(cols), repr(predicate or None))
+    tbl = scope.take(key, seg_id, sb, scan)
     if not filtered:
         return tbl, None
     return tbl, np.sort(doc_id_to_u64(tbl["doc_id"].to_numpy()))

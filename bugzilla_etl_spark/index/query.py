@@ -2,11 +2,14 @@
 
 Lifecycle (SURVEY.md §3.4): tokenize the query with the SAME analyzer
 used at build -> driver-side term-dictionary lookup (pyarrow read with
-term predicate pushdown, no Spark job) -> ONE Spark fan-out job, one
-Python task per (segment, shard-bucket): each task reads its bucket's
-posting files directly with pyarrow (directory pruning on ``sb``,
-row-group pruning on ``term`` via parquet statistics), decodes each
-query term's lists once, scores every query with a bounded top-k heap
+term predicate pushdown, no Spark job) -> the (segment, shard-bucket)
+work items run on the route the cost model picks (``route``): in the
+driver, or in ONE Spark fan-out job of at most ``cores`` Python tasks.
+Either way the items of the request (or of the task) share one
+``postings.ReadScope``: each segment's posting files are read once with
+pyarrow (directory pruning on ``sb``, row-group pruning on ``term`` via
+parquet statistics) and split by sb. Each item decodes each query
+term's lists once, scores every query with a bounded top-k heap
 (block-max MaxScore, exact) -> k-way merge of per-bucket
 top-ks on the driver -> (doc_id, score) top-k, rank-identical to the
 exhaustive oracle.
@@ -42,6 +45,7 @@ from ..oracle import idf as _idf
 from ..tokenize import py_analyze
 from .manifest import IndexManifest
 from .postings import (
+    ReadScope,
     TermPostings,
     _candidate_dict_dirs,
     exclusion,
@@ -111,12 +115,20 @@ _PD_DTYPE = {"integer": "int32", "long": "int64", "double": "float64",
              "string": "object", "binary": "object"}
 
 
+#: schema json -> its typed empty frame, built once per process
+_EMPTY: dict[str, pd.DataFrame] = {}
+
+
 def _empty_like(schema: T.StructType) -> pd.DataFrame:
-    """The typed empty result of a bucket scorer: build it once per
-    scorer and ``.copy()`` it per empty bucket."""
-    return pd.DataFrame(
-        {f.name: pd.Series(dtype=_PD_DTYPE[f.dataType.typeName()]) for f in schema.fields}
-    )
+    """A copy of the typed empty result of a bucket scorer (the frame is
+    built once per schema); scorers ``.copy()`` it per empty bucket."""
+    key = schema.json()
+    frame = _EMPTY.get(key)
+    if frame is None:
+        frame = _EMPTY[key] = pd.DataFrame(
+            {f.name: pd.Series(dtype=_PD_DTYPE[f.dataType.typeName()]) for f in schema.fields}
+        )
+    return frame.copy()
 
 
 def _merge_topk(
@@ -129,14 +141,16 @@ def _merge_topk(
     of a batch, so it stays O(rows log rows) vectorized — never a
     Python loop over rows."""
     if len(pdf):
-        pdf = pdf.sort_values(
-            ["query_id", "score", "doc_id"], ascending=[True, False, True]
-        )
-        for qid, grp in pdf.groupby("query_id", sort=False):
-            k = ks[int(qid)]
-            results[int(qid)] = list(
-                zip(grp["doc_id"].tolist()[:k], grp["score"].tolist()[:k])
-            )
+        qid = pdf["query_id"].to_numpy()
+        doc = pdf["doc_id"].to_numpy()
+        score = pdf["score"].to_numpy()
+        order = np.lexsort((doc, -score, qid))
+        qid, doc, score = qid[order], doc[order], score[order]
+        starts = np.flatnonzero(np.r_[True, qid[1:] != qid[:-1]])
+        for lo, hi in zip(starts.tolist(), [*starts[1:].tolist(), len(qid)]):
+            q = int(qid[lo])
+            hi = min(hi, lo + ks[q])
+            results[q] = list(zip(doc[lo:hi].tolist(), score[lo:hi].tolist()))
     return results
 
 
@@ -193,6 +207,10 @@ def _execute_buckets(
     is a candidate generator bound) at the session's default
     parallelism (see ``route``).
 
+    Both routes run the items of one request (local) or one task
+    (Spark) under one ``postings.ReadScope``, so each segment's
+    postings and docs are scanned once for all of those items.
+
     ``local_workers``: in-driver parallelism, chosen BY THE CALLER from
     what its scorer does. Default 1 = serial: the postings scorers the
     cost gate routes here are Python-object/pyarrow-open overhead, and
@@ -201,32 +219,27 @@ def _execute_buckets(
     4-32). GIL-releasing scorers (the kNN matmul path) pass >1
     (measured: 0.12 s at 8 workers vs 0.40 s serial for an 8-query
     batch — numpy/pyarrow drop the GIL, so threads do scale there).
-    The route model prices the local side serially either way.
+    Pool threads do not inherit the request's context, so a threaded
+    scorer reads each item in a scope of its own (one scan per item, in
+    parallel). The route model prices the local side serially either
+    way.
     """
     if execution not in ("auto", "spark", "local"):
         raise ValueError(f"execution must be auto|spark|local: {execution!r}")
     if execution == "auto":
         execution = route(len(work), est_postings, _cores(spark), c_post_ms=c_post_ms)[0]
     if execution == "local":
-        if local_workers > 1 and len(work) > 1:
+        items = [(w[0], int(w[1])) for w in work]
+        if local_workers > 1 and len(items) > 1:
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(
-                max_workers=min(local_workers, len(work))
+                max_workers=min(local_workers, len(items))
             ) as ex:
-                parts = [
-                    p
-                    for p in ex.map(
-                        lambda w: scorer((w[0], int(w[1])), None), work
-                    )
-                    if len(p)
-                ]
+                parts = [p for p in ex.map(lambda w: scorer(w, None), items) if len(p)]
         else:
-            parts = [
-                p
-                for p in (scorer((w[0], int(w[1])), None) for w in work)
-                if len(p)
-            ]
+            scope = ReadScope(items)
+            parts = [p for p in (scope.run(scorer, w, None) for w in items) if len(p)]
         if parts:
             return pd.concat(parts, ignore_index=True)
         return _empty_like(schema)
@@ -245,20 +258,23 @@ def bucket_tasks_df(spark: SparkSession, work: list[tuple[str, int]], scorer, sc
     local[32]). The items are packed into ``min(len(work), cores)``
     partitions of contiguous index ranges, and each task runs its items
     one after another with the same scorer, so rows (and their order)
-    are those of one task per item. A Python task holds its core for
-    ~250 ms before any work (local[4], 4 vCPU): 16 items in 4 tasks
-    measured 492 ms for a 32-query batch against 1,217 ms in 16 tasks.
+    are those of one task per item; the task's items share one
+    ``postings.ReadScope`` (one scan per segment for all of them). A
+    Python task holds its core for ~250 ms before any work (local[4],
+    4 vCPU): 16 items in 4 tasks measured 492 ms for a 32-query batch
+    against 1,217 ms in 16 tasks.
     Parallelism is pinned by numPartitions — AQE coalescing never sees
     it (there is no exchange). Composable: callers may attach further
     aggregations before collecting (the nested spark-merge paths do)."""
     items = [(w[0], int(w[1])) for w in work]
 
     def gen(batches):
-        for pdf in batches:
-            for i in pdf["id"].tolist():
-                out = scorer(items[int(i)], None)
-                if len(out):
-                    yield out
+        mine = [items[i] for pdf in batches for i in pdf["id"].tolist()]
+        scope = ReadScope(mine)
+        for item in mine:
+            out = scope.run(scorer, item, None)
+            if len(out):
+                yield out
 
     n_tasks = min(len(items), _cores(spark))
     return spark.range(0, len(items), 1, numPartitions=n_tasks).mapInPandas(

@@ -227,3 +227,52 @@ def test_knn_local_and_spark_bit_identical(spark, tmp_path):
         fanout = knn_search_many(spark, d, qs, metric=metric, execution="spark")
         assert all(local[q] for q, _, _ in qs)
         assert local == fanout, metric
+
+
+def test_knn_threaded_local_route_equals_spark(spark, tmp_path, monkeypatch):
+    """kNN's local route scores its items in a thread pool, whose threads
+    do not inherit the request's read scope: each item reads its own
+    docs slice there, while a Spark task shares one read per segment
+    across its items. Both give the same answers, filtered or not, over
+    two segments."""
+    import threading
+
+    import pyarrow.dataset as pads
+
+    from bugzilla_etl_spark.index import incremental_update
+
+    d = str(tmp_path / "idx")
+    i = F.col("id")
+
+    def corpus(lo, hi):
+        return spark.range(lo, hi).select(
+            F.lit("org/r").alias("repo"),
+            F.concat(F.lit("src/f"), i.cast("string")).alias("path"),
+            F.lit("c0").alias("commit"),
+            F.when(i % 3 == 0, "go").otherwise("python").alias("lang"),
+            F.lit("alpha beta").alias("content"),
+            F.array(*[F.cos(i * (j + 2) * 0.11 + j) for j in range(DIM)]).alias("embedding"),
+        )
+
+    build_index(spark, corpus(0, 300), d, n_shards=4, n_tb=2, n_sb=2,
+                doc_attrs=["embedding", "lang"])
+    incremental_update(spark, corpus(300, 450), d)
+    qs = [(q, _vec(100 + q), 10) for q in range(4)]
+    real = pads.dataset
+    reads: list[int] = []
+
+    def spy(path, *a, **k):
+        if str(path).endswith("docs"):
+            reads.append(threading.get_ident())
+        return real(path, *a, **k)
+
+    for pred in (None, [("lang", "==", "go")]):
+        fanout = knn_search_many(spark, d, qs, predicate=pred, execution="spark")
+        monkeypatch.setattr(pads, "dataset", spy)
+        reads.clear()
+        local = knn_search_many(spark, d, qs, predicate=pred, execution="local")
+        monkeypatch.setattr(pads, "dataset", real)
+        assert all(local[q] for q, _, _ in qs)
+        assert local == fanout, pred
+        # 2 segments x 2 sbs, each item in a pool thread with its own scope
+        assert len(reads) == 4 and threading.get_ident() not in reads, reads

@@ -5,6 +5,7 @@ hot-list block decodes."""
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
@@ -240,3 +241,51 @@ def test_single_hot_term_skips_blocks():
     assert [d for d, _ in got] == [d for d, _ in want]
     decoded, total = _decoded(lists, ["hot"])
     assert decoded < total * 0.6, f"decoded {decoded}/{total}"
+
+
+def _merge_topk_reference(pdf, ks):
+    """The pandas sort + groupby driver merge ``_merge_topk`` replaced."""
+    out = {}
+    pdf = pdf.sort_values(["query_id", "score", "doc_id"], ascending=[True, False, True])
+    for qid, grp in pdf.groupby("query_id", sort=False):
+        k = ks[int(qid)]
+        out[int(qid)] = list(zip(grp["doc_id"].tolist()[:k], grp["score"].tolist()[:k]))
+    return out
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.integers(0, 4),
+            st.integers(-(2**62), 2**62),
+            st.sampled_from([0.0, -0.0, 1.5, 2.25, -3.0, 7.125]),
+        ),
+        max_size=60,
+        unique_by=lambda r: (r[0], r[1]),
+    ),
+    k=st.integers(1, 8),
+)
+def test_merge_topk_equals_pandas_reference(rows, k):
+    """Ties on score (including 0.0 vs -0.0) break by doc_id ascending,
+    each query keeps its first k rows, and values keep their types."""
+    pdf = q._empty_like(q.RESULT_SCHEMA)
+    if rows:
+        pdf = pd.DataFrame(rows, columns=["query_id", "doc_id", "score"]).astype(
+            pdf.dtypes.to_dict()
+        )
+    ks = {qid: k + qid for qid in range(5)}
+    got = q._merge_topk(pdf, ks, {})
+    want = _merge_topk_reference(pdf, ks)
+    assert got == want
+    assert [type(x) for r in got.values() for p in r for x in p] == [
+        type(x) for r in want.values() for p in r for x in p
+    ]
+
+
+def test_empty_like_hands_out_fresh_typed_copies():
+    a, b = q._empty_like(q.RESULT_SCHEMA), q._empty_like(q.RESULT_SCHEMA)
+    assert a is not b
+    assert a.dtypes.astype(str).tolist() == ["int32", "int64", "float64"]
+    a["query_id"] = a["query_id"].astype("int64")
+    assert b.dtypes.astype(str).tolist() == ["int32", "int64", "float64"]
