@@ -28,10 +28,15 @@ k-way merges (buckets are doc-disjoint). Requests the route cost model
 predicts cheaper in the driver take the driver-local path
 (query._execute_buckets) unchanged.
 
-Single-clause queries DELEGATE to the tuned specialized executors
-(MaxScore pruning for plain OR; the conjunctive/msm scorer; the
-phrase scorer) — the grouped scorer here only runs when composition
-genuinely requires it, so the pruned fast paths never regress.
+This grouped executor (``_grouped_search`` -> _make_grouped_bucket_scorer
+-> _gate_survivors + _score_survivors) is the ONE scorer of gated
+requests: the gated ``search_many`` (operator="and", min_should_match,
+should), ``phrase_search_many`` and ``multi_match_search_many`` lower
+their requests to its specs, so a gated query gets the same bits from
+every entry, page and aggregation. The only delegation left is a
+plain-OR single match clause without should terms, which runs
+search_many's block-max MaxScore scorer (a pruning algorithm whose sums
+equal the grouped executor's bit for bit).
 """
 
 from __future__ import annotations
@@ -48,7 +53,7 @@ from ..codec import doc_id_to_u64, u64_to_doc_id
 from ..oracle import idf as _idf
 from ..tokenize import py_analyze
 from .manifest import IndexManifest
-from .postings import exclusion, read_allowed, read_bucket, read_docs, read_field
+from .postings import exclusion, read_allowed, read_bucket, read_docs
 from .predicate import validate_filter
 from .query import (
     C_CAND_MS,
@@ -60,7 +65,7 @@ from .query import (
     _execute_buckets,
     _lookup_terms,
     _phrase_survivors,
-    phrase_search_many,
+    _unordered_survivors,
     route,
     search_many,
 )
@@ -298,8 +303,7 @@ class Bool:
 
     def has_boosts(self) -> bool:
         """True when ANY non-default weight is set — such queries never
-        take the single-clause delegation fast paths (the specialized
-        executors score unweighted)."""
+        take the plain-OR MaxScore delegation (it scores unweighted)."""
         return (
             any(x != 1.0 for x in
                 self.must_boosts + self.phrase_boosts + self.mm_boosts)
@@ -421,147 +425,163 @@ def _gate_survivors(
 
     Candidates come from the cheapest clause's generator (match-AND /
     phrase: rarest term; match-OR msm=m: union of the (n-m+1) rarest
-    lists); every other clause verifies by membership probes that
-    lazily decode only candidate blocks. Shared by the ranked executor
-    (_make_grouped_bucket_scorer) and the aggregation executor
-    (aggs.py) — facets run over exactly the set a search would rank."""
+    lists; multi_match: the union of every live field's generator).
+    Every other clause verifies by membership probes that lazily decode
+    only candidate blocks; a clause whose terms are all required (AND,
+    phrase) intersects progressively from its rarest term, so later
+    probes see fewer candidates. The generator clause verifies only
+    what its generator left open (nothing for an OR or an all-``need=1``
+    multi_match clause; the other terms of an AND/phrase clause).
+    must_not/tombstone exclusion runs before the position checks.
+    Phrase clauses position-verify with ``spec["ordered"]`` (default
+    True; False = Lucene's unordered sloppy match) and carry Lucene's
+    sloppy weights as ``ptf`` when ``spec["scoring"]`` is
+    ``sloppy_freq``. Shared by the ranked executor
+    (_make_grouped_bucket_scorer), the aggregation executor (aggs.py)
+    and the export — facets and exports run over exactly the set a
+    search would rank."""
     match_cs, phrase_cs = spec["match"], spec["phrase"]
     mm_cs = spec.get("mm") or []
     mm_terms = mm_terms or {}
-    if match_cs or phrase_cs or mm_cs:
-        # clause generators, cheapest first (bucket-local df)
-        def gen_cost(c, kind):
-            ts = c[0] if kind == "m" else sorted(set(c[0]))
-            present = [t for t in ts if t in terms]
-            if kind == "p":
-                if len(present) < len(set(c[0])):
-                    return -1  # unmatchable in this bucket
-                return min(terms[t].n_postings for t in present)
-            need = c[1]
+    if not (match_cs or phrase_cs or mm_cs):
+        # match_all: the docs-dimension slice IS the candidate set
+        docs_i64 = docs_ids_i64
+        if excl.size:
+            docs_i64 = docs_i64[~np.isin(docs_i64, excl)]
+        if not len(docs_i64):
+            return None
+        return None, docs_i64, []
+
+    def rarest(ts):
+        return sorted(ts, key=lambda t: terms[t].n_postings)
+
+    # clause generators, cheapest first (bucket-local df)
+    def gen_cost(c, kind):
+        ts = c[0] if kind == "m" else sorted(set(c[0]))
+        present = [t for t in ts if t in terms]
+        if kind == "p":
+            if len(present) < len(set(c[0])):
+                return -1  # unmatchable in this bucket
+            return min(terms[t].n_postings for t in present)
+        need = c[1]
+        if len(present) < need:
+            return -1
+        sizes = sorted(terms[t].n_postings for t in present)
+        return sum(sizes[: len(present) - need + 1])
+
+    def mm_field_gens(per_field):
+        """[(generator (field, term) pairs, cost)] per LIVE field of
+        one mm clause — a field whose bucket-present terms cannot
+        reach its min_match drops out (the clause can still gate
+        via another field)."""
+        out = []
+        for f, ts, need in per_field:
+            present = [t for t in ts if (f, t) in mm_terms]
             if len(present) < need:
-                return -1
-            sizes = sorted(terms[t].n_postings for t in present)
-            return sum(sizes[: len(present) - need + 1])
+                continue
+            by_rarity = sorted(
+                present, key=lambda t: mm_terms[(f, t)].n_postings
+            )
+            gens = [(f, t) for t in by_rarity[: len(present) - need + 1]]
+            out.append((gens, sum(mm_terms[p].n_postings for p in gens)))
+        return out
 
-        def mm_field_gens(per_field):
-            """[(generator (field, term) pairs, cost)] per LIVE field of
-            one mm clause — a field whose bucket-present terms cannot
-            reach its min_match drops out (the clause can still gate
-            via another field)."""
-            out = []
-            for f, ts, need in per_field:
-                present = [t for t in ts if (f, t) in mm_terms]
-                if len(present) < need:
-                    continue
-                by_rarity = sorted(
-                    present, key=lambda t: mm_terms[(f, t)].n_postings
-                )
-                gens = [(f, t) for t in by_rarity[: len(present) - need + 1]]
-                out.append(
-                    (gens, sum(mm_terms[p].n_postings for p in gens))
-                )
-            return out
+    def mm_cost(per_field):
+        live = mm_field_gens(per_field)
+        if not live:
+            return -1  # no field can match in this bucket
+        return sum(cost for _, cost in live)
 
-        def mm_cost(per_field):
-            live = mm_field_gens(per_field)
-            if not live:
-                return -1  # no field can match in this bucket
-            return sum(cost for _, cost in live)
-
-        costs = [
-            ("m", i, gen_cost(c, "m")) for i, c in enumerate(match_cs)
-        ] + [
-            ("p", i, gen_cost(c, "p")) for i, c in enumerate(phrase_cs)
-        ] + [
-            ("x", i, mm_cost(c)) for i, c in enumerate(mm_cs)
+    costs = [
+        ("m", i, gen_cost(c, "m")) for i, c in enumerate(match_cs)
+    ] + [
+        ("p", i, gen_cost(c, "p")) for i, c in enumerate(phrase_cs)
+    ] + [
+        ("x", i, mm_cost(c)) for i, c in enumerate(mm_cs)
+    ]
+    if any(cost < 0 for _, _, cost in costs):
+        return None  # some clause cannot match in this bucket
+    kind0, i0, _ = min(costs, key=lambda x: x[2])
+    if kind0 == "m":
+        ts, need = match_cs[i0]
+        present = rarest([t for t in ts if t in terms])
+        gen_docs = [terms[t].all_docs() for t in present[: len(present) - need + 1]]
+    elif kind0 == "p":
+        gen_docs = [terms[rarest(sorted(set(phrase_cs[i0][0])))[0]].all_docs()]
+    else:  # mm clause: union over every live field's generator set
+        gen_docs = [
+            mm_terms[p].all_docs()
+            for field_gens, _ in mm_field_gens(mm_cs[i0])
+            for p in field_gens
         ]
-        if any(cost < 0 for _, _, cost in costs):
-            return None  # some clause cannot match in this bucket
-        kind0, i0, _ = min(costs, key=lambda x: x[2])
-        if kind0 == "m":
-            ts, need = match_cs[i0]
-            present = [t for t in ts if t in terms]
-            by_rarity = sorted(present, key=lambda t: terms[t].n_postings)
-            gens = by_rarity[: len(present) - need + 1]
-            gen_docs = [terms[t].all_docs() for t in gens]
-        elif kind0 == "p":
-            seq, _sl = phrase_cs[i0]
-            uniq = sorted(set(seq))
-            gens = [min(uniq, key=lambda t: terms[t].n_postings)]
-            gen_docs = [terms[t].all_docs() for t in gens]
-        else:  # mm clause: union over every live field's generator set
-            gen_docs = [
-                mm_terms[p].all_docs()
-                for field_gens, _ in mm_field_gens(mm_cs[i0])
-                for p in field_gens
-            ]
-        cand = np.unique(np.concatenate(gen_docs))
-        if allowed is not None:
-            cand = cand[_allowed_mask(cand, allowed)]
-        # ---- verify every clause by membership counting
-        for ts, need in match_cs:
+    # one list is already sorted and unique (a doc posts once per term)
+    cand = gen_docs[0] if len(gen_docs) == 1 else np.unique(np.concatenate(gen_docs))
+    if allowed is not None:
+        cand = cand[_allowed_mask(cand, allowed)]
+
+    def intersect(cand, ts):
+        for t in ts:
             if not len(cand):
                 break
-            cnt = np.zeros(len(cand), dtype=np.int32)
-            for t in ts:
-                if t in terms:
-                    mask, _ = terms[t].imp_at(cand)
-                    cnt += mask
-            cand = cand[cnt >= need]
-        for per_field in mm_cs:
-            if not len(cand):
-                break
-            ok = np.zeros(len(cand), dtype=bool)
-            for f, ts, need in per_field:
-                present = [t for t in ts if (f, t) in mm_terms]
-                if len(present) < need:
-                    continue
-                cnt = np.zeros(len(cand), dtype=np.int32)
-                for t in present:
-                    mask, _ = mm_terms[(f, t)].imp_at(cand)
-                    cnt += mask
-                ok |= cnt >= need
-            cand = cand[ok]
-        for seq, _sl in phrase_cs:
-            if not len(cand):
-                break
-            for t in sorted(set(seq)):
-                if not len(cand):
-                    break
-                mask, _ = terms[t].imp_at(cand)
-                cand = cand[mask]
+            cand = cand[terms[t].imp_at(cand)[0]]
+        return cand
+
+    # ---- verify every clause by membership
+    for i, (ts, need) in enumerate(match_cs):
         if not len(cand):
             return None
-        # ---- position-verify phrase clauses (cheapest last)
-        ptfs = []  # per phrase clause: (ptf, dl) over cand
-        dead = np.zeros(len(cand), dtype=bool)
+        present = rarest([t for t in ts if t in terms])
+        is_gen = kind0 == "m" and i == i0
+        if need >= len(present):
+            # every bucket-present term is required: intersect rarest
+            # first (the generator's rarest term is already applied)
+            cand = intersect(cand, present[1:] if is_gen else present)
+        elif not (is_gen and need == 1):
+            cnt = np.zeros(len(cand), dtype=np.int32)
+            for t in present:
+                cnt += terms[t].imp_at(cand)[0]
+            cand = cand[cnt >= need]
+    for i, per_field in enumerate(mm_cs):
+        if not len(cand):
+            return None
+        if kind0 == "x" and i == i0 and all(
+            need == 1 for _f, _ts, need in per_field
+        ):
+            continue  # the generator union holds one hit of a live field
+        ok = np.zeros(len(cand), dtype=bool)
+        for f, ts, need in per_field:
+            present = [t for t in ts if (f, t) in mm_terms]
+            if len(present) < need:
+                continue
+            cnt = np.zeros(len(cand), dtype=np.int32)
+            for t in present:
+                cnt += mm_terms[(f, t)].imp_at(cand)[0]
+            ok |= cnt >= need
+        cand = cand[ok]
+    for i, (seq, _sl) in enumerate(phrase_cs):
+        present = rarest(sorted(set(seq)))
+        cand = intersect(cand, present[1:] if kind0 == "p" and i == i0 else present)
+    if excl.size and len(cand):
+        cand = cand[~np.isin(u64_to_doc_id(cand), excl)]
+    if not len(cand):
+        return None
+    # ---- position-verify phrase clauses
+    ptfs = []  # per phrase clause: (ptf, dl) over cand
+    if phrase_cs:
+        verify = _phrase_survivors if spec.get("ordered", True) else _unordered_survivors
+        weighted = spec.get("scoring") == "sloppy_freq"
+        keep = np.ones(len(cand), dtype=bool)
         for seq, sl in phrase_cs:
-            midx, ptf, dl_c = _phrase_survivors(terms, seq, cand, sl)
+            midx, ptf, dl_c = verify(terms, seq, cand, sl, weighted)
             ok = np.zeros(len(cand), dtype=bool)
             ok[midx] = True
-            dead |= ~ok
+            keep &= ok
             ptfs.append((ptf, dl_c))
-        if phrase_cs:
-            keep = ~dead
-            cand = cand[keep]
-            ptfs = [(p[keep], d[keep]) for p, d in ptfs]
+        cand = cand[keep]
+        ptfs = [(p[keep], d[keep]) for p, d in ptfs]
         if not len(cand):
             return None
-        docs_i64 = u64_to_doc_id(cand)
-        if excl.size:
-            keep = ~np.isin(docs_i64, excl)
-            cand, docs_i64 = cand[keep], docs_i64[keep]
-            ptfs = [(p[keep], d[keep]) for p, d in ptfs]
-        if not len(cand):
-            return None
-        return cand, docs_i64, ptfs
-    # match_all: the docs-dimension slice IS the candidate set
-    docs_i64 = docs_ids_i64
-    if excl.size:
-        docs_i64 = docs_i64[~np.isin(docs_i64, excl)]
-    if not len(docs_i64):
-        return None
-    return None, docs_i64, []
+    return cand, u64_to_doc_id(cand), ptfs
 
 
 def _score_survivors(
@@ -576,14 +596,33 @@ def _score_survivors(
     b: float,
     avgdl: float,
 ) -> np.ndarray:
-    """BM25 clause-sum over one bucket's gate survivors — the single
-    scoring implementation shared by the ranked bool executor and the
-    ``top_hits`` aggregation (aggs.py), so hit scores can never drift
-    from search scores. Clause-by-clause, terms sorted within clause ->
-    deterministic float sums; a term in two clauses counts twice (each
-    ES clause is scored independently). Clause weights (ES ``boost``)
-    multiply their clause's contribution; default-weight clauses keep
-    the exact legacy accumulation order (bit-identical scores)."""
+    """BM25 clause-sum over one bucket's gate survivors — the one
+    scoring implementation of every gated request: the ranked grouped
+    executor (bool_search_many and the search_many AND/msm,
+    phrase_search_many and multi_match_search_many entries lowered onto
+    it), the ``top_hits`` aggregation (aggs.py) and the export, so no
+    two of them can drift by a bit.
+
+    Accumulation order (one float sum per doc, left to right, starting
+    from 0.0): the match clauses in clause order, each its terms in
+    sorted order; then the phrase clauses in clause order; then the
+    should terms, sorted; then the multi_match clauses in clause order.
+    A term in two clauses counts twice (each ES clause is scored
+    independently — a should term that is also a must term adds its
+    contribution again). A clause weight (ES ``boost``) multiplies its
+    clause's own sorted-order sum before that sum joins the total;
+    default-weight clauses add term by term.
+
+    Phrase scoring: "gate" adds the constituent terms' contributions
+    (sorted unique terms); "phrase_freq" and "sloppy_freq" score
+    ``idf_seq * (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * dl / avgdl))``
+    evaluated left to right, with ``idf_seq`` the phrase terms' summed
+    idf (duplicates counted) and ``tf`` the occurrence count
+    (phrase_freq) or the summed Lucene sloppy weights (sloppy_freq, see
+    _gate_survivors). multi_match: per field, the sorted terms' sum
+    (zeroed where the field misses its min_match), combined over the
+    fields in ``mm_fields`` order — max (best_fields, plus
+    ``tie_breaker`` * the rest) or sum (most_fields)."""
     match_bs = spec.get("match_bs") or [1.0] * len(spec["match"])
     phrase_bs = spec.get("phrase_bs") or [1.0] * len(spec["phrase"])
     mm_bs = spec.get("mm_bs") or [1.0] * len(spec.get("mm") or ())
@@ -605,7 +644,7 @@ def _score_survivors(
                     acc += imp
             total += bst * acc
     for (seq, _sl), (ptf, dl_c), bst in zip(spec["phrase"], ptfs, phrase_bs):
-        if spec.get("scoring", "gate") == "phrase_freq":
+        if spec.get("scoring", "gate") in ("phrase_freq", "sloppy_freq"):
             idf_seq = float(sum(idfs[t] for t in seq))
             tfm = ptf
             sc = np.where(
@@ -648,12 +687,16 @@ def _score_survivors(
             if len(present) < need:
                 continue
             acc = np.zeros(len(cand), dtype=np.float64)
-            cnt = np.zeros(len(cand), dtype=np.int32)
+            # a doc without any of the terms sums to 0.0 already, so
+            # only a min_match above 1 needs the count
+            cnt = np.zeros(len(cand), dtype=np.int32) if need > 1 else None
             for t in present:  # sorted -> deterministic sums
-                acc_mask, imp = mm_terms[(f, t)].imp_at(cand)
+                mask, imp = mm_terms[(f, t)].imp_at(cand)
                 acc += imp
-                cnt += acc_mask
-            acc[cnt < need] = 0.0
+                if cnt is not None:
+                    cnt += mask
+            if cnt is not None:
+                acc[cnt < need] = 0.0
             accs.append(acc)
         if not accs:
             continue
@@ -848,11 +891,15 @@ def _make_grouped_bucket_scorer(
 ):
     """One work item = (segment, sb). Each query's spec:
     {"match": [(terms, need)], "phrase": [(seq, slop)],
-     "scoring": "gate"|"phrase_freq", "k": int, "after": (key, doc_id)|None}.
+     "mm": [[(field, terms, need)]], "neg": [term], "neg_pairs":
+     [(field, term)], "boost": [term], "scoring":
+     "gate"|"phrase_freq"|"sloppy_freq", "ordered": bool, "k": int,
+     "after": (key, doc_id)|None} plus bool's weights and functions.
 
     Gate semantics: every match clause satisfied (>= need of its terms
     present) AND every phrase clause position-verified; minus filter /
-    must_not / tombstones. Rank: BM25 clause-sum (sort_attr None) or
+    must_not (``neg`` in ``fld``, ``neg_pairs`` in any field) /
+    tombstones. Rank: BM25 clause-sum (sort_attr None) or
     the docs-dimension attribute (stable (key, doc_id) tiebreak,
     search_after cursor applied BEFORE the per-bucket cut so deep pages
     stay k-bounded).
@@ -871,6 +918,18 @@ def _make_grouped_bucket_scorer(
         {t for q in queries.values() for ts, _ in q["match"] for t in ts}
         | set(pos_terms) | set(neg_terms) | set(boost_terms)
     )
+    # ONE postings read per item serves the field's terms, the
+    # multi_match (field, term) pairs and the must_not pairs
+    want: dict[str, set] = {fld: set(gate_terms)} if gate_terms else {}
+    for f, ts in (mm_want or {}).items():
+        want.setdefault(f, set()).update(ts)
+    for q in queries.values():
+        for f, t in q.get("neg_pairs") or ():
+            want.setdefault(f, set()).add(t)
+    want = {f: sorted(ts) for f, ts in want.items()}
+    pair_idfs = {**(idfs_pairs or {}), **{(fld, t): w for t, w in idfs.items()}}
+    pair_avgdls = {**(avgdls or {}), fld: avgdl}
+    pos_pairs = frozenset((fld, t) for t in pos_terms)
     fn_cols = sorted({
         c
         for q in queries.values()
@@ -887,7 +946,8 @@ def _make_grouped_bucket_scorer(
         or bool(fn_cols)
         or any(q.get("functions") for q in queries.values())
         or any(
-            not q["match"] and not q["phrase"] for q in queries.values()
+            not q["match"] and not q["phrase"] and not q.get("mm")
+            for q in queries.values()
         )
     )
 
@@ -914,16 +974,13 @@ def _make_grouped_bucket_scorer(
             allowed = read_allowed(index_dir, seg_id, predicate, bucket)
         if allowed is not None and not len(allowed):
             return empty.copy()
-        terms = read_field(
-            index_dir, seg_id, sb, fld, gate_terms, idfs, avgdl, k1, b,
-            positions=pos_terms,
+        lists = read_bucket(
+            index_dir, seg_id, sb, want, pair_idfs, pair_avgdls, k1, b,
+            positions=pos_pairs,
         )
-        if terms is None:  # legacy segment, foreign field
+        if lists is None:  # legacy segment, foreign fields
             return empty.copy()
-        mm_terms = read_bucket(
-            index_dir, seg_id, sb, mm_want or {}, idfs_pairs or {},
-            avgdls or {}, k1, b,
-        ) or {}
+        terms = {t: tp for (f, t), tp in lists.items() if f == fld}
 
         # must_not exclusion sets are PER QUERY (each query's `neg` is
         # its own filter context — batching must never leak one query's
@@ -931,10 +988,13 @@ def _make_grouped_bucket_scorer(
         # batches usually share one
         excl_cache: dict[tuple, np.ndarray] = {}
 
-        def excl_for(neg: tuple) -> np.ndarray:
+        def excl_for(spec: dict) -> np.ndarray:
+            neg = tuple((fld, t) for t in spec.get("neg") or ()) + tuple(
+                spec.get("neg_pairs") or ()
+            )
             got = excl_cache.get(neg)
             if got is None:
-                got = excl_cache[neg] = exclusion(terms, neg, tombstones)
+                got = excl_cache[neg] = exclusion(lists, neg, tombstones)
             return got
 
         # function_score value vectors over the docs slice, cached by
@@ -948,12 +1008,14 @@ def _make_grouped_bucket_scorer(
             return got
 
         out_frames = []
+        # score-ranked rows (no sort, no collapse): every query's rows
+        # go out as one typed frame — per-query frames and the dtype
+        # pass below cost more than the scoring of a selective item
+        ranked: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = []
         for qid, spec in queries.items():
             k, after = spec["k"], spec["after"]
             surv = _gate_survivors(
-                spec, terms, allowed,
-                excl_for(tuple(spec.get("neg") or ())),
-                docs_ids_i64, mm_terms,
+                spec, terms, allowed, excl_for(spec), docs_ids_i64, lists,
             )
             if surv is None:
                 continue
@@ -966,7 +1028,7 @@ def _make_grouped_bucket_scorer(
                 if cand is None:
                     cand = doc_id_to_u64(docs_i64)
                 total = _score_survivors(
-                    spec, terms, mm_terms, idfs,
+                    spec, terms, lists, idfs,
                     list(spec.get("boost") or ()),  # per-query should set
                     cand, ptfs, k1, b, avgdl,
                 )
@@ -987,17 +1049,10 @@ def _make_grouped_bucket_scorer(
                     docs_i64, total = docs_i64[keep], total[keep]
                 if collapse_attr is None:
                     order = np.lexsort((docs_i64, -total))[:k]
-                    out_frames.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": np.full(
-                                    len(order), qid, dtype=np.int32
-                                ),
-                                "doc_id": docs_i64[order],
-                                "score": total[order],
-                            }
-                        )
-                    )
+                    ranked.append((
+                        np.full(len(order), qid, dtype=np.int32),
+                        docs_i64[order], total[order],
+                    ))
                 else:
                     # field collapse: per-key best, capped at k keys —
                     # a global top-k group's best doc is its bucket's
@@ -1064,6 +1119,12 @@ def _make_grouped_bucket_scorer(
                 kdf = kdf.head(k)
                 kdf.insert(0, "query_id", np.int32(qid))
                 out_frames.append(kdf)
+        if ranked:  # already the schema's columns and dtypes
+            return pd.DataFrame({
+                "query_id": np.concatenate([r[0] for r in ranked]),
+                "doc_id": np.concatenate([r[1] for r in ranked]),
+                "score": np.concatenate([r[2] for r in ranked]),
+            })
         if not out_frames:
             return empty.copy()
         out = pd.concat(out_frames, ignore_index=True)
@@ -1172,14 +1233,15 @@ def bool_search_many(
     VERBATIM from the previous page (scores recompute bit-identically,
     so the strict float comparison is exact), applied before every
     bucket's k-cut so deep pages stay bounded. Score pagination forces
-    the grouped executor (the specialized fast paths know no cursor). Queries whose Bool has no scored clause and
+    the grouped executor. Queries whose Bool has no scored clause and
     no should terms are ES ``match_all`` + filter: every live doc
     passing the filter, which REQUIRES sort_by (an unordered unbounded
     result set is not a query, it's an export).
 
-    Single-clause score-ranked queries delegate to the specialized
-    pruned executors (search_many / phrase_search_many); composed or
-    attribute-sorted shapes run the grouped executor."""
+    Every query runs the grouped executor (``_grouped_search``), except
+    a batch of plain-OR single match clauses without should terms,
+    weights, cursor, sort or collapse, which runs search_many's
+    MaxScore scorer (bit-equal scores)."""
     index_dir = os.path.abspath(index_dir)
     m = IndexManifest.load(index_dir)
     results: dict[int, list[tuple]] = {int(q[0]): [] for q in queries}
@@ -1300,8 +1362,6 @@ def bool_search_many(
             "phrase": phrase_cs,
             "mm": mm_cs,
             "mm_combine": q.mm_combine,
-            "mm_text": tuple(q.multi_match),
-            "mm_fields": tuple(q.mm_fields),
             "neg": neg,
             "boost": boost,
             "scoring": q.phrase_scoring,
@@ -1324,276 +1384,37 @@ def bool_search_many(
     if not specs:
         return results
 
-    # ---------- delegation: single-clause score-ranked fast paths
-    # (never for weighted queries — the specialized executors score
-    # unweighted; boosted shapes run the grouped executor)
+    # ---------- the one delegation: a plain-OR single match clause runs
+    # search_many's block-max MaxScore scorer (a different algorithm,
+    # bit-equal to the grouped executor's sum)
     if (sort_by is None and collapse is None and search_after is None
-            and _stats_override is None) and all(
-        not q.has_boosts() and not q.negative and not q.functions
-        for _, q, _ in queries
-    ):
-        only_match_single = all(
-            len(s["match"]) == 1 and not s["phrase"] and not s["mm"]
-            for s in specs.values()
-        )
-        only_phrase_single = all(
-            len(s["phrase"]) == 1 and not s["match"] and not s["boost"]
-            and not s["mm"]
-            for s in specs.values()
-        )
-        only_mm_single = all(
-            len(s["mm_text"]) == 1 and not s["match"] and not s["phrase"]
-            and not s["boost"] and not s["neg"]
-            for s in specs.values()
-        )
-        negs = {tuple(s["neg"]) for s in specs.values()}
-        boosts = {tuple(s["boost"]) for s in specs.values()}
-        scorings = {s["scoring"] for s in specs.values()}
-        q0 = queries[0][1]
-        same_shape = (
-            len(negs) == 1
-            and len(boosts) == 1
-            and len({(q.operator, q.min_should_match) for _, q, _ in queries}) == 1
-        )
-        if only_match_single and same_shape:
-            neg, boost = list(negs.pop()), list(boosts.pop())
-            sub = [
-                (qid, specs[qid]["match"][0][0], specs[qid]["k"])
-                for qid in specs
-            ]
-            # a must clause IS a gating clause: should-boosts on a plain
-            # OR must lower to msm=1 (same gate, and the executor that
-            # applies boost contributions)
-            msm = q0.min_should_match
-            if boost and q0.operator == "or" and msm is None:
-                msm = 1
-            out = search_many(
-                spark, index_dir, sub, field=fld, predicate=predicate,
-                execution=execution, must_not=neg or None,
-                operator=q0.operator,
-                min_should_match=msm,
-                should=boost or None,
-            )
-            results.update(out)
-            return results
-        if only_phrase_single and same_shape and len(scorings) == 1:
-            neg = list(negs.pop())
-            slops = {s["phrase"][0][1] for s in specs.values()}
-            if len(slops) == 1:
-                sub = [
-                    (qid, " ".join(specs[qid]["phrase"][0][0]), specs[qid]["k"])
-                    for qid in specs
-                ]
-                out = phrase_search_many(
-                    spark, index_dir, sub, field=fld,
-                    scoring=scorings.pop(), predicate=predicate,
-                    execution=execution, must_not=neg or None,
-                    slop=slops.pop(),
-                )
-                results.update(out)
-                return results
-        mm_shapes = {(s["mm_fields"], s["mm_combine"]) for s in specs.values()}
-        if (
-            only_mm_single
-            and len(mm_shapes) == 1
+            and _stats_override is None
+            and len({tuple(s["neg"]) for s in specs.values()}) == 1
             and all(
-                q.operator == "or" and q.min_should_match is None
+                not q.has_boosts() and not q.negative and not q.functions
                 for _, q, _ in queries
             )
-        ):
-            # a lone multi_match clause IS the standalone executor's
-            # query (its gate — any term in any field — equals
-            # operator="or" per field); delegate to the tuned path
-            from .multimatch import multi_match_search_many
-
-            mm_fields_t, mm_combine = mm_shapes.pop()
-            sub = [
-                (qid, specs[qid]["mm_text"][0], specs[qid]["k"])
-                for qid in specs
-            ]
-            out = multi_match_search_many(
-                spark, index_dir, sub, list(mm_fields_t),
-                combine=mm_combine, predicate=predicate,
-                execution=execution,
-            )
-            results.update(out)
-            return results
-
-    # ---------- grouped executor
-    all_pos = sorted(
-        {t for s in specs.values() for seq, _ in s["phrase"] for t in seq}
-    )
-    if all_pos and fld not in m.positions_fields():
-        raise ValueError(
-            f"field {fld!r} was not built with positions=True; phrase "
-            "clauses need the positional payload"
-        )
-    all_gate = sorted(
-        {t for s in specs.values() for ts, _ in s["match"] for t in ts}
-        | set(all_pos)
-    )
-    neg_all = sorted({t for s in specs.values() for t in s["neg"]})
-    boost_all = sorted(
-        {t for s in specs.values() for t in s["boost"]}
-        | {t for s in specs.values() for t in s["demote"]}
-    )
-    if _stats_override is not None:
-        # cross-index global statistics (ES dfs_query_then_fetch): the
-        # caller pre-summed df/N/sum_dl across every alias member, so
-        # this member scores with the SAME idf/avgdl as a single merged
-        # index would — alias results become rank-identical to the
-        # merged layout. Per-bucket gating is untouched: a term the
-        # override knows but this member lacks is simply
-        # absent-in-every-bucket here.
-        o_dfs = _stats_override["dfs"]
-        n_eff = int(_stats_override["n_docs"])
-        avgdl_eff = float(_stats_override["avgdl"])
-        if any(s["mm"] for s in specs.values()):
-            raise ValueError(
-                "multi_match is not supported with a stats override "
-                "(per-field global spaces are not pre-summed)"
-            )
-        dfs = {t: o_dfs[t] for t in all_gate if o_dfs.get(t)}
-        neg_dfs = {t: o_dfs[t] for t in neg_all if o_dfs.get(t)}
-        boost_dfs = {t: o_dfs[t] for t in boost_all if o_dfs.get(t)}
-    else:
-        n_eff = m.n_docs
-        avgdl_eff = m.field_avgdl(fld)
-        dfs = _lookup_terms(m, index_dir, all_gate, fld) if all_gate else {}
-        neg_dfs = _lookup_terms(m, index_dir, neg_all, fld) if neg_all else {}
-        boost_dfs = (
-            _lookup_terms(m, index_dir, boost_all, fld) if boost_all else {}
-        )
-    idfs = {t: _idf(n_eff, df) for t, df in {**dfs, **boost_dfs}.items()}
-    # cross-field (field, term) dictionary lookup for multi_match
-    # clauses — df/idf/avgdl are PER FIELD (independent BM25 spaces)
-    mm_by_field: dict[str, set] = {}
-    for s in specs.values():
-        for per_field in s["mm"]:
-            for f, ts, _need in per_field:
-                mm_by_field.setdefault(f, set()).update(ts)
-    dfs_pairs: dict[tuple[str, str], int] = {}
-    for f, ts in mm_by_field.items():
-        for t, df in _lookup_terms(m, index_dir, sorted(ts), f).items():
-            dfs_pairs[(f, t)] = df
-    idfs_pairs = {p: _idf(m.n_docs, df) for p, df in dfs_pairs.items()}
-    avgdls = {f: m.field_avgdl(f) for f in mm_by_field}
-
-    # drop queries with an unmatchable clause (a term absent everywhere
-    # kills AND/phrase clauses; an OR clause just loses the term)
-    live: dict[int, dict] = {}
-    est = 0
-    for qid, s in specs.items():
-        ok = True
-        match_cs = []
-        for ts, need in s["match"]:
-            present = [t for t in ts if t in dfs]
-            if len(present) < need:
-                ok = False
-                break
-            match_cs.append((present, need))
-        if not ok:
-            continue
-        phrase_cs = []
-        for seq, sl in s["phrase"]:
-            if not all(t in dfs for t in set(seq)):
-                ok = False
-                break
-            phrase_cs.append((seq, sl))
-        if not ok:
-            continue
-        mm_cs = []
-        for per_field in s["mm"]:
-            eff = []
-            for f, ts, need in per_field:
-                present = [t for t in ts if (f, t) in dfs_pairs]
-                if len(present) >= need:
-                    eff.append((f, present, need))
-            if not eff:
-                ok = False  # no field can satisfy this mm clause
-                break
-            mm_cs.append(eff)
-        if not ok:
-            continue
-        live[qid] = {**s, "match": match_cs, "phrase": phrase_cs, "mm": mm_cs}
-        # plan-time generator estimate: cheapest clause's candidate volume
-        cl_costs = []
-        for ts, need in match_cs:
-            sizes = sorted(dfs[t] for t in ts)
-            cl_costs.append(sum(sizes[: len(ts) - need + 1]))
-        for seq, _sl in phrase_cs:
-            cl_costs.append(min(dfs[t] for t in set(seq)))
-        for per_field in mm_cs:
-            c = 0
-            for f, ts, need in per_field:
-                sizes = sorted(dfs_pairs[(f, t)] for t in ts)
-                c += sum(sizes[: len(ts) - need + 1])
-            cl_costs.append(c)
-        if cl_costs:
-            est += min(cl_costs)
-        else:
-            est += m.n_docs  # match_all: the docs-dimension slice
-    if not live:
-        return results
-    est += sum(neg_dfs.values())
-    est += sum(boost_dfs.values())
-
-    # fan-out: gate terms prune segments via blooms (per field for mm
-    # clauses, unioned); match_all queries must visit every segment
-    has_match_all = any(
-        not s["match"] and not s["phrase"] and not s["mm"]
-        for s in live.values()
-    )
-    if has_match_all or (not all_gate and not dfs_pairs):
-        seg_dirs = list(m.segment_dirs(index_dir))
-    else:
-        by_base: dict[str, str] = {}
-        if all_gate and dfs:
-            for d in _candidate_dict_dirs(m, index_dir, sorted(dfs), fld):
-                by_base[os.path.basename(d)] = d
-        for f in sorted(mm_by_field):
-            terms_f = sorted({t for (ff, t) in dfs_pairs if ff == f})
-            if not terms_f:
-                continue
-            for d in _candidate_dict_dirs(m, index_dir, terms_f, f):
-                by_base[os.path.basename(d)] = d
-        seg_dirs = [by_base[k] for k in sorted(by_base)]
-    work = [
-        (os.path.basename(d), sb) for d in seg_dirs for sb in range(m.n_sb)
-    ]
-    if not work:
+            and all(
+                len(s["match"]) == 1 and s["match"][0][1] == 1
+                and not s["phrase"] and not s["mm"] and not s["boost"]
+                for s in specs.values()
+            )):
+        neg = next(iter(specs.values()))["neg"]
+        sub = [(qid, s["match"][0][0], s["k"]) for qid, s in specs.items()]
+        results.update(search_many(
+            spark, index_dir, sub, field=fld, predicate=predicate,
+            execution=execution, must_not=neg or None,
+        ))
         return results
 
-    if sort_attr is None:
-        schema = RESULT_SCHEMA
-    else:
-        schema = T.StructType(
-            [
-                T.StructField("query_id", T.IntegerType()),
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("key", _sort_key_type(m, sort_attr)),
-            ]
-        )
-    if collapse is not None:
-        schema = T.StructType(
-            list(schema.fields)
-            + [T.StructField("ckey", _sort_key_type(m, collapse))]
-        )
-    mm_want = _mm_want(
-        per_field for s in live.values() for per_field in s["mm"]
+    ran = _grouped_search(
+        spark, m, index_dir, specs, fld, predicate, execution,
+        sort_attr=sort_attr, sort_desc=sort_desc, collapse=collapse,
+        stats_override=_stats_override,
     )
-    scorer = _make_grouped_bucket_scorer(
-        index_dir, live, idfs, avgdl_eff, m.k1, m.b,
-        np.array(sorted(m.tombstones), dtype=np.int64), fld, predicate,
-        m.n_shards, m.n_sb, neg_all, boost_all, sort_attr, sort_desc,
-        schema, mm_want=mm_want or None, idfs_pairs=idfs_pairs,
-        avgdls=avgdls, collapse_attr=collapse,
-    )
-    pdf = _execute_buckets(
-        spark, work, scorer, schema, est, execution, c_post_ms=C_CAND_MS
-    )
-    if not len(pdf):
+    if ran is None:
         return results
+    pdf, live = ran
     if sort_attr is None:
         pdf = pdf.sort_values(
             ["query_id", "score", "doc_id"], ascending=[True, False, True]
@@ -1632,6 +1453,205 @@ def bool_search_many(
             ]
         results[int(qid)] = reps
     return results
+
+
+def _grouped_search(
+    spark: SparkSession,
+    m: IndexManifest,
+    index_dir: str,
+    specs: dict[int, dict],
+    fld: str,
+    predicate: list | None,
+    execution: str,
+    sort_attr: str | None = None,
+    sort_desc: bool = False,
+    collapse: str | None = None,
+    stats_override: dict | None = None,
+    c_post_ms: float = C_CAND_MS,
+    should_in_est: bool = True,
+) -> tuple[pd.DataFrame, dict[int, dict]] | None:
+    """The one driver of gated requests: {qid: analyzed spec} (see
+    _make_grouped_bucket_scorer) -> (the per-bucket rows of every live
+    query, unsorted; the live specs), or None when no query can match
+    or no work item is left.
+
+    bool_search_many and the gated search_many (operator="and" /
+    min_should_match), phrase_search_many and multi_match_search_many
+    entries lower their requests to specs and run here: dictionary
+    lookups (``stats_override``: the alias fan-out's cross-index
+    statistics), dropping queries with an unmatchable clause, the
+    plan-time estimate, bloom-pruned work items, then the grouped
+    scorer over them. The estimate is each live query's cheapest clause
+    generator plus the must_not dfs and, when ``should_in_est``, the
+    should/negative dfs; ``c_post_ms`` is its unit cost (see
+    ``query.route``): the entries keep the route they always had."""
+    all_pos = sorted(
+        {t for s in specs.values() for seq, _ in s["phrase"] for t in seq}
+    )
+    if all_pos and fld not in m.positions_fields():
+        raise ValueError(
+            f"field {fld!r} was not built with positions=True; phrase "
+            "clauses need the positional payload"
+        )
+    all_gate = sorted(
+        {t for s in specs.values() for ts, _ in s["match"] for t in ts}
+        | set(all_pos)
+    )
+    neg_all = sorted({t for s in specs.values() for t in s["neg"]})
+    boost_all = sorted(
+        {t for s in specs.values() for t in s["boost"]}
+        | {t for s in specs.values() for t in s.get("demote") or ()}
+    )
+    if stats_override is not None:
+        # cross-index global statistics (ES dfs_query_then_fetch): the
+        # caller pre-summed df/N/sum_dl across every alias member, so
+        # this member scores with the SAME idf/avgdl as a single merged
+        # index would — alias results become rank-identical to the
+        # merged layout. Per-bucket gating is untouched: a term the
+        # override knows but this member lacks is simply
+        # absent-in-every-bucket here.
+        o_dfs = stats_override["dfs"]
+        n_eff = int(stats_override["n_docs"])
+        avgdl_eff = float(stats_override["avgdl"])
+        if any(s.get("mm") for s in specs.values()):
+            raise ValueError(
+                "multi_match is not supported with a stats override "
+                "(per-field global spaces are not pre-summed)"
+            )
+        dfs = {t: o_dfs[t] for t in all_gate if o_dfs.get(t)}
+        neg_dfs = {t: o_dfs[t] for t in neg_all if o_dfs.get(t)}
+        boost_dfs = {t: o_dfs[t] for t in boost_all if o_dfs.get(t)}
+    else:
+        n_eff = m.n_docs
+        avgdl_eff = m.field_avgdl(fld)
+        dfs = _lookup_terms(m, index_dir, all_gate, fld) if all_gate else {}
+        neg_dfs = _lookup_terms(m, index_dir, neg_all, fld) if neg_all else {}
+        boost_dfs = (
+            _lookup_terms(m, index_dir, boost_all, fld) if boost_all else {}
+        )
+    idfs = {t: _idf(n_eff, df) for t, df in {**dfs, **boost_dfs}.items()}
+    # cross-field (field, term) dictionary lookup for multi_match
+    # clauses and must_not pairs — df/idf/avgdl are PER FIELD
+    # (independent BM25 spaces)
+    mm_by_field: dict[str, set] = {}
+    neg_by_field: dict[str, set] = {}
+    for s in specs.values():
+        for per_field in s.get("mm") or ():
+            for f, ts, _need in per_field:
+                mm_by_field.setdefault(f, set()).update(ts)
+        for f, t in s.get("neg_pairs") or ():
+            neg_by_field.setdefault(f, set()).add(t)
+    dfs_pairs: dict[tuple[str, str], int] = {}
+    for f, ts in mm_by_field.items():
+        for t, df in _lookup_terms(m, index_dir, sorted(ts), f).items():
+            dfs_pairs[(f, t)] = df
+    neg_pair_dfs: dict[tuple[str, str], int] = {}
+    for f, ts in neg_by_field.items():
+        for t, df in _lookup_terms(m, index_dir, sorted(ts), f).items():
+            neg_pair_dfs[(f, t)] = df
+    idfs_pairs = {p: _idf(m.n_docs, df) for p, df in dfs_pairs.items()}
+    avgdls = {f: m.field_avgdl(f) for f in mm_by_field}
+
+    # drop queries with an unmatchable clause (a term absent everywhere
+    # kills AND/phrase clauses; an OR clause just loses the term)
+    live: dict[int, dict] = {}
+    est = 0
+    for qid, s in specs.items():
+        match_cs = [
+            ([t for t in ts if t in dfs], need) for ts, need in s["match"]
+        ]
+        if any(len(ts) < need for ts, need in match_cs):
+            continue
+        if any(t not in dfs for seq, _ in s["phrase"] for t in seq):
+            continue
+        mm_cs = []
+        for per_field in s.get("mm") or ():
+            eff = []
+            for f, ts, need in per_field:
+                present = [t for t in ts if (f, t) in dfs_pairs]
+                if len(present) >= need:
+                    eff.append((f, present, need))
+            if not eff:
+                break  # no field can satisfy this mm clause
+            mm_cs.append(eff)
+        if len(mm_cs) < len(s.get("mm") or ()):
+            continue
+        live[qid] = {**s, "match": match_cs, "mm": mm_cs}
+        # plan-time generator estimate: cheapest clause's candidate volume
+        cl_costs = []
+        for ts, need in match_cs:
+            sizes = sorted(dfs[t] for t in ts)
+            cl_costs.append(sum(sizes[: len(ts) - need + 1]))
+        for seq, _sl in s["phrase"]:
+            cl_costs.append(min(dfs[t] for t in set(seq)))
+        for per_field in mm_cs:
+            c = 0
+            for f, ts, need in per_field:
+                sizes = sorted(dfs_pairs[(f, t)] for t in ts)
+                c += sum(sizes[: len(ts) - need + 1])
+            cl_costs.append(c)
+        est += min(cl_costs) if cl_costs else m.n_docs  # match_all: docs
+    if not live:
+        return None
+    est += sum(neg_dfs.values()) + sum(neg_pair_dfs.values())
+    if should_in_est:
+        est += sum(boost_dfs.values())
+
+    # fan-out: the live queries' gate terms prune segments via blooms
+    # (per field for mm clauses, unioned); match_all queries must visit
+    # every segment
+    if any(not s["match"] and not s["phrase"] and not s["mm"]
+           for s in live.values()):
+        seg_dirs = list(m.segment_dirs(index_dir))
+    else:
+        by_field: dict[str, set] = {}
+        for s in live.values():
+            for ts, _ in s["match"]:
+                by_field.setdefault(fld, set()).update(ts)
+            for seq, _ in s["phrase"]:
+                by_field.setdefault(fld, set()).update(seq)
+            for per_field in s["mm"]:
+                for f, ts, _need in per_field:
+                    by_field.setdefault(f, set()).update(ts)
+        by_base: dict[str, str] = {}
+        for f in sorted(by_field):
+            for d in _candidate_dict_dirs(m, index_dir, sorted(by_field[f]), f):
+                by_base[os.path.basename(d)] = d
+        seg_dirs = [by_base[k] for k in sorted(by_base)]
+    work = [
+        (os.path.basename(d), sb) for d in seg_dirs for sb in range(m.n_sb)
+    ]
+    if not work:
+        return None
+
+    if sort_attr is None:
+        schema = RESULT_SCHEMA
+    else:
+        schema = T.StructType(
+            [
+                T.StructField("query_id", T.IntegerType()),
+                T.StructField("doc_id", T.LongType()),
+                T.StructField("key", _sort_key_type(m, sort_attr)),
+            ]
+        )
+    if collapse is not None:
+        schema = T.StructType(
+            list(schema.fields)
+            + [T.StructField("ckey", _sort_key_type(m, collapse))]
+        )
+    scorer = _make_grouped_bucket_scorer(
+        index_dir, live, idfs, avgdl_eff, m.k1, m.b,
+        np.array(sorted(m.tombstones), dtype=np.int64), fld, predicate,
+        m.n_shards, m.n_sb, neg_all, boost_all, sort_attr, sort_desc,
+        schema, mm_want=_mm_want(
+            per_field for s in live.values() for per_field in s["mm"]
+        ) or None, idfs_pairs=idfs_pairs, avgdls=avgdls,
+        collapse_attr=collapse,
+    )
+    pdf = _execute_buckets(
+        spark, work, scorer, schema, est, execution, c_post_ms=c_post_ms
+    )
+    return (pdf, live) if len(pdf) else None
 
 
 def bool_search(

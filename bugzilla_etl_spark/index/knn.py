@@ -198,15 +198,9 @@ def knn_search_many(
         index_dir, qmap, vector_attr, predicate, metric,
         np.array(sorted(m.tombstones), dtype=np.int64), m.n_shards, m.n_sb,
     )
-    # local_workers=8: the kNN bucket scorer is one pyarrow scan (which
-    # releases the GIL) + one einsum product per bucket, so the in-driver
-    # path scales with threads (8 measured optimal: 0.12 s vs 0.40 s serial
-    # for an 8-query batch at 50k docs; 16/32 workers plateau higher).
-    # The route model prices the scan at C_POST_MS per doc, above what
-    # the threaded scan costs, so it errs toward the fan-out
+    # the route model prices the docs scan at C_POST_MS per doc
     pdf = _execute_buckets(
-        spark, work, scorer, RESULT_SCHEMA, m.n_docs, execution,
-        local_workers=8,
+        spark, work, scorer, RESULT_SCHEMA, m.n_docs, execution
     )
     return _merge_topk(pdf, {q: k for q, (_, k) in qmap.items()}, results)
 

@@ -15,8 +15,9 @@ postings or dictionary: its rows ARE the primary ``content`` field, and
 other fields have nothing there. ``read_bucket`` and ``scan_dict`` are
 the only places that know this.
 
-Every bucket scorer (BM25 MaxScore, phrase, conjunctive/msm, bool,
-multi_match, nested, aggregations, export) reads the same postings: the
+Every bucket scorer (BM25 MaxScore, the grouped gated executor behind
+bool/AND/msm/phrase/multi_match, nested, aggregations, export) reads
+the same postings: the
 block rows of a few (field, term) pairs in one (segment, sb) bucket,
 decoded lazily block by block. ``read_bucket`` is the one place that
 knows the on-disk shape:
@@ -138,6 +139,21 @@ class BlockList:
         ok = (bi >= 0) & (cand <= self.lasts[np.clip(bi, 0, None)])
         return bi, ok
 
+    def groups(self, cand: np.ndarray):
+        """(block index, ascending indices into ``cand``) for every block
+        whose range holds candidates, blocks ascending. One stable sort
+        of the candidates' block ids: O(n log n) in the candidates
+        instead of a full-array mask per block."""
+        bi, ok = self.block_of(cand)
+        idx = np.flatnonzero(ok)
+        if not len(idx):
+            return []
+        b = bi[idx]
+        order = np.argsort(b, kind="stable")
+        idx, b = idx[order], b[order]
+        cut = np.flatnonzero(b[1:] != b[:-1]) + 1
+        return zip(b[np.r_[0, cut]].tolist(), np.split(idx, cut))
+
 
 class TermPostings:
     """All (salt, shard) sub-lists of one (field, term) in one bucket."""
@@ -184,10 +200,8 @@ class TermPostings:
         found = np.zeros(len(cand), dtype=bool)
         imp = np.zeros(len(cand), dtype=np.float64)
         for sl in self.subs.values():
-            bi, ok = sl.block_of(cand)
-            for i in np.unique(bi[ok]):
-                sel = np.flatnonzero(ok & (bi == i))
-                docs, imps, _ = sl.decode(int(i))
+            for i, sel in sl.groups(cand):
+                docs, imps, _ = sl.decode(i)
                 pos = np.clip(np.searchsorted(docs, cand[sel]), 0, len(docs) - 1)
                 hit = docs[pos] == cand[sel]
                 found[sel[hit]] = True
@@ -207,11 +221,9 @@ class TermPostings:
         pos_chunks: list[np.ndarray] = []
         dl_chunks: list[np.ndarray] = []
         for sl in self.subs.values():
-            bi, ok = sl.block_of(cand)
-            for i in np.unique(bi[ok]):
-                sel = np.flatnonzero(ok & (bi == i))
-                docs, _, dl = sl.decode(int(i))
-                pos_flat, off = sl.positions(int(i))
+            for i, sel in sl.groups(cand):
+                docs, _, dl = sl.decode(i)
+                pos_flat, off = sl.positions(i)
                 j = np.searchsorted(docs, cand[sel])
                 inb = j < len(docs)
                 hit = inb & (docs[np.clip(j, 0, len(docs) - 1)] == cand[sel])

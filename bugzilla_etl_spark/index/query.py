@@ -82,8 +82,10 @@ RESULT_SCHEMA = T.StructType(
 #:   aggs and kNN count every document);
 #: - ``C_CAND_MS``: a candidate generator bound, the rarest term or
 #:   cheapest clause, whose candidates the scorer then verifies against
-#:   the other terms' postings, positions or parents (BM25 AND/msm,
-#:   phrase, nested, the grouped bool executor, aggs with a query).
+#:   the other terms' postings, positions or parents: the grouped
+#:   executor's gated requests (bool, and the BM25 AND/msm and phrase
+#:   entries lowered onto it), nested, aggs with a query. multi_match,
+#:   lowered onto the same executor, keeps C_POST_MS and its df sum.
 #:
 #: ``tools/fit_gate.py`` fits C_ITEM_MS, C_POST_MS and WAVE_MS from
 #: traced perfbench ``search`` runs; these are the median of four
@@ -96,7 +98,7 @@ RESULT_SCHEMA = T.StructType(
 #: smallest cost (9.2 us, rounded up) under which none of them runs in
 #: the driver while the fan-out serves it faster. The scored/scanned
 #: kinds measure 0.3-2.4 us per unit: a batch shares term reads across
-#: its queries, match_all aggs and threaded kNN scan docs cheaply, so
+#: its queries, match_all aggs and kNN scan docs cheaply, so
 #: C_POST_MS overprices them, which errs toward the fan-out. At 4 cores
 #: the 8-item cutover is ~330k postings (~97k candidates); at 32 cores
 #: the 16-item one is ~80k (~23k), around the fixed 50k gate the model
@@ -193,7 +195,6 @@ def _execute_buckets(
     schema: T.StructType,
     est_postings: int,
     execution: str = "auto",
-    local_workers: int = 1,
     c_post_ms: float | None = None,
 ) -> pd.DataFrame:
     """Run one bucket scorer over every (segment, sb) work item.
@@ -207,22 +208,10 @@ def _execute_buckets(
     is a candidate generator bound) at the session's default
     parallelism (see ``route``).
 
-    Both routes run the items of one request (local) or one task
-    (Spark) under one ``postings.ReadScope``, so each segment's
-    postings and docs are scanned once for all of those items.
-
-    ``local_workers``: in-driver parallelism, chosen BY THE CALLER from
-    what its scorer does. Default 1 = serial: the postings scorers the
-    cost gate routes here are Python-object/pyarrow-open overhead, and
-    a thread pool is pure GIL thrash (measured on a 16-bucket agg
-    request: 0.28 s/call serial vs 0.58 s/call at every pool width
-    4-32). GIL-releasing scorers (the kNN matmul path) pass >1
-    (measured: 0.12 s at 8 workers vs 0.40 s serial for an 8-query
-    batch — numpy/pyarrow drop the GIL, so threads do scale there).
-    Pool threads do not inherit the request's context, so a threaded
-    scorer reads each item in a scope of its own (one scan per item, in
-    parallel). The route model prices the local side serially either
-    way.
+    Both routes run the items of one request (local, serially in the
+    calling thread) or one task (Spark) under one ``postings.ReadScope``,
+    so each segment's postings and docs are scanned once for all of
+    those items.
     """
     if execution not in ("auto", "spark", "local"):
         raise ValueError(f"execution must be auto|spark|local: {execution!r}")
@@ -230,16 +219,8 @@ def _execute_buckets(
         execution = route(len(work), est_postings, _cores(spark), c_post_ms=c_post_ms)[0]
     if execution == "local":
         items = [(w[0], int(w[1])) for w in work]
-        if local_workers > 1 and len(items) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(
-                max_workers=min(local_workers, len(items))
-            ) as ex:
-                parts = [p for p in ex.map(lambda w: scorer(w, None), items) if len(p)]
-        else:
-            scope = ReadScope(items)
-            parts = [p for p in (scope.run(scorer, w, None) for w in items) if len(p)]
+        scope = ReadScope(items)
+        parts = [p for p in (scope.run(scorer, w, None) for w in items) if len(p)]
         if parts:
             return pd.concat(parts, ignore_index=True)
         return _empty_like(schema)
@@ -668,7 +649,8 @@ def search_many(
     ``should``: ES bool {must, should} score-boosting terms — only
     meaningful with a gating clause (operator="and" or
     min_should_match): matching is unchanged, but a surviving doc
-    containing a should term adds its BM25 contribution.
+    containing a should term adds its BM25 contribution (again, for a
+    term that is also a query term: each ES clause scores on its own).
 
     ``operator``: ES match semantics — "or" (default): any query term
     matches, scored by the matching terms' BM25 sum; "and": EVERY term
@@ -691,7 +673,11 @@ def search_many(
     With ``execution="auto"``, a batch whose predicted driver-local
     cost (work items and the plan-time df sum, see ``route``) is at most
     the fan-out's skips the fan-out and runs the same scorers serially
-    in the driver (see _execute_buckets).
+    in the driver (see _execute_buckets). Plain OR scores with
+    block-max MaxScore; a gated batch (operator="and" or
+    min_should_match) lowers to one match clause per query on the bool
+    grouped executor (boolquery._grouped_search), bit-identical to the
+    same ``Bool`` there, at its rarest-terms estimate (C_CAND_MS).
 
     ``field`` selects a field variant of a multi-field index (the
     reference's per-sub-field querying, bug_version.json:294-303): the
@@ -719,7 +705,7 @@ def search_many(
         # msm=1 normalizes to plain OR (pruned scorers) — EXCEPT when
         # should-boost terms ride on it: an explicitly-passed msm=1 is a
         # valid ES gating clause (ADVICE r5), and the boost contributions
-        # only apply on the conjunctive/msm executor, so keep msm=1 there
+        # only apply on the gated (grouped) executor, so keep msm=1 there
         if int(min_should_match) == 1 and not should:
             min_should_match = None  # plain OR: keep the pruned scorers
     if should and operator != "and" and min_should_match is None:
@@ -731,6 +717,7 @@ def search_many(
     index_dir = os.path.abspath(index_dir)
     m = IndexManifest.load(index_dir)
     validate_filter(m, predicate)
+    gated = operator == "and" or min_should_match is not None
     # the query is analyzed with the FIELD's chain (same-analyzer contract
     # as the reference ES mapping): a shingled field analyzes "hash table"
     # to [hash, table, hash_table] — phrase-ish matching for free
@@ -751,39 +738,42 @@ def search_many(
     neg_raw = sorted(
         {t for q in (must_not or ()) for t in py_analyze(q, chain)}
     )
+    results: dict[int, list[tuple[int, float]]] = {qid: [] for qid in qterms}
+    if gated:
+        from .boolquery import _grouped_search
+
+        boost = sorted({t for q in (should or ()) for t in py_analyze(q, chain)})
+        specs = {
+            qid: {
+                "match": [(terms, len(terms) if operator == "and" else int(min_should_match))],
+                "phrase": [], "neg": neg_raw, "boost": boost, "k": k, "after": None,
+            }
+            for qid, (terms, k) in qterms.items()
+            if terms
+        }
+        # the estimate bounds the candidates: AND = the rarest term;
+        # msm = the (n - m + 1) rarest terms' df sum (the generator
+        # union); should lists decode candidate blocks only
+        ran = _grouped_search(
+            spark, m, index_dir, specs, field, predicate, execution,
+            should_in_est=False,
+        )
+        if ran is not None:
+            pdf, live = ran
+            _merge_topk(pdf, {q: s["k"] for q, s in live.items()}, results)
+        return results
     all_terms = sorted({t for terms, _ in qterms.values() for t in terms})
     dfs = _lookup_terms(m, index_dir, all_terms, field)
-    results: dict[int, list[tuple[int, float]]] = {qid: [] for qid in qterms}
     if not dfs:
         return results
     neg_dfs = _lookup_terms(m, index_dir, neg_raw, field) if neg_raw else {}
     neg_eff = sorted(set(neg_raw) & set(neg_dfs))
-    boost_raw = sorted({t for q in (should or ()) for t in py_analyze(q, chain)})
-    boost_dfs = _lookup_terms(m, index_dir, boost_raw, field) if boost_raw else {}
-    boost_eff = sorted(set(boost_raw) & set(boost_dfs))
-
     idfs = {t: _idf(m.n_docs, df) for t, df in dfs.items()}
-    idfs.update({t: _idf(m.n_docs, df) for t, df in boost_dfs.items()})
-    if operator == "and":
-        # a query with ANY absent term can't match at all
-        q_eff = {
-            qid: (terms, k)
-            for qid, (terms, k) in qterms.items()
-            if terms and all(t in dfs for t in terms)
-        }
-    else:
-        q_eff = {
-            qid: ([t for t in terms if t in dfs], k)
-            for qid, (terms, k) in qterms.items()
-        }
-        q_eff = {qid: v for qid, v in q_eff.items() if v[0]}
-        if min_should_match is not None:
-            # fewer matchable terms than m: nothing can satisfy the gate
-            q_eff = {
-                qid: v
-                for qid, v in q_eff.items()
-                if len(v[0]) >= int(min_should_match)
-            }
+    q_eff = {
+        qid: ([t for t in terms if t in dfs], k)
+        for qid, (terms, k) in qterms.items()
+    }
+    q_eff = {qid: v for qid, v in q_eff.items() if v[0]}
     if not q_eff:
         return results
 
@@ -810,47 +800,26 @@ def search_many(
         return max(1.0, cur_avgdl / float(built)) if built else float("inf")
 
     seg_bound_scale = {s["id"]: _scale(s) for s in m.segments}
-    tomb = np.array(sorted(m.tombstones), dtype=np.int64)
-    c_post = C_POST_MS
-    if operator == "and" or min_should_match is not None:
-        c_post = C_CAND_MS
-        msm_val = None if operator == "and" else int(min_should_match)
-        scorer = _make_conjunctive_bucket_scorer(
-            index_dir, q_eff, idfs, cur_avgdl, m.k1, m.b, tomb, field,
-            predicate, m.n_shards, m.n_sb, neg_eff, msm_val, boost_eff,
-        )
-        # candidate volume: AND = the rarest term; msm = the
-        # (n - m + 1) rarest terms' df sum (the generator union)
-        if msm_val is None:
-            est = sum(min(dfs[t] for t in terms) for terms, _ in q_eff.values())
-        else:
-            est = sum(
-                sum(sorted(dfs[t] for t in terms)[: len(terms) - msm_val + 1])
-                for terms, _ in q_eff.values()
-            )
-    else:
-        scorer = _make_bucket_scorer(
-            index_dir,
-            q_eff,
-            idfs,
-            cur_avgdl,
-            m.k1,
-            m.b,
-            tomb,
-            seg_bound_scale,
-            field,
-            predicate,
-            m.n_shards,
-            m.n_sb,
-            neg_eff,
-        )
-        # should-semantics BM25 scores EVERY posting of every query term:
-        # the batch's work is the per-query df sum
-        est = sum(dfs[t] for terms, _ in q_eff.values() for t in terms)
-    est += sum(neg_dfs[t] for t in neg_eff)
-    pdf = _execute_buckets(
-        spark, work, scorer, RESULT_SCHEMA, est, execution, c_post_ms=c_post
+    scorer = _make_bucket_scorer(
+        index_dir,
+        q_eff,
+        idfs,
+        cur_avgdl,
+        m.k1,
+        m.b,
+        np.array(sorted(m.tombstones), dtype=np.int64),
+        seg_bound_scale,
+        field,
+        predicate,
+        m.n_shards,
+        m.n_sb,
+        neg_eff,
     )
+    # should-semantics BM25 scores EVERY posting of every query term:
+    # the batch's work is the per-query df sum
+    est = sum(dfs[t] for terms, _ in q_eff.values() for t in terms)
+    est += sum(neg_dfs[t] for t in neg_eff)
+    pdf = _execute_buckets(spark, work, scorer, RESULT_SCHEMA, est, execution)
     return _merge_topk(pdf, {q: k for q, (_, k) in qterms.items()}, results)
 
 
@@ -1341,9 +1310,10 @@ def explain_search(
         est = sum(dfs[t] for t in eff)
         path = "should"
     est += sum(neg_dfs.values())
-    # the executor's unit cost: any AND/msm request takes the
-    # conjunctive scorer, whose estimate bounds its candidates
-    c_post = C_CAND_MS if operator == "and" or min_should_match is not None else C_POST_MS
+    # the executor's unit cost: an AND/msm request runs the gated
+    # (grouped) executor, whose estimate bounds its candidates; msm=1
+    # is plain OR (search_many normalizes it away)
+    c_post = C_CAND_MS if path != "should" else C_POST_MS
     execution, local_ms, spark_ms = route(n_work, est, _cores(), c_post_ms=c_post)
     return {
         "field": field,
@@ -1609,243 +1579,6 @@ def _phrase_survivors(
     return np.flatnonzero(ptf > 0), ptf, dl_cand
 
 
-def _make_phrase_bucket_scorer(
-    index_dir: str,
-    queries: dict[int, tuple[list[str], int]],
-    idfs: dict[str, float],
-    avgdl: float,
-    k1: float,
-    b: float,
-    tombstones: np.ndarray,
-    fld: str = "content",
-    scoring: str = "gate",
-    predicate: list | None = None,
-    n_shards: int = 0,
-    n_sb: int = 0,
-    neg_terms: list[str] | None = None,
-    slop: int = 0,
-    ordered: bool = True,
-):
-    """Per-(segment, sb) phrase scorer: intersect candidate docs starting
-    from the RAREST phrase term, verify adjacency from the positional
-    payload, score survivors by the sum of their constituent-term BM25
-    contributions (documented scoring choice: the phrase acts as a match
-    gate, scoring stays the bool-must constituent sum — exactly
-    reproducible by a relational oracle, unlike Lucene's phrase-freq
-    variant), bounded top-k per query.
-
-    Scale shape: only the rarest term's list is fully decoded; every
-    other term (including stopword-class hot terms) lazily decodes ONLY
-    the blocks containing surviving candidates — "the merge" costs
-    O(df(merge)), not O(df(the)).
-
-    ``predicate``: same docs-dimension conjunction as search_many,
-    resolved in-task and applied to the candidate set right after the
-    rarest-term scan — the reference's production shape combines an
-    analyzed match with not_analyzed term filters and the temporal
-    range (bug_version.json:57-65,221-224), so phrase-over-versions-
-    asof needs it too (VERDICT r4 #4).
-
-    ``neg_terms``: must_not exclusion — docs containing any of them are
-    dropped from the candidate set (stats untouched), same semantics as
-    the BM25 scorer's."""
-    neg = sorted(set(neg_terms or ()))
-    all_terms = sorted({t for seq, _ in queries.values() for t in seq} | set(neg))
-    empty = _empty_like(RESULT_SCHEMA)
-
-    def run(key, _pdf):  # (key, pd.DataFrame) -> pd.DataFrame
-        seg_id, sb = key[0], int(key[1])
-        allowed = read_allowed(index_dir, seg_id, predicate, (sb, n_shards, n_sb))
-        if allowed is not None and not len(allowed):
-            return empty.copy()
-        terms = read_field(
-            index_dir, seg_id, sb, fld, all_terms, idfs, avgdl, k1, b,
-            positions=all_terms,
-        )
-        if not terms:
-            return empty.copy()
-        # must_not: negative terms' doc lists fold into the exclusion set
-        excl = exclusion(terms, neg, tombstones)
-
-        out_q, out_d, out_s = [], [], []
-        for qid, (seq, k) in queries.items():
-            uniq = sorted(set(seq))
-            if any(t not in terms for t in uniq):
-                continue
-            # intersect from the rarest term outward: hot terms never
-            # fully decode
-            by_rarity = sorted(uniq, key=lambda t: terms[t].n_postings)
-            cand = terms[by_rarity[0]].all_docs()
-            if allowed is not None:
-                # filter FIRST: later terms only decode blocks holding
-                # surviving candidates, so a selective predicate shrinks
-                # the whole intersection, not just the final heap
-                cand = cand[_allowed_mask(cand, allowed)]
-            for t in by_rarity[1:]:
-                if not len(cand):
-                    break
-                mask, _ = terms[t].imp_at(cand)
-                cand = cand[mask]
-            if not len(cand):
-                continue
-            if excl.size:
-                cand = cand[~np.isin(u64_to_doc_id(cand), excl)]
-            if not len(cand):
-                continue
-            # exact contributions at the surviving candidates (cached
-            # block decodes — no re-work after the intersection pass)
-            total = np.zeros(len(cand), dtype=np.float64)
-            if scoring == "gate":
-                for t in uniq:  # sorted term order -> deterministic sums
-                    _, imp = terms[t].imp_at(cand)
-                    total += imp
-            # Lucene PhraseQuery weight: the summed idf of the phrase's
-            # terms (duplicates counted), applied to the PHRASE frequency
-            idf_seq = float(sum(idfs[t] for t in seq))
-            docs_i64 = u64_to_doc_id(cand)
-            wtd = scoring == "sloppy_freq"
-            if ordered:
-                midx, ptf, dl_cand = _phrase_survivors(terms, seq, cand, slop, wtd)
-            else:
-                midx, ptf, dl_cand = _unordered_survivors(terms, seq, cand, slop, wtd)
-            if not len(midx):
-                continue
-            if scoring in ("phrase_freq", "sloppy_freq"):
-                # ES/Lucene match_phrase scoring: tf = the number of
-                # phrase OCCURRENCES (sloppy_freq: each occurrence
-                # weighted 1/(1+slop consumed) — Lucene's sloppyWeight),
-                # dl/avgdl as usual (dl comes from seq[0]'s gather —
-                # per-doc, term-independent)
-                tfm = ptf[midx]
-                dlm = dl_cand[midx]
-                sc_arr = idf_seq * (
-                    tfm * (k1 + 1.0)
-                    / (tfm + k1 * (1.0 - b + b * dlm / avgdl))
-                )
-            else:
-                sc_arr = total[midx]
-            docs_m = docs_i64[midx]
-            order = np.lexsort((docs_m, -sc_arr))[:k]
-            for oi in order:
-                out_q.append(qid)
-                out_d.append(int(docs_m[oi]))
-                out_s.append(float(sc_arr[oi]))
-        return pd.DataFrame({"query_id": out_q, "doc_id": out_d, "score": out_s})
-
-    return run
-
-
-def _make_conjunctive_bucket_scorer(
-    index_dir: str,
-    queries: dict[int, tuple[list[str], int]],
-    idfs: dict[str, float],
-    avgdl: float,
-    k1: float,
-    b: float,
-    tombstones: np.ndarray,
-    fld: str,
-    predicate: list | None,
-    n_shards: int,
-    n_sb: int,
-    neg_terms: list[str] | None = None,
-    msm: int | None = None,
-    should_terms: list[str] | None = None,
-):
-    """ES ``match`` with ``operator="and"`` (``msm=None``) or
-    ``minimum_should_match`` (``msm=m``): at least m of the query's
-    terms must occur in the doc; scoring stays the constituent-term
-    BM25 sum of the MATCHING terms (identical to the should-semantics
-    score of the same doc — the gate only shrinks the match set).
-
-    Candidate generation is exact and rarest-biased: for AND,
-    intersect outward from the rarest term (hot terms decode only
-    candidate blocks); for msm, a doc with >= m matches must contain at
-    least one of the (n - m + 1) RAREST terms (missing all of them
-    leaves at most m-1 hotter terms), so their lists' union is a
-    complete candidate set — the hottest m-1 terms never fully decode.
-    Per-bucket counting is exact because a doc lives in exactly ONE
-    (segment, sb) bucket (doc-sharded, content-addressed).
-
-    ``should_terms``: ES bool {must, should} — with a gating must/msm
-    clause present, should terms are purely score-BOOSTING: they never
-    affect the match set, but a surviving doc containing one adds its
-    BM25 contribution. Cost: should lists decode only candidate blocks
-    (imp_at), bounded by the gated candidate count."""
-    neg = sorted(set(neg_terms or ()))
-    boost = sorted(set(should_terms or ()))
-    all_terms = sorted(
-        {t for seq, _ in queries.values() for t in seq} | set(neg) | set(boost)
-    )
-    empty = _empty_like(RESULT_SCHEMA)
-
-    def run(key, _pdf):  # (key, pd.DataFrame) -> pd.DataFrame
-        seg_id, sb = key[0], int(key[1])
-        allowed = read_allowed(index_dir, seg_id, predicate, (sb, n_shards, n_sb))
-        if allowed is not None and not len(allowed):
-            return empty.copy()
-        terms = read_field(
-            index_dir, seg_id, sb, fld, all_terms, idfs, avgdl, k1, b
-        )
-        if not terms:
-            return empty.copy()
-        excl = exclusion(terms, neg, tombstones)
-
-        out_q, out_d, out_s = [], [], []
-        for qid, (seq, k) in queries.items():
-            uniq = sorted(set(seq))
-            need = len(uniq) if msm is None else int(msm)
-            buck = [t for t in uniq if t in terms]
-            if need < 1 or len(buck) < need:
-                continue
-            by_rarity = sorted(buck, key=lambda t: terms[t].n_postings)
-            if need == len(uniq):
-                # pure AND: progressive intersection from the rarest
-                cand = terms[by_rarity[0]].all_docs()
-                if allowed is not None:
-                    cand = cand[_allowed_mask(cand, allowed)]
-                for t in by_rarity[1:]:
-                    if not len(cand):
-                        break
-                    mask, _ = terms[t].imp_at(cand)
-                    cand = cand[mask]
-            else:
-                # msm: union the (|buck| - need + 1) rarest lists, then
-                # count memberships over every bucket-present term
-                gens = by_rarity[: len(buck) - need + 1]
-                cand = np.unique(
-                    np.concatenate([terms[t].all_docs() for t in gens])
-                )
-                if allowed is not None:
-                    cand = cand[_allowed_mask(cand, allowed)]
-                if len(cand):
-                    cnt = np.zeros(len(cand), dtype=np.int32)
-                    for t in buck:
-                        mask, _ = terms[t].imp_at(cand)
-                        cnt += mask
-                    cand = cand[cnt >= need]
-            if not len(cand):
-                continue
-            if excl.size:
-                cand = cand[~np.isin(u64_to_doc_id(cand), excl)]
-            if not len(cand):
-                continue
-            total = np.zeros(len(cand), dtype=np.float64)
-            # gate terms + score-boosting should terms (absent-from-doc
-            # contributions are 0); sorted order -> deterministic sums
-            for t in sorted(set(buck) | {x for x in boost if x in terms}):
-                _, imp = terms[t].imp_at(cand)
-                total += imp
-            docs_m = u64_to_doc_id(cand)
-            order = np.lexsort((docs_m, -total))[:k]
-            for oi in order:
-                out_q.append(qid)
-                out_d.append(int(docs_m[oi]))
-                out_s.append(float(total[oi]))
-        return pd.DataFrame({"query_id": out_q, "doc_id": out_d, "score": out_s})
-
-    return run
-
-
 #: phrase queries run against the primary field (positions are recorded
 #: for it alone — build.py pos_fields)
 DEFAULT_QUERY_FIELD = "content"
@@ -1867,8 +1600,13 @@ def phrase_search_many(
     {query_id: [(doc_id, score)]}. The phrase is analyzed with the
     primary field's chain KEEPING order and duplicates; a doc matches
     when the exact token sequence occurs (position-verified), and scores
-    by the constituent terms' BM25 sum. Same (segment, sb) fan-out +
-    driver k-way merge as search_many. ``predicate`` restricts matches
+    by the constituent terms' BM25 sum (``scoring="gate"``) or its
+    occurrence count (``"phrase_freq"``). Each phrase lowers to one
+    phrase clause on the bool grouped executor
+    (boolquery._grouped_search), bit-identical to ``Bool(phrase=...)``
+    there: candidates from the rarest term, the other terms probed on
+    candidate blocks only, then positions; the same (segment, sb)
+    fan-out + driver k-way merge as search_many. ``predicate`` restricts matches
     to docs satisfying a docs-dimension conjunction (same spec as
     search_many) — the ES bool query's filter context around a
     match_phrase (bug_version.json:57-65,221-224).
@@ -1900,50 +1638,30 @@ def phrase_search_many(
             "queries need the positional payload (the shingled field "
             "approximates bigram phrases without it)"
         )
-    chain = m.field_chain(field)
-    qseq = {
-        int(qid): (py_analyze(text, chain), int(k)) for qid, text, k in queries
-    }
-    qseq = {qid: v for qid, v in qseq.items() if v[0]}
-    results: dict[int, list[tuple[int, float]]] = {int(q[0]): [] for q in queries}
-    if not qseq:
-        return results
-    all_terms = sorted({t for seq, _ in qseq.values() for t in seq})
-    dfs = _lookup_terms(m, index_dir, all_terms, field)
-    # a phrase containing ANY absent term cannot match anywhere
-    qeff = {
-        qid: v for qid, v in qseq.items() if all(t in dfs for t in v[0])
-    }
-    if not qeff:
-        return results
-    neg_raw = sorted({t for q in (must_not or ()) for t in py_analyze(q, chain)})
-    neg_dfs = _lookup_terms(m, index_dir, neg_raw, field) if neg_raw else {}
-    neg_eff = sorted(set(neg_raw) & set(neg_dfs))
-    idfs = {t: _idf(m.n_docs, df) for t, df in dfs.items()}
-    live = sorted({t for seq, _ in qeff.values() for t in seq})
-    work = [
-        (os.path.basename(d), sb)
-        for d in _candidate_dict_dirs(m, index_dir, live, field)
-        for sb in range(m.n_sb)
-    ]
-    if not work:
-        return results
     if scoring not in ("gate", "phrase_freq", "sloppy_freq"):
         raise ValueError(f"unknown phrase scoring {scoring!r}")
-    scorer = _make_phrase_bucket_scorer(
-        index_dir, qeff, idfs, m.field_avgdl(field), m.k1, m.b,
-        np.array(sorted(m.tombstones), dtype=np.int64), field, scoring,
-        predicate, m.n_shards, m.n_sb, neg_eff, int(slop), bool(ordered),
-    )
-    # the intersect-outward executor fully decodes only the RAREST term;
-    # every other term decodes candidate blocks — the rarest df bounds a
-    # query's candidate volume (+ negative lists, decoded once)
-    est = sum(min(dfs[t] for t in seq) for seq, _ in qeff.values())
-    est += sum(neg_dfs[t] for t in neg_eff)
-    pdf = _execute_buckets(
-        spark, work, scorer, RESULT_SCHEMA, est, execution, c_post_ms=C_CAND_MS
-    )
-    return _merge_topk(pdf, {q: k for q, (_, k) in qseq.items()}, results)
+    from .boolquery import _grouped_search
+
+    chain = m.field_chain(field)
+    neg_raw = sorted({t for q in (must_not or ()) for t in py_analyze(q, chain)})
+    results: dict[int, list[tuple[int, float]]] = {int(q[0]): [] for q in queries}
+    specs = {}
+    for qid, text, k in queries:
+        seq = py_analyze(text, chain)
+        if seq:
+            specs[int(qid)] = {
+                "match": [], "phrase": [(seq, int(slop))], "neg": neg_raw,
+                "boost": [], "scoring": scoring, "ordered": bool(ordered),
+                "k": int(k), "after": None,
+            }
+    # the estimate is each phrase's rarest df: only that list decodes
+    # fully, every other term decodes candidate blocks (+ the must_not
+    # lists, decoded once)
+    ran = _grouped_search(spark, m, index_dir, specs, field, predicate, execution)
+    if ran is not None:
+        pdf, live = ran
+        _merge_topk(pdf, {q: s["k"] for q, s in live.items()}, results)
+    return results
 
 
 def phrase_search(

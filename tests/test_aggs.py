@@ -535,9 +535,10 @@ def test_multi_agg_validation(spark, agg_idx):
 # ------------------------------------------------------------- top_hits
 def test_top_hits_matches_filtered_search(spark, agg_idx, ref):
     """Per terms bucket, top_hits must equal a bool_search of the SAME
-    query filtered to that bucket's key — the shared-scorer guarantee
-    (boolquery._score_survivors), including should-boost and phrase
-    contributions."""
+    query filtered to that bucket's key, bit for bit — the shared-scorer
+    guarantee (boolquery._score_survivors), including should-boost (also
+    a should term that is a must term, counted twice), phrase and
+    phrase_freq contributions."""
     from dataclasses import replace
 
     from bugzilla_etl_spark.index import bool_search
@@ -550,21 +551,28 @@ def test_top_hits_matches_filtered_search(spark, agg_idx, ref):
     assert {k: n for k, n, _ in got} == dict(want_counts)
     assert got  # non-vacuous
     checked = 0
-    qp = Bool(phrase="hash table")
+    qp = Bool(phrase="return int")
     got_p = terms_agg(spark, agg_idx, "lang", query=qp, size=100, sub_hits=3)
     assert sum(n for _, n, _ in got_p) == len(
-        _match(ref, phrase=["hash", "table"])
+        _match(ref, phrase=["return", "int"])
     )
-    for query, res in ((q, got), (qp, got_p)):
+    more = [
+        Bool(phrase="return int", phrase_scoring="phrase_freq"),
+        Bool(must="return int", operator="and", should="int"),
+    ]
+    runs = [(q, got), (qp, got_p)] + [
+        (x, terms_agg(spark, agg_idx, "lang", query=x, size=100, sub_hits=3))
+        for x in more
+    ]
+    for query, res in runs:
+        assert res, query
         for key, _n, hits in res:
             per_key = bool_search(
                 spark, agg_idx,
                 replace(query, filter=[("lang", "==", key)]),
                 k=3,
             )
-            assert [(d, round(s, 9)) for d, s in hits] == [
-                (d, round(s, 9)) for d, s in per_key
-            ]
+            assert hits == per_key, query
             checked += 1
     assert checked
 

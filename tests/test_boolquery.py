@@ -208,6 +208,46 @@ def test_search_after_score_composed_shapes(spark, bool_idx):
         assert _walk_pages(spark, bool_idx, q, 9) == full
 
 
+def test_search_after_pages_gated_shapes_exactly(spark, bool_idx):
+    """Pages of a gated query equal its uncut ranking bit for bit (same
+    ids, order and ``==`` scores): an AND with a should term that is
+    also a must term (it counts twice), an AND with a disjoint should
+    term, and a phrase_freq phrase. The first page and the cursor pages
+    run the same scorer."""
+    for q in (
+        Bool(must="return int", operator="and", should="int"),
+        Bool(must="return int", operator="and", should="fn"),
+        Bool(phrase="return int", phrase_scoring="phrase_freq"),
+    ):
+        full = bool_search(spark, bool_idx, q, k=10_000)
+        assert len(full) > 14, q
+        assert _walk_pages(spark, bool_idx, q, 7) == full, q
+
+
+def test_lowered_entries_equal_bool(spark, bool_idx):
+    """search_many AND/msm with should, phrase_search_many and
+    multi_match_search_many return exactly the hits of the same Bool."""
+    from bugzilla_etl_spark.index import multi_match_search_many, phrase_search_many
+
+    pairs = [
+        (search_many(spark, bool_idx, [(0, "return int", 50)], operator="and",
+                     should=["int", "fn"])[0],
+         Bool(must="return int", operator="and", should=("int", "fn"))),
+        (search_many(spark, bool_idx, [(0, "return int fn", 50)],
+                     min_should_match=2, should=["struct"])[0],
+         Bool(must="return int fn", min_should_match=2, should="struct")),
+        (phrase_search_many(spark, bool_idx, [(0, "return int", 50)],
+                            scoring="phrase_freq", must_not=["fn"])[0],
+         Bool(phrase="return int", phrase_scoring="phrase_freq", must_not="fn")),
+        (multi_match_search_many(spark, bool_idx, [(0, "return int", 50)],
+                                 ["content"], combine="most_fields")[0],
+         Bool(multi_match="return int", mm_fields=("content",),
+              mm_combine="most_fields")),
+    ]
+    for got, q in pairs:
+        assert got and got == bool_search(spark, bool_idx, q, k=50), q
+
+
 # ------------------------------------------------------- composition
 def test_compose_filter_mustnot_phrase(spark, bool_idx, ref):
     q = Bool(

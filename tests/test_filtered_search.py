@@ -785,6 +785,21 @@ def test_should_boost_terms(spark, filtered_index):
         spark, d, [(0, " ".join(must), big)], operator="and", should=boost
     )[0]
     assert {x for x, _ in plain} == {x for x, _ in boosted}
+    # a should term that is also a must term counts twice: each ES
+    # clause scores on its own, so the oracle sums the clauses apart
+    over = ["int", "fn"]
+    want_o = sorted(
+        ((doc, score(doc, must) + score(doc, over)) for doc in matched),
+        key=lambda x: (-x[1], x[0]),
+    )[:10]
+    for execution in ("spark", "local"):
+        got = search_many(
+            spark, d, [(0, " ".join(must), 10)], operator="and",
+            should=over, execution=execution,
+        )[0]
+        assert [x for x, _ in got] == [x for x, _ in want_o]
+        for (_, gs), (_, ws) in zip(got, want_o):
+            assert math.isclose(gs, ws, abs_tol=1e-9)
     # should without a gating clause is a usage error
     with pytest.raises(ValueError, match="should"):
         search_many(spark, d, [(0, "return", 5)], should=["fn"])
@@ -901,26 +916,28 @@ def test_wildcard_search_expansion_and_scoring(spark, filtered_index):
 def test_explain_search_matches_cost_model(spark, filtered_index, monkeypatch):
     """explain reports exactly what the executor does: analyzed terms +
     dfs, bloom-pruned segments, work items, estimate, and the
-    local-vs-spark route — the one a spy on ``_execute_buckets`` sees
-    the same request take, under the model's coefficients and with the
-    fan-out made cheap enough to win."""
+    local-vs-spark route — the one a spy on the route model (which
+    ``_execute_buckets`` consults for every entry, the gated ones
+    lowered onto the bool executor included) sees the same request
+    take, under the model's coefficients and with the fan-out made
+    cheap enough to win."""
     from bugzilla_etl_spark.index import explain_search
     from bugzilla_etl_spark.index import query as Q
 
     d, prepared, oracle = filtered_index
     taken = []
-    real_execute, real_tasks = Q._execute_buckets, Q.bucket_tasks_df
+    real_route, real_tasks = Q.route, Q.bucket_tasks_df
 
-    def spy_execute(spark_, work, scorer, schema, est, *a, **kw):
-        taken.append({"work_items": len(work), "estimated_postings": est,
+    def spy_route(n_work, est, *a, **kw):
+        taken.append({"work_items": n_work, "estimated_postings": est,
                       "execution": "local"})
-        return real_execute(spark_, work, scorer, schema, est, *a, **kw)
+        return real_route(n_work, est, *a, **kw)
 
     def spy_tasks(*a, **kw):
         taken[-1]["execution"] = "spark"
         return real_tasks(*a, **kw)
 
-    monkeypatch.setattr(Q, "_execute_buckets", spy_execute)
+    monkeypatch.setattr(Q, "route", spy_route)
     monkeypatch.setattr(Q, "bucket_tasks_df", spy_tasks)
     # the host's CPU count must not stand in for the session's parallelism
     monkeypatch.setattr(Q.os, "cpu_count", lambda: spark.sparkContext.defaultParallelism + 7)

@@ -230,11 +230,11 @@ def test_knn_local_and_spark_bit_identical(spark, tmp_path):
 
 
 def test_knn_threaded_local_route_equals_spark(spark, tmp_path, monkeypatch):
-    """kNN's local route scores its items in a thread pool, whose threads
-    do not inherit the request's read scope: each item reads its own
-    docs slice there, while a Spark task shares one read per segment
-    across its items. Both give the same answers, filtered or not, over
-    two segments."""
+    """kNN's local route scores its items serially in the calling thread
+    under the request's read scope, one docs read per segment (a pool
+    of threads measured slower and read once per item); a Spark task
+    shares one read per segment across its items too. Both give the
+    same answers, filtered or not, over two segments."""
     import threading
 
     import pyarrow.dataset as pads
@@ -274,5 +274,5 @@ def test_knn_threaded_local_route_equals_spark(spark, tmp_path, monkeypatch):
         monkeypatch.setattr(pads, "dataset", real)
         assert all(local[q] for q, _, _ in qs)
         assert local == fanout, pred
-        # 2 segments x 2 sbs, each item in a pool thread with its own scope
-        assert len(reads) == 4 and threading.get_ident() not in reads, reads
+        # 2 segments x 2 sbs: one docs read per segment, in this thread
+        assert reads == [threading.get_ident()] * 2, reads
