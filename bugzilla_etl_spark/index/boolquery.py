@@ -57,6 +57,7 @@ from .postings import exclusion, read_allowed, read_bucket, read_docs
 from .predicate import validate_filter
 from .query import (
     C_CAND_MS,
+    C_POST_MS,
     RESULT_SCHEMA,
     _allowed_mask,
     _candidate_dict_dirs,
@@ -384,6 +385,30 @@ def _mm_want(mm_clauses) -> dict[str, list[str]]:
         for f, ts, _need in per_field:
             want.setdefault(f, set()).update(ts)
     return {f: sorted(ts) for f, ts in want.items()}
+
+
+def _unit_cost(match_cs, phrase_cs, mm_cs) -> float:
+    """``query.route``'s unit cost of a query's plan-time estimate: a
+    query whose only gates are OR multi_match clauses (min_match 1 on
+    every field) takes every posting of its (field, term) pairs as a
+    candidate and scores it, so its estimate counts scored postings,
+    priced like plain OR at C_POST_MS; any other gate bounds its
+    candidates (C_CAND_MS)."""
+    if (mm_cs and not match_cs and not phrase_cs
+            and all(need == 1 for pf in mm_cs for _f, _ts, need in pf)):
+        return C_POST_MS
+    return C_CAND_MS
+
+
+def _runs_maxscore(q: Bool, match_cs, phrase_cs, mm_cs, boost) -> bool:
+    """True when a score-ranked query's lowered clauses (a should-only
+    query's should terms already its match clause) are one plain-OR
+    match clause and nothing else scores: bool_search_many hands it to
+    search_many's block-max MaxScore scorer, whose estimate (the same
+    df sum) is priced at C_POST_MS."""
+    return (not q.has_boosts() and not q.negative and not q.functions
+            and len(match_cs) == 1 and match_cs[0][1] == 1
+            and not phrase_cs and not mm_cs and not boost)
 
 
 def _sort_key_type(m: IndexManifest, attr: str) -> T.DataType:
@@ -1387,17 +1412,14 @@ def bool_search_many(
     # ---------- the one delegation: a plain-OR single match clause runs
     # search_many's block-max MaxScore scorer (a different algorithm,
     # bit-equal to the grouped executor's sum)
+    qobj = {int(qid): q for qid, q, _ in queries}
     if (sort_by is None and collapse is None and search_after is None
             and _stats_override is None
             and len({tuple(s["neg"]) for s in specs.values()}) == 1
             and all(
-                not q.has_boosts() and not q.negative and not q.functions
-                for _, q, _ in queries
-            )
-            and all(
-                len(s["match"]) == 1 and s["match"][0][1] == 1
-                and not s["phrase"] and not s["mm"] and not s["boost"]
-                for s in specs.values()
+                _runs_maxscore(qobj[qid], s["match"], s["phrase"], s["mm"],
+                               s["boost"])
+                for qid, s in specs.items()
             )):
         neg = next(iter(specs.values()))["neg"]
         sub = [(qid, s["match"][0][0], s["k"]) for qid, s in specs.items()]
@@ -1426,7 +1448,6 @@ def bool_search_many(
             ascending=[True, not sort_desc, True],
         )
         val_col = "key"
-    qobj = {int(qid): q for qid, q, _ in queries}
     for qid, grp in pdf.groupby("query_id", sort=False):
         k = live[int(qid)]["k"]
         if collapse is not None:
@@ -1467,8 +1488,6 @@ def _grouped_search(
     sort_desc: bool = False,
     collapse: str | None = None,
     stats_override: dict | None = None,
-    c_post_ms: float = C_CAND_MS,
-    should_in_est: bool = True,
 ) -> tuple[pd.DataFrame, dict[int, dict]] | None:
     """The one driver of gated requests: {qid: analyzed spec} (see
     _make_grouped_bucket_scorer) -> (the per-bucket rows of every live
@@ -1482,9 +1501,9 @@ def _grouped_search(
     statistics), dropping queries with an unmatchable clause, the
     plan-time estimate, bloom-pruned work items, then the grouped
     scorer over them. The estimate is each live query's cheapest clause
-    generator plus the must_not dfs and, when ``should_in_est``, the
-    should/negative dfs; ``c_post_ms`` is its unit cost (see
-    ``query.route``): the entries keep the route they always had."""
+    generator plus the must_not dfs, whichever entry the spec came
+    from, priced at the dearest of the live queries' unit costs
+    (``_unit_cost``)."""
     all_pos = sorted(
         {t for s in specs.values() for seq, _ in s["phrase"] for t in seq}
     )
@@ -1550,7 +1569,11 @@ def _grouped_search(
         for t, df in _lookup_terms(m, index_dir, sorted(ts), f).items():
             neg_pair_dfs[(f, t)] = df
     idfs_pairs = {p: _idf(m.n_docs, df) for p, df in dfs_pairs.items()}
-    avgdls = {f: m.field_avgdl(f) for f in mm_by_field}
+    # every field a pair is read on: must_not pairs cover each queried
+    # field, also one the query text analyzes to nothing on
+    avgdls = {
+        f: m.field_avgdl(f) for f in mm_by_field.keys() | neg_by_field.keys()
+    }
 
     # drop queries with an unmatchable clause (a term absent everywhere
     # kills AND/phrase clauses; an OR clause just loses the term)
@@ -1593,9 +1616,13 @@ def _grouped_search(
         est += min(cl_costs) if cl_costs else m.n_docs  # match_all: docs
     if not live:
         return None
+    # should and negative-boost terms are probed at the candidates only
+    # (like the must terms past the generator), so only the must_not
+    # lists, read whole into the exclusion set, add to the estimate
     est += sum(neg_dfs.values()) + sum(neg_pair_dfs.values())
-    if should_in_est:
-        est += sum(boost_dfs.values())
+    c_post_ms = max(
+        _unit_cost(s["match"], s["phrase"], s["mm"]) for s in live.values()
+    )
 
     # fan-out: the live queries' gate terms prune segments via blooms
     # (per field for mm clauses, unioned); match_all queries must visit
@@ -1774,9 +1801,13 @@ def explain_bool(
              "generator_estimate": int(est_c)}
         )
     match_all = not match_cs and not phrase_cs and not mm_cs and not boost
-    est = min(cl_costs) if cl_costs else (m.n_docs if match_all else 0)
-    est += sum(neg_dfs.values()) + sum(boost_dfs.values())
-    est += sum(demote_dfs.values())
+    # no clause generator: match_all visits every doc, a should-only
+    # query generates from its should terms (min_match 1); otherwise
+    # should/negative terms are probed at the candidates only
+    est = min(cl_costs) if cl_costs else (
+        m.n_docs if match_all else sum(boost_dfs.values())
+    )
+    est += sum(neg_dfs.values())
     if match_all or (not gate_terms and not dfs_pairs):
         n_segs = len(m.segments)
     else:
@@ -1794,7 +1825,17 @@ def explain_bool(
             )
         n_segs = len(seg_names)
     n_work = n_segs * m.n_sb
-    execution, local_ms, spark_ms = route(n_work, est, _cores(), c_post_ms=C_CAND_MS)
+    # the unit of the executor bool_search_many picks: the MaxScore
+    # delegation (after the should-only lowering) or the grouped one
+    only_should = boost and not match_cs and not phrase_cs and not mm_cs
+    if sort_by is None and _runs_maxscore(
+        query, [(boost, 1)] if only_should else match_cs, phrase_cs, mm_cs,
+        [] if only_should else boost,
+    ):
+        unit = C_POST_MS
+    else:
+        unit = _unit_cost(match_cs, phrase_cs, mm_cs)
+    execution, local_ms, spark_ms = route(n_work, est, _cores(), c_post_ms=unit)
     return {
         "field": fld,
         "clauses": clauses,

@@ -21,9 +21,10 @@ accumulates per-field BM25 sums over them (each field scores with ITS
 OWN df/avgdl — the fields are independent BM25 spaces, exactly ES) and
 combines per doc in ``fields`` order. Scoring is exhaustive-vectorized
 within the bucket: cross-field max/sum has no per-field monotone bound
-cheap enough to beat the vectorized pass at bucket granularity. The
-request keeps its route: its estimate is the df sum of its (field,
-term) pairs, priced at C_POST_MS.
+cheap enough to beat the vectorized pass at bucket granularity. Every
+posting of its (field, term) pairs is a candidate and is scored, so
+its estimate, their df sum, is priced at C_POST_MS like plain OR
+(boolquery._unit_cost), on either entry.
 """
 
 from __future__ import annotations
@@ -35,7 +36,7 @@ from pyspark.sql import SparkSession
 from ..tokenize import py_analyze
 from .manifest import IndexManifest
 from .predicate import validate_filter
-from .query import C_POST_MS, _merge_topk
+from .query import _merge_topk
 
 COMBINES = ("best_fields", "most_fields")
 
@@ -97,8 +98,7 @@ def multi_match_search_many(
     # no clause reads the executor's primary field here (the clause
     # names its own fields), so any queried field serves as it
     ran = _grouped_search(
-        spark, m, index_dir, specs, fields[0], predicate, execution,
-        c_post_ms=C_POST_MS,
+        spark, m, index_dir, specs, fields[0], predicate, execution
     )
     if ran is not None:
         pdf, live = ran

@@ -17,10 +17,9 @@ the only places that know this.
 
 Every bucket scorer (BM25 MaxScore, the grouped gated executor behind
 bool/AND/msm/phrase/multi_match, nested, aggregations, export) reads
-the same postings: the
-block rows of a few (field, term) pairs in one (segment, sb) bucket,
-decoded lazily block by block. ``read_bucket`` is the one place that
-knows the on-disk shape:
+the same postings: the block rows of a few (field, term) pairs in one
+(segment, sb) bucket, decoded lazily block by block. ``read_bucket``
+is the one place that knows the on-disk shape:
 
 - the per-request segment scan: the harnesses run a request's work
   items (or a Spark task's) under one ``ReadScope``, so each segment is
@@ -139,21 +138,6 @@ class BlockList:
         ok = (bi >= 0) & (cand <= self.lasts[np.clip(bi, 0, None)])
         return bi, ok
 
-    def groups(self, cand: np.ndarray):
-        """(block index, ascending indices into ``cand``) for every block
-        whose range holds candidates, blocks ascending. One stable sort
-        of the candidates' block ids: O(n log n) in the candidates
-        instead of a full-array mask per block."""
-        bi, ok = self.block_of(cand)
-        idx = np.flatnonzero(ok)
-        if not len(idx):
-            return []
-        b = bi[idx]
-        order = np.argsort(b, kind="stable")
-        idx, b = idx[order], b[order]
-        cut = np.flatnonzero(b[1:] != b[:-1]) + 1
-        return zip(b[np.r_[0, cut]].tolist(), np.split(idx, cut))
-
 
 class TermPostings:
     """All (salt, shard) sub-lists of one (field, term) in one bucket."""
@@ -200,8 +184,10 @@ class TermPostings:
         found = np.zeros(len(cand), dtype=bool)
         imp = np.zeros(len(cand), dtype=np.float64)
         for sl in self.subs.values():
-            for i, sel in sl.groups(cand):
-                docs, imps, _ = sl.decode(i)
+            bi, ok = sl.block_of(cand)
+            for i in np.unique(bi[ok]):
+                sel = np.flatnonzero(ok & (bi == i))
+                docs, imps, _ = sl.decode(int(i))
                 pos = np.clip(np.searchsorted(docs, cand[sel]), 0, len(docs) - 1)
                 hit = docs[pos] == cand[sel]
                 found[sel[hit]] = True
@@ -221,9 +207,11 @@ class TermPostings:
         pos_chunks: list[np.ndarray] = []
         dl_chunks: list[np.ndarray] = []
         for sl in self.subs.values():
-            for i, sel in sl.groups(cand):
-                docs, _, dl = sl.decode(i)
-                pos_flat, off = sl.positions(i)
+            bi, ok = sl.block_of(cand)
+            for i in np.unique(bi[ok]):
+                sel = np.flatnonzero(ok & (bi == i))
+                docs, _, dl = sl.decode(int(i))
+                pos_flat, off = sl.positions(int(i))
                 j = np.searchsorted(docs, cand[sel])
                 inb = j < len(docs)
                 hit = inb & (docs[np.clip(j, 0, len(docs) - 1)] == cand[sel])

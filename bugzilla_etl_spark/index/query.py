@@ -78,14 +78,15 @@ RESULT_SCHEMA = T.StructType(
 #: sets its unit cost:
 #:
 #: - ``C_POST_MS``: the postings the request scores or the docs it
-#:   scans (should-BM25 and multi_match sum their terms' dfs; match_all
-#:   aggs and kNN count every document);
+#:   scans (should-BM25 and OR multi_match sum their terms' dfs; the
+#:   grouped executor prices a request of OR multi_match clauses only
+#:   so, see ``boolquery._unit_cost``; match_all aggs and kNN count
+#:   every document);
 #: - ``C_CAND_MS``: a candidate generator bound, the rarest term or
 #:   cheapest clause, whose candidates the scorer then verifies against
 #:   the other terms' postings, positions or parents: the grouped
-#:   executor's gated requests (bool, and the BM25 AND/msm and phrase
-#:   entries lowered onto it), nested, aggs with a query. multi_match,
-#:   lowered onto the same executor, keeps C_POST_MS and its df sum.
+#:   executor's other gated requests (bool, and the BM25 AND/msm and
+#:   phrase entries lowered onto it), nested, aggs with a query.
 #:
 #: ``tools/fit_gate.py`` fits C_ITEM_MS, C_POST_MS and WAVE_MS from
 #: traced perfbench ``search`` runs; these are the median of four
@@ -753,10 +754,10 @@ def search_many(
         }
         # the estimate bounds the candidates: AND = the rarest term;
         # msm = the (n - m + 1) rarest terms' df sum (the generator
-        # union); should lists decode candidate blocks only
+        # union); plus the must_not dfs. Should lists decode candidate
+        # blocks only, so add nothing (the same Bool prices alike)
         ran = _grouped_search(
-            spark, m, index_dir, specs, field, predicate, execution,
-            should_in_est=False,
+            spark, m, index_dir, specs, field, predicate, execution
         )
         if ran is not None:
             pdf, live = ran

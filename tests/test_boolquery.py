@@ -437,21 +437,23 @@ def test_explain_bool_is_sparkless(bool_idx):
 
 
 def test_explain_bool_matches_executor(spark, bool_idx, monkeypatch):
-    """explain_bool's work items, estimate and route are the ones the
-    grouped executor takes on the same request (a spy on the route
-    model and the fan-out), for either route."""
+    """explain_bool's work items, estimate, predicted costs (so the unit
+    cost) and route are the ones the executor takes on the same request
+    (a spy on the route model and the fan-out), for either route: a
+    composed query, AND + should, a lone multi_match, plain OR (the
+    MaxScore delegation), should-only, phrase + should + negative."""
     from bugzilla_etl_spark.index import query as Q
     from bugzilla_etl_spark.index.boolquery import explain_bool
 
-    q = Bool(must="return int", phrase="return int",
-             must_not=["fn"], filter=[("lang", "==", "python")])
     real_route, real_tasks = Q.route, Q.bucket_tasks_df
     seen = []
 
     def spy_route(n_work, est, *a, **kw):
+        out = real_route(n_work, est, *a, **kw)
         seen.append({"work_items": n_work, "estimated_postings": est,
+                     "local_ms": round(out[1], 1), "spark_ms": round(out[2], 1),
                      "execution": "local"})
-        return real_route(n_work, est, *a, **kw)
+        return out
 
     def spy_tasks(*a, **kw):
         seen[-1]["execution"] = "spark"
@@ -459,16 +461,26 @@ def test_explain_bool_matches_executor(spark, bool_idx, monkeypatch):
 
     monkeypatch.setattr(Q, "route", spy_route)
     monkeypatch.setattr(Q, "bucket_tasks_df", spy_tasks)
-    routes = set()
-    for wave_ms in (Q.WAVE_MS, 0.0):
-        monkeypatch.setattr(Q, "WAVE_MS", wave_ms)
-        out = explain_bool(bool_idx, q)
-        seen.clear()
-        assert bool_search(spark, bool_idx, q, k=10)
-        assert len(seen) == 1, seen
-        assert {k: out[k] for k in seen[0]} == seen[0]
-        routes.add(out["execution"])
-    assert routes == {"local", "spark"}
+    wave = Q.WAVE_MS
+    for q in (
+        Bool(must="return int", phrase="return int",
+             must_not=["fn"], filter=[("lang", "==", "python")]),
+        Bool(must="return int", operator="and", should="fn"),
+        Bool(multi_match="return int", mm_fields=("content",)),
+        Bool(must="return int fn"),
+        Bool(should="return fn"),
+        Bool(phrase="return int", should="fn", negative="struct"),
+    ):
+        routes = set()
+        for wave_ms in (wave, 0.0):
+            monkeypatch.setattr(Q, "WAVE_MS", wave_ms)
+            out = explain_bool(bool_idx, q)
+            seen.clear()
+            assert bool_search(spark, bool_idx, q, k=10)
+            assert len(seen) == 1, (q, seen)
+            assert {k: out[k] for k in seen[0]} == seen[0], q
+            routes.add(out["execution"])
+        assert routes == {"local", "spark"}, q
 
 
 def test_should_only_with_sort_still_gates(spark, bool_idx, ref):
@@ -702,16 +714,15 @@ def test_negative_boost_validation(spark):
 
 
 def test_explain_bool_reports_negative(bool_idx):
+    """Negative-boost terms are reported with their dfs; they are probed
+    at the candidates only, so they add nothing to the estimate."""
     from bugzilla_etl_spark.index.boolquery import explain_bool
 
     q = Bool(must="return int", negative="for", negative_boost=0.3)
     out = explain_bool(bool_idx, q)
     assert out["negative_dfs"]["for"] > 0
     base = explain_bool(bool_idx, Bool(must="return int"))
-    assert (
-        out["estimated_postings"]
-        == base["estimated_postings"] + out["negative_dfs"]["for"]
-    )
+    assert out["estimated_postings"] == base["estimated_postings"]
 
 
 # ----------------------------------------------------------- collapse

@@ -169,6 +169,35 @@ def test_random_queries_all_fields(spark, multifield):
                 assert math.isclose(gs, ws, abs_tol=1e-6)
 
 
+def test_multi_match_must_not_on_field_the_text_misses(spark, multifield):
+    """A must_not term is analyzed on EVERY queried field, also on a
+    field where the query text analyzes to nothing (a stopword-only
+    query on the stop field): that field's exclusion pairs still score
+    with its own avgdl, and a doc holding the negative term there is
+    excluded."""
+    from bugzilla_etl_spark.index import multi_match_search_many
+    from bugzilla_etl_spark.tokenize import py_analyze
+
+    d, pdf = multifield
+    assert py_analyze("this", "code_v1_stop") == []
+    rows = list(zip(pdf["__doc_id"], pdf["content"]))
+    excl = {
+        doc for doc, text in rows
+        if any("impl" in py_analyze(text, c) for c in ("code_v1", "code_v1_stop"))
+    }
+    full = build_oracle(rows, chain="code_v1").search("this", 10_000)
+    want = [(doc, s) for doc, s in full if doc not in excl][:10]
+    assert want and len(want) < len(full)
+    for ex in ("local", "spark"):
+        got = multi_match_search_many(
+            spark, d, [(0, "this", 10)], ["content", "content_stop"],
+            must_not=["impl"], execution=ex,
+        )[0]
+        assert [x for x, _ in got] == [x for x, _ in want], ex
+        for (_, gs), (_, ws) in zip(got, want):
+            assert math.isclose(gs, ws, abs_tol=1e-6)
+
+
 def test_positions_on_shingled_chain_warns(spark, small_corpus, tmp_path):
     """Round 5: positions over a shingled chain double the field's block
     bytes for no phrase benefit (shingles already encode adjacency) —

@@ -113,6 +113,10 @@ def run(spark, root):
         E[f"multi_match:{n}"] = lambda ex, kw=kw, fields=fields: multi_match_search_many(
             spark, d, [(0, "return struct", 600), (1, "fn impl self", 600)],
             fields, execution=ex, **kw)
+    # a stopword-only text: nothing to read on the stop field but its
+    # must_not pairs
+    E["multi_match:stopword_must_not"] = lambda ex: multi_match_search_many(
+        spark, d, [(0, "this", 600)], ["content", "st"], must_not=["impl"], execution=ex)
 
     def paged(q, ex, size=7):
         out, after = [], None
