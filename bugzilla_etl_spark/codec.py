@@ -6,9 +6,12 @@ format: sorted doc ids are delta-gapped then varint encoded, term
 frequencies and doc lengths varint encoded, in blocks of
 ``BLOCK_SIZE`` docs with per-block max-impact metadata (block-max MaxScore).
 
-No per-row Python: encode/decode are O(max_varint_width) numpy passes
-over whole arrays (the per-``j`` loop runs <= 10 iterations regardless
-of input size).
+No per-row Python: encode is O(max_varint_width) numpy passes over
+whole arrays (the per-``j`` loop runs <= 10 iterations regardless of
+input size), decode a fixed number of word-wide passes. Readers decode a batch of blocks at once
+(``decode_blocks``): the batch's payload columns are one joined buffer
+and one ``varint_decode_blocks`` call, which also checks that every
+block holds exactly its postings.
 """
 
 from __future__ import annotations
@@ -18,7 +21,6 @@ import numpy as np
 BLOCK_SIZE = 128
 
 _U64 = np.uint64
-_SEVEN = _U64(7)
 _MASK7 = _U64(0x7F)
 _CONT = np.uint8(0x80)
 
@@ -76,25 +78,139 @@ def varint_encode_segmented(values: np.ndarray, seg_starts: np.ndarray) -> list[
     return [buf[a:b] for a, b in zip(bounds[:-1], bounds[1:])]
 
 
-def varint_decode(buf: bytes) -> np.ndarray:
-    """Decode LEB128 bytes to a uint64 array. Vectorized."""
-    b = np.frombuffer(buf, dtype=np.uint8)
-    if b.size == 0:
-        return np.empty(0, dtype=_U64)
-    ends = np.flatnonzero(b < _CONT)
-    starts = np.empty_like(ends)
-    starts[0] = 0
-    starts[1:] = ends[:-1] + 1
+#: little-endian masks keeping the low ``w`` bytes of a word, w = 0..8
+_LOW_BYTES = np.array(
+    [(1 << (8 * w)) - 1 for w in range(8)] + [2**64 - 1], dtype=_U64
+)
+#: (keep, move, shift) per step packing a word's 7-bit byte lanes into
+#: its low 56 bits: byte pairs, then 16-bit pairs, then 32-bit halves
+#: (0-d arrays: cheaper operands than numpy scalars on short arrays)
+_PACK = [
+    tuple(np.array(v, dtype=_U64) for v in step)
+    for step in ((0x007F007F007F007F, 0x7F007F007F007F00, 1),
+                 (0x00003FFF00003FFF, 0x3FFF00003FFF0000, 2),
+                 (0x000000000FFFFFFF, 0x0FFFFFFF00000000, 4))
+]
+
+
+class BlockError(ValueError):
+    """A block's varint bytes do not hold exactly its postings: ``block``
+    is its position in the decoded batch."""
+
+    def __init__(self, block: int, msg: str):
+        super().__init__(msg)
+        self.block = block
+
+
+def _as_u8(buf) -> np.ndarray:
+    return buf if isinstance(buf, np.ndarray) else np.frombuffer(buf, dtype=np.uint8)
+
+
+def _decode_ends(b: np.ndarray, ends: np.ndarray) -> np.ndarray:
+    """The values of ``b`` whose terminator bytes sit at ``ends`` (``b``
+    ends on one). Each value is one unaligned little-endian 8-byte load
+    from its first byte, cut to its own width, and its 7-bit lanes are
+    packed by three word-wide passes; only values wider than 8 bytes
+    take a second load. A buffer of 1-byte values is a cast."""
+    n, nb = len(ends), len(b)
+    if n == nb:
+        return b.astype(_U64)
+    starts = np.concatenate(([0], ends[:-1] + 1))
     widths = ends - starts + 1
     max_w = int(widths.max())
-    # gather byte lanes; out-of-range lanes masked to 0
-    idx = starts[:, None] + np.arange(max_w)[None, :]
-    lane_ok = np.arange(max_w)[None, :] < widths[:, None]
-    idx = np.where(lane_ok, idx, 0)
-    lanes = (b[idx] & np.uint8(0x7F)).astype(_U64)
-    lanes = np.where(lane_ok, lanes, _U64(0))
-    shifts = (_SEVEN * np.arange(max_w, dtype=_U64))[None, :]
-    return (lanes << shifts).sum(axis=1, dtype=_U64)
+    if max_w > 10:
+        raise ValueError(f"varint of {max_w} bytes; a uint64 takes at most 10")
+    pad = np.zeros(nb + 16, dtype=np.uint8)
+    pad[:nb] = b
+    # word i = the 8 bytes from byte i (overlapping, unaligned views)
+    words = np.ndarray((nb + 8,), dtype="<u8", buffer=pad, strides=(1,))
+    out = words[starts] & _LOW_BYTES[np.minimum(widths, 8)]
+    for keep, move, shift in _PACK:
+        out = (out & keep) | ((out & move) >> shift)
+    if max_w > 8:
+        # bytes 8 and 9 carry bits 56..62 and bit 63 (the << drops the rest)
+        hi = words[starts + 8] & _LOW_BYTES[np.clip(widths - 8, 0, 2)]
+        out |= ((hi & _U64(0x7F)) << _U64(56)) | ((hi >> _U64(8)) << _U64(63))
+    return out
+
+
+def varint_decode(buf) -> np.ndarray:
+    """Decode LEB128 bytes (``bytes`` or a uint8 array) to a uint64
+    array. A buffer that ends inside a varint raises ``ValueError``."""
+    b = _as_u8(buf)
+    if b.size == 0:
+        return np.empty(0, dtype=_U64)
+    if b[-1] >= _CONT:
+        raise ValueError("varint buffer ends inside a value")
+    return _decode_ends(b, np.flatnonzero(b < _CONT))
+
+
+def varint_decode_blocks(buf, bounds: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Decode the joined varint bytes of a batch of blocks in one pass.
+
+    Block i owns ``buf[bounds[i]:bounds[i+1]]``, which must hold exactly
+    ``counts[i]`` varints and end on a terminator byte: LEB128 is
+    self-delimiting, so a truncated block would otherwise run into the
+    next one and decode silently wrong. The first block that breaks the
+    rule raises ``BlockError``."""
+    b = _as_u8(buf)
+    counts = np.asarray(counts, dtype=np.int64)
+    if int(bounds[-1]) != len(b):
+        raise ValueError(f"block bounds cover {int(bounds[-1])} of {len(b)} bytes")
+    if not len(b):
+        if counts.any():
+            i = int(np.argmax(counts > 0))
+            raise BlockError(i, f"0 bytes hold 0 varints, expected {int(counts[i])}")
+        return np.empty(0, dtype=_U64)
+    ends = np.flatnonzero(b < _CONT)
+    # terminators before each block's end vs postings through that
+    # block, and the last byte of each non-empty block
+    got = np.searchsorted(ends, bounds[1:])
+    bad = (got != np.cumsum(counts)) | (
+        (b[bounds[1:] - 1] >= _CONT) & (bounds[1:] > bounds[:-1])
+    )
+    if bad.any():
+        i = int(np.argmax(bad))
+        held = int(got[i] - (got[i - 1] if i else 0))
+        size = int(bounds[i + 1] - bounds[i])
+        cut = "; its last varint is cut off" if size and b[bounds[i + 1] - 1] >= _CONT else ""
+        raise BlockError(i, f"{size} bytes hold {held} varints, expected {int(counts[i])}{cut}")
+    return _decode_ends(b, ends)
+
+
+def join_blocks(bufs) -> tuple[np.ndarray, np.ndarray]:
+    """(joined bytes, per-block bounds) of a sequence of block buffers."""
+    sizes = np.fromiter(map(len, bufs), dtype=np.int64, count=len(bufs))
+    bounds = np.zeros(len(sizes) + 1, dtype=np.int64)
+    np.cumsum(sizes, out=bounds[1:])
+    return np.frombuffer(b"".join(bufs), dtype=np.uint8), bounds
+
+
+#: the payload columns ``decode_blocks`` reads, in their joined order
+PAYLOAD = ("gaps", "tfs", "dls")
+
+
+def decode_blocks(n, buf, bounds) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(doc ids, tfs, dls) of a batch of blocks, each uint64, from ONE
+    ``varint_decode_blocks`` pass: ``n`` holds the blocks' posting
+    counts, ``buf`` their ``PAYLOAD`` columns joined column after column
+    (all blocks' gaps, then all tfs, then all dls) and ``bounds`` the
+    3 * len(n) + 1 block bounds in it. Each block's first gap is
+    absolute, so doc ids come back by one segmented cumsum: the
+    whole-batch cumsum minus its value ahead of each block (uint64
+    wraps, so the difference is exact)."""
+    n = np.asarray(n, dtype=np.int64)
+    try:
+        vals = varint_decode_blocks(buf, bounds, np.concatenate((n, n, n)))
+    except BlockError as e:
+        col, block = divmod(e.block, len(n))
+        raise BlockError(block, f"{PAYLOAD[col]}: {e}") from None
+    total = int(n.sum())
+    g, tf, dl = vals[:total], vals[total : 2 * total], vals[2 * total :]
+    cs = np.zeros(total + 1, dtype=_U64)
+    np.cumsum(g, dtype=_U64, out=cs[1:])
+    docs = cs[1:] - np.repeat(cs[np.cumsum(n) - n], n)
+    return docs, tf, dl
 
 
 def delta_encode(sorted_vals: np.ndarray) -> np.ndarray:

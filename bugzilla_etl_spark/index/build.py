@@ -110,7 +110,9 @@ def docs_cols(
     )
 
 
-def read_segment_union(spark: SparkSession, seg_dirs: list[str], sub: str) -> DataFrame:
+def read_segment_union(
+    spark: SparkSession, seg_dirs: list[str], sub: str, tag: bool = False
+) -> DataFrame:
     """Union one sub-table (docs/postings/dict) across segment dirs.
 
     Segments are separate partitioned roots; Spark requires loading them
@@ -118,7 +120,8 @@ def read_segment_union(spark: SparkSession, seg_dirs: list[str], sub: str) -> Da
     ``batch`` publish-dir partition column is internal and dropped.
     Legacy segments written before multi-field indexing lack the
     ``field`` column; their rows are the primary 'content' field, added
-    here so legacy and current segments union (and merge) cleanly."""
+    here so legacy and current segments union (and merge) cleanly.
+    ``tag`` adds a ``segment`` column holding each row's segment id."""
     parts = []
     for d in seg_dirs:
         p = spark.read.parquet(os.path.join(d, sub))
@@ -129,6 +132,8 @@ def read_segment_union(spark: SparkSession, seg_dirs: list[str], sub: str) -> Da
         if sub == "postings" and "poss" not in p.columns:
             # segments written before positional support: null payload
             p = p.withColumn("poss", F.lit(None).cast("binary"))
+        if tag:
+            p = p.withColumn("segment", F.lit(os.path.basename(d)))
         parts.append(p)
     out = parts[0]
     for p in parts[1:]:

@@ -27,7 +27,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..codec import doc_id_to_u64, varint_decode
+from ..codec import (
+    BlockError,
+    decode_blocks,
+    doc_id_to_u64,
+    join_blocks,
+    varint_decode_blocks,
+)
 from .bloom import write_segment_blooms
 from .build import (
     BLOCK_SCHEMA,
@@ -124,26 +130,34 @@ def _make_block_merger(
 ):
     """Block merger for one (shard, salt) group, the build's SPIMI run.
 
-    Per field, each payload column decodes with ONE ``varint_decode``
-    over the group's joined block buffers (LEB128 is self-delimiting, so
-    this equals decoding block by block) — the per-call cost is paid
-    once per group, not once per block row. Doc ids come back by a
-    segmented cumsum (each block's first gap is absolute); tombstoned
-    and duplicate (term, doc) postings drop; the survivors, sorted by
-    (term, doc), re-encode through the build's block assembly with
-    impacts against ``avgdl_by_field``. The stored positions are already
+    Per field, the group's blocks decode as one batch
+    (``codec.decode_blocks``: one varint pass over the joined block
+    buffers of the payload columns, doc ids by a segmented cumsum); a
+    block whose bytes do not hold its postings raises, naming its
+    segment, term and block. Tombstoned and duplicate (term, doc)
+    postings drop; the survivors, sorted by (term, doc), re-encode
+    through the build's block assembly with impacts against
+    ``avgdl_by_field``. The stored positions are already
     the encoder's within-doc gap form, so each posting's slice is only
     gathered into the new order."""
     tomb = doc_id_to_u64(np.array(sorted(tombstones), dtype=np.int64))
 
+    def _bad_block(fld, g, e: BlockError) -> ValueError:
+        row = g.iloc[e.block]
+        return ValueError(
+            f"segment {row['segment']}, term {fld}:{row['term']!r}, "
+            f"block {row['block_id']} (shard {row['shard']}, salt {row['salt']}): {e}"
+        )
+
     def _one_field(shard, salt, fld, g):
         n = g["n"].to_numpy().astype(np.int64)
-        cs = np.cumsum(varint_decode(b"".join(g["gaps"])), dtype=np.uint64)
-        before = np.zeros(len(n), dtype=np.uint64)  # cumsum ahead of each block
-        before[1:] = cs[np.cumsum(n)[:-1] - 1]
-        du = cs - np.repeat(before, n)  # uint64 wraps, so this is exact
-        tf = varint_decode(b"".join(g["tfs"])).astype(np.int64)
-        dl = varint_decode(b"".join(g["dls"])).astype(np.int64)
+        try:
+            du, tf, dl = decode_blocks(
+                n, *join_blocks([*g["gaps"], *g["tfs"], *g["dls"]])
+            )
+        except BlockError as e:
+            raise _bad_block(fld, g, e) from None
+        tf, dl = tf.astype(np.int64), dl.astype(np.int64)
         codes, uniq_terms = pd.factorize(g["term"].to_numpy(), sort=True)
         tb_per_term = np.empty(len(uniq_terms), dtype=np.int64)
         tb_per_term[codes] = g["tb"].to_numpy()
@@ -162,10 +176,17 @@ def _make_block_merger(
         tf_o, dl_o = tf[order], dl[order]
         pos_gaps = None
         if fld in pos_fields:
-            pz = varint_decode(b"".join(g["poss"]))
+            c_tf = np.concatenate(([0], np.cumsum(tf)))
+            p_at = np.concatenate(([0], np.cumsum(n)))
+            try:
+                pz = varint_decode_blocks(
+                    *join_blocks(g["poss"]), c_tf[p_at[1:]] - c_tf[p_at[:-1]]
+                )
+            except BlockError as e:
+                raise _bad_block(fld, g, BlockError(e.block, f"poss: {e}")) from None
             # posting p owns tf[p] slots from cumsum(tf)[p-1]: gather
             # each kept posting's slice to its place in the new order
-            src = (np.cumsum(tf) - tf)[order]
+            src = c_tf[:-1][order]
             dst = np.cumsum(tf_o) - tf_o
             pos_gaps = pz[np.repeat(src - dst, tf_o) + np.arange(int(tf_o.sum()))]
         return _blocks_frame(
@@ -268,8 +289,9 @@ def merge_segments(
             avgdl_by_field, m.k1, m.b, m.block_size, sorted(dropped),
             m.positions_fields(),
         )
-        blocks = read_segment_union(spark, sub_dirs, "postings").select(
-            "shard", "salt", "field", "term", "tb", "n", "gaps", "tfs", "dls", "poss"
+        blocks = read_segment_union(spark, sub_dirs, "postings", tag=True).select(
+            "shard", "salt", "field", "term", "tb", "n", "gaps", "tfs", "dls", "poss",
+            "segment", "block_id",
         ).groupBy("shard", "salt").applyInPandas(merger, schema=BLOCK_SCHEMA)
         n_postings = _write_postings(blocks, new_dir, m.n_sb)
         n_terms = _write_dict(spark, new_dir, small=n_live <= 2_000_000)

@@ -18,8 +18,17 @@ the only places that know this.
 Every bucket scorer (BM25 MaxScore, the grouped gated executor behind
 bool/AND/msm/phrase/multi_match, nested, aggregations, export) reads
 the same postings: the block rows of a few (field, term) pairs in one
-(segment, sb) bucket, decoded lazily block by block. ``read_bucket``
-is the one place that knows the on-disk shape:
+(segment, sb) bucket, decoded lazily. The decode unit is a batch, not
+a block: a block's payload is a zero-copy slice of the scan's Arrow
+values buffer, and the blocks a read needs at once (``decode_lists``:
+every block of the lists a work item scores in full; ``imp_at`` and
+``positions_bulk``: the blocks a candidate set touches;
+``TermPostings.decode_blocks``: the chunk a block-max scorer processes)
+have their payload bytes joined and decoded in one
+``codec.decode_blocks`` pass — which checks every block's boundaries —
+then cached per block as views into the batch arrays. Blocks no read
+reaches are never decoded. ``read_bucket`` is the one place that knows
+the on-disk shape:
 
 - the per-request segment scan: the harnesses run a request's work
   items (or a Spark task's) under one ``ReadScope``, so each segment is
@@ -47,10 +56,16 @@ from __future__ import annotations
 import os
 from contextvars import ContextVar
 from itertools import repeat
-
 import numpy as np
 
-from ..codec import delta_decode, u64_to_doc_id, varint_decode
+from ..codec import (
+    PAYLOAD,
+    BlockError,
+    decode_blocks,
+    join_blocks,
+    u64_to_doc_id,
+    varint_decode_blocks,
+)
 
 #: block columns every scorer reads (``poss`` joins when positions are
 #: requested)
@@ -60,76 +75,77 @@ _COLUMNS = ["term", "salt", "shard", "n", "first_doc", "last_doc",
 
 class BlockList:
     """One (salt, shard) sub-list of a term in one bucket: sorted,
-    non-overlapping blocks with lazy per-block decode + cache.
+    non-overlapping blocks, decoded lazily and cached per block.
+
+    Each payload column (``gaps``, ``tfs``, ``dls``; ``poss`` when
+    positions were asked for) is a span (bytes, per-block start, per-block
+    end): ``read_bucket`` points it straight at the Arrow values buffer of
+    the scanned column; ``add_block`` + ``seal`` (lists built in memory)
+    join the added blocks' bytes. Blocks decode in batches (``_decode``):
+    ``_dec`` caches each decoded block as views into its batch's arrays.
 
     ``decode`` yields (docs, impacts, doc lengths) — what MaxScore and
     every membership probe need; ``positions`` decodes the positional
     payload separately and only when a phrase asks for it, so scorers
     that never ask pay nothing for it. ``bmaxs`` are the stored block
     max-impact bounds (times the caller's avgdl-drift scale), without
-    idf."""
+    idf. ``name`` says where the list lives, for decode errors."""
 
-    __slots__ = ("idf", "k1", "b", "avgdl", "firsts", "lasts", "bmaxs",
-                 "bufs", "n_postings", "_dec", "_pos")
+    __slots__ = ("idf", "k1", "b", "avgdl", "name", "firsts", "lasts", "bmaxs",
+                 "ns", "spans", "n_postings", "_raw", "_dec", "_pos")
 
-    def __init__(self, idf, k1, b, avgdl):
+    def __init__(self, idf, k1, b, avgdl, name="postings"):
         self.idf, self.k1, self.b, self.avgdl = idf, k1, b, avgdl
-        self.firsts, self.lasts, self.bmaxs, self.bufs = [], [], [], []
+        self.name = name
+        self._raw: list[tuple] = []
         self.n_postings = 0
         self._dec: dict[int, tuple] = {}
         self._pos: dict[int, tuple] = {}
 
     def add_block(self, first_u64, last_u64, bmax, n, gaps, tfs, dls, poss=None):
-        self.firsts.append(first_u64)
-        self.lasts.append(last_u64)
-        self.bmaxs.append(bmax)
-        self.bufs.append((gaps, tfs, dls, poss))
-        self.n_postings += n
+        self._raw.append((first_u64, last_u64, bmax, n, gaps, tfs, dls, poss))
 
     def seal(self):
-        order = np.argsort(np.array(self.firsts, dtype=np.uint64), kind="stable")
-        self.firsts = np.array(self.firsts, dtype=np.uint64)[order]
-        self.lasts = np.array(self.lasts, dtype=np.uint64)[order]
-        self.bmaxs = np.array(self.bmaxs, dtype=np.float64)[order]
-        self.bufs = [self.bufs[i] for i in order]
+        """Sort the added blocks by first doc and join each payload
+        column's bytes into one span."""
+        if not self._raw:
+            return
+        raw = self._raw
+        firsts = np.array([r[0] for r in raw], dtype=np.uint64)
+        order = np.argsort(firsts, kind="stable")
+        raw = [raw[i] for i in order]
+        names = ["gaps", "tfs", "dls"]
+        if all(r[7] is not None for r in raw):
+            names.append("poss")
+        spans = {}
+        for c, name in enumerate(names, start=4):
+            buf, bounds = join_blocks([r[c] for r in raw])
+            spans[name] = (buf, bounds[:-1], bounds[1:])
+        self._raw = []
+        self.set_blocks(
+            firsts[order],
+            np.array([r[1] for r in raw], dtype=np.uint64),
+            np.array([r[2] for r in raw], dtype=np.float64),
+            np.array([r[3] for r in raw], dtype=np.int64),
+            spans,
+        )
+
+    def set_blocks(self, firsts, lasts, bmaxs, ns, spans):
+        """Install sorted block metadata and payload spans."""
+        self.firsts, self.lasts, self.bmaxs, self.ns = firsts, lasts, bmaxs, ns
+        self.spans = spans
+        self.n_postings = int(ns.sum())
 
     def decode(self, i: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         """(docs u64, BM25 impacts, doc lengths) of block ``i``."""
-        hit = self._dec.get(i)
-        if hit is not None:
-            return hit
-        g, tfb, dlb, _ = self.bufs[i]
-        docs = delta_decode(varint_decode(g))
-        tf = varint_decode(tfb).astype(np.float64)
-        dl = varint_decode(dlb).astype(np.float64)
-        imp = self.idf * (
-            tf * (self.k1 + 1.0)
-            / (tf + self.k1 * (1.0 - self.b + self.b * dl / self.avgdl))
-        )
-        out = self._dec[i] = (docs, imp, dl)
-        return out
+        _decode([(self, [i])])
+        return self._dec[i]
 
     def positions(self, i: int) -> tuple[np.ndarray, np.ndarray]:
         """(flat absolute positions, per-posting offsets) of block ``i``:
         posting j owns ``pos[off[j]:off[j+1]]``."""
-        hit = self._pos.get(i)
-        if hit is not None:
-            return hit
-        _, tfb, _, pz = self.bufs[i]
-        tf = varint_decode(tfb).astype(np.int64)
-        # per-posting absolute positions: cumsum restarting at each
-        # posting (first value absolute): pos[j] = cp[j] - cp[start-1]
-        pp = varint_decode(pz).astype(np.int64)
-        off = np.concatenate(([0], np.cumsum(tf)))
-        starts = off[:-1]
-        cp = np.cumsum(pp)
-        base = np.zeros(len(pp), dtype=np.int64)
-        if len(starts):
-            adj = cp[starts - 1]
-            adj[starts == 0] = 0
-            base = np.repeat(adj, tf)
-        out = self._pos[i] = (cp - base, off)
-        return out
+        _decode_positions([(self, [i])])
+        return self._pos[i]
 
     def block_of(self, cand: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         """(block index, found) per candidate — blocks are sorted and
@@ -138,9 +154,145 @@ class BlockList:
         ok = (bi >= 0) & (cand <= self.lasts[np.clip(bi, 0, None)])
         return bi, ok
 
+    def joined(self, blocks) -> tuple[np.ndarray, np.ndarray]:
+        """(docs, impacts) of ``blocks`` (ascending, decoded) joined:
+        sorted, as the blocks do not overlap."""
+        if len(blocks) == 1:
+            return self._dec[blocks[0]][:2]
+        got = [self._dec[i] for i in blocks]
+        return (np.concatenate([d for d, _, _ in got]),
+                np.concatenate([imp for _, imp, _ in got]))
+
+
+def _join(parts, cols) -> tuple[np.ndarray, np.ndarray]:
+    """(joined bytes, per-block bounds) of the payload columns ``cols``,
+    one after the other, over the blocks ``idx`` of each (sub-list, idx)
+    part, in that order. Runs of blocks adjacent in their buffer are
+    sliced once; a batch that is one run is a view, not a copy."""
+    pieces, sizes = [], []
+    for col in cols:
+        for sl, idx in parts:
+            buf, lo, hi = sl.spans[col]
+            lo, hi = lo[idx].tolist(), hi[idx].tolist()
+            start, end = lo[0], hi[0]
+            for a, z in zip(lo[1:], hi[1:]):
+                if a != end:
+                    pieces.append(buf[start:end])
+                    start = a
+                end = z
+            pieces.append(buf[start:end])
+            sizes += [z - a for a, z in zip(lo, hi)]
+    bounds = np.zeros(len(sizes) + 1, dtype=np.int64)
+    np.cumsum(sizes, out=bounds[1:])
+    return (pieces[0] if len(pieces) == 1 else np.concatenate(pieces)), bounds
+
+
+def _named(parts, e: BlockError) -> ValueError:
+    """``e`` (a block of a batch) re-raised naming its list and block."""
+    j = e.block
+    for sl, idx in parts:
+        if j < len(idx):
+            return ValueError(f"{sl.name}, block {int(idx[j])}: {e}")
+        j -= len(idx)
+    return e
+
+
+def _params(sl: BlockList) -> tuple:
+    return sl.idf, sl.k1, sl.b, sl.avgdl
+
+
+def _decode(parts) -> None:
+    """Decode the blocks ``idx`` of each (sub-list, idx) part that are
+    not cached yet, as one batch: one ``decode_blocks`` (one varint pass
+    over the joined payload columns) and one BM25 expression per run of
+    parts that share idf, k1, b and avgdl (one run for the sub-lists of
+    one term); then cache each block as views into the batch arrays."""
+    parts = _missing(parts, "_dec")
+    if not parts:
+        return
+    n = np.concatenate([sl.ns[idx] for sl, idx in parts])
+    try:
+        docs, tf, dl = decode_blocks(n, *_join(parts, PAYLOAD))
+    except BlockError as e:
+        raise _named(parts, e) from None
+    tf = tf.astype(np.float64)
+    dl = dl.astype(np.float64)
+    imp = np.empty_like(tf)
+    off = np.concatenate(([0], np.cumsum(n))).tolist()
+    ends = np.cumsum([len(idx) for _, idx in parts]).tolist()
+    a = 0
+    for r, (sl, _) in enumerate(parts):
+        if r + 1 < len(parts) and _params(parts[r + 1][0]) == _params(sl):
+            continue
+        z = off[ends[r]]
+        t, d = tf[a:z], dl[a:z]
+        imp[a:z] = sl.idf * (
+            t * (sl.k1 + 1.0) / (t + sl.k1 * (1.0 - sl.b + sl.b * d / sl.avgdl))
+        )
+        a = z
+    j = 0
+    for sl, idx in parts:
+        dec = sl._dec
+        for i in idx.tolist():
+            a, z = off[j], off[j + 1]
+            dec[i] = (docs[a:z], imp[a:z], dl[a:z])
+            j += 1
+
+
+def _decode_positions(parts) -> None:
+    """``_decode`` for the positional payload: one batch of the tfs and
+    poss columns. Positions are stored as within-doc gaps whose first
+    value is absolute, so a posting's positions are the batch cumsum
+    minus its value ahead of the posting."""
+    parts = _missing(parts, "_pos")
+    if not parts:
+        return
+    for sl, _ in parts:
+        if "poss" not in sl.spans:
+            raise ValueError(
+                f"{sl.name}: no positional payload; index was not built "
+                "with positions=True"
+            )
+    n = np.concatenate([sl.ns[idx] for sl, idx in parts])
+    p_off = np.concatenate(([0], np.cumsum(n)))
+    try:
+        tf = varint_decode_blocks(*_join(parts, ["tfs"]), n).astype(np.int64)
+        off = np.concatenate(([0], np.cumsum(tf)))
+        pp = varint_decode_blocks(
+            *_join(parts, ["poss"]), off[p_off[1:]] - off[p_off[:-1]]
+        ).astype(np.int64)
+    except BlockError as e:
+        raise _named(parts, e) from None
+    cp = np.cumsum(pp)
+    pos = cp - np.repeat(np.concatenate(([0], cp))[off[:-1]], tf)
+    j = 0
+    for sl, idx in parts:
+        for i in idx.tolist():
+            a, z = p_off[j], p_off[j + 1]
+            sl._pos[i] = (pos[off[a]:off[z]], off[a : z + 1] - off[a])
+            j += 1
+
+
+def _missing(parts, cache: str):
+    """``parts`` cut to the blocks not yet in each sub-list's ``cache``."""
+    out = []
+    for sl, idx in parts:
+        have = getattr(sl, cache)
+        idx = np.asarray(idx, dtype=np.int64)
+        if have:
+            idx = idx[[i not in have for i in idx.tolist()]]
+        if len(idx):
+            out.append((sl, idx))
+    return out
+
 
 class TermPostings:
-    """All (salt, shard) sub-lists of one (field, term) in one bucket."""
+    """All (salt, shard) sub-lists of one (field, term) in one bucket.
+
+    Every read decodes in batches: ``decode_all`` all blocks in one
+    pass, ``imp_at`` and ``positions_bulk`` the blocks their candidates
+    touch, ``decode_blocks`` the blocks a block-max scorer asks for at
+    once. Blocks no read reaches stay undecoded."""
 
     __slots__ = ("subs", "n_postings")
 
@@ -159,39 +311,47 @@ class TermPostings:
         # upper bound is the MAX over sub-lists
         return max(float(sl.idf * sl.bmaxs.max()) for sl in self.subs.values())
 
-    def _blocks(self) -> list[tuple]:
-        return [
-            sl.decode(i)
-            for _, sl in sorted(self.subs.items())
-            for i in range(len(sl.firsts))
-        ]
+    def decode_blocks(self, keys) -> None:
+        """Decode the blocks ``keys`` = [((salt, shard), block)] not yet
+        cached, as one batch."""
+        by_sub: dict = {}
+        for skey, i in keys:
+            by_sub.setdefault(skey, []).append(i)
+        _decode([(self.subs[s], np.unique(ix)) for s, ix in by_sub.items()])
 
     def decode_all(self) -> tuple[np.ndarray, np.ndarray]:
         """(docs, impacts) of every block, sub-lists in key order."""
-        blocks = self._blocks()
-        return (
-            np.concatenate([d for d, _, _ in blocks]),
-            np.concatenate([imp for _, imp, _ in blocks]),
-        )
+        return decode_lists([self])[0]
 
     def all_docs(self) -> np.ndarray:
         """Sorted doc ids (u64) of the whole list."""
-        return np.sort(np.concatenate([d for d, _, _ in self._blocks()]))
+        return np.sort(self.decode_all()[0])
+
+    def _touched(self, cand: np.ndarray) -> list[tuple]:
+        """(sub-list, candidate indices, their blocks, the distinct
+        blocks) per sub-list whose block ranges hold candidates, with
+        those blocks decoded in one batch."""
+        out = []
+        for sl in self.subs.values():
+            bi, ok = sl.block_of(cand)
+            sel = np.flatnonzero(ok)
+            if len(sel):
+                out.append((sl, sel, bi[sel], np.unique(bi[sel])))
+        _decode([(sl, blocks) for sl, _, _, blocks in out])
+        return out
 
     def imp_at(self, cand: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         """(membership mask, impact — 0 where absent) per candidate;
         decodes ONLY blocks that contain candidates."""
         found = np.zeros(len(cand), dtype=bool)
         imp = np.zeros(len(cand), dtype=np.float64)
-        for sl in self.subs.values():
-            bi, ok = sl.block_of(cand)
-            for i in np.unique(bi[ok]):
-                sel = np.flatnonzero(ok & (bi == i))
-                docs, imps, _ = sl.decode(int(i))
-                pos = np.clip(np.searchsorted(docs, cand[sel]), 0, len(docs) - 1)
-                hit = docs[pos] == cand[sel]
-                found[sel[hit]] = True
-                imp[sel[hit]] = imps[pos[hit]]
+        for sl, sel, _, blocks in self._touched(cand):
+            docs, imps = sl.joined(blocks.tolist())
+            c = cand[sel]
+            pos = np.clip(np.searchsorted(docs, c), 0, len(docs) - 1)
+            hit = docs[pos] == c
+            found[sel[hit]] = True
+            imp[sel[hit]] = imps[pos[hit]]
         return found, imp
 
     def positions_bulk(
@@ -206,12 +366,13 @@ class TermPostings:
         ci_chunks: list[np.ndarray] = []
         pos_chunks: list[np.ndarray] = []
         dl_chunks: list[np.ndarray] = []
-        for sl in self.subs.values():
-            bi, ok = sl.block_of(cand)
-            for i in np.unique(bi[ok]):
-                sel = np.flatnonzero(ok & (bi == i))
-                docs, _, dl = sl.decode(int(i))
-                pos_flat, off = sl.positions(int(i))
+        touched = self._touched(cand)
+        _decode_positions([(sl, blocks) for sl, _, _, blocks in touched])
+        for sl, sel_all, bi, blocks in touched:
+            for i in blocks.tolist():
+                sel = sel_all[bi == i]
+                docs, _, dl = sl._dec[i]
+                pos_flat, off = sl._pos[i]
                 j = np.searchsorted(docs, cand[sel])
                 inb = j < len(docs)
                 hit = inb & (docs[np.clip(j, 0, len(docs) - 1)] == cand[sel])
@@ -239,6 +400,19 @@ class TermPostings:
         # ascending within every chunk; a doc never spans chunks)
         order = np.argsort(ci, kind="stable")
         return ci[order], pos[order].astype(np.int64), dls[order]
+
+
+def decode_lists(tps) -> list[tuple[np.ndarray, np.ndarray]]:
+    """``decode_all`` of each TermPostings in ``tps``: every block not
+    yet decoded, of all of them, decodes as one batch."""
+    subs = [[sl for _, sl in sorted(tp.subs.items())] for tp in tps]
+    _decode([(sl, np.arange(len(sl.firsts))) for ss in subs for sl in ss])
+    out = []
+    for ss in subs:
+        blocks = [sl._dec[i] for sl in ss for i in range(len(sl.firsts))]
+        out.append((np.concatenate([d for d, _, _ in blocks]),
+                    np.concatenate([imp for _, imp, _ in blocks])))
+    return out
 
 
 # ------------------------------------------------------ request scope
@@ -386,35 +560,62 @@ def read_bucket(
     if tbl.num_rows == 0:
         return out
     col = tbl.column
-    for f, t, sa, sh, n, fd, ld, mi, g, tfb, dlb, pz in zip(
+    # the rows of each sub-list, keys in first-appearance order
+    groups: dict[tuple, list[int]] = {}
+    for r, g in enumerate(zip(
         col("field").to_pylist() if multi else repeat(next(iter(want))),
-        col("term").to_pylist(), col("salt").to_pylist(),
-        col("shard").to_pylist(), col("n").to_pylist(),
-        col("first_doc").to_numpy().view(np.uint64),
-        col("last_doc").to_numpy().view(np.uint64),
-        col("max_impact").to_numpy().tolist(),
-        col("gaps").to_pylist(), col("tfs").to_pylist(), col("dls").to_pylist(),
-        col("poss").to_pylist() if positions else repeat(None),
-    ):
+        col("term").to_pylist(), col("salt").to_pylist(), col("shard").to_pylist(),
+    )):
+        groups.setdefault(g, []).append(r)
+    firsts = col("first_doc").to_numpy().view(np.uint64)
+    lasts = col("last_doc").to_numpy().view(np.uint64)
+    bmaxs = col("max_impact").to_numpy() * bound_scale
+    ns = col("n").to_numpy().astype(np.int64)
+    payload = {c: _binary_spans(col(c)) for c in ("gaps", "tfs", "dls")}
+    if positions:
+        payload["poss"] = _binary_spans(col("poss"))
+        p_valid = (col("poss").is_valid().to_numpy(zero_copy_only=False)
+                   if col("poss").null_count else None)
+    for (f, t, sa, sh), rows in groups.items():
+        rows = np.array(rows)
+        rows = rows[np.argsort(firsts[rows], kind="stable")]
         key = (f, t)
         tp = out.get(key)
         if tp is None:
             tp = out[key] = TermPostings()
-        skey = (sa, sh)
-        sl = tp.subs.get(skey)
-        if sl is None:
-            sl = tp.subs[skey] = BlockList(idfs.get(key, 0.0), k1, b, avgdls[f])
-        if key not in positions:
-            pz = None
-        elif pz is None:
-            raise ValueError(
-                "positional payload missing for term blocks; index was "
-                "not built with positions=True"
-            )
-        sl.add_block(fd, ld, mi * bound_scale, n, g, tfb, dlb, pz)
+        sl = tp.subs[(sa, sh)] = BlockList(
+            idfs.get(key, 0.0), k1, b, avgdls[f],
+            f"segment {seg_id} sb {sb}, term {f}:{t!r}, sub-list (salt {sa}, shard {sh})",
+        )
+        spans = {}
+        for c, (vals, offs) in payload.items():
+            if c == "poss":
+                if key not in positions:
+                    continue
+                if p_valid is not None and not p_valid[rows].all():
+                    raise ValueError(
+                        "positional payload missing for term blocks; index was "
+                        "not built with positions=True"
+                    )
+            spans[c] = (vals, offs[rows], offs[rows + 1])
+        sl.set_blocks(firsts[rows], lasts[rows], bmaxs[rows], ns[rows], spans)
     for tp in out.values():
         tp.seal()
     return out
+
+
+def _binary_spans(column) -> tuple[np.ndarray, np.ndarray]:
+    """(values, offsets) of a binary column, zero-copy over its Arrow
+    buffers: row i's bytes are ``values[offsets[i]:offsets[i+1]]``."""
+    import pyarrow as pa
+
+    arr = column.chunk(0) if column.num_chunks == 1 else column.combine_chunks()
+    _, off_buf, val_buf = arr.buffers()
+    dtype = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    offs = np.frombuffer(off_buf, dtype=dtype)[arr.offset : arr.offset + len(arr) + 1]
+    vals = (np.frombuffer(val_buf, dtype=np.uint8) if val_buf is not None
+            else np.empty(0, dtype=np.uint8))
+    return vals, offs
 
 
 def read_field(
@@ -443,7 +644,7 @@ def read_field(
 def exclusion(lists: dict, neg, tombstones: np.ndarray) -> np.ndarray:
     """Tombstones plus every doc holding one of the ``neg`` keys (must_not
     terms) — the set each scorer drops before its top-k."""
-    parts = [lists[key].all_docs() for key in neg if key in lists]
+    parts = [d for d, _ in decode_lists([lists[key] for key in neg if key in lists])]
     if not parts:
         return tombstones
     return np.union1d(tombstones, u64_to_doc_id(np.concatenate(parts)))

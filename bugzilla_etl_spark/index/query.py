@@ -48,6 +48,7 @@ from .postings import (
     ReadScope,
     TermPostings,
     _candidate_dict_dirs,
+    decode_lists,
     exclusion,
     read_allowed,
     read_docs,
@@ -323,6 +324,8 @@ def _make_bucket_scorer(
     live_terms = sorted(set(idfs) | set(neg))
     # built once: most buckets of a selective query return it
     empty = _empty_like(RESULT_SCHEMA)
+    # read here, in the driver, so both routes apply the same threshold
+    hot_postings = HOT_POSTINGS
 
     def score(key, _pdf):  # (key, pd.DataFrame) -> pd.DataFrame
         seg_id, sb = key[0], int(key[1])
@@ -342,7 +345,7 @@ def _make_bucket_scorer(
             present = sorted(pos_lists.keys() & set(terms))
             if not present:
                 continue
-            for d, s in _score_maxscore(present, pos_lists, excl, k, allowed):
+            for d, s in _score_maxscore(present, pos_lists, excl, k, allowed, hot_postings):
                 out_q.append(qid)
                 out_d.append(d)
                 out_s.append(s)
@@ -368,6 +371,7 @@ def _score_maxscore(
     tombstones: np.ndarray,
     k: int,
     allowed: np.ndarray | None = None,
+    hot_postings: int | None = None,
 ) -> list[tuple[int, float]]:
     """Exact top-k with hot-list block skipping (vectorized MaxScore).
 
@@ -384,9 +388,13 @@ def _score_maxscore(
     exact over the filtered doc space — never over-fetch-then-filter.
     Block-skipping stays sound: block upper bounds bound any doc in the
     block, allowed or not, so stopping when bound < theta(allowed
-    candidates) can never drop an allowed doc."""
-    sel = [t for t in terms if lists[t].n_postings <= HOT_POSTINGS]
-    hot = [t for t in terms if lists[t].n_postings > HOT_POSTINGS]
+    candidates) can never drop an allowed doc.
+
+    ``hot_postings``: the hot-list threshold (None = ``HOT_POSTINGS``)."""
+    if hot_postings is None:
+        hot_postings = HOT_POSTINGS
+    sel = [t for t in terms if lists[t].n_postings <= hot_postings]
+    hot = [t for t in terms if lists[t].n_postings > hot_postings]
     if len(terms) == 1 and hot and not tombstones.size and allowed is None:
         return _score_single_hot(lists[terms[0]], k)
     if hot and not sel:
@@ -394,7 +402,7 @@ def _score_maxscore(
         return _score_multi_hot(terms, lists, tombstones, k, allowed)
     if sel and hot:
         cand = np.unique(
-            np.concatenate([lists[t].decode_all()[0] for t in sel])
+            np.concatenate([d for d, _ in decode_lists([lists[t] for t in sel])])
         )
         if allowed is not None:
             cand = cand[_allowed_mask(cand, allowed)]
@@ -488,8 +496,14 @@ def _score_multi_hot(
                 rem += b_t if b_t > 0.0 else 0.0
             if rem < theta:
                 break
+        chunk = entries[pos : pos + CHUNK]
+        by_term: dict[str, list] = {}
+        for _, t, skey, i in chunk:
+            by_term.setdefault(t, []).append((skey, i))
+        for t, keys in by_term.items():  # one batch decode per term
+            lists[t].decode_blocks(keys)
         new_parts = []
-        for bound, t, skey, i in entries[pos : pos + CHUNK]:
+        for bound, t, skey, i in chunk:
             d = lists[t].subs[skey].decode(i)[0]
             new_parts.append(d)
             n_proc[t] += 1
@@ -558,9 +572,16 @@ def _score_single_hot(tp: TermPostings, k: int) -> list[tuple[int, float]]:
         ub_next = entries[pos][0]
         if n_seen >= k and ub_next < theta:
             break  # strict: equal-bound blocks still processed (ties)
+        # the chunk's blocks up to the first one the stop test below
+        # rejects: block sizes are stored, so it is found before decoding
+        take, n_take = [], n_seen
         for ub, s, i in entries[pos : pos + CHUNK]:
-            if n_seen >= k and ub < theta:
+            if n_take >= k and ub < theta:
                 break
+            take.append((s, i))
+            n_take += int(subs[s].ns[i])
+        tp.decode_blocks(take)
+        for s, i in take:
             d, imp, _ = subs[s].decode(i)
             docs_parts.append(d)
             imp_parts.append(imp)
@@ -588,7 +609,7 @@ def _score_full(
     k: int,
     allowed: np.ndarray | None = None,
 ) -> list[tuple[int, float]]:
-    decoded = {t: lists[t].decode_all() for t in terms}
+    decoded = dict(zip(terms, decode_lists([lists[t] for t in terms])))
     return _score_decoded(terms, decoded, tombstones, k, allowed)
 
 

@@ -3,17 +3,22 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from bugzilla_etl_spark.codec import (
+    BlockError,
+    decode_blocks,
     decode_sorted_docs,
     delta_decode,
     delta_encode,
     doc_id_to_u64,
     encode_sorted_docs,
+    join_blocks,
     u64_to_doc_id,
     varint_decode,
+    varint_decode_blocks,
     varint_encode,
 )
 
@@ -29,6 +34,72 @@ def test_varint_roundtrip_edges():
 def test_varint_empty():
     assert varint_encode(np.empty(0, dtype=np.uint64)) == b""
     assert varint_decode(b"").size == 0
+
+
+def test_varint_decode_rejects_a_cut_value():
+    """A buffer that ends inside a varint raises, instead of dropping the
+    partial value (``b"\x01\x81"`` used to decode to [1]) or failing
+    with a bare IndexError (``b"\x81"``)."""
+    for buf in (b"\x01\x81", b"\x81", b"\xff" * 3):
+        with pytest.raises(ValueError, match="ends inside"):
+            varint_decode(buf)
+    with pytest.raises(ValueError, match="11 bytes"):
+        varint_decode(b"\x80" * 10 + b"\x01")
+
+
+def test_block_boundaries_are_checked():
+    """Joined, ``b"\x01\x81" + b"\x02"`` is the valid varints [1, 257]:
+    the batch decode must see that block 0 holds one value and a cut one
+    where it should hold two."""
+    buf, bounds = join_blocks([b"\x01\x81", b"\x02"])
+    assert varint_decode(buf).tolist() == [1, 257]
+    with pytest.raises(BlockError, match="expected 2") as e:
+        varint_decode_blocks(buf, bounds, [2, 1])
+    assert e.value.block == 0
+    # right total, wrong split: block 0 does not end on a terminator
+    with pytest.raises(BlockError, match="cut off") as e:
+        varint_decode_blocks(buf, bounds, [1, 1])
+    assert e.value.block == 0
+    # a short LAST block is caught as well
+    buf, bounds = join_blocks([b"\x01", b"\x02\x83"])
+    with pytest.raises(BlockError) as e:
+        varint_decode_blocks(buf, bounds, [1, 2])
+    assert e.value.block == 1
+    # decode_blocks names the column of the joined gaps+tfs+dls batch
+    with pytest.raises(BlockError, match="^tfs: ") as e:
+        decode_blocks([1, 1], *join_blocks([b"\x01", b"\x01", b"\x01", b"\x81", b"\x01", b"\x01"]))
+    assert e.value.block == 1
+
+
+_EDGE = [0, 1, 127, 128, 2**56 - 1, 2**56, 2**63, 2**64 - 1]
+# values of every varint width 1..10, plus the edges above
+_U64S = st.one_of(
+    st.sampled_from(_EDGE),
+    st.integers(min_value=0, max_value=9).flatmap(
+        lambda w: st.integers(min_value=0, max_value=2 ** min(7 * (w + 1), 64) - 1)
+    ),
+)
+
+
+@settings(max_examples=80, deadline=None)
+@given(st.lists(st.lists(_U64S, min_size=1, max_size=40), min_size=1, max_size=12))
+def test_decode_blocks_equals_per_block_decode(blocks):
+    """The batched decode of a block set equals decoding block by block:
+    doc ids by the segmented cumsum (uint64 wrap included), tfs and dls
+    by one joined pass. Blocks hold sorted ids from 1 posting up, widths
+    mixed within and across blocks."""
+    docs = [np.array(sorted(b), dtype=np.uint64) for b in blocks]
+    vals = [np.array(b, dtype=np.uint64) for b in blocks]
+    gaps = [encode_sorted_docs(d) for d in docs]
+    raw = [varint_encode(v) for v in vals]
+    n = [len(b) for b in blocks]
+    got_docs, got_tf, got_dl = decode_blocks(n, *join_blocks(gaps + raw + raw))
+    want_docs = np.concatenate([delta_decode(varint_decode(g)) for g in gaps])
+    want_vals = np.concatenate([varint_decode(r) for r in raw])
+    assert np.array_equal(got_docs, want_docs)
+    assert np.array_equal(got_docs, np.concatenate(docs))
+    assert np.array_equal(got_tf, want_vals) and np.array_equal(got_dl, want_vals)
+    assert got_docs.dtype == got_tf.dtype == np.uint64
 
 
 @settings(max_examples=50, deadline=None)

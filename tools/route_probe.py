@@ -3,13 +3,20 @@
 the route model's cost per candidate-generator posting (``C_CAND_MS``).
 
     python3 tools/route_probe.py [--docs 100000,200000,300000] [--n-sb 8]
-        [--reps 3] [--master local[4]] > probe8.txt
+        [--reps 3 | --pairs 15] [--requests phrase,bool,...]
+        [--master local[4]] > probe8.txt
     python3 tools/route_probe.py --fit probe8.txt probe4.txt ...
 
 Per index size it builds one synthetic single-segment index (``n_sb``
 work items; positions, a shingle field, ``parent``/``tag``/``embedding``
 doc attrs) in a temporary directory and runs each request below forced
-``local`` and forced ``spark``, ``--reps`` times alternately. A spy on
+``local`` and forced ``spark``, ``--reps`` times alternately, and
+reports each route's median. ``--pairs N`` is the resolvable mode: N
+interleaved local/Spark pairs per request, the order flipping from pair
+to pair, reported as each route's minimum (``local_ms``/``spark_ms``)
+and quartiles (``local_q``/``spark_q``); a median of 3 on this kind of
+box spreads too widely to compare two checkouts. ``--requests`` runs
+a subset of the kinds below. A spy on
 ``query.route`` records the request's work items, estimate and the unit
 cost its executor prices the estimate at (``C_POST_MS`` or
 ``C_CAND_MS``). Prints (and flushes) one JSON line per request as soon
@@ -58,6 +65,8 @@ REQUESTS = {
     "bool": lambda s, d, ex: bool_search_many(
         s, d, [(0, Bool(must=("beta", "alpha t5"), must_not="t7"), 10),
                (1, Bool(must=("gamma", "alpha t6"), must_not="t7"), 10)], execution=ex),
+    "bool_and_should": lambda s, d, ex: bool_search_many(
+        s, d, [(0, Bool(must="alpha beta", operator="and", should="d1 d2 d3"), 10)], execution=ex),
     "multi_match": lambda s, d, ex: multi_match_search_many(s, d, [(0, "beta t3", 10)], ["content", "sh"], execution=ex),
     "nested": lambda s, d, ex: nested_search_many(s, d, [(0, "alpha beta", 10)], "parent", execution=ex),
     "nested_terms_agg": lambda s, d, ex: nested_terms_agg(s, d, "tag", "alpha beta", parent_attr="parent", execution=ex),
@@ -92,8 +101,10 @@ def build(spark, d: str, n_docs: int, n_sb: int) -> None:
                 doc_attrs=["parent", "embedding", "tag"], extra_fields={"sh": "code_v1_shingle"})
 
 
-def probe(spark, d: str, reps: int):
-    """Yield one row per request as soon as it is measured."""
+def probe(spark, d: str, reps: int, pairs: int = 0, names=None):
+    """Yield one row per request as soon as it is measured: the median
+    of ``reps`` alternate runs per route, or with ``pairs`` the minimum
+    and quartiles of that many interleaved pairs."""
     seen = []
     real_route = Q.route
 
@@ -104,13 +115,15 @@ def probe(spark, d: str, reps: int):
     Q.route = spy
     try:
         for name, run in REQUESTS.items():
+            if names and name not in names:
+                continue
             seen.clear()
             run(spark, d, "auto")
             (n_work, est, c_post), = seen
             ts = {"local": [], "spark": []}
             out = {}
-            for _ in range(reps):
-                for ex in ts:
+            for i in range(pairs or reps):
+                for ex in (("local", "spark") if not pairs or i % 2 == 0 else ("spark", "local")):
                     t0 = time.perf_counter()
                     out[ex] = run(spark, d, ex)
                     ts[ex].append((time.perf_counter() - t0) * 1e3)
@@ -118,9 +131,13 @@ def probe(spark, d: str, reps: int):
                    "work_items": n_work, "est": est}
             if out["local"] != out["spark"]:
                 row["error"] = "local and spark answers differ"
-            else:
+            elif not pairs:
                 row.update(local_ms=round(statistics.median(ts["local"])),
                            spark_ms=round(statistics.median(ts["spark"])))
+            else:
+                for ex, t in ts.items():
+                    row[f"{ex}_ms"] = round(min(t), 1)
+                    row[f"{ex}_q"] = [round(q, 1) for q in statistics.quantiles(t, n=4)]
             yield row
     finally:
         Q.route = real_route
@@ -169,6 +186,9 @@ def main() -> int:
     ap.add_argument("--docs", default="100000,200000,300000")
     ap.add_argument("--n-sb", type=int, default=8)
     ap.add_argument("--reps", type=int, default=3)
+    ap.add_argument("--pairs", type=int, default=0,
+                    help="min-of-N mode: N interleaved local/spark pairs per request")
+    ap.add_argument("--requests", default="", help="comma-separated subset of the kinds")
     ap.add_argument("--master", default="local[4]")
     ap.add_argument("--fit", nargs="+", metavar="OUT", help="fit saved outputs instead of probing")
     args = ap.parse_args()
@@ -176,13 +196,18 @@ def main() -> int:
         rows = [json.loads(ln) for p in args.fit for ln in open(p) if ln.startswith("{")]
         fit(rows)
         return 0
+    names = set(filter(None, args.requests.split(",")))
+    if names - REQUESTS.keys():
+        ap.error(f"unknown requests: {sorted(names - REQUESTS.keys())}")
+    if args.pairs == 1:
+        ap.error("--pairs needs at least 2 pairs for quartiles")
     spark = get_spark(master=args.master)
     rows = []
     for n_docs in (int(x) for x in args.docs.split(",")):
         d = tempfile.mkdtemp(prefix="route_probe_")
         try:
             build(spark, os.path.join(d, "idx"), n_docs, args.n_sb)
-            for r in probe(spark, os.path.join(d, "idx"), args.reps):
+            for r in probe(spark, os.path.join(d, "idx"), args.reps, args.pairs, names):
                 r.update(n_docs=n_docs, cores=Q._cores(spark))
                 rows.append(r)
                 print(json.dumps(r), flush=True)

@@ -18,6 +18,17 @@ REPO, and pickles {(entry, route): ("ok", result) | ("err", message)}:
 (also paged with ``search_after`` in pages of 7, concatenated),
 ``terms_agg(sub_hits)`` and ``matches_df``.
 
+The ``hot:`` entries are the hot-list pass: ``query.HOT_POSTINGS`` is
+forced to 64 (the index's lists never pass 4096 postings per bucket)
+and ``search_many`` runs with k=10, so ``_score_single_hot``,
+``_score_multi_hot`` and the selective+hot candidate probe (``imp_at``)
+do the scoring: single-term, all-hot and selective+hot queries, plain,
+filtered and with must_not, on the tombstoned index and on ``h``, a
+second index without tombstones (the single-term hot scorer runs only
+there). A checkout whose bucket scorer reads the threshold when the
+request is planned applies it on the Spark route too; an older one
+scores the Spark route exhaustively, which must give the same bits.
+
 ``--compare`` prints, per call, whether both sides return the same ids
 in the same order and, where they do, how many scores differ and the
 largest difference; it also checks local == Spark on each side. Exit
@@ -33,6 +44,9 @@ import os
 import pickle
 import sys
 import time
+
+#: the hot-list threshold of the ``hot:`` entries
+HOT_POSTINGS = 64
 
 
 def build(spark, root):
@@ -51,6 +65,10 @@ def build(spark, root):
     assert len(m.segments) == 3, len(m.segments)
     ids = [r["doc_id"] for r in spark.read.parquet(m.segment_dirs(d)[0] + "/docs").select("doc_id").collect()]
     delete_docs(spark, d, sorted(ids)[::9][:40], auto_compact_ratio=None)
+    h = os.path.join(root, "h")
+    build_index(spark, generate_corpus(spark, 600, partitions=4), h, n_shards=4, n_tb=4,
+                n_sb=2, block_size=32)
+    incremental_update(spark, generate_corpus(spark, 300, partitions=4, start=600), h)
 
 
 def run(spark, root):
@@ -58,6 +76,7 @@ def run(spark, root):
         Bool, bool_search, match_phrase_prefix_search_many, matches_df,
         multi_match_search_many, phrase_search_many, search_many, terms_agg,
     )
+    from bugzilla_etl_spark.index import query as Q
 
     d = os.path.join(root, "s")
     qs = [(0, "return int fn", 600), (1, "struct impl", 600), (2, "fn self", 600)]
@@ -135,6 +154,22 @@ def run(spark, root):
     for n in ("must_and_should_overlap", "phrase_freq", "mm_most3"):
         E[f"matches_df:{n}"] = lambda ex, q=B[n]: sorted(
             (r["doc_id"], r["score"]) for r in matches_df(spark, d, q).collect())
+
+    def hot(root_name, kw):
+        def call(ex):
+            old, Q.HOT_POSTINGS = Q.HOT_POSTINGS, HOT_POSTINGS
+            try:
+                return search_many(spark, os.path.join(root, root_name), hq, execution=ex, **kw)
+            finally:
+                Q.HOT_POSTINGS = old
+        return call
+
+    hq = [(0, "return", 10), (1, "switch", 10), (2, "return int fn", 10),
+          (3, "struct impl pub", 10), (4, "r40_sym6 return", 10),
+          (5, "r47_sym27 r0_sym13 self int", 10)]
+    for root_name in ("s", "h"):
+        for n, kw in (("plain", {}), ("pred", {"predicate": pred}), ("not", {"must_not": ["while"]})):
+            E[f"hot:{root_name}:{n}"] = hot(root_name, kw)
     out = {}
     for en, fn in E.items():
         for ex in ("local", "spark"):
