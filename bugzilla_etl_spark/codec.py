@@ -2,9 +2,13 @@
 
 The reference delegates posting-list storage to Lucene via ES
 (/root/reference/configuration/es/bug_version.json); our engine owns the
-format: sorted doc ids are delta-gapped then varint encoded, term
+format: sorted values are delta-gapped then varint encoded, term
 frequencies and doc lengths varint encoded, in blocks of
 ``BLOCK_SIZE`` docs with per-block max-impact metadata (block-max MaxScore).
+In postings format 2 a term block's gaps are segment-local doc ordinals
+and its doc lengths live once per doc in its group's all-docs list (see
+``index.build.ALL_DOCS``); format 1 stored doc-id gaps and one doc
+length per posting.
 
 No per-row Python: encode is O(max_varint_width) numpy passes over
 whole arrays (the per-``j`` loop runs <= 10 iterations regardless of
@@ -55,10 +59,11 @@ def varint_encode_segmented(values: np.ndarray, seg_starts: np.ndarray) -> list[
     per-value independent, so slicing the whole-array encoding at value
     boundaries is bit-identical to encoding each segment separately —
     but costs 3 numpy passes per GROUP instead of 3 per BLOCK (the
-    per-block calls were ~60% of SPIMI encode time)."""
+    per-block calls were ~60% of SPIMI encode time). Every segment may
+    be empty, the whole array too: each still gets its ``b""``."""
     v = np.ascontiguousarray(values, dtype=_U64)
     if v.size == 0:
-        return []
+        return [b""] * len(seg_starts)
     nb = np.ones(v.shape, dtype=np.int64)
     for j in range(1, 10):
         nb += (v >= (_U64(1) << _U64(7 * j))).astype(np.int64)
@@ -190,23 +195,31 @@ def join_blocks(bufs) -> tuple[np.ndarray, np.ndarray]:
 PAYLOAD = ("gaps", "tfs", "dls")
 
 
-def decode_blocks(n, buf, bounds) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+def decode_blocks(
+    n, buf, bounds, tf_n=None, dl_n=None
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(doc ids, tfs, dls) of a batch of blocks, each uint64, from ONE
     ``varint_decode_blocks`` pass: ``n`` holds the blocks' posting
     counts, ``buf`` their ``PAYLOAD`` columns joined column after column
     (all blocks' gaps, then all tfs, then all dls) and ``bounds`` the
-    3 * len(n) + 1 block bounds in it. Each block's first gap is
-    absolute, so doc ids come back by one segmented cumsum: the
-    whole-batch cumsum minus its value ahead of each block (uint64
-    wraps, so the difference is exact)."""
+    3 * len(n) + 1 block bounds in it. ``tf_n`` / ``dl_n`` are the
+    blocks' tfs / dls value counts where they are not ``n``: a format-2
+    term block stores no dls (0) and an all-docs block no tfs (0). The
+    gaps decode to one value per posting: each block's first gap is
+    absolute, so the values (doc ids, or format 2's ordinals) come back
+    by one segmented cumsum: the whole-batch cumsum minus its value
+    ahead of each block (uint64 wraps, so the difference is exact)."""
     n = np.asarray(n, dtype=np.int64)
+    tf_n = n if tf_n is None else np.asarray(tf_n, dtype=np.int64)
+    dl_n = n if dl_n is None else np.asarray(dl_n, dtype=np.int64)
     try:
-        vals = varint_decode_blocks(buf, bounds, np.concatenate((n, n, n)))
+        vals = varint_decode_blocks(buf, bounds, np.concatenate((n, tf_n, dl_n)))
     except BlockError as e:
         col, block = divmod(e.block, len(n))
         raise BlockError(block, f"{PAYLOAD[col]}: {e}") from None
     total = int(n.sum())
-    g, tf, dl = vals[:total], vals[total : 2 * total], vals[2 * total :]
+    n_tf = total + int(tf_n.sum())
+    g, tf, dl = vals[:total], vals[total:n_tf], vals[n_tf:]
     cs = np.zeros(total + 1, dtype=_U64)
     np.cumsum(g, dtype=_U64, out=cs[1:])
     docs = cs[1:] - np.repeat(cs[np.cumsum(n) - n], n)

@@ -21,7 +21,8 @@ Reference parity (see SURVEY.md §7.0):
 Layout per segment (build, append and merge write the same one)::
 
     <index_dir>/segments/<seg_id>/
-        postings/batch=B/sb=S/*.parquet   # block rows (see BLOCK_SCHEMA),
+        postings/batch=B/sb=S/*.parquet   # block rows (see BLOCK_SCHEMA;
+                                          # term and all-docs rows),
                                           # sb = shard % n_sb
         docs/batch=B/*.parquet            # doc dimension incl. sha256
         dict/*.parquet                    # (field, term, df, tb)
@@ -57,6 +58,13 @@ from ..tokenize import (
 from .bloom import SegmentBlooms, write_segment_blooms
 from .manifest import IndexManifest
 
+#: one block row per (field, term, shard, salt, block_id). In postings
+#: format 2 a term block's ``gaps`` are its docs' ordinals (see
+#: ``ALL_DOCS``) as varint deltas, the first absolute, and its ``dls``
+#: are empty; ``first_doc``/``last_doc`` stay the u64 doc ids (stored
+#: as int64) of its first and last posting and ``max_impact`` its BM25
+#: bound without idf. Format 1 (written before format 2, still read)
+#: stored doc-id gaps and one dl per posting.
 BLOCK_SCHEMA = T.StructType(
     [
         T.StructField("shard", T.IntegerType()),
@@ -76,13 +84,27 @@ BLOCK_SCHEMA = T.StructType(
         # per posting, that doc's term positions as within-doc varint
         # deltas (first absolute), concatenated in posting order — the
         # posting's tf IS the position count, so no extra length table.
-        # NULL for non-positional builds/fields; phrase queries verify
-        # adjacency from these (Lucene match_phrase parity — the
-        # reference's shingle filters only approximate bigram adjacency,
+        # NULL for non-positional builds/fields and all-docs rows;
+        # phrase queries verify adjacency from these (Lucene
+        # match_phrase parity — the reference's shingle filters only
+        # approximate bigram adjacency,
         # configuration/es/bug_version.json:26-35).
         T.StructField("poss", T.BinaryType()),
     ]
 )
+
+#: the postings format build, append and merge write; each segment's
+#: manifest entry records its own (absent = 1)
+POSTINGS_FORMAT = 2
+
+#: the reserved term of the all-docs rows (format 2): one list per
+#: (field, shard, salt) encoder group, whose ``gaps`` are the group's
+#: doc ids with postings in the field, ascending, as u64 varint deltas,
+#: and whose ``dls`` are those docs' lengths (``tfs`` empty,
+#: ``max_impact`` 0). A posting's ordinal indexes both. No analyzer
+#: emits an empty token, and these rows are not a term: the dictionary,
+#: the term blooms and posting counts leave them out.
+ALL_DOCS = ""
 
 DOCS_COLS = ["doc_id", "repo", "path", "commit", "lang", "doc_len", "sha256", "shard"]
 
@@ -216,6 +238,16 @@ def _impact(tf: np.ndarray, dl: np.ndarray, avgdl: float, k1: float, b: float) -
     return (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl))
 
 
+def _block_gaps(v: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    """Delta gaps of ``v`` (ascending within each block) with a reset at
+    each block start, which keeps its absolute value."""
+    gaps = np.empty_like(v)
+    gaps[0] = v[0]
+    np.subtract(v[1:], v[:-1], out=gaps[1:])
+    gaps[starts] = v[starts]
+    return gaps
+
+
 def _blocks_frame(
     shard: int,
     salt: int,
@@ -228,17 +260,27 @@ def _blocks_frame(
     dl: np.ndarray,
     imp: np.ndarray,
     block_size: int,
+    n_tb: int,
     pos_gaps: np.ndarray | None = None,
 ) -> pd.DataFrame:
-    """Vectorized block assembly for one encoder group.
+    """Vectorized block assembly for one encoder group, in postings
+    format 2.
 
     Inputs are the group's postings sorted by (term code, doc_u64);
     ``cg`` holds per-posting codes into the SORTED vocab ``uniq_terms``.
-    Block segmentation, delta-gaps, per-block varint buffers, and
-    max-impact metadata are all whole-group numpy passes — no per-block
-    Python loop (per-block varint calls measured ~60% of encode time).
-    Output rows are ordered (term, block_id): identical bytes and order
-    to the per-block encoder it replaces (checksum-verified)."""
+    A doc's ordinal is the rank of its id among the group's distinct
+    ids, so ordinal order is doc-id order. Term blocks store ordinal
+    gaps and tfs, and no dls; the group's all-docs rows (term
+    ``ALL_DOCS``, ``block_size`` docs per block) store its ids as u64
+    gaps and each doc's length as its dls. Block segmentation, gaps,
+    varint buffers and max-impact metadata are whole-group numpy
+    passes — no per-block Python loop (per-block varint calls measured
+    ~60% of encode time). Rows come all-docs first, then by (term,
+    block_id)."""
+    if uniq_terms[0] == ALL_DOCS:
+        raise ValueError(f"field {fld!r}: the analyzer emitted an empty token")
+    ids, first = np.unique(du, return_index=True)
+    ords = np.searchsorted(ids, du).astype(np.uint64)
     change = np.empty(len(cg), dtype=bool)
     change[0] = True
     change[1:] = cg[1:] != cg[:-1]
@@ -252,21 +294,13 @@ def _blocks_frame(
     block_start = starts[term_of_block] + block_size * b_idx
     block_end = np.minimum(block_start + block_size, ends[term_of_block])
 
-    # block-local delta gaps: elementwise diff with a reset at each
-    # block's first posting (the absolute doc id)
-    gaps = np.empty_like(du)
-    gaps[0] = du[0]
-    np.subtract(du[1:], du[:-1], out=gaps[1:])
-    gaps[block_start] = du[block_start]
-
-    gap_bufs = varint_encode_segmented(gaps, block_start)
+    gap_bufs = varint_encode_segmented(_block_gaps(ords, block_start), block_start)
     tf_bufs = varint_encode_segmented(tf.astype(np.uint64), block_start)
-    dl_bufs = varint_encode_segmented(dl.astype(np.uint64), block_start)
     if pos_gaps is not None:
         # positions live in the flat token space: posting p owns the
         # tf[p] entries starting at cumsum(tf)[p-1] — block boundaries
         # map through that cumsum, so the whole group's positions
-        # varint-encode in ONE segmented pass like gaps/tfs/dls
+        # varint-encode in ONE segmented pass like gaps/tfs
         flat_starts = np.concatenate(([0], np.cumsum(tf)))
         pos_bufs = varint_encode_segmented(
             pos_gaps.astype(np.uint64), flat_starts[block_start]
@@ -274,25 +308,31 @@ def _blocks_frame(
     else:
         pos_bufs = [None] * len(block_start)
     bmax = np.maximum.reduceat(imp, block_start)
-    first = u64_to_doc_id(du[block_start])
-    last = u64_to_doc_id(du[block_end - 1])
     term_codes = cg[block_start]
+
+    a_start = np.arange(0, len(ids), block_size)
+    a_end = np.minimum(a_start + block_size, len(ids))
+    n_a, n_t = len(a_start), len(block_start)
     return pd.DataFrame(
         {
-            "shard": np.full(len(block_start), shard, dtype=np.int32),
-            "tb": tb_per_term[term_codes].astype(np.int32),
-            "salt": np.full(len(block_start), salt, dtype=np.int32),
-            "field": np.full(len(block_start), fld, dtype=object),
-            "term": uniq_terms[term_codes],
-            "block_id": b_idx.astype(np.int32),
-            "n": (block_end - block_start).astype(np.int32),
-            "first_doc": first,
-            "last_doc": last,
-            "max_impact": bmax,
-            "gaps": gap_bufs,
-            "tfs": tf_bufs,
-            "dls": dl_bufs,
-            "poss": pos_bufs,
+            "shard": np.full(n_a + n_t, shard, dtype=np.int32),
+            "tb": np.concatenate((
+                np.full(n_a, py_term_bucket(ALL_DOCS, n_tb)), tb_per_term[term_codes],
+            )).astype(np.int32),
+            "salt": np.full(n_a + n_t, salt, dtype=np.int32),
+            "field": np.full(n_a + n_t, fld, dtype=object),
+            "term": np.concatenate((np.full(n_a, ALL_DOCS, dtype=object),
+                                    uniq_terms[term_codes])),
+            "block_id": np.concatenate((np.arange(n_a), b_idx)).astype(np.int32),
+            "n": np.concatenate((a_end - a_start, block_end - block_start)).astype(np.int32),
+            "first_doc": u64_to_doc_id(np.concatenate((ids[a_start], du[block_start]))),
+            "last_doc": u64_to_doc_id(np.concatenate((ids[a_end - 1], du[block_end - 1]))),
+            "max_impact": np.concatenate((np.zeros(n_a), bmax)),
+            "gaps": varint_encode_segmented(_block_gaps(ids, a_start), a_start) + gap_bufs,
+            "tfs": [b""] * n_a + tf_bufs,
+            "dls": varint_encode_segmented(dl[first].astype(np.uint64), a_start)
+            + [b""] * n_t,
+            "poss": [None] * n_a + pos_bufs,
         }
     )
 
@@ -389,7 +429,7 @@ def _make_spimi_encoder(
         )
         return _blocks_frame(
             shard, salt, fld, cg, uniq_terms, tb_per_term, du, tf, dl, imp,
-            block_size, pos_gaps,
+            block_size, n_tb, pos_gaps,
         )
 
     def run(key, pdf):  # (key, pd.DataFrame) -> pd.DataFrame
@@ -557,8 +597,9 @@ def build_index(
         obs = Observation(f"docs_stats_{bi}")
         good = ~_bad_row_col()
         # shard-cluster rows within files (shuffle-free sortWithinPartitions):
-        # the filtered-search bucket scan filters on shard ISIN + predicate,
-        # and shard-homogeneous row groups let parquet min/max stats prune
+        # the filtered-search bucket scan filters on shard ISIN + predicate;
+        # shard-homogeneous row groups let equality and range filters
+        # prune by parquet min/max stats (an isin prunes little)
         _atomic_write(
             batch_of(shards)
             .observe(
@@ -666,6 +707,7 @@ def build_index(
             "id": seg_id,
             "n_docs": m.n_docs,
             "postings": sum(v["postings"] for v in batch_lineage.values()),
+            "format": POSTINGS_FORMAT,
             # build-time avgdl the block max_impact bounds were baked with:
             # query-time pruning rescales bounds by max(1, avgdl_now/this)
             # so they stay sound after incremental updates raise avgdl
@@ -678,6 +720,7 @@ def build_index(
         }
     )
     m.checkpoints = {}
+    m.version = POSTINGS_FORMAT
     m.commit(index_dir)
     return m
 
@@ -708,23 +751,29 @@ def _build_batch(
 def _write_postings(blocks: DataFrame, seg_dir: str, n_sb: int, batch_id: int = 0) -> int:
     """The one postings writer (build, append and merge): encoded block
     rows from a ``(shard, salt)``-grouped stage -> ``postings/batch=<id>/
-    sb=<shard % n_sb>``. Returns the posting count (observed on the
-    write — no read-back pass).
+    sb=<shard % n_sb>``. Returns the posting count, all-docs rows left
+    out (observed on the write — no read-back pass).
 
     ``sb`` is the query executor's task granularity (one pyarrow-reading
-    Python task per (segment, sb)); within files, rows are sorted by
-    (tb, term) so query-term predicates prune row groups via parquet
-    min/max statistics. Directory count stays small (n_sb per batch —
-    512 dirs measured a 10x write-commit penalty), and every encoder
-    group lands in one task, so an ``sb`` dir holds at most one file per
-    (shard, salt) group it stores."""
+    Python task per (segment, sb)): the hive ``sb`` directory filter is
+    the pruning every query read gets. Within files, rows are sorted by
+    (tb, term), so a term's blocks are adjacent. That sort does not
+    prune row groups at these sizes: each sb file is one row group, and
+    pyarrow 16.1 prunes little or nothing for ``isin`` filters (measured
+    on a 256-row-group rewrite: ``term.isin([...])`` kept 79/79 row
+    groups, ``tb.isin([3])`` 72/79, ``tb == 3`` 16/79). Directory count
+    stays small (n_sb per batch — 512 dirs measured a 10x write-commit
+    penalty), and every encoder group lands in one task, so an ``sb``
+    dir holds at most one file per (shard, salt) group it stores."""
     from ..session import python_stage_tuning
 
     obs = Observation(f"postings_{batch_id}")
     with python_stage_tuning(blocks.sparkSession):
         _atomic_write(
             blocks.withColumn("sb", F.pmod(F.col("shard"), F.lit(n_sb)).cast("int"))
-            .observe(obs, F.sum("n").alias("p"))
+            .observe(obs, F.sum(
+                F.when(F.col("term") != F.lit(ALL_DOCS), F.col("n"))
+            ).alias("p"))
             .sortWithinPartitions("sb", "tb", "term", "field", "salt", "block_id"),
             os.path.join(seg_dir, "postings"),
             batch_id,
@@ -761,9 +810,9 @@ def _atomic_write(
 
 def _write_dict(spark: SparkSession, seg_dir: str, small: bool = False) -> int:
     """Segment finalize: term dictionary derived from the written blocks
-    (df = sum of block ns — exact, since a doc appears once per term).
-    Returns the vocabulary size (sizes the term bloom without a count
-    job).
+    (df = sum of block ns — exact, since a doc appears once per term;
+    all-docs rows are not a term and stay out). Returns the vocabulary
+    size (sizes the term bloom without a count job).
 
     ``small`` (the incremental-increment case): one driver-side pyarrow
     column read + pandas groupby + single sorted parquet file — zero
@@ -777,7 +826,7 @@ def _write_dict(spark: SparkSession, seg_dir: str, small: bool = False) -> int:
         import pyarrow.parquet as pq
 
         tbl = ds.dataset(postings_path, format="parquet", partitioning="hive").to_table(
-            columns=["field", "term", "n", "tb"]
+            columns=["field", "term", "n", "tb"], filter=ds.field("term") != ALL_DOCS
         )
         pdf = tbl.to_pandas()
         agg = (
@@ -800,7 +849,7 @@ def _write_dict(spark: SparkSession, seg_dir: str, small: bool = False) -> int:
         pq.write_table(out, os.path.join(dict_path, "part-00000.parquet"))
         return len(agg)
 
-    blocks = spark.read.parquet(postings_path)
+    blocks = spark.read.parquet(postings_path).filter(F.col("term") != ALL_DOCS)
     obs = Observation("dict_terms")
     (
         blocks.groupBy("field", "term")
@@ -984,12 +1033,14 @@ def incremental_update(
             "id": seg_id,
             "n_docs": n_new,
             "postings": lineage["postings"],
+            "format": POSTINGS_FORMAT,
             "avgdl": avgdl,
             "field_avgdl": avgdl_by_field,
             "lineage": lineage,
             "row_errors": row_errors,
         }
     )
+    m.version = POSTINGS_FORMAT
     m.commit(index_dir)
     return m
 

@@ -3,9 +3,10 @@
 The reference's correctness discipline is golden-output diffing between
 runs (stabilize(), parse_bug_history.js:444-445). For the index, the
 canonical form is the sorted logical content of all committed segments:
-(shard, tb, salt, term, block_id, gaps, tfs, dls, max_impact) plus the
-docs dimension. Two builds are equivalent iff their checksums match —
-used by the kill/resume and parallelism-determinism tests.
+(shard, tb, salt, field, term, block_id, gaps, tfs, dls, max_impact) —
+all-docs rows included — plus the docs dimension. Two builds are
+equivalent iff their checksums match — used by the kill/resume and
+parallelism-determinism tests.
 """
 
 from __future__ import annotations
@@ -26,6 +27,7 @@ def index_checksum(spark: SparkSession, index_dir: str) -> str:
         "shard",
         "tb",
         "salt",
+        "field",
         "term",
         "block_id",
         F.sha2(F.col("gaps"), 256).alias("g"),
@@ -33,11 +35,11 @@ def index_checksum(spark: SparkSession, index_dir: str) -> str:
         F.sha2(F.col("dls"), 256).alias("d"),
         F.round("max_impact", 9).alias("mi"),
     )
-    rows = blocks.orderBy("shard", "tb", "salt", "term", "block_id").collect()
+    rows = blocks.orderBy("shard", "tb", "salt", "field", "term", "block_id").collect()
     h = hashlib.sha256()
     for r in rows:
         h.update(
-            f"{r['shard']}|{r['tb']}|{r['salt']}|{r['term']}|{r['block_id']}|"
+            f"{r['shard']}|{r['tb']}|{r['salt']}|{r['field']}|{r['term']}|{r['block_id']}|"
             f"{r['g']}|{r['t']}|{r['d']}|{r['mi']}\n".encode()
         )
     docs = read_segment_union(spark, seg_dirs, "docs").select(

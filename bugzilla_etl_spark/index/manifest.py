@@ -76,7 +76,10 @@ def path_lock(lock_path: str):
 
 @dataclass
 class IndexManifest:
-    version: int = 1
+    # the newest postings format among the segments this code wrote
+    # (build.POSTINGS_FORMAT); each segment entry's "format" says which
+    # one its postings use (absent = 1, the pre-ordinal format)
+    version: int = 2
     # analyzer/scoring config — fixed at creation, shared by build & query
     k1: float = 1.2
     b: float = 0.75

@@ -2,7 +2,9 @@
 
 The reference's Sorted Merge (bugzilla_to_json.ktr:1403-1429) applied to
 index segments instead of row streams: all merged segments' blocks for
-a (shard, salt) group are decoded, tombstoned docs dropped,
+a (shard, salt) group are decoded (each segment's format-2 ordinals
+through its own all-docs list; format-1 blocks as stored), tombstoned
+docs dropped,
 doc-duplicates collapsed (content-addressed doc ids — the same
 (repo,path,commit) re-indexed is byte-identical, keep-one), then
 re-encoded into fresh blocks with block-max impacts recomputed against
@@ -13,7 +15,9 @@ Distributed end-to-end: the heavy work is one applyInPandas over
 (shard, salt) groups — the build's SPIMI grouping — so the merge scales
 with the index, not with the driver, and writes through the build's own
 postings, dict and bloom writers: a fully merged segment's blocks equal
-those of a fresh build of its live docs, in the same file layout.
+those of a fresh build of its live docs, in the same file layout and
+in the current postings format — compaction is the one path that
+rewrites format-1 segments.
 """
 
 from __future__ import annotations
@@ -36,7 +40,9 @@ from ..codec import (
 )
 from .bloom import write_segment_blooms
 from .build import (
+    ALL_DOCS,
     BLOCK_SCHEMA,
+    POSTINGS_FORMAT,
     _atomic_write,
     _blocks_frame,
     _concat_blocks,
@@ -125,39 +131,89 @@ def _make_block_merger(
     k1: float,
     b: float,
     block_size: int,
+    n_tb: int,
     tombstones: list[int],
     pos_fields: frozenset[str],
 ):
     """Block merger for one (shard, salt) group, the build's SPIMI run.
 
-    Per field, the group's blocks decode as one batch
+    Per field, the group's term blocks decode as one batch
     (``codec.decode_blocks``: one varint pass over the joined block
-    buffers of the payload columns, doc ids by a segmented cumsum); a
-    block whose bytes do not hold its postings raises, naming its
-    segment, term and block. Tombstoned and duplicate (term, doc)
+    buffers of the payload columns, values by a segmented cumsum). A
+    format-2 block's values are ordinals into its segment's all-docs
+    list (decoded first, as one batch too), which gives each posting
+    its doc id and dl; a format-1 block stores both. A block whose
+    bytes do not hold its postings raises, naming its segment, term (or
+    all-docs list) and block. Tombstoned and duplicate (term, doc)
     postings drop; the survivors, sorted by (term, doc), re-encode
-    through the build's block assembly with impacts against
-    ``avgdl_by_field``. The stored positions are already
-    the encoder's within-doc gap form, so each posting's slice is only
-    gathered into the new order."""
+    through the build's block assembly (format 2, with its own all-docs
+    list) with impacts against ``avgdl_by_field``. The stored positions
+    are already the encoder's within-doc gap form, so each posting's
+    slice is only gathered into the new order."""
     tomb = doc_id_to_u64(np.array(sorted(tombstones), dtype=np.int64))
 
     def _bad_block(fld, g, e: BlockError) -> ValueError:
         row = g.iloc[e.block]
+        what = (f"all-docs list {fld}" if row["term"] == ALL_DOCS
+                else f"term {fld}:{row['term']!r}")
         return ValueError(
-            f"segment {row['segment']}, term {fld}:{row['term']!r}, "
+            f"segment {row['segment']}, {what}, "
             f"block {row['block_id']} (shard {row['shard']}, salt {row['salt']}): {e}"
         )
 
-    def _one_field(shard, salt, fld, g):
-        n = g["n"].to_numpy().astype(np.int64)
+    def _all_docs(fld, a):
+        """(doc ids, dls, {segment: start}, {segment: size}) of the
+        all-docs rows ``a``: each segment's list, one after the other."""
+        a = a.sort_values(["segment", "block_id"], kind="stable")
+        n = a["n"].to_numpy().astype(np.int64)
         try:
-            du, tf, dl = decode_blocks(
-                n, *join_blocks([*g["gaps"], *g["tfs"], *g["dls"]])
+            ids, _, dl = decode_blocks(
+                n, *join_blocks([*a["gaps"], *a["tfs"], *a["dls"]]),
+                tf_n=np.zeros_like(n),
+            )
+        except BlockError as e:
+            raise _bad_block(fld, a, e) from None
+        sizes = a.groupby("segment", sort=False)["n"].sum()
+        starts = sizes.cumsum() - sizes
+        return ids, dl.astype(np.int64), starts.to_dict(), sizes.to_dict()
+
+    def _one_field(shard, salt, fld, g):
+        is_ad = (g["term"] == ALL_DOCS).to_numpy()
+        ids, dls, starts, sizes = _all_docs(fld, g[is_ad]) if is_ad.any() else (None, None, {}, {})
+        g = g[~is_ad]
+        if not len(g):
+            return None
+        n = g["n"].to_numpy().astype(np.int64)
+        f2 = (g["dls"].map(len) == 0).to_numpy()
+        try:
+            du, tf, own_dl = decode_blocks(
+                n, *join_blocks([*g["gaps"], *g["tfs"], *g["dls"]]),
+                dl_n=np.where(f2, 0, n),
             )
         except BlockError as e:
             raise _bad_block(fld, g, e) from None
-        tf, dl = tf.astype(np.int64), dl.astype(np.int64)
+        tf = tf.astype(np.int64)
+        dl = np.empty(len(du), dtype=np.int64)
+        dl[np.repeat(~f2, n)] = own_dl
+        if f2.any():
+            # format-2 rows: ordinals -> doc ids and dls through their
+            # segment's all-docs list
+            size = g["segment"].map(sizes)
+            lost = np.flatnonzero(f2 & size.isna().to_numpy())
+            if len(lost):
+                raise _bad_block(fld, g, BlockError(
+                    int(lost[0]), "gaps: ordinals without an all-docs list"))
+            start = g["segment"].map(starts).fillna(0).to_numpy(dtype=np.int64)
+            size = size.fillna(0).to_numpy(dtype=np.int64)
+            at = np.repeat(f2, n)
+            ords = du[at].astype(np.int64)
+            past = np.flatnonzero(ords >= np.repeat(size, n)[at])
+            if len(past):
+                r = int(np.searchsorted(np.cumsum(n), np.flatnonzero(at)[past[0]], side="right"))
+                raise _bad_block(fld, g, BlockError(
+                    r, f"gaps: ordinal past the {int(size[r])} docs of its all-docs list"))
+            idx = ords + np.repeat(start, n)[at]
+            du[at], dl[at] = ids[idx], dls[idx]
         codes, uniq_terms = pd.factorize(g["term"].to_numpy(), sort=True)
         tb_per_term = np.empty(len(uniq_terms), dtype=np.int64)
         tb_per_term[codes] = g["tb"].to_numpy()
@@ -192,7 +248,7 @@ def _make_block_merger(
         return _blocks_frame(
             shard, salt, fld, cg, np.asarray(uniq_terms, dtype=object),
             tb_per_term, dg, tf_o, dl_o,
-            _impact(tf_o, dl_o, avgdl_by_field[fld], k1, b), block_size, pos_gaps,
+            _impact(tf_o, dl_o, avgdl_by_field[fld], k1, b), block_size, n_tb, pos_gaps,
         )
 
     def merge(key, pdf):  # (key, pd.DataFrame) -> pd.DataFrame
@@ -286,7 +342,7 @@ def merge_segments(
     else:
         avgdl_by_field = {"content": m.avgdl, **{f: m.field_avgdl(f) for f in extra}}
         merger = _make_block_merger(
-            avgdl_by_field, m.k1, m.b, m.block_size, sorted(dropped),
+            avgdl_by_field, m.k1, m.b, m.block_size, m.n_tb, sorted(dropped),
             m.positions_fields(),
         )
         blocks = read_segment_union(spark, sub_dirs, "postings", tag=True).select(
@@ -303,6 +359,7 @@ def merge_segments(
                 "id": new_id,
                 "n_docs": n_live,
                 "postings": n_postings,
+                "format": POSTINGS_FORMAT,
                 "avgdl": avgdl_by_field["content"],
                 "field_avgdl": avgdl_by_field,
                 "lineage": {
@@ -313,6 +370,7 @@ def merge_segments(
         ]
     m.tombstones = sorted(set(m.tombstones) - dropped)
     _retire_dirs(m, sub_dirs)
+    m.version = POSTINGS_FORMAT
     m.commit(index_dir)  # alias swap: queries now see the merged segment
     gc_retired(index_dir)
     return m

@@ -36,10 +36,20 @@ the on-disk shape:
   and its rows are split by sb; bucket reads of the docs dimension are
   shared the same way (split by ``shard % n_sb``). Nothing is kept
   across requests;
-- the hive ``sb`` partition filter and the term/field row-group
-  pushdown;
+- the hive ``sb`` directory filter, which is the scan's pruning: the
+  term/field filter selects rows but prunes no row groups (at these
+  sizes each sb file is one row group, and pyarrow 16.1 prunes little
+  or nothing for ``isin`` filters);
 - the legacy segment rule above;
 - the block columns (doc range, ``max_impact`` bound, varint buffers);
+- the postings formats: a format-2 segment's term blocks store doc
+  ordinals and no dls, and every scan also reads the all-docs rows
+  (term ``ALL_DOCS``) of the fields it asks for: per (field, salt,
+  shard) group the doc ids and doc lengths the ordinals index
+  (``AllDocs``), decoded in the same batch as the first of the group's
+  blocks. A format-1 segment (no all-docs rows) stores doc-id gaps and
+  dls in every block and decodes as before. Either way a ``BlockList``
+  yields u64 doc ids and the same impacts;
 - the positional payload check: a request for positions on a segment
   or block built without them raises;
 - the ``(salt, shard)`` sub-list split: one sb holds several shards,
@@ -66,6 +76,7 @@ from ..codec import (
     u64_to_doc_id,
     varint_decode_blocks,
 )
+from .build import ALL_DOCS
 
 #: block columns every scorer reads (``poss`` joins when positions are
 #: requested)
@@ -89,14 +100,20 @@ class BlockList:
     payload separately and only when a phrase asks for it, so scorers
     that never ask pay nothing for it. ``bmaxs`` are the stored block
     max-impact bounds (times the caller's avgdl-drift scale), without
-    idf. ``name`` says where the list lives, for decode errors."""
+    idf. ``name`` says where the list lives, for decode errors.
 
-    __slots__ = ("idf", "k1", "b", "avgdl", "name", "firsts", "lasts", "bmaxs",
-                 "ns", "spans", "n_postings", "_raw", "_dec", "_pos")
+    ``alldocs``: the list's encoder-group ``AllDocs`` in postings format
+    2, whose blocks store ordinals and no dls; None in format 1 (and
+    for lists built in memory), whose blocks store doc-id gaps and
+    dls."""
 
-    def __init__(self, idf, k1, b, avgdl, name="postings"):
+    __slots__ = ("idf", "k1", "b", "avgdl", "name", "alldocs", "firsts", "lasts",
+                 "bmaxs", "ns", "spans", "n_postings", "_raw", "_dec", "_pos")
+
+    def __init__(self, idf, k1, b, avgdl, name="postings", alldocs=None):
         self.idf, self.k1, self.b, self.avgdl = idf, k1, b, avgdl
         self.name = name
+        self.alldocs: AllDocs | None = alldocs
         self._raw: list[tuple] = []
         self.n_postings = 0
         self._dec: dict[int, tuple] = {}
@@ -164,6 +181,21 @@ class BlockList:
                 np.concatenate([imp for _, imp, _ in got]))
 
 
+class AllDocs:
+    """The all-docs list of one (field, salt, shard) encoder group of a
+    format-2 segment in one bucket: the group's doc ids (u64, ascending)
+    and each doc's length in the field, which a posting's ordinal
+    indexes. Its blocks' spans are laid out as a ``BlockList``'s
+    (``tfs`` empty). It decodes whole (``docs``/``dls``, None until
+    then), in the batch of the first of its group's blocks to decode."""
+
+    __slots__ = ("name", "ns", "spans", "docs", "dls")
+
+    def __init__(self, name, ns, spans):
+        self.name, self.ns, self.spans = name, ns, spans
+        self.docs = self.dls = None
+
+
 def _join(parts, cols) -> tuple[np.ndarray, np.ndarray]:
     """(joined bytes, per-block bounds) of the payload columns ``cols``,
     one after the other, over the blocks ``idx`` of each (sub-list, idx)
@@ -206,25 +238,59 @@ def _decode(parts) -> None:
     not cached yet, as one batch: one ``decode_blocks`` (one varint pass
     over the joined payload columns) and one BM25 expression per run of
     parts that share idf, k1, b and avgdl (one run for the sub-lists of
-    one term); then cache each block as views into the batch arrays."""
+    one term); then cache each block as views into the batch arrays.
+
+    A format-2 part's values are ordinals: the batch also holds every
+    ``AllDocs`` of its parts not decoded yet (after the parts, gaps and
+    dls only), and each ordinal then maps to its doc id and dl."""
     parts = _missing(parts, "_dec")
     if not parts:
         return
-    n = np.concatenate([sl.ns[idx] for sl, idx in parts])
+    ads = {id(sl.alldocs): sl.alldocs for sl, _ in parts
+           if sl.alldocs is not None and sl.alldocs.docs is None}
+    batch = parts + [(ad, np.arange(len(ad.ns))) for ad in ads.values()]
+    n = np.concatenate([sl.ns[idx] for sl, idx in batch])
+    nb = [len(idx) for _, idx in batch]
+    # value counts per block: term blocks carry tfs; format-1 term
+    # blocks and all-docs blocks carry dls
+    is_term = np.repeat(np.arange(len(batch)) < len(parts), nb)
+    has_dl = np.repeat([r >= len(parts) or sl.alldocs is None
+                        for r, (sl, _) in enumerate(batch)], nb)
     try:
-        docs, tf, dl = decode_blocks(n, *_join(parts, PAYLOAD))
+        docs, tf, dls = decode_blocks(n, *_join(batch, PAYLOAD),
+                                      tf_n=np.where(is_term, n, 0),
+                                      dl_n=np.where(has_dl, n, 0))
     except BlockError as e:
-        raise _named(parts, e) from None
-    tf = tf.astype(np.float64)
-    dl = dl.astype(np.float64)
-    imp = np.empty_like(tf)
+        raise _named(batch, e) from None
     off = np.concatenate(([0], np.cumsum(n))).tolist()
-    ends = np.cumsum([len(idx) for _, idx in parts]).tolist()
+    ends = np.cumsum(nb).tolist()
+    span = [(off[e - k], off[e]) for e, k in zip(ends, nb)]
+    if len(dls) == len(docs):
+        dl = dls.astype(np.float64)
+    else:
+        dl = np.empty(len(docs), dtype=np.float64)
+        dl[np.repeat(has_dl, n)] = dls
+    for r, ad in enumerate(ads.values(), start=len(parts)):
+        a, z = span[r]
+        ad.docs, ad.dls = docs[a:z], dl[a:z]
+    for r, (sl, _) in enumerate(parts):
+        ad = sl.alldocs
+        if ad is not None:
+            a, z = span[r]
+            ords = docs[a:z].copy()
+            if int(ords.max()) >= len(ad.docs):
+                raise ValueError(
+                    f"{sl.name}: ordinal {int(ords.max())} past the "
+                    f"{len(ad.docs)} docs of its all-docs list"
+                )
+            docs[a:z], dl[a:z] = ad.docs[ords], ad.dls[ords]
+    tf = tf.astype(np.float64)
+    imp = np.empty_like(tf)
     a = 0
     for r, (sl, _) in enumerate(parts):
         if r + 1 < len(parts) and _params(parts[r + 1][0]) == _params(sl):
             continue
-        z = off[ends[r]]
+        z = span[r][1]
         t, d = tf[a:z], dl[a:z]
         imp[a:z] = sl.idf * (
             t * (sl.k1 + 1.0) / (t + sl.k1 * (1.0 - sl.b + sl.b * d / sl.avgdl))
@@ -537,7 +603,7 @@ def read_bucket(
     want = {f: sorted(set(want[f])) for f in sorted(want)}
     fexpr = None
     for f, terms in want.items():
-        e = ds.field("term").isin(terms)
+        e = ds.field("term").isin([ALL_DOCS, *terms])
         if has_field:
             e = (ds.field("field") == f) & e
         fexpr = e if fexpr is None else fexpr | e
@@ -571,14 +637,27 @@ def read_bucket(
     lasts = col("last_doc").to_numpy().view(np.uint64)
     bmaxs = col("max_impact").to_numpy() * bound_scale
     ns = col("n").to_numpy().astype(np.int64)
-    payload = {c: _binary_spans(col(c)) for c in ("gaps", "tfs", "dls")}
+    payload = {c: _binary_spans(col(c)) for c in PAYLOAD}
     if positions:
         payload["poss"] = _binary_spans(col("poss"))
         p_valid = (col("poss").is_valid().to_numpy(zero_copy_only=False)
                    if col("poss").null_count else None)
-    for (f, t, sa, sh), rows in groups.items():
+    for g, rows in groups.items():
         rows = np.array(rows)
-        rows = rows[np.argsort(firsts[rows], kind="stable")]
+        groups[g] = rows[np.argsort(firsts[rows], kind="stable")]
+    # format 2: each (field, salt, shard) group's all-docs list, which
+    # its term sub-lists' ordinals index; format 1 has none
+    ads = {
+        (f, sa, sh): AllDocs(
+            f"segment {seg_id} sb {sb}, all-docs list {f}, sub-list (salt {sa}, shard {sh})",
+            ns[rows], {c: (payload[c][0], payload[c][1][rows], payload[c][1][rows + 1])
+                       for c in PAYLOAD},
+        )
+        for (f, t, sa, sh), rows in groups.items() if t == ALL_DOCS
+    }
+    for (f, t, sa, sh), rows in groups.items():
+        if t == ALL_DOCS:
+            continue
         key = (f, t)
         tp = out.get(key)
         if tp is None:
@@ -586,6 +665,7 @@ def read_bucket(
         sl = tp.subs[(sa, sh)] = BlockList(
             idfs.get(key, 0.0), k1, b, avgdls[f],
             f"segment {seg_id} sb {sb}, term {f}:{t!r}, sub-list (salt {sa}, shard {sh})",
+            ads.get((f, sa, sh)),
         )
         spans = {}
         for c, (vals, offs) in payload.items():
@@ -683,12 +763,14 @@ def scan_dict(
     (segments pre-pruned by the term blooms), else starting with
     ``prefix`` (empty = the field's whole dictionary).
 
-    One driver-side pyarrow read per segment, no Spark job: dict files
-    are term-sorted, so the term predicate prunes row groups via parquet
-    statistics. Per-segment reads, not one union dataset: a legacy
-    segment has no ``field`` column, so it joins a ``content`` scan with
-    the field clause dropped and is skipped for every other field —
-    mixed legacy/current indexes stay queryable."""
+    One driver-side pyarrow read per segment, no Spark job. Dict files
+    are term-sorted, but at these sizes each is one row group, and
+    pyarrow 16.1 prunes little or nothing for ``isin`` filters, so the
+    term predicate selects rows, not row groups. Per-segment reads, not
+    one union dataset: a legacy segment has no ``field`` column, so it
+    joins a ``content`` scan with the field clause dropped and is
+    skipped for every other field — mixed legacy/current indexes stay
+    queryable."""
     import pyarrow as pa
     import pyarrow.dataset as ds
 
@@ -755,10 +837,11 @@ def read_docs(
     ``bucket`` = (sb, n_shards, n_sb) restricts the read to one
     shard-bucket: the docs dimension is not laid out by sb, but its
     shard column is and sb = shard % n_sb, so an isin on the bucket's
-    shards prunes row groups via parquet statistics. A bucket read is
-    served by the request scope (see ``ReadScope``): one read of the
-    segment for the scope's sbs of it, split by ``shard % n_sb``;
-    ``doc_ids`` reads are not shared. ``predicate`` (a docs-dimension
+    shards selects its rows (pyarrow 16.1 prunes little or nothing for
+    an ``isin``; the shard-sorted docs files let equality and range
+    filters prune). A bucket read is served by the request scope (see
+    ``ReadScope``): one read of the segment for the scope's sbs of it,
+    split by ``shard % n_sb``; ``doc_ids`` reads are not shared. ``predicate`` (a docs-dimension
     conjunction, see index.predicate; empty = no filter) and ``doc_ids``
     push down the same way. ``columns``: the wanted columns; ones the
     segment lacks are left out, ``doc_id`` is always read, None = all.

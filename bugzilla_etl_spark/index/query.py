@@ -7,8 +7,10 @@ work items run on the route the cost model picks (``route``): in the
 driver, or in ONE Spark fan-out job of at most ``cores`` Python tasks.
 Either way the items of the request (or of the task) share one
 ``postings.ReadScope``: each segment's posting files are read once with
-pyarrow (directory pruning on ``sb``, row-group pruning on ``term`` via
-parquet statistics) and split by sb. Each item decodes each query
+pyarrow (directory pruning on ``sb``; the ``term`` filter selects rows
+but prunes no row groups: each sb file is one row group at these
+sizes, and pyarrow 16.1 prunes little or nothing for ``isin``) and
+split by sb. Each item decodes each query
 term's lists once, scores every query with a bounded top-k heap
 (block-max MaxScore, exact) -> k-way merge of per-bucket
 top-ks on the driver -> (doc_id, score) top-k, rank-identical to the

@@ -105,15 +105,25 @@ class python_stage_tuning:
 def ship_package(spark: SparkSession) -> str:
     """Ship this package to executors (the --py-files contract).
 
-    Zips ``bugzilla_etl_spark`` and ``sc.addPyFile``s it so UDF closures
-    that import the package resolve on every executor regardless of the
-    driver's cwd — the same mechanism ``spark-submit --py-files`` uses
-    on a real cluster.
+    Zips ``bugzilla_etl_spark`` (``package_zip``) and
+    ``sc.addPyFile``s it so UDF closures that import the package resolve
+    on every executor regardless of the driver's cwd — the same
+    mechanism ``spark-submit --py-files`` uses on a real cluster.
     """
+    zip_path = package_zip(tempfile.gettempdir())
+    spark.sparkContext.addPyFile(zip_path)
+    return zip_path
+
+
+def package_zip(out_dir: str) -> str:
+    """The package's content-addressed zip in ``out_dir``, written if
+    absent: a changed source file can never ship stale. Each writer
+    writes its own temp file in ``out_dir`` and publishes it with one
+    ``os.replace``, so processes starting at once never share a file:
+    the last replace wins, and every copy holds the same bytes."""
     import hashlib
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    # content-addressed zip name: a changed source file can never ship stale
     digest = hashlib.sha256()
     for root, _dirs, files in os.walk(pkg_dir):
         for fn in sorted(files):
@@ -122,11 +132,15 @@ def ship_package(spark: SparkSession) -> str:
                     digest.update(fn.encode())
                     digest.update(f.read())
     zip_path = os.path.join(
-        tempfile.gettempdir(), f"bugzilla_etl_spark_pyfiles_{digest.hexdigest()[:16]}.zip"
+        out_dir, f"bugzilla_etl_spark_pyfiles_{digest.hexdigest()[:16]}.zip"
     )
-    if not os.path.exists(zip_path):
-        tmp = zip_path + ".tmp"
-        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
+    if os.path.exists(zip_path):
+        return zip_path
+    fd, tmp = tempfile.mkstemp(
+        dir=out_dir, prefix=os.path.basename(zip_path) + ".", suffix=".tmp"
+    )
+    try:
+        with os.fdopen(fd, "wb") as out, zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as zf:
             for root, _dirs, files in os.walk(pkg_dir):
                 for fn in sorted(files):
                     if not fn.endswith(".py"):
@@ -136,8 +150,12 @@ def ship_package(spark: SparkSession) -> str:
                         "bugzilla_etl_spark", os.path.relpath(full, pkg_dir)
                     )
                     zf.write(full, rel)
+        os.chmod(tmp, 0o644)
         os.replace(tmp, zip_path)
-    spark.sparkContext.addPyFile(zip_path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
     return zip_path
 
 

@@ -26,19 +26,35 @@ K1, B = 1.2, 0.75
 def _reference(index_dir, seg_id, sb, fld, term, idf, avgdl, has_field=True):
     """Per-block decode of one (field, term) of one bucket straight from
     the parquet rows: [(docs, impacts, dls, positions per posting)] per
-    block, sub-lists in (salt, shard) order, blocks by first doc."""
+    block, sub-lists in (salt, shard) order, blocks by first doc. A
+    format-2 block's gaps decode to ordinals into its (salt, shard)
+    group's all-docs rows (term ``""``: doc-id gaps, one dl per doc),
+    which give its docs and dls; a format-1 block stores both."""
     data = ds.dataset(os.path.join(index_dir, "segments", seg_id, "postings"),
                       format="parquet", partitioning="hive")
-    flt = (ds.field("sb") == sb) & (ds.field("term") == term)
+    flt = (ds.field("sb") == sb) & ds.field("term").isin([term, ""])
     if has_field:
         flt = flt & (ds.field("field") == fld)
     rows = data.to_table(filter=flt).to_pylist()
     rows.sort(key=lambda r: (r["salt"], r["shard"], r["first_doc"] & (2**64 - 1)))
+    all_docs = {}
+    for r in rows:
+        if r["term"] == "":
+            ids, dls = all_docs.setdefault((r["salt"], r["shard"]), ([], []))
+            ids.append(delta_decode(varint_decode(r["gaps"])))
+            dls.append(varint_decode(r["dls"]).astype(np.float64))
+    all_docs = {k: (np.concatenate(i), np.concatenate(d)) for k, (i, d) in all_docs.items()}
     out = []
     for r in rows:
+        if r["term"] == "":
+            continue
         docs = delta_decode(varint_decode(r["gaps"]))
         tf = varint_decode(r["tfs"]).astype(np.float64)
-        dl = varint_decode(r["dls"]).astype(np.float64)
+        if r["dls"]:
+            dl = varint_decode(r["dls"]).astype(np.float64)
+        else:
+            ids, dls = all_docs[(r["salt"], r["shard"])]
+            docs, dl = ids[docs], dls[docs]
         imp = idf * (tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl)))
         pos = None
         if r.get("poss") is not None:
@@ -154,21 +170,29 @@ def test_legacy_segment_decodes_equal_per_block(spark, small_corpus, tmp_path):
     assert checked >= 6
 
 
-def _cut_one_block(index_dir, seg_id):
-    """Drop the last byte of one multi-posting block's gaps in place ->
-    (term, block_id) of that block."""
+def _cut_one_block(index_dir, seg_id, all_docs=False):
+    """Drop the last byte of one multi-posting content block's gaps in
+    place -> (term, block_id, sb, salt, shard) of that block: a term
+    block, or with ``all_docs`` an all-docs block (term ``""``)."""
     for f in sorted(glob.glob(os.path.join(index_dir, "segments", seg_id, "postings",
                                            "**", "*.parquet"), recursive=True)):
         t = pq.read_table(f)
         rows = t.to_pylist()
         for r in rows:
-            if r["n"] >= 2 and r["field"] == "content":
+            if r["n"] >= 2 and r["field"] == "content" and (r["term"] == "") == all_docs:
                 r["gaps"] = r["gaps"][:-1]
                 pq.write_table(t.from_pylist(rows, schema=t.schema), f)
                 crc = os.path.join(os.path.dirname(f), "." + os.path.basename(f) + ".crc")
                 if os.path.exists(crc):
                     os.remove(crc)
-                return r["term"], r["block_id"]
+                sb = int(re.search(r"sb=(\d+)", f).group(1))
+                # a term of the same group, to query it by
+                term = r["term"] or next(
+                    x["term"] for x in rows
+                    if x["term"] and x["field"] == "content"
+                    and (x["salt"], x["shard"]) == (r["salt"], r["shard"])
+                )
+                return term, r["block_id"], sb, r["salt"], r["shard"]
     raise AssertionError("no multi-posting block")
 
 
@@ -180,9 +204,27 @@ def test_truncated_block_raises_on_query_and_merge(spark, small_corpus, tmp_path
     build_index(spark, small_corpus.limit(120), d, n_shards=2, n_tb=2, block_size=16)
     incremental_update(spark, generate_corpus(spark, 40, partitions=2, start=5000), d)
     seg = IndexManifest.load(d).segments[0]["id"]
-    term, block_id = _cut_one_block(d, seg)
+    term, block_id, _, _, _ = _cut_one_block(d, seg)
     named = rf"segment {seg}\b.*term content:{re.escape(repr(term))}.*block {block_id}\b.*gaps: "
     with pytest.raises(ValueError, match=named):
         search_many(spark, d, [(0, term, 10)], execution="local")
     with pytest.raises(Exception, match=named):
+        merge_segments(spark, d)
+
+
+def test_truncated_all_docs_block_raises_on_query_and_merge(spark, small_corpus, tmp_path):
+    """A cut all-docs block (format 2: the doc ids and dls its group's
+    ordinals index) raises on the query path, naming the segment, sb,
+    sub-list and block, and in merge, naming the segment and block."""
+    d = str(tmp_path / "idx")
+    build_index(spark, small_corpus.limit(120), d, n_shards=2, n_tb=2, block_size=16)
+    incremental_update(spark, generate_corpus(spark, 40, partitions=2, start=5000), d)
+    seg = IndexManifest.load(d).segments[0]["id"]
+    term, block_id, sb, salt, shard = _cut_one_block(d, seg, all_docs=True)
+    named = (rf"segment {seg} sb {sb}, all-docs list content, sub-list \(salt {salt}, "
+             rf"shard {shard}\), block {block_id}: gaps: .*cut off")
+    with pytest.raises(ValueError, match=named):
+        search_many(spark, d, [(0, term, 10)], execution="local")
+    with pytest.raises(Exception, match=rf"segment {seg}, all-docs list content, "
+                       rf"block {block_id} \(shard {shard}, salt {salt}\): gaps: "):
         merge_segments(spark, d)

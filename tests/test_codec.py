@@ -20,6 +20,7 @@ from bugzilla_etl_spark.codec import (
     varint_decode,
     varint_decode_blocks,
     varint_encode,
+    varint_encode_segmented,
 )
 
 
@@ -68,6 +69,32 @@ def test_block_boundaries_are_checked():
     # decode_blocks names the column of the joined gaps+tfs+dls batch
     with pytest.raises(BlockError, match="^tfs: ") as e:
         decode_blocks([1, 1], *join_blocks([b"\x01", b"\x01", b"\x01", b"\x81", b"\x01", b"\x01"]))
+    assert e.value.block == 1
+
+
+def test_segmented_encode_keeps_empty_segments():
+    """Every segment gets its bytes, empty ones ``b""`` — also when all of
+    them are empty (a format-2 term block's dls, a probe re-encoding
+    them), which used to return ``[]``."""
+    starts = np.array([0, 0, 0])
+    assert varint_encode_segmented(np.empty(0, dtype=np.uint64), starts) == [b"", b"", b""]
+    got = varint_encode_segmented(np.array([1, 300], dtype=np.uint64), np.array([0, 0, 2]))
+    assert got == [b"", b"\x01\xac\x02", b""]
+
+
+def test_decode_blocks_with_empty_columns():
+    """Format 2: a term block's dls and an all-docs block's tfs hold no
+    values; ``tf_n``/``dl_n`` say so, and the block checks still hold."""
+    n = [2, 1]
+    gaps = [varint_encode(np.array(v, dtype=np.uint64)) for v in ([3, 1], [7])]
+    tfs = [b"\x05\x06", b"\x07"]
+    docs, tf, dl = decode_blocks(n, *join_blocks(gaps + tfs + [b"", b""]), dl_n=[0, 0])
+    assert docs.tolist() == [3, 4, 7] and tf.tolist() == [5, 6, 7] and dl.size == 0
+    docs, tf, dl = decode_blocks(n, *join_blocks(gaps + [b"", b""] + tfs), tf_n=[0, 0])
+    assert docs.tolist() == [3, 4, 7] and tf.size == 0 and dl.tolist() == [5, 6, 7]
+    # a block whose dls should be empty but are not is named
+    with pytest.raises(BlockError, match="^dls: ") as e:
+        decode_blocks(n, *join_blocks(gaps + tfs + [b"", b"\x01"]), dl_n=[0, 0])
     assert e.value.block == 1
 
 

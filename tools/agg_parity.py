@@ -19,9 +19,16 @@ query shape below and both ``execution`` routes, importing the package
 of REPO, and pickles {(entry, query, route): ("ok", result) |
 ("err", message)}. ``--compare`` exits non-zero when any call answers
 differently; calls that raise on both sides count as equal when the
-exception type matches (wording may change) and are listed. Run both
-sides with the same IDX_ROOT so they read identical files. Run from a
-directory outside the repo, like any driver of the package.
+exception type matches (wording may change) and are listed.
+
+Two modes. (a) Same files: ``--build`` once with the parent checkout,
+then run both checkouts on that IDX_ROOT; this checks that a change
+reads the parent's on-disk format. (b) Own builds: each checkout runs
+with ``--build`` into its own IDX_ROOT (the corpus and ids are
+deterministic, so both build the same documents); this checks a change
+that writes a new on-disk format against the old one, which a parent
+checkout cannot read. A change of the postings format needs both. Run
+from a directory outside the repo, like any driver of the package.
 """
 
 from __future__ import annotations

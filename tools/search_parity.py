@@ -29,13 +29,20 @@ there). A checkout whose bucket scorer reads the threshold when the
 request is planned applies it on the Spark route too; an older one
 scores the Spark route exhaustively, which must give the same bits.
 
+Two modes. (a) Same files: ``--build`` once with the parent checkout,
+then run both checkouts on that IDX_ROOT; this checks that a change
+reads the parent's on-disk format. (b) Own builds: each checkout runs
+with ``--build`` into its own IDX_ROOT (the corpus and ids are
+deterministic, so both build the same documents); this checks a change
+that writes a new on-disk format against the old one, which a parent
+checkout cannot read. A change of the postings format needs both.
+
 ``--compare`` prints, per call, whether both sides return the same ids
 in the same order and, where they do, how many scores differ and the
 largest difference; it also checks local == Spark on each side. Exit
 status 1 when ids/ranks differ or a side's routes disagree; score-only
-differences are reported, not failed. Run both sides with the same
-IDX_ROOT so they read identical files, from a directory outside the
-repo.
+differences are reported, not failed. Run from a directory outside
+the repo.
 """
 
 from __future__ import annotations
